@@ -28,9 +28,9 @@ the reference's mirror client speaks but its own server never implemented
 - ``get_flight_info`` accepts path descriptors (table) and command
   descriptors (``LIST_TABLES`` bytes or the JSON commands above), returns
   the *actual* bound location (the reference hard-codes localhost:8816,
-  icerunner.py:303) and real row/byte totals from parquet footers (the
-  reference materializes the whole table just to report schema and then
-  returns -1/-1, icerunner.py:306-307).
+  icerunner.py:303) and real row/byte totals from the manifest's per-file
+  row counts (the reference materializes the whole table just to report
+  schema and then returns -1/-1, icerunner.py:306-307).
 - ``do_put`` appends to an existing table in row-count chunks (the
   reference buffers the entire upload, icerunner.py:287-291, and its
   "batch_size" counts batches, not rows — bug at :1118).
@@ -40,6 +40,16 @@ from the manifest's parquet files through ``pyarrow.dataset`` — zero
 driver materialization, constant memory. Spark is only engaged for SQL
 tickets and for ingest commits. This is the design SURVEY.md §7 calls out
 as "the one place the reference's architecture actively fights Spark".
+
+Metadata work is per commit, not per RPC. Each RPC reads the table's
+snapshot once and answers from that snapshot's serve plan
+(:class:`_ServePlan`): the Spark and logical Arrow schemas, each data
+file's layout group, footer schemas read once per file, and row/byte
+totals summed from the manifest's recorded row counts. Snapshots and data
+files never change, so a plan is built on the first RPC that sees a
+snapshot and reused until a commit makes a new one; the server keeps the
+``PLAN_CACHE_SIZE`` most recently used. Reads that span snapshots (the
+``get_changes`` file walk) and the Spark spill paths stay uncached.
 """
 
 from __future__ import annotations
@@ -47,22 +57,182 @@ from __future__ import annotations
 import json
 import os
 import threading
+from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.dataset as pads
 import pyarrow.flight as flight
 import pyarrow.parquet as pq
+from pyspark.sql.types import StructType
 
 from icerunner_spark.connector import Connector
+from icerunner_spark.table import (
+    IceTable,
+    Snapshot,
+    _commit_dir_of,
+    _decode_bound,
+    _hive_partition_values,
+    _normalize_predicates,
+    _predicates_to_column,
+)
 
 DEFAULT_PORT = 8816
 STREAM_BATCH_ROWS = 65536
+PLAN_CACHE_SIZE = 16  # serve plans kept per server, least recently used dropped
 
 
 def _spark_schema_to_arrow(struct_type) -> pa.Schema:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(struct_type)
+
+
+def _layout_keys(snap: Snapshot, files_rel, logical, mappings=None) -> dict:
+    """Layout key of each table-relative data file: ``(physical name of
+    each logical column, partition values, partition spec)``, resolved
+    through the snapshot's field ids (table.py field-id indirection).
+    Partition columns are physical-None: they live in the hive path
+    (``lang=en/``), not the file, and their decoded values ride in the
+    key. ``mappings`` replaces the snapshot's per-dir physical names (a
+    changes read whose files come from several snapshots)."""
+    fid = snap.field_ids
+    spec = list(snap.partition_spec or [])
+    dir_specs = dict(snap.dir_specs or {})
+    mappings = snap.file_mappings if mappings is None else mappings
+    per_dir: dict = {}
+    keys = {}
+    for f in files_rel:
+        d = _commit_dir_of(f)
+        if d not in per_dir:
+            # spec evolution: each dir serves under the spec it was
+            # written with (identity columns of THAT spec come from the
+            # hive path; other dirs carry the column physically)
+            dspec = dir_specs.get(d, spec)
+            m = mappings.get(d)
+            per_dir[d] = (
+                tuple(dspec),
+                tuple(
+                    None
+                    if n in dspec
+                    else (n if m is None else m.get(str(fid.get(n))))
+                    for n in logical
+                ),
+            )
+        dspec, phys = per_dir[d]
+        if dspec:
+            vals = _hive_partition_values(f)
+            pvals = tuple(vals.get(c) for c in dspec)
+        else:
+            pvals = ()
+        keys[f] = (phys, pvals, dspec)
+    return keys
+
+
+class _ServePlan:
+    """What the serve path derives from one snapshot of one table, built
+    once. A snapshot and its data files never change (data files are
+    uniquely named), so a plan never goes stale: a commit makes a new
+    snapshot id, and the server builds a new plan for it."""
+
+    def __init__(self, table: IceTable, snap: Snapshot):
+        self.table, self.snap = table, snap
+        self.schema = StructType.fromJson(json.loads(snap.schema_json))
+        self.logical = [f.name for f in self.schema.fields]
+        self.types = {f.name: f.dataType for f in self.schema.fields}
+        self.spark_arrow = _spark_schema_to_arrow(self.schema)
+        self.keys = _layout_keys(snap, snap.manifest, self.logical)
+        self._footers: dict = {}
+        self._totals: tuple[int, int] | None = None  # filled on first use
+        # initial column defaults (add_column(default=)): columns absent
+        # from a group's files serve the default, NOT null — same answer
+        # as IceTable.scan. Keyed by logical name via the field ids.
+        dfl, fids = snap.field_defaults or {}, snap.field_ids or {}
+        self.defaults = {
+            n: dfl[str(fids[n])]
+            for n in self.logical
+            if n in fids and str(fids[n]) in dfl
+        }
+        self.arrow_schema = self._logical_arrow_schema()
+
+    def footer(self, path: str) -> pa.Schema:
+        """Parquet footer schema of one data file, read once per plan."""
+        schema = self._footers.get(path)
+        if schema is None:
+            schema = self._footers[path] = pq.read_schema(path)
+        return schema
+
+    def groups(self, files_rel, keys: dict | None = None) -> list[tuple]:
+        """``files_rel`` grouped by physical column layout and partition
+        values, in order of each group's first file: ``(abs_files,
+        [(physical_name_or_None, logical_name), ...], {partition_col:
+        value_str})`` per group. One group with identity names = the
+        common unpartitioned no-rename case. ``keys`` (from
+        :func:`_layout_keys`) defaults to the manifest's, so a pruned
+        subset groups by dict lookup."""
+        keys = self.keys if keys is None else keys
+        grouped: dict = {}
+        for f in files_rel:
+            grouped.setdefault(keys[f], []).append(os.path.join(self.table.path, f))
+        return [
+            (fs, list(zip(phys, self.logical)), dict(zip(dspec, pvals)))
+            for (phys, pvals, dspec), fs in grouped.items()
+        ]
+
+    def _logical_arrow_schema(self) -> pa.Schema:
+        """Arrow schema under the snapshot's LOGICAL column names. Types
+        come from a parquet footer where a file exists (fidelity with what
+        the stream will carry), falling back to the Spark->Arrow mapping
+        for columns no file has yet (fresh add_column) or empty tables."""
+        groups = self.groups(self.snap.manifest)
+        fields = []
+        for i, fld in enumerate(self.schema.fields):
+            typ = None
+            for files, pairs, _pvals in groups:
+                p = pairs[i][0]
+                if p is not None and files:
+                    typ = self.footer(files[0]).field(p).type
+                    break
+            # Advertise the stable field id as Arrow field metadata (the
+            # same trick as parquet's PARQUET:field_id): mirror clients
+            # diff ids across syncs to replay renames/adds/drops on their
+            # target metadata-only instead of a full resync.
+            fid = self.snap.field_ids.get(fld.name)
+            meta = {b"ICE:field_id": str(fid).encode()} if fid is not None else None
+            # carry the initial default over the wire: mirrors replay
+            # add_column metadata-only, and pre-evolution rows never
+            # re-ship through the changelog — without this the mirror
+            # permanently reads NULL where the source reads the default
+            dflv = (self.snap.field_defaults or {}).get(str(fid))
+            if meta is not None and dflv is not None:
+                meta[b"ICE:default"] = json.dumps(dflv).encode()
+            fields.append(
+                pa.field(
+                    fld.name,
+                    typ if typ is not None else self.spark_arrow.field(i).type,
+                    metadata=meta,
+                )
+            )
+        return pa.schema(fields)
+
+    def totals(self) -> tuple[int, int]:
+        """(rows, bytes) — metadata only, no scan. Rows are the manifest's
+        recorded per-file row counts (a footer read where one is missing);
+        pending merge-on-read delete files subtract their positions (each
+        delete row names one deleted data row). Pending EQUALITY deletes
+        cannot be costed without a scan (the key set's match count is
+        unknown until applied), so totals may overcount until compaction
+        materializes them — the same approximation Iceberg metadata
+        tables make."""
+        if self._totals is None:
+            t, snap = self.table, self.snap
+            rows = bytes_ = 0
+            for f in snap.manifest:
+                rows += t._file_rows(snap, f)
+                bytes_ += os.path.getsize(os.path.join(t.path, f))
+            for f in snap.delete_files:
+                rows -= pq.read_metadata(os.path.join(t.path, f)).num_rows
+            self._totals = rows, bytes_
+        return self._totals
 
 
 class IceFlightServer(flight.FlightServerBase):
@@ -79,7 +249,8 @@ class IceFlightServer(flight.FlightServerBase):
         self.chunk_rows = chunk_rows
         self._host = host
         # self.port resolves the real bound port (0 -> ephemeral)
-        self._lock = threading.Lock()  # serializes commit bookkeeping only
+        self._plans: OrderedDict = OrderedDict()  # (path, snapshot id) -> plan
+        self._plans_lock = threading.Lock()
 
     # ------------------------------------------------------------------ #
     # helpers
@@ -89,150 +260,70 @@ class IceFlightServer(flight.FlightServerBase):
         host = "localhost" if self._host in ("0.0.0.0", "::") else self._host
         return flight.Location.for_grpc_tcp(host, self.port)
 
-    def _table_files(self, name: str) -> list[str]:
-        t = self.connector.table(name)
+    def _table(self, name) -> IceTable:
+        """Handle of the one named table (no catalog listing); an invalid
+        name is reported like a missing table."""
+        try:
+            return self.connector.table(name)
+        except (TypeError, ValueError):
+            raise flight.FlightServerError(f"table not found: {name}") from None
+
+    def _existing(self, name) -> IceTable:
+        t = self._table(name)
+        if not t.exists():
+            raise flight.FlightServerError(f"table not found: {name}")
+        return t
+
+    def _current(self, name) -> _ServePlan:
+        """Plan of the named table's current snapshot. This is an RPC's
+        ONE snapshot read: id, schema, totals and files of its reply all
+        describe the same table version even if a commit lands mid-RPC."""
+        t = self._table(name)
         snap = t.current_snapshot()
         if snap is None:
             raise flight.FlightServerError(f"table not found: {name}")
-        return [os.path.join(t.path, f) for f in snap.manifest]
+        return self._plan(t, snap)
+
+    def _plan(self, t: IceTable, snap: Snapshot) -> _ServePlan:
+        """The serve plan of ``snap``, from the LRU or built now."""
+        key = (t.path, snap.snapshot_id)
+        with self._plans_lock:
+            plan = self._plans.get(key)
+            if plan is not None:
+                self._plans.move_to_end(key)
+                return plan
+        # built outside the lock: two RPCs racing on a new snapshot may
+        # both build it, and either result is the same plan
+        plan = _ServePlan(t, snap)
+        with self._plans_lock:
+            self._plans[key] = plan
+            while len(self._plans) > PLAN_CACHE_SIZE:
+                self._plans.popitem(last=False)
+        return plan
 
     @staticmethod
-    def _partition_values(relpath: str, spec: list) -> tuple:
-        """Parse hive-style ``col=value`` path segments of one data file
-        (``data/snap-x/lang=en/part-*.parquet`` -> ``("en",)`` for spec
-        ["lang"]). Values are constant per file by construction; decoding
-        (unescape + null sentinel) is the shared table.py parser."""
-        from icerunner_spark.table import _hive_partition_values
-
-        vals = _hive_partition_values(relpath)
-        return tuple(vals.get(c) for c in spec)
-
-    @staticmethod
-    def _resolved_groups(t, files_rel, snap, mappings=None):
-        """Group table-relative data files by physical column layout,
-        resolved through the snapshot's field ids (table.py field-id
-        indirection), and by partition values for partitioned tables:
-        each group is ``(abs_files, [(physical_name_or_None,
-        logical_name), ...], {partition_col: value_str})``. Partition
-        columns are marked physical-None (they live in the paths, not the
-        files) and their group-constant values ride in the dict. One
-        group with identity names = the common unpartitioned no-rename
-        case."""
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(_json.loads(snap.schema_json))
-        logical = [f.name for f in schema.fields]
-        fid = snap.field_ids
-        spec = list(getattr(snap, "partition_spec", []) or [])
-        dir_specs = dict(getattr(snap, "dir_specs", {}) or {})
-        mappings = snap.file_mappings if mappings is None else mappings
-        from icerunner_spark.table import _commit_dir_of
-
-        groups: dict = {}
-        for f in files_rel:
-            d = _commit_dir_of(f)
-            # spec evolution: each dir serves under the spec it was
-            # written with (identity columns of THAT spec come from the
-            # hive path; other dirs carry the column physically)
-            dspec = dir_specs.get(d, spec)
-            m = mappings.get(d)
-            key = tuple(
-                None
-                if n in dspec
-                else (n if m is None else m.get(str(fid.get(n))))
-                for n in logical
-            )
-            pvals = IceFlightServer._partition_values(f, dspec) if dspec else ()
-            groups.setdefault((key, pvals, tuple(dspec)), []).append(
-                os.path.join(t.path, f)
-            )
-        return schema, [
-            (fs, list(zip(k, logical)), dict(zip(list(ds), pv)))
-            for (k, pv, ds), fs in groups.items()
-        ]
-
-    def _logical_arrow_schema(self, t, snap) -> pa.Schema:
-        """Arrow schema under the snapshot's LOGICAL column names. Types
-        come from a parquet footer where a file exists (fidelity with what
-        the stream will carry), falling back to the Spark->Arrow mapping
-        for columns no file has yet (fresh add_column) or empty tables."""
-        schema, groups = self._resolved_groups(t, snap.manifest, snap)
-        spark_arrow = _spark_schema_to_arrow(schema)
-        fields = []
-        footer_cache: dict = {}
-        for i, fld in enumerate(schema.fields):
-            typ = None
-            for files, pairs, _pvals in groups:
-                p = pairs[i][0]
-                if p is not None and files:
-                    if files[0] not in footer_cache:
-                        footer_cache[files[0]] = pq.read_schema(files[0])
-                    typ = footer_cache[files[0]].field(p).type
-                    break
-            # Advertise the stable field id as Arrow field metadata (the
-            # same trick as parquet's PARQUET:field_id): mirror clients
-            # diff ids across syncs to replay renames/adds/drops on their
-            # target metadata-only instead of a full resync.
-            fid = snap.field_ids.get(fld.name)
-            meta = {b"ICE:field_id": str(fid).encode()} if fid is not None else None
-            # carry the initial default over the wire: mirrors replay
-            # add_column metadata-only, and pre-evolution rows never
-            # re-ship through the changelog — without this the mirror
-            # permanently reads NULL where the source reads the default
-            dflv = (getattr(snap, "field_defaults", None) or {}).get(str(fid))
-            if meta is not None and dflv is not None:
-                import json as _json
-
-                meta[b"ICE:default"] = _json.dumps(dflv).encode()
-            fields.append(
-                pa.field(
-                    fld.name,
-                    typ if typ is not None else spark_arrow.field(i).type,
-                    metadata=meta,
-                )
-            )
-        return pa.schema(fields)
-
-    def _table_arrow_schema(self, name: str) -> pa.Schema:
-        t = self.connector.table(name)
-        snap = t.current_snapshot()
-        if snap is None:
-            raise flight.FlightServerError(f"table not found: {name}")
-        return self._logical_arrow_schema(t, snap)
-
-    def _typed_preds(self, snap, where) -> list[tuple]:
+    def _typed_preds(plan: _ServePlan, where) -> list[tuple]:
         """JSON ticket ``where`` (list of [col, op, value] conjuncts,
         date/timestamp values as ISO strings) -> typed predicates keyed to
         the snapshot schema — the same triples ``IceTable.scan(where=)``
         takes, so manifest pruning and the residual filter agree with the
         table API exactly."""
-        from pyspark.sql.types import StructType
-
-        from icerunner_spark.table import _decode_bound, _normalize_predicates
-
         preds = _normalize_predicates([tuple(p) for p in where])
-        types = {
-            f.name: f.dataType
-            for f in StructType.fromJson(json.loads(snap.schema_json)).fields
-        }
         out = []
         for col, op, val in preds:
-            if col not in types:
+            if col not in plan.types:
                 raise flight.FlightServerError(f"unknown column in where: {col}")
             if op in ("is_null", "is_not_null"):
                 out.append((col, op, None))
                 continue
-            dt = types[col]
-            conv = lambda v, dt=dt: _decode_bound(dt, v)  # noqa: E731
+            dt = plan.types[col]
             out.append(
                 (
                     col,
                     op,
-                    [conv(x) for x in val]
+                    [_decode_bound(dt, x) for x in val]
                     if op in ("in", "not_in")
-                    else conv(val),
+                    else _decode_bound(dt, val),
                 )
             )
         return out
@@ -275,8 +366,6 @@ class IceFlightServer(flight.FlightServerBase):
             return pv is not None
         if pv is None:
             return False  # SQL comparison semantics: NULL matches nothing
-        from icerunner_spark.table import _decode_bound
-
         t = dtype.typeName()
         try:
             if t in ("integer", "long", "short", "byte"):
@@ -314,9 +403,9 @@ class IceFlightServer(flight.FlightServerBase):
         return True
 
     def _stream_resolved(
-        self, t, files_rel, snap, mappings=None, preds=None, columns=None
+        self, plan: _ServePlan, files_rel, keys=None, preds=None, columns=None
     ):
-        """File-stream ``files_rel`` under the snapshot's logical names.
+        """File-stream ``files_rel`` under the plan snapshot's logical names.
         No schema evolution in play -> the zero-copy single-dataset path.
         Otherwise: one dataset scan per physical layout, each batch's
         columns renamed (zero-copy — Arrow rename is metadata) / padded
@@ -326,35 +415,24 @@ class IceFlightServer(flight.FlightServerBase):
         evaluate against group-constant partition values driver-side.
         ``columns`` projects the stream (normalized to table-schema order
         by the ticket handlers): only those column chunks are decoded and
-        leave the server; predicates may still name dropped columns."""
-        schema, groups = self._resolved_groups(t, files_rel, snap, mappings)
+        leave the server; predicates may still name dropped columns.
+        ``keys`` overrides the manifest's layout keys (:meth:`_ServePlan.groups`)."""
+        groups = plan.groups(files_rel, keys)
         identity = all(
             p == l for _, pairs, _pv in groups for p, l in pairs
         ) and not any(pv for _f, _p, pv in groups)
         if len(groups) <= 1 and identity:
             files = groups[0][0] if groups else []
-            arrow_schema = (
-                pq.read_schema(files[0]) if files else _spark_schema_to_arrow(schema)
-            )
+            arrow_schema = plan.footer(files[0]) if files else plan.spark_arrow
             return self._stream_files(
                 files, arrow_schema,
                 filt=self._arrow_filter(preds) if preds else None,
                 columns=columns,
             )
-        out_schema = self._logical_arrow_schema(t, snap)
+        out_schema = plan.arrow_schema
         if columns is not None:
             out_schema = pa.schema([out_schema.field(c) for c in columns])
-        types = {f.name: f.dataType for f in schema.fields}
-        # initial column defaults (add_column(default=)): columns absent
-        # from a group's files serve the default, NOT null — same answer
-        # as IceTable.scan. Keyed by logical name via the field ids.
-        _dfl = getattr(snap, "field_defaults", None) or {}
-        _fids = snap.field_ids or {}
-        defaults = {
-            f.name: _dfl[str(_fids[f.name])]
-            for f in schema.fields
-            if f.name in _fids and str(_fids[f.name]) in _dfl
-        }
+        types, defaults = plan.types, plan.defaults
 
         def _const(val_str, n, typ):
             """Group-constant partition column as a typed Arrow array."""
@@ -392,7 +470,7 @@ class IceFlightServer(flight.FlightServerBase):
                             break
                 if skip:
                     continue
-                footer = pq.read_schema(files[0])
+                footer = plan.footer(files[0])
                 phys = [p for p, _ in pairs if p is not None]
                 read_schema = pa.schema([footer.field(p) for p in phys])
                 # projection: emit pairs in out_schema order; the dataset
@@ -431,14 +509,15 @@ class IceFlightServer(flight.FlightServerBase):
 
         return flight.GeneratorStream(out_schema, gen())
 
-    def _proj_columns(self, t, snap, cols) -> list | None:
+    @staticmethod
+    def _proj_columns(plan: _ServePlan, cols) -> list | None:
         """Validate and normalize a ticket's ``columns`` projection to
         table-schema order (deterministic batches regardless of request
         order). Unknown names error loudly — silently serving a subset
         would corrupt a client's positional decoding."""
         if not cols:
             return None
-        names = list(self._logical_arrow_schema(t, snap).names)
+        names = plan.arrow_schema.names
         unknown = [c for c in cols if c not in names]
         if unknown:
             raise flight.FlightServerError(
@@ -446,24 +525,6 @@ class IceFlightServer(flight.FlightServerBase):
             )
         want = set(cols)
         return [n for n in names if n in want]
-
-    def _table_totals(self, name: str) -> tuple[int, int]:
-        """(rows, bytes) from parquet footers — metadata only, no scan.
-        Pending merge-on-read delete files subtract their positions from
-        the row total (each delete row names one deleted data row).
-        Pending EQUALITY deletes cannot be costed without a scan (the key
-        set's match count is unknown until applied), so totals may
-        overcount until compaction materializes them — the same
-        approximation Iceberg metadata tables make."""
-        rows = bytes_ = 0
-        for f in self._table_files(name):
-            rows += pq.read_metadata(f).num_rows
-            bytes_ += os.path.getsize(f)
-        t = self.connector.table(name)
-        snap = t.current_snapshot()
-        for f in snap.delete_files if snap else []:
-            rows -= pq.read_metadata(os.path.join(t.path, f)).num_rows
-        return rows, bytes_
 
     def _stream_files(
         self, files: list[str], schema: pa.Schema, filt=None, columns=None
@@ -523,14 +584,14 @@ class IceFlightServer(flight.FlightServerBase):
 
     def list_flights(self, context, criteria):
         for name in self.connector.tables:
-            yield self._make_table_info(name)
+            yield self._make_table_info(name, self._current(name))
 
-    def _make_table_info(self, name: str) -> flight.FlightInfo:
-        schema = self._table_arrow_schema(name)
-        rows, nbytes = self._table_totals(name)
+    def _make_table_info(self, name: str, plan: _ServePlan) -> flight.FlightInfo:
+        rows, nbytes = plan.totals()
         endpoint = flight.FlightEndpoint(name.encode(), [self._advertised_location()])
         return flight.FlightInfo(
-            schema, flight.FlightDescriptor.for_path(name.encode()), [endpoint], rows, nbytes
+            plan.arrow_schema, flight.FlightDescriptor.for_path(name.encode()),
+            [endpoint], rows, nbytes,
         )
 
     def _command_info(self, cmd: dict, schema: pa.Schema) -> flight.FlightInfo:
@@ -549,9 +610,7 @@ class IceFlightServer(flight.FlightServerBase):
             if not descriptor.path:
                 raise flight.FlightServerError("empty path descriptor")
             name = descriptor.path[0].decode()
-            if name not in self.connector.tables:
-                raise flight.FlightServerError(f"table not found: {name}")
-            return self._make_table_info(name)
+            return self._make_table_info(name, self._current(name))
 
         raw = descriptor.command
         if raw == b"LIST_TABLES":
@@ -571,19 +630,14 @@ class IceFlightServer(flight.FlightServerBase):
         if op == "list_tables":
             return self._command_info(cmd, pa.schema([("table_name", pa.string())]))
         if op in ("get_schema", "get_changes"):
-            if table not in self.connector.tables:
-                raise flight.FlightServerError(f"table not found: {table}")
-            return self._command_info(cmd, self._table_arrow_schema(table))
+            return self._command_info(cmd, self._current(table).arrow_schema)
         if op == "get_changelog":
-            if table not in self.connector.tables:
-                raise flight.FlightServerError(f"table not found: {table}")
-            schema = self._table_arrow_schema(table).append(
+            schema = self._current(table).arrow_schema.append(
                 pa.field("_change_type", pa.string())
             )
             return self._command_info(cmd, schema)
         if op == "get_metadata":
-            if table not in self.connector.tables:
-                raise flight.FlightServerError(f"table not found: {table}")
+            self._existing(table)
             return self._command_info(
                 cmd,
                 pa.schema(
@@ -600,15 +654,11 @@ class IceFlightServer(flight.FlightServerBase):
             # this is how a table leaves the server: k clients each pull
             # 1/k of the files concurrently instead of one serial stream
             # (the multi-endpoint design SURVEY.md §7 calls for).
-            if table not in self.connector.tables:
-                raise flight.FlightServerError(f"table not found: {table}")
+            plan = self._current(table)
+            t, snap = plan.table, plan.snap
             n = max(1, int(cmd.get("n", 4)))
-            t = self.connector.table(table)
-            snap = t.current_snapshot()
             where = cmd.get("where") or []
-            if snap is not None and (
-                snap.delete_files or snap.eq_delete_files
-            ):
+            if snap.delete_files or snap.eq_delete_files:
                 # manifest slicing can't honor pending merge-on-read
                 # (positional or equality) deletes; degrade to ONE
                 # delete-applied endpoint
@@ -621,16 +671,16 @@ class IceFlightServer(flight.FlightServerBase):
                 # re-prunes against the pinned snapshot, so slices stay
                 # disjoint and exhaustive)
                 pruned = t._prune_files(
-                    snap, snap.manifest, self._typed_preds(snap, where)
+                    snap, snap.manifest, self._typed_preds(plan, where)
                 )
                 n = max(1, min(n, len(pruned)))
-            schema = self._table_arrow_schema(table)
-            cols = self._proj_columns(t, snap, cmd.get("columns"))
+            schema = plan.arrow_schema
+            cols = self._proj_columns(plan, cmd.get("columns"))
             if cols:
                 # column projection rides every slice ticket: each stream
                 # decodes and ships only the requested column chunks
                 schema = pa.schema([schema.field(c) for c in cols])
-            rows, nbytes = self._table_totals(table)
+            rows, nbytes = plan.totals()
             endpoints = [
                 flight.FlightEndpoint(
                     json.dumps(
@@ -665,19 +715,16 @@ class IceFlightServer(flight.FlightServerBase):
                 raise ValueError
         except (UnicodeDecodeError, json.JSONDecodeError, ValueError):
             # raw table-name ticket (reference parity, icerunner.py:272-282)
-            name = raw.decode()
-            t = self.connector.table(name)
-            snap = t.current_snapshot()
-            if snap is None:
-                raise flight.FlightServerError(f"table not found: {name}")
+            plan = self._current(raw.decode())
+            snap = plan.snap
             if snap.delete_files or snap.eq_delete_files:
                 # pending merge-on-read deletes (positional anti-join or
                 # equality keys) — Spark applies them and the result
                 # file-streams from a parquet spill (same bounded-memory
                 # path as SQL tickets). Compaction materializes the
                 # deletes and restores zero-copy manifest streaming.
-                return self._stream_df(t._scan_snapshot(snap))
-            return self._stream_resolved(t, snap.manifest, snap)
+                return self._stream_df(plan.table._scan_snapshot(snap))
+            return self._stream_resolved(plan, snap.manifest)
 
         if "sql" in cmd:
             return self._stream_df(self.connector.sql_df(cmd["sql"]))
@@ -689,7 +736,7 @@ class IceFlightServer(flight.FlightServerBase):
                 pa.table({"table_name": pa.array(names, pa.string())})
             )
         if op == "get_schema":
-            schema = self._table_arrow_schema(cmd["table"])
+            schema = self._current(cmd["table"]).arrow_schema
             empty = pa.RecordBatch.from_pylist([], schema=schema)
             return flight.GeneratorStream(schema, iter([empty]))
         if op == "get_changes":
@@ -701,9 +748,10 @@ class IceFlightServer(flight.FlightServerBase):
                 snapshot_id = int(snapshot_id)
             end_snapshot_id = cmd.get("end_snapshot_id")
             end_snapshot_id = None if end_snapshot_id is None else int(end_snapshot_id)
-            t = self.connector.table(name)
-            schema = self._table_arrow_schema(name)
+            t = self._table(name)
             snaps = t.snapshots()
+            if not snaps:
+                raise flight.FlightServerError(f"table not found: {name}")
             # validate ids up front so the ordering error is precise: an
             # end that precedes the start used to surface as a misleading
             # "unknown snapshot: <start>" (the walk broke at end first)
@@ -744,8 +792,6 @@ class IceFlightServer(flight.FlightServerBase):
                         # 'replace' = compaction, same rows -> no delta
                         files.extend(s.added_files)
                         for f in s.added_files:
-                            from icerunner_spark.table import _commit_dir_of
-
                             d = _commit_dir_of(f)
                             if d in s.file_mappings:
                                 mappings[d] = s.file_mappings[d]
@@ -761,8 +807,11 @@ class IceFlightServer(flight.FlightServerBase):
                 raise flight.FlightServerError(
                     f"unknown end snapshot: {end_snapshot_id}"
                 )
-            ctx = ctx or t.current_snapshot()
-            return self._stream_resolved(t, files, ctx, mappings)
+            # the walk's last snapshot is the current one at listing time:
+            # its schema describes exactly the files walked
+            plan = self._plan(t, ctx or snaps[-1])
+            keys = _layout_keys(plan.snap, files, plan.logical, mappings)
+            return self._stream_resolved(plan, files, keys)
         if op == "get_changelog":
             # Row-level incremental read (insert/delete rows with a
             # _change_type column) — the delta that SURVIVES merge-on-read
@@ -777,7 +826,7 @@ class IceFlightServer(flight.FlightServerBase):
                 snapshot_id = int(snapshot_id)
             end_snapshot_id = cmd.get("end_snapshot_id")
             end_snapshot_id = None if end_snapshot_id is None else int(end_snapshot_id)
-            t = self.connector.table(name)
+            t = self._table(name)
             try:
                 df = t.scan_changelog(
                     snapshot_id, end_snapshot_id,
@@ -797,7 +846,7 @@ class IceFlightServer(flight.FlightServerBase):
             # leaves the server as O(matching files + matching rows), no
             # Spark engaged unless merge-on-read deletes are pending
             name = cmd["table"]
-            t = self.connector.table(name)
+            t = self._table(name)
             # remote time travel: the ticket may pin a snapshot id, a
             # named tag, or a wall-clock timestamp (VERSION/TIMESTAMP AS
             # OF over the wire) — resolution mirrors IceTable.scan
@@ -828,11 +877,10 @@ class IceFlightServer(flight.FlightServerBase):
                 raise flight.FlightServerError(str(e))
             if snap is None:
                 raise flight.FlightServerError(f"table not found: {name}")
-            preds = self._typed_preds(snap, cmd.get("where") or [])
-            cols = self._proj_columns(t, snap, cmd.get("columns"))
+            plan = self._plan(t, snap)
+            preds = self._typed_preds(plan, cmd.get("where") or [])
+            cols = self._proj_columns(plan, cmd.get("columns"))
             if snap.delete_files or snap.eq_delete_files:
-                from icerunner_spark.table import _predicates_to_column
-
                 df = t._scan_snapshot(snap)
                 if preds:
                     df = df.where(_predicates_to_column(preds))
@@ -840,16 +888,14 @@ class IceFlightServer(flight.FlightServerBase):
                     df = df.select(*cols)
                 return self._stream_df(df)
             files = t._prune_files(snap, snap.manifest, preds)
-            return self._stream_resolved(
-                t, files, snap, preds=preds, columns=cols
-            )
+            return self._stream_resolved(plan, files, preds=preds, columns=cols)
         if op == "get_slice":
-            name = cmd["table"]
-            t = self.connector.table(name)
+            t = self._table(cmd["table"])
             snap = t.snapshot_by_id(int(cmd["snapshot_id"]))
+            plan = self._plan(t, snap)
             i, n = int(cmd["index"]), int(cmd["of"])
-            preds = self._typed_preds(snap, cmd.get("where") or [])
-            cols = self._proj_columns(t, snap, cmd.get("columns"))
+            preds = self._typed_preds(plan, cmd.get("where") or [])
+            cols = self._proj_columns(plan, cmd.get("columns"))
             if snap.delete_files or snap.eq_delete_files:
                 # deletes pending: the manifest under-describes the rows,
                 # so slicing can't apply. get_slices advertises ONE
@@ -859,15 +905,13 @@ class IceFlightServer(flight.FlightServerBase):
                 # ONLY and empty streams for the rest, or each slice
                 # would duplicate the whole table.
                 if i != 0:
-                    schema = self._table_arrow_schema(name)
+                    schema = plan.arrow_schema
                     if cols:
                         schema = pa.schema([schema.field(c) for c in cols])
                     return flight.GeneratorStream(
                         schema,
                         iter([pa.RecordBatch.from_pylist([], schema=schema)]),
                     )
-                from icerunner_spark.table import _predicates_to_column
-
                 df = t._scan_snapshot(snap)
                 if preds:
                     df = df.where(_predicates_to_column(preds))
@@ -883,18 +927,18 @@ class IceFlightServer(flight.FlightServerBase):
                 else snap.manifest
             )
             return self._stream_resolved(
-                t, files[i::n], snap, preds=preds, columns=cols
+                plan, files[i::n], preds=preds, columns=cols
             )
         if op == "get_metadata":
-            name = cmd["table"]
-            rows, nbytes = self._table_totals(name)
-            # ONE snapshot read: id, spec, and properties must describe
+            # ONE snapshot read: id, totals, spec and properties describe
             # the same table version (a commit racing between separate
             # reads would hand mirror clients a mixed reply)
-            snap = self.connector.table(name).current_snapshot()
-            snap_id = snap.snapshot_id if snap else -1
-            spec = list(snap.partition_spec) if snap else []
-            props = dict(snap.properties) if snap else {}
+            plan = self._current(cmd["table"])
+            snap = plan.snap
+            rows, nbytes = plan.totals()
+            snap_id = snap.snapshot_id
+            spec = list(snap.partition_spec)
+            props = dict(snap.properties)
             return flight.RecordBatchStream(
                 pa.table(
                     {
@@ -919,11 +963,9 @@ class IceFlightServer(flight.FlightServerBase):
     def do_put(self, context, descriptor, reader, writer):
         if not descriptor.path:
             raise flight.FlightServerError("do_put requires a path descriptor")
-        name = descriptor.path[0].decode()
-        if name not in self.connector.tables:
-            # parity: the reference's do_put does not auto-create
-            # (icerunner.py:284-295)
-            raise flight.FlightServerError(f"table not found: {name}")
+        # parity: the reference's do_put does not auto-create
+        # (icerunner.py:284-295)
+        t = self._existing(descriptor.path[0].decode())
         from icerunner_spark.connector import arrow_to_df
 
         # Stage data files per row-capped chunk (constant memory — the
@@ -931,7 +973,6 @@ class IceFlightServer(flight.FlightServerBase):
         # publish ONE snapshot at stream end: an interrupted upload leaves
         # only orphan files invisible to readers, and a client retry can't
         # duplicate half-committed chunks.
-        t = self.connector.table(name)
         staged: list[str] = []
         pending: list[pa.RecordBatch] = []
         pending_rows = 0

@@ -89,51 +89,50 @@ def register(name: str, oracle: str | None = None):
 # this list against the CORRECTNESS artifacts (CI: tests/test_tools.py)
 # and `--propose` prints the next round's list to paste here.
 _DRIVER_WINDOW = [
-    # r12: rotated via `python tools/window_policy.py --propose`
-    # after CORRECTNESS_r11 landed — head = the r6-stale cohort
-    # remainder then the r7-stale names (alphabetical within a
-    # round), topped up to 40 + the 10 pinned KEEPERS.
-
-    "ranking_family_orders",  # r6
-    "repetition_quality_documents",  # r6
-    "segment_dedup_reassemble",  # r6
-    "sequence_packing_stats",  # r6
-    "shard_assignment_stats",  # r6
-    "similarity_ann_ivf",  # r6
-    "similarity_knn_join",  # r6
-    "similarity_pq_topk",  # r6
-    "similarity_quantized_topk",  # r6
-    "snapshot_rollback_roundtrip",  # r6
-    "stratified_sample_documents",  # r6
-    "stream_corpus_clean",  # r6
-    "training_order_shuffle",  # r6
-    "try_arithmetic_orders",  # r6
-    "variant_events_extract",  # r6
-    "vocab_top_tokens",  # r6
-    "anti_join_customers_without_orders",  # r7
-    "argmax_user_events",  # r7
-    "array_embedding_norms",  # r7
-    "asof_join_events_to_orders",  # r7
-    "bm25_retrieval",  # r7
-    "catalog_view_query",  # r7
-    "cdc_changes_since_snapshot",  # r7
-    "corpus_clean_pipeline",  # r7
-    "correlated_scalar_subquery_orders",  # r7
-    "cube_lineitem_flags",  # r7
-    "date_parts_orders",  # r7
-    "decontam_semantic_overlap",  # r7
-    "dedup_exact_fingerprint",  # r7
-    "dedup_simhash",  # r7
-    "doc_winnowing_fingerprints",  # r7
-    "full_outer_monthly_volumes",  # r7
-    "incremental_ann_maintenance",  # r7
-    "lang_id_documents",  # r7
-    "lead_lag_order_gaps",  # r7
-    "multimodal_asset_stats",  # r7
-    "multimodal_audio_stats",  # r7
-    "multimodal_byte_features",  # r7
-    "multimodal_decode_stats",  # r7
-    "multimodal_frame_sample",  # r7
+    # rotated via `python tools/window_policy.py --propose` after
+    # CORRECTNESS_r12 landed — head = the r7-stale remainder then the
+    # r8-stale names (alphabetical within a round), topped up to 40 +
+    # the 10 pinned KEEPERS.
+    "multimodal_resize_stats",  # r7
+    "multimodal_video_stats",  # r7
+    "q10_returned_items",  # r7
+    "q3_shipping_priority",  # r7
+    "q5_region_revenue",  # r7
+    "quality_score_documents",  # r7
+    "range_frame_rolling_value",  # r7
+    "rollup_order_status",  # r7
+    "semi_join_customers_with_open_orders",  # r7
+    "setops_customer_order_status",  # r7
+    "similarity_ann_lsh",  # r7
+    "snapshot_compaction_roundtrip",  # r7
+    "string_agg_nations",  # r7
+    "topk_expensive_orders",  # r7
+    "type_widening_roundtrip",  # r7
+    "unpivot_revenue_matrix",  # r7
+    "window_tumbling_events",  # r7
+    "dedup_exact_documents",  # r8
+    "distinct_agg_lineitem",  # r8
+    "embedding_cosine_neardup",  # r8
+    "exists_subquery_large_orders",  # r8
+    "filtered_aggregates_orders",  # r8
+    "flight_roundtrip_nation",  # r8
+    "funnel_steps_users",  # r8
+    "gap_fill_interpolate",  # r8
+    "gaps_islands_streaks",  # r8
+    "grouped_user_trends",  # r8
+    "grouping_sets_orders",  # r8
+    "higher_order_array_ops",  # r8
+    "incremental_dedup_cdc",  # r8
+    "json_events_extract",  # r8
+    "lateral_topk_per_nation",  # r8
+    "map_functions_events",  # r8
+    "neardup_ngram_jaccard",  # r8
+    "partitioned_table_prune",  # r8
+    "percentiles_lineitem",  # r8
+    "pii_redact_documents",  # r8
+    "pivot_revenue_by_status",  # r8
+    "q17_small_quantity_revenue",  # r8
+    "q21_last_shipper",  # r8
     "q1_pricing_summary",  # KEEPER
     "window_topk_orders_per_customer",  # KEEPER
     "cdc_changelog_diff",  # KEEPER

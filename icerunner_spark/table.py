@@ -1062,6 +1062,11 @@ class IceTable:
         return [self._load_snapshot_by_seq(s) for s in seqs if s <= current]
 
     def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
+        # the current snapshot is the common pin (a Flight slice ticket,
+        # a read just planned): one snapshot load instead of the history
+        cur = self.current_snapshot()
+        if cur is not None and cur.snapshot_id == snapshot_id:
+            return cur
         for snap in self.snapshots():
             if snap.snapshot_id == snapshot_id:
                 return snap
@@ -3923,6 +3928,24 @@ class IceTable:
         explain_scan observability surface."""
         schema = StructType.fromJson(json.loads(snap.schema_json))
         types = {f.name: f.dataType for f in schema.fields}
+        # bounds-tier facts per conjunct, derived once per call rather
+        # than once per file: the column's type, field id, float flag,
+        # and whether its bounds need decoding at all (_decode_bound is
+        # the identity but for temporal and decimal types). The literal
+        # decodes on the first file that has bounds for it, so an
+        # undecodable literal fails where it always did.
+        conj = []
+        for col, _op, _val in preds:
+            dt = types.get(col)
+            tname = dt.typeName() if dt is not None else None
+            conj.append((
+                dt,
+                str(snap.field_ids.get(col, "")),
+                tname in ("float", "double"),
+                tname in ("timestamp", "timestamp_ntz", "date", "decimal"),
+            ))
+        literals: dict = {}  # conjunct index -> decoded literal
+        undecodable = object()
 
         # spec evolution: prune each file under the spec its COMMIT DIR
         # was written with, not the snapshot's current one (cached per dir)
@@ -3954,7 +3977,7 @@ class IceTable:
                 layouts[d] = _dir_layout(d)
             spec_fields, spec, transforms = layouts[d]
             pvals = _hive_partition_values(rel) if spec_fields else {}
-            for col, op, val in preds:
+            for i, (col, op, val) in enumerate(preds):
                 for sf in transforms.get(col, []):
                     # hidden partitioning: a predicate on the SOURCE
                     # column prunes via the derived path value. Every
@@ -4046,9 +4069,9 @@ class IceTable:
                             keep, tier = False, "bloom"
                             break
                 per = snap.file_stats.get(rel, {})
-                fid = str(snap.field_ids.get(col, ""))
+                dt, fid, float_type, decode = conj[i]
                 bounds = per.get(fid)
-                if not bounds or col not in types:
+                if not bounds or dt is None:
                     continue
                 nc = bounds[2] if len(bounds) > 2 else None
                 rows = per.get("__rows__")
@@ -4064,23 +4087,25 @@ class IceTable:
                     break
                 if op == "is_not_null" or bounds[0] is None or bounds[1] is None:
                     continue
-                dt = types[col]
-                try:
-                    lo, hi = (
-                        _decode_bound(dt, bounds[0]),
-                        _decode_bound(dt, bounds[1]),
-                    )
-                    v = (
-                        [_decode_bound(dt, _encode_bound(x) or x) for x in val]
-                        if op == "in"
-                        else _decode_bound(dt, _encode_bound(val) or val)
-                    )
-                except (ValueError, TypeError):
+                lo, hi = bounds[0], bounds[1]
+                if decode:
+                    try:
+                        lo, hi = _decode_bound(dt, lo), _decode_bound(dt, hi)
+                    except (ValueError, TypeError):
+                        continue
+                if i not in literals:
+                    try:
+                        literals[i] = (
+                            [_decode_bound(dt, _encode_bound(x) or x) for x in val]
+                            if op == "in"
+                            else _decode_bound(dt, _encode_bound(val) or val)
+                        )
+                    except (ValueError, TypeError):
+                        literals[i] = undecodable
+                v = literals[i]
+                if v is undecodable:
                     continue
-                if not _bounds_may_match(
-                    lo, hi, op, v,
-                    float_type=dt.typeName() in ("float", "double"),
-                ):
+                if not _bounds_may_match(lo, hi, op, v, float_type=float_type):
                     keep, tier = False, "bounds"
                     break
             if keep:

@@ -1620,3 +1620,197 @@ def test_mirror_replicates_table_properties(spark, server, tmp_path):
     got2 = tgt.table("props_m").current_snapshot().properties
     assert got2.get("maintenance.small-file-rows") == "250"
     assert got2.get("local.only") == "keep"
+
+
+# ---------------------------------------------------------------- serve plans
+
+
+def _cmd_descriptor(cmd: dict) -> flight.FlightDescriptor:
+    return flight.FlightDescriptor.for_command(json.dumps(cmd).encode())
+
+
+def _serve_answers(port: int, name: str) -> dict:
+    """What a client sees of one table through info, a projected scan, a
+    full get and get_slices — schemas with their field metadata, totals,
+    rows sorted by id, and the slice tickets."""
+    client = flight.connect(f"grpc://127.0.0.1:{port}")
+    info = client.get_flight_info(flight.FlightDescriptor.for_path(name.encode()))
+    cols = info.schema.names[:2]
+    scan = client.do_get(
+        flight.Ticket(
+            json.dumps(
+                {"command": "scan", "table": name,
+                 "where": [["id", ">=", 2]], "columns": cols}
+            ).encode()
+        )
+    ).read_all()
+    got = client.do_get(flight.Ticket(name.encode())).read_all()
+    sl = client.get_flight_info(
+        _cmd_descriptor({"command": "get_slices", "table": name, "n": 2})
+    )
+    parts = [client.do_get(ep.ticket).read_all() for ep in sl.endpoints]
+    slices = pa.concat_tables(parts) if parts else None
+    client.close()
+    return {
+        "info": (info.schema, info.total_records, info.total_bytes),
+        "scan": (scan.schema, scan.sort_by("id").to_pylist()),
+        "get": (got.schema, got.sort_by("id").to_pylist()),
+        "slices": (
+            sl.schema, sl.total_records, sl.total_bytes,
+            [ep.ticket.ticket for ep in sl.endpoints],
+            slices.schema, slices.sort_by("id").to_pylist(),
+        ),
+    }
+
+
+def _assert_same_answers(warm: dict, fresh: dict) -> None:
+    for kind in warm:
+        w, f = warm[kind], fresh[kind]
+        assert len(w) == len(f), kind
+        for a, b in zip(w, f):
+            if isinstance(a, pa.Schema):
+                assert a.equals(b, check_metadata=True), (kind, a, b)
+            else:
+                assert a == b, kind
+
+
+@pytest.mark.parametrize("mutation", ["do_put", "add_column", "rename", "mor_delete_compact"])
+def test_warm_server_answers_like_fresh_server(spark, warehouse, server, mutation):
+    """Serve plans are cached per snapshot, never per table: after each
+    kind of commit, a server that already answered for the old snapshot
+    answers every read RPC exactly like a freshly started server."""
+    c = server.connector
+    c.create_table("fresh", _writer_table([0, 1, 2, 3], ["a", "b", "c", "d"]))
+    c.insert("fresh", _writer_table([4, 5, 6], ["e", "f", "g"]))
+    t = c.table("fresh")
+    before = _serve_answers(server.port, "fresh")  # plans for the old snapshot
+
+    if mutation == "do_put":
+        steps = [lambda: write_batch(
+            "127.0.0.1", server.port, "fresh", _writer_table([7, 8], ["h", "i"])
+        )]
+    elif mutation == "add_column":
+        steps = [lambda: t.add_column("score", "double", default=0.5)]
+    elif mutation == "rename":
+        steps = [lambda: t.rename_column("value", "label")]
+    else:
+        steps = [
+            lambda: t.delete_where(F.col("id") % 2 == 0, mode="merge-on-read"),
+            lambda: t.compact(),
+        ]
+    for step in steps:
+        step()
+        warm = _serve_answers(server.port, "fresh")
+        fresh_srv = IceFlightServer(Connector(spark, warehouse), host="127.0.0.1", port=0)
+        try:
+            fresh = _serve_answers(fresh_srv.port, "fresh")
+        finally:
+            fresh_srv.shutdown()
+        _assert_same_answers(warm, fresh)
+        assert warm != before  # the commit is visible, not a stale plan
+
+
+def test_plan_cache_stays_bounded(server):
+    """More commits than the plan LRU holds: the cache keeps at most
+    PLAN_CACHE_SIZE plans, and every answer reflects its commit."""
+    from icerunner_spark.flight import server as server_mod
+
+    c = server.connector
+    c.create_table("many", _writer_table([1, 2], ["a", "b"]))
+    t = c.table("many")
+    client = _client(server)
+    for i in range(server_mod.PLAN_CACHE_SIZE + 3):
+        t.set_properties({"round": str(i)})  # a metadata-only commit
+        meta = client.do_get(
+            flight.Ticket(json.dumps({"command": "get_metadata", "table": "many"}).encode())
+        ).read_all().to_pydict()
+        assert meta["snapshot_id"][0] == t.current_snapshot().snapshot_id
+        assert json.loads(meta["properties"][0]) == {"round": str(i)}
+        assert meta["total_rows"][0] == 2
+        assert len(server._plans) <= server_mod.PLAN_CACHE_SIZE
+    assert len(server._plans) == server_mod.PLAN_CACHE_SIZE
+
+
+@pytest.mark.parametrize("rpc", ["info", "get_metadata", "get_slices"])
+def test_reply_describes_one_snapshot_despite_racing_commit(spark, server, monkeypatch, rpc):
+    """A commit that lands mid-RPC, right after the RPC's first snapshot
+    read, must not mix table versions in the reply: the snapshot id,
+    schema and totals all describe the snapshot that read returned."""
+    c = server.connector
+    c.create_table("race", _writer_table([1, 2], ["a", "b"]))
+    first = c.table("race").current_snapshot()
+    real_table = c.table
+    fired = []
+
+    def racing_table(name):
+        t = real_table(name)
+        read = t.current_snapshot
+
+        def current_snapshot():
+            snap = read()
+            if not fired:
+                fired.append(snap.snapshot_id)
+                h = real_table(name)
+                h.add_column("score", "double")
+                h.append(spark.createDataFrame(
+                    [(3, "c", 1.0)], "id long, value string, score double"
+                ))
+            return snap
+
+        t.current_snapshot = current_snapshot
+        return t
+
+    client = _client(server)
+    monkeypatch.setattr(c, "table", racing_table)
+    if rpc == "info":
+        info = client.get_flight_info(flight.FlightDescriptor.for_path(b"race"))
+        names, rows = info.schema.names, info.total_records
+    elif rpc == "get_metadata":
+        meta = client.do_get(
+            flight.Ticket(json.dumps({"command": "get_metadata", "table": "race"}).encode())
+        ).read_all().to_pydict()
+        assert meta["snapshot_id"][0] == first.snapshot_id
+        names, rows = ["id", "value"], meta["total_rows"][0]
+    else:
+        sl = client.get_flight_info(
+            _cmd_descriptor({"command": "get_slices", "table": "race", "n": 2})
+        )
+        pinned = {json.loads(ep.ticket.ticket)["snapshot_id"] for ep in sl.endpoints}
+        assert pinned == {first.snapshot_id}
+        names, rows = sl.schema.names, sl.total_records
+        got = pa.concat_tables([client.do_get(ep.ticket).read_all() for ep in sl.endpoints])
+        assert got.schema.names == ["id", "value"]
+        assert sorted(got.column("id").to_pylist()) == [1, 2]
+    assert fired == [first.snapshot_id]  # the commit did land mid-RPC
+    assert names == ["id", "value"]
+    assert rows == 2
+    # the next RPC sees the commit
+    info = client.get_flight_info(flight.FlightDescriptor.for_path(b"race"))
+    assert info.schema.names == ["id", "value", "score"]
+    assert info.total_records == 3
+
+
+def test_slice_ticket_pinned_to_older_snapshot(server, monkeypatch):
+    """A get_slice ticket names its snapshot: after newer commits it still
+    serves that snapshot's rows. A ticket pinned to the CURRENT snapshot
+    resolves without walking the table's history."""
+    from icerunner_spark.table import IceTable
+
+    c = server.connector
+    c.create_table("pin", _writer_table([1, 2], ["a", "b"]))
+    c.insert("pin", _writer_table([3], ["c"]))
+    client = _client(server)
+    cmd = {"command": "get_slices", "table": "pin", "n": 2}
+    old = client.get_flight_info(_cmd_descriptor(cmd))
+    c.insert("pin", _writer_table([4, 5], ["d", "e"]))
+    got = pa.concat_tables([client.do_get(ep.ticket).read_all() for ep in old.endpoints])
+    assert sorted(got.column("id").to_pylist()) == [1, 2, 3]
+
+    cur = client.get_flight_info(_cmd_descriptor(cmd))
+
+    def no_history(self):
+        raise AssertionError("history walk for the current snapshot")
+
+    monkeypatch.setattr(IceTable, "snapshots", no_history)
+    got = pa.concat_tables([client.do_get(ep.ticket).read_all() for ep in cur.endpoints])
+    assert sorted(got.column("id").to_pylist()) == [1, 2, 3, 4, 5]
