@@ -23,7 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from icerunner_spark.catalog import Catalog
-from icerunner_spark.table import IceTable, NoSuchTableError
+from icerunner_spark.table import IceTable, NoSuchTableError, _timestamps_to_us
 
 
 def arrow_to_df(spark: SparkSession, data: pa.Table) -> DataFrame:
@@ -35,17 +35,7 @@ def arrow_to_df(spark: SparkSession, data: pa.Table) -> DataFrame:
     deliberately do not replicate, SURVEY.md §1.2)."""
     # Timestamps: normalize to microseconds (Spark's native resolution) to
     # avoid ns truncation surprises at the boundary.
-    fields = []
-    cols = []
-    for field_, col in zip(data.schema, data.columns):
-        if pa.types.is_timestamp(field_.type) and field_.type.unit != "us":
-            t = pa.timestamp("us", tz=field_.type.tz)
-            fields.append(pa.field(field_.name, t, field_.nullable))
-            cols.append(col.cast(t))
-        else:
-            fields.append(field_)
-            cols.append(col)
-    data = pa.Table.from_arrays(cols, schema=pa.schema(fields))
+    data = _timestamps_to_us(data)
     # PySpark >= 4.0 takes an Arrow Table directly (zero pandas lossiness).
     return spark.createDataFrame(data)
 
@@ -96,7 +86,7 @@ class Connector:
         t = self.catalog.table(table_name)
         if not t.exists():
             return False
-        t.append(arrow_to_df(self.spark, data))
+        t.append(data)
         return True
 
     # -- reads ------------------------------------------------------- #

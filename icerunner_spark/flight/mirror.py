@@ -124,14 +124,10 @@ def _apply_changelog_stream(
             pending_rows += ins.num_rows
             total += ins.num_rows
         if pending_rows >= batch_rows:
-            staged += t.stage_append(
-                arrow_to_df(connector.spark, pa.concat_tables(pending))
-            )
+            staged += t.stage_append(pa.concat_tables(pending))
             pending, pending_rows = [], 0
     if pending:
-        staged += t.stage_append(
-            arrow_to_df(connector.spark, pa.concat_tables(pending))
-        )
+        staged += t.stage_append(pa.concat_tables(pending))
     if staged:
         t.publish_append(staged)
     if del_parts:

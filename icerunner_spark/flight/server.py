@@ -33,13 +33,18 @@ the reference's mirror client speaks but its own server never implemented
   schema and then returns -1/-1, icerunner.py:306-307).
 - ``do_put`` appends to an existing table in row-count chunks (the
   reference buffers the entire upload, icerunner.py:287-291, and its
-  "batch_size" counts batches, not rows — bug at :1118).
+  "batch_size" counts batches, not rows — bug at :1118). Each chunk of
+  an unpartitioned table is written in-process as one parquet file with
+  pyarrow, like the reference's PyIceberg append (icerunner.py:163-178);
+  a partitioned table's chunks go through Spark's partitioned writer.
 
 Serve-path scale: a full-table ``do_get`` streams record batches straight
 from the manifest's parquet files through ``pyarrow.dataset`` — zero
 driver materialization, constant memory. Spark is only engaged for SQL
-tickets and for ingest commits. This is the design SURVEY.md §7 calls out
-as "the one place the reference's architecture actively fights Spark".
+tickets, changelog reads and reads of tables with pending merge-on-read
+deletes (those three spill to parquet), puts into partitioned tables, and
+opt-in bloom/NDV sidecar harvests. This is the design SURVEY.md §7 calls
+out as "the one place the reference's architecture actively fights Spark".
 
 Metadata work is per commit, not per RPC. Each RPC reads the table's
 snapshot once and answers from that snapshot's serve plan
@@ -966,13 +971,12 @@ class IceFlightServer(flight.FlightServerBase):
         # parity: the reference's do_put does not auto-create
         # (icerunner.py:284-295)
         t = self._existing(descriptor.path[0].decode())
-        from icerunner_spark.connector import arrow_to_df
-
         # Stage data files per row-capped chunk (constant memory — the
         # reference buffers the whole upload, icerunner.py:287-291) but
         # publish ONE snapshot at stream end: an interrupted upload leaves
-        # only orphan files invisible to readers, and a client retry can't
-        # duplicate half-committed chunks.
+        # nothing readers can see, and a client retry can't duplicate
+        # half-committed chunks. The chunks are Arrow already, so an
+        # unpartitioned table stages each as one parquet file in-process.
         staged: list[str] = []
         pending: list[pa.RecordBatch] = []
         pending_rows = 0
@@ -984,24 +988,17 @@ class IceFlightServer(flight.FlightServerBase):
                 pending.append(batch)
                 pending_rows += batch.num_rows
                 if pending_rows >= self.chunk_rows:
-                    staged += t.stage_append(
-                        arrow_to_df(self.connector.spark, pa.Table.from_batches(pending))
-                    )
+                    staged += t.stage_append(pa.Table.from_batches(pending))
                     pending, pending_rows = [], 0
             if pending:
-                staged += t.stage_append(
-                    arrow_to_df(self.connector.spark, pa.Table.from_batches(pending))
-                )
-        except Exception:
+                staged += t.stage_append(pa.Table.from_batches(pending))
+        except Exception as e:
             # a failed upload (client abort, schema mismatch on a later
-            # chunk) must not leak its staged-but-unpublished files —
-            # best-effort delete; anything that survives a crash here is
-            # caught by IceTable.remove_orphans()
-            for f in staged:
-                try:
-                    os.remove(os.path.join(t.path, f))
-                except OSError:
-                    pass
+            # chunk) must not leak what it staged — its commit dirs go
+            # whole; remove_orphans() collects whatever a crash leaves
+            t.discard_staged(staged)
+            if isinstance(e, ValueError):  # a refused schema or property
+                raise flight.FlightServerError(str(e)) from e
             raise
         if staged:
             t.publish_append(staged)

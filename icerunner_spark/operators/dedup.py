@@ -351,6 +351,14 @@ def ngram_sets(
 
     from icerunner_spark.operators.spread import spread_if_narrow
 
+    # ids are cast to bigint below; a non-integral id would cast to NULL
+    id_type = df.schema[id_col].dataType
+    if id_type.typeName() not in ("byte", "short", "integer", "long"):
+        raise ValueError(
+            f"ngram_sets: id column {id_col!r} must be integral, "
+            f"got {id_type.simpleString()}"
+        )
+
     # two projections on purpose: the normalization materializes before
     # the gram lambda (see functions.text.normalize_ws — an inlined norm
     # re-runs the regex once PER GRAM, measured 2.7x on this stage).

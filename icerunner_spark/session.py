@@ -7,8 +7,12 @@ chosen for correctness on local[N] test runs *and* sanity on a large cluster:
 - AQE on (runtime coalescing, skew-join splitting, dynamic join strategy).
 - Arrow on for every Python<->JVM columnar boundary (Flight serve/ingest
   path, pandas UDFs).
-- ``TimestampNTZ`` + UTC session zone so parquet/Arrow/DuckDB-oracle
-  timestamps round-trip bit-identically (SURVEY.md §7 "timestamp fidelity").
+- UTC session zone so parquet/Arrow/DuckDB-oracle timestamps round-trip
+  bit-identically (SURVEY.md §7 "timestamp fidelity"). ``spark.sql.
+  timestampType`` keeps Spark's default (TIMESTAMP_LTZ): a naive Arrow
+  timestamp lands as Spark ``timestamp``, its wall-clock value read in
+  the session zone (UTC); only ``timestamp_ntz`` columns declared as such
+  stay zone-free.
 - shuffle partitions default to the local core count; on a real cluster this
   is expected to be overridden (or left to AQE coalescing from a higher
   initial number).

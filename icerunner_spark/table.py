@@ -11,8 +11,10 @@ Re-implements the storage semantics the reference gets from Apache Iceberg
           metadata/snap-<seq>.json           (immutable snapshot manifest)
           metadata/current                   (pointer file, atomically replaced)
 
-- Every commit (create/append/overwrite) writes new parquet files with
-  Spark's distributed writer, then publishes an immutable snapshot manifest
+- Every commit (create/append/overwrite) writes new parquet files — with
+  Spark's distributed writer, or in-process with pyarrow when an Arrow
+  table is appended to an unpartitioned table (:meth:`IceTable.
+  stage_append`) — then publishes an immutable snapshot manifest
   listing **added files** and the **full file set**, then atomically swaps
   the ``current`` pointer (``os.replace``). Readers resolve ``current``
   once per query, so they always see a consistent snapshot — the moral
@@ -33,13 +35,15 @@ Re-implements the storage semantics the reference gets from Apache Iceberg
   against the snapshots metadata table which duplicates every current row
   per matching snapshot (icerunner.py:224-259, documented delta).
 
-Scale notes (100 TB design): all data moves through Spark's distributed
-parquet reader/writer — the driver only touches manifest JSON (O(#files)
-strings, no row data). File lists are stored relative to the table root so
-a warehouse can be relocated (the reference needed
-``allow_moved_paths=true`` for this, icerunner.py:98). For truly huge
-tables the manifest would graduate to parquet manifests + a metadata tree
-like Iceberg's; the commit protocol would not change.
+Scale notes (100 TB design): DataFrame data moves through Spark's
+distributed parquet reader/writer — the driver only touches manifest JSON
+(O(#files) strings, no row data); Arrow appends are written where they
+already sit, in driver memory, one bounded chunk at a time. File lists
+are stored relative to the table root so a warehouse can be relocated
+(the reference needed ``allow_moved_paths=true`` for this,
+icerunner.py:98). For truly huge tables the manifest would graduate to
+parquet manifests + a metadata tree like Iceberg's; the commit protocol
+would not change.
 """
 
 from __future__ import annotations
@@ -51,6 +55,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -320,6 +325,55 @@ def _commit_dir_of(relpath: str) -> str:
     one commit dir were written by one commit, hence share a write schema."""
     parts = relpath.replace(os.sep, "/").split("/")
     return parts[1] if len(parts) >= 3 and parts[0] == "data" else relpath
+
+
+def _timestamps_to_us(data: pa.Table) -> pa.Table:
+    """Cast top-level timestamp columns to microseconds (Spark's native
+    resolution); a cast that would drop sub-microsecond digits raises
+    rather than truncating silently."""
+    fields = [
+        pa.field(f.name, pa.timestamp("us", tz=f.type.tz), f.nullable)
+        if pa.types.is_timestamp(f.type) and f.type.unit != "us"
+        else f
+        for f in data.schema
+    ]
+    return data.cast(pa.schema(fields))
+
+
+def _nullable_arrow(t: pa.DataType) -> pa.DataType:
+    """``t`` with every nested field nullable (map keys stay required,
+    as Arrow demands)."""
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _nullable_arrow(f.type)) for f in t])
+    if pa.types.is_list(t):
+        return pa.list_(pa.field(t.value_field.name, _nullable_arrow(t.value_type)))
+    if pa.types.is_map(t):
+        return pa.map_(t.key_type, _nullable_arrow(t.item_type))
+    return t
+
+
+def _nulls_narrowed(src, dst) -> bool:
+    """Whether Spark type ``dst`` declares NOT NULL somewhere below the
+    top level where ``src`` (the same type modulo nullability) allows
+    nulls — the cast Spark refuses."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    if isinstance(dst, ArrayType):
+        return (src.containsNull and not dst.containsNull) or _nulls_narrowed(
+            src.elementType, dst.elementType
+        )
+    if isinstance(dst, MapType):
+        return (
+            (src.valueContainsNull and not dst.valueContainsNull)
+            or _nulls_narrowed(src.keyType, dst.keyType)
+            or _nulls_narrowed(src.valueType, dst.valueType)
+        )
+    if isinstance(dst, StructType):
+        return any(
+            (a.nullable and not b.nullable) or _nulls_narrowed(a.dataType, b.dataType)
+            for a, b in zip(src.fields, dst.fields)
+        )
+    return False
 
 
 def _hive_value_str(val) -> str | None:
@@ -1829,14 +1883,7 @@ class IceTable:
         ``partition_by``, files land under hive-style ``col=value/``
         subdirectories of the commit dir (the partition columns live in
         the paths, not the files — Spark's partitioned writer).
-
-        ``field_ids`` (the WRITE-time logical-name -> id map) stages a
-        ``_write_mapping.json`` sidecar recording the physical name each
-        id was written under. ``_publish`` prefers the sidecar when
-        stamping ``file_mappings`` — the record that keeps a staged
-        append resolvable when a rename/drop commits between write and
-        publish (publish-time ids would stamp the wrong names and the
-        columns would silently read back as NULL)."""
+        ``field_ids`` and ``properties`` feed :meth:`_stage_sidecars`."""
         commit_dir = f"snap-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.data_dir, commit_dir)
         props = properties
@@ -1873,17 +1920,8 @@ class IceTable:
         # compaction without waiting for one. Task-local sort only (no
         # extra shuffle); combine with write.distribution-mode=range on
         # the same columns for globally disjoint file bounds.
-        sort_cols = [
-            c.strip()
-            for c in (props or {}).get("write.sort.columns", "").split(",")
-            if c.strip()
-        ]
+        sort_cols = self._sort_columns(props, df.columns)
         if sort_cols:
-            missing = [c for c in sort_cols if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"write.sort.columns references unknown columns {missing}"
-                )
             df = df.sortWithinPartitions(*sort_cols)
         w = df.write.mode("error")
         # write.parquet.compression-codec (Iceberg table property): the
@@ -1895,12 +1933,6 @@ class IceTable:
         if spec_fields:
             w = w.partitionBy(*[sf.pname for sf in spec_fields])
         w.parquet(out)
-        if field_ids is not None:
-            mapping = {
-                str(field_ids[n]): n for n in df.columns if n in field_ids
-            }
-            with open(os.path.join(out, self._WRITE_MAPPING), "w") as f:
-                json.dump(mapping, f)
         files = []
         for root, _dirs, names in os.walk(out):
             for f in names:
@@ -1909,24 +1941,129 @@ class IceTable:
                         os.path.relpath(os.path.join(root, f), self.path)
                     )
         files.sort()
-        # stage the files' column bounds beside them: _publish folds the
-        # sidecar into the snapshot's file_stats (manifest pruning), and
-        # like the write mapping it survives a stage/publish gap
-        stats = self._harvest_column_stats(files)
-        with open(os.path.join(out, self._FILE_STATS), "w") as f:
-            json.dump(stats, f)
-        # opt-in per-file bloom filters (write.bloom.columns): stay in a
-        # commit-dir sidecar, NOT the snapshot JSON — bitmaps are KBs per
-        # file-column and only equality scans ever load them
-        bloom_cols = [
+        self._stage_sidecars(
+            commit_dir, files, df.columns, field_ids, props,
+            list(partition_by or []),
+        )
+        return commit_dir, files
+
+    # pyarrow's names for the Spark parquet codecs it writes differently
+    _ARROW_CODECS = {"uncompressed": "none", "lz4_raw": "lz4"}
+
+    def _write_arrow_files(
+        self, data: pa.Table, *, field_ids: dict, properties: dict
+    ) -> tuple[str, list[str]]:
+        """In-process parquet write of one already-aligned Arrow table
+        into a fresh commit dir of an unpartitioned table: ONE file,
+        sorted like Spark's writer sorts (``write.sort.columns``,
+        ascending, nulls first, NaN last), in the table's codec — no
+        Spark job. Sidecars through :meth:`_stage_sidecars`."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        sort_cols = self._sort_columns(properties, data.column_names)
+        if sort_cols:
+            keys, order = {}, []
+            for i, c in enumerate(sort_cols):
+                col = data.column(c)
+                if pa.types.is_floating(col.type):
+                    keys[f"n{i}"] = pc.is_nan(col)
+                    order.append((f"n{i}", "ascending"))
+                keys[f"k{i}"] = col
+                order.append((f"k{i}", "ascending"))
+            data = data.take(
+                pc.sort_indices(
+                    pa.table(keys), sort_keys=order, null_placement="at_start"
+                )
+            )
+        codec = properties.get("write.parquet.compression-codec", "snappy")
+        codec = self._ARROW_CODECS.get(codec.lower(), codec.lower())
+        commit_dir = f"snap-{uuid.uuid4().hex[:12]}"
+        out = os.path.join(self.data_dir, commit_dir)
+        os.makedirs(out)
+        rel = os.path.relpath(
+            os.path.join(out, f"part-00000-{uuid.uuid4()}.parquet"), self.path
+        )
+        try:
+            # no ARROW:schema: pyarrow then reads these files back from
+            # the parquet schema alone, exactly as it reads Spark's
+            pq.write_table(
+                data, os.path.join(self.path, rel), compression=codec,
+                store_schema=False,
+            )
+            self._stage_sidecars(
+                commit_dir, [rel], data.column_names, field_ids, properties, []
+            )
+        except BaseException:
+            import shutil
+
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        return commit_dir, [rel]
+
+    @staticmethod
+    def _sort_columns(props: dict | None, columns: list[str]) -> list[str]:
+        """``write.sort.columns`` as a list; unknown columns refuse."""
+        sort_cols = [
             c.strip()
-            for c in (props or {}).get("write.bloom.columns", "").split(",")
+            for c in (props or {}).get("write.sort.columns", "").split(",")
             if c.strip()
         ]
+        missing = [c for c in sort_cols if c not in columns]
+        if missing:
+            raise ValueError(
+                f"write.sort.columns references unknown columns {missing}"
+            )
+        return sort_cols
+
+    def _stage_sidecars(
+        self, commit_dir: str, files: list[str], columns: list[str],
+        field_ids: dict | None, props: dict | None, spec: list,
+    ) -> None:
+        """Stage a commit dir's JSON sidecars beside its data files; every
+        writer (Spark, Arrow, ``add_files``) ends here.
+
+        - ``field_ids`` (the WRITE-time logical-name -> id map) stages a
+          ``_write_mapping.json`` recording the physical name each id was
+          written under. ``_publish`` prefers it when stamping
+          ``file_mappings`` — the record that keeps a staged append
+          resolvable when a rename/drop commits between write and publish
+          (publish-time ids would stamp the wrong names and the columns
+          would silently read back as NULL).
+        - column bounds: ``_publish`` folds them into the snapshot's
+          file_stats (manifest pruning); they too survive a stage/publish
+          gap.
+        - opt-in per-file bloom filters (``write.bloom.columns``) and HLL
+          NDV sketches (``write.ndv.columns``) stay in sidecars, NOT the
+          snapshot JSON — KBs per file-column, loaded only by the scans
+          and estimates that use them.
+        - the partition spec the files were WRITTEN under — the layout a
+          later update_partition_spec must keep reading this dir with."""
+        out = os.path.join(self.data_dir, commit_dir)
+        props = props or {}
+
+        def _dump(name, obj):
+            with open(os.path.join(out, name), "w") as f:
+                json.dump(obj, f)
+
+        if field_ids is not None:
+            _dump(
+                self._WRITE_MAPPING,
+                {str(field_ids[n]): n for n in columns if n in field_ids},
+            )
+        _dump(self._FILE_STATS, self._harvest_column_stats(files))
         # identity-partition columns live in paths, not files; transforms
         # keep their source column physical — filter to what's in-file
-        path_cols = {sf.pname for sf in spec_fields}
-        bloom_cols = [c for c in bloom_cols if c not in path_cols]
+        path_cols = {sf.pname for sf in _parse_spec(spec)}
+
+        def _listed(key):
+            return [
+                c.strip()
+                for c in props.get(key, "").split(",")
+                if c.strip() and c.strip() not in path_cols
+            ]
+
+        bloom_cols = _listed("write.bloom.columns")
         if bloom_cols and files:
             nbits = 1 << max(
                 10,
@@ -1934,24 +2071,13 @@ class IceTable:
             )
             blooms = self._harvest_bloom(files, bloom_cols, nbits)
             if blooms:
-                with open(os.path.join(out, self._BLOOM), "w") as f:
-                    json.dump(blooms, f)
-        # opt-in per-file HLL NDV sketches (write.ndv.columns)
-        ndv_cols = [
-            c.strip()
-            for c in (props or {}).get("write.ndv.columns", "").split(",")
-            if c.strip() and c.strip() not in path_cols
-        ]
+                _dump(self._BLOOM, blooms)
+        ndv_cols = _listed("write.ndv.columns")
         if ndv_cols and files:
             sketches = self._harvest_ndv(files, ndv_cols)
             if sketches:
-                with open(os.path.join(out, self._NDV), "w") as f:
-                    json.dump(sketches, f)
-        # record the spec these files were WRITTEN under — the layout a
-        # later update_partition_spec must keep reading this dir with
-        with open(os.path.join(out, self._WRITE_SPEC), "w") as f:
-            json.dump(list(partition_by or []), f)
-        return commit_dir, files
+                _dump(self._NDV, sketches)
+        _dump(self._WRITE_SPEC, list(spec))
 
     # ---------- public write API ----------
 
@@ -2041,10 +2167,13 @@ class IceTable:
             properties_update=dict(updates),
         )
 
-    def append(self, df: DataFrame, *, summary: dict | None = None) -> Snapshot:
+    def append(
+        self, data: DataFrame | pa.Table, *, summary: dict | None = None
+    ) -> Snapshot:
+        """Stage (:meth:`stage_append`) and publish one append."""
         if not self.exists():
             raise NoSuchTableError(self.path)
-        return self.publish_append(self.stage_append(df), summary=summary)
+        return self.publish_append(self.stage_append(data), summary=summary)
 
     def _writer_high_water(self, writer_id: str) -> int:
         """Highest batch id ``append_once`` has committed for this
@@ -2100,51 +2229,102 @@ class IceTable:
             },
         )
 
+    def _write_cast_needed(self, name: str, dt, declared) -> bool:
+        """Whether a column of type ``dt`` must be cast to go into the
+        table's ``declared`` type: False when it already is that type,
+        True when it equals it modulo nullability (e.g. array<string>
+        with a different containsNull, unless ``declared`` is the one
+        that forbids nulls — Spark refuses that cast) or sits safely BELOW it on the
+        widening lattice (int-family up, float->double, same-scale
+        decimal precision growth). A WIDER input refuses loudly: writing
+        it would put physical pages above the declared type, which the
+        reader cannot downcast — the file would poison every future scan
+        (e.g. a decimal SUM that silently widened precision)."""
+        if dt == declared:
+            return False
+        if dt.simpleString() == declared.simpleString():
+            if _nulls_narrowed(dt, declared):
+                raise ValueError(
+                    f"column {name} may hold nested nulls where the table's "
+                    f"{declared.simpleString()} declares none — not safely "
+                    f"writable"
+                )
+            return True
+        ok = (dt.typeName(), declared.typeName()) in self._WIDEN_OK
+        if dt.typeName() == "decimal" and declared.typeName() == "decimal":
+            ok = dt.scale == declared.scale and dt.precision <= declared.precision
+        if not ok:
+            raise ValueError(
+                f"column {name} is {dt.simpleString()} but the table "
+                f"declares {declared.simpleString()} — not safely "
+                f"writable; cast explicitly or widen_column first"
+            )
+        return True
+
     def _align_df_to_schema(self, df: DataFrame, schema: StructType) -> DataFrame:
         """Reorder ``df`` to the table's column order and upcast columns
-        sitting safely BELOW their declared type on the widening lattice
-        (int-family up, float->double, same-scale decimal precision
-        growth). A WIDER input type refuses loudly: writing it would put
-        physical pages above the declared type, which the reader cannot
-        downcast — the file would poison every future scan (e.g. a
-        decimal SUM that silently widened precision). Missing columns
-        raise in the select, as before."""
+        per :meth:`_write_cast_needed`. Missing columns raise in the
+        select."""
         types = {f.name: f.dataType for f in df.schema.fields}
         cols = []
         for f in schema.fields:
             dt = types.get(f.name)
-            if dt is None or dt == f.dataType:
+            if dt is None or not self._write_cast_needed(f.name, dt, f.dataType):
                 cols.append(F.col(f.name))
-                continue
-            if dt.simpleString() == f.dataType.simpleString():
-                # equal modulo nullability (e.g. array<string> with a
-                # different containsNull) — normalize with a cast, the
-                # pre-check behavior for these always-safe writes
+            else:
                 cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-                continue
-            ok = (dt.typeName(), f.dataType.typeName()) in self._WIDEN_OK
-            if dt.typeName() == "decimal" and f.dataType.typeName() == "decimal":
-                ok = (
-                    dt.scale == f.dataType.scale
-                    and dt.precision <= f.dataType.precision
-                )
-            if not ok:
-                raise ValueError(
-                    f"column {f.name} is {dt.simpleString()} but the table "
-                    f"declares {f.dataType.simpleString()} — not safely "
-                    f"writable; cast explicitly or widen_column first"
-                )
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
         return df.select(*cols)
 
-    def stage_append(self, df: DataFrame) -> list[str]:
+    def _align_arrow_to_schema(self, data: pa.Table, schema: StructType) -> pa.Table:
+        """Arrow twin of :meth:`_align_df_to_schema`. Each column takes
+        the Spark type that ``arrow_to_df`` would give it, passes the
+        same lattice check, and is cast to the declared type's Arrow
+        form. Naive timestamps bound for ``timestamp`` columns are read
+        in the session time zone first, as Spark's Arrow conversion
+        reads them; every field turns nullable, as Spark's file writer
+        makes them."""
+        from pyspark.sql.pandas.types import (
+            _check_arrow_table_timestamps_localize,
+            from_arrow_schema,
+            to_arrow_type,
+        )
+        from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+        missing = [f.name for f in schema.fields if f.name not in data.column_names]
+        if missing:
+            raise ValueError(f"appended data lacks table columns {missing}")
+        data = _timestamps_to_us(data.select([f.name for f in schema.fields]))
+        given = from_arrow_schema(
+            data.schema, prefer_timestamp_ntz=is_timestamp_ntz_preferred()
+        )
+        for g, f in zip(given.fields, schema.fields):
+            self._write_cast_needed(f.name, g.dataType, f.dataType)
+        data = _check_arrow_table_timestamps_localize(
+            data, given, True, self.spark.conf.get("spark.sql.session.timeZone")
+        )
+        return data.cast(
+            pa.schema(
+                [
+                    pa.field(f.name, _nullable_arrow(to_arrow_type(f.dataType)))
+                    for f in schema.fields
+                ]
+            )
+        )
+
+    def stage_append(self, data: DataFrame | pa.Table) -> list[str]:
         """Write append data files WITHOUT publishing a snapshot. Returns
         the relative file list; pass the concatenation of one or more
         staged lists to :meth:`publish_append` to commit them as ONE
         snapshot. Staged files are invisible to readers until published
         (manifests are the only read path), so an abandoned stage leaves
         orphan files for cleanup, never a partially-applied write —
-        the same write-then-commit protocol Iceberg uses."""
+        the same write-then-commit protocol Iceberg uses.
+
+        The writer follows the input: an Arrow table bound for an
+        unpartitioned table is written in-process as one parquet file
+        (no Spark job — the data already sits in driver memory); a
+        DataFrame, or any append to a partitioned table (hive paths and
+        transforms), goes through Spark's writer."""
         snap = self.current_snapshot()
         if snap is None:
             raise NoSuchTableError(self.path)
@@ -2152,13 +2332,33 @@ class IceTable:
         # schema must match, icerunner.py:163-178; we additionally reorder
         # and upcast safely-narrower columns).
         table_schema = StructType.fromJson(json.loads(snap.schema_json))
-        df = self._align_df_to_schema(df, table_schema)
+        spec = list(snap.partition_spec)
         # stage-time field ids ride along in the sidecar so publish stays
-        # correct across a concurrent rename (see _write_data_files)
+        # correct across a concurrent rename (see _stage_sidecars)
+        if isinstance(data, pa.Table):
+            if not spec:
+                _, files = self._write_arrow_files(
+                    self._align_arrow_to_schema(data, table_schema),
+                    field_ids=snap.field_ids, properties=snap.properties,
+                )
+                return files
+            from icerunner_spark.connector import arrow_to_df
+
+            data = arrow_to_df(self.spark, data)
         _, files = self._write_data_files(
-            df, list(snap.partition_spec), field_ids=snap.field_ids
+            self._align_df_to_schema(data, table_schema), spec,
+            field_ids=snap.field_ids, properties=snap.properties,
         )
         return files
+
+    def discard_staged(self, files: list[str]) -> None:
+        """Delete the commit dirs of staged, never-published files —
+        data files and sidecars alike (best effort;
+        :meth:`remove_orphans` collects anything left)."""
+        import shutil
+
+        for d in sorted({_commit_dir_of(f) for f in files}):
+            shutil.rmtree(os.path.join(self.data_dir, d), ignore_errors=True)
 
     def publish_append(
         self, files: list[str], *, summary: dict | None = None,
@@ -2242,12 +2442,10 @@ class IceTable:
             except OSError:
                 _shutil.copy2(p, dst)
             files.append(os.path.relpath(dst, self.path))
-        with open(os.path.join(out, self._WRITE_MAPPING), "w") as f:
-            json.dump({str(v): k for k, v in snap.field_ids.items()}, f)
-        with open(os.path.join(out, self._FILE_STATS), "w") as f:
-            json.dump(self._harvest_column_stats(files), f)
-        with open(os.path.join(out, self._WRITE_SPEC), "w") as f:
-            json.dump([], f)
+        self._stage_sidecars(
+            commit_dir, files, list(declared), snap.field_ids,
+            snap.properties, [],
+        )
         return self._publish(
             "append", files, snap.schema_json,
             summary={"operation_detail": f"add_files {len(files)}"},

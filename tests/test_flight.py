@@ -399,9 +399,9 @@ def test_do_put_commits_single_snapshot(server):
 
 
 def test_do_put_failure_cleans_staged_files(server, monkeypatch):
-    """ADVICE r2: an upload that dies after some chunks were staged must
-    not leak the staged parquet under data/ — the server deletes them and
-    re-raises; no snapshot is published."""
+    """An upload that dies after some chunks were staged must not leak
+    what it staged under data/ — the server deletes the staged commit
+    dirs whole and re-raises; no snapshot is published."""
     from icerunner_spark.table import IceTable
 
     c = server.connector
@@ -417,6 +417,8 @@ def test_do_put_failure_cleans_staged_files(server, monkeypatch):
         return orig(self, df)
 
     monkeypatch.setattr(IceTable, "stage_append", flaky)
+    data_dir = c.table("clean").data_dir
+    dirs_before = set(os.listdir(data_dir))
     big = pa.table(
         {
             "id": pa.array(list(range(1, 10)), pa.int64()),
@@ -438,7 +440,9 @@ def test_do_put_failure_cleans_staged_files(server, monkeypatch):
     t = c.table("clean")
     assert len(t.snapshots()) == 1  # nothing published
     assert c.count("clean") == 1
-    # nothing leaked: the staged chunk's files were removed by the server
+    # nothing leaked: the staged chunk's commit dir — parquet and JSON
+    # sidecars alike — was removed by the server
+    assert set(os.listdir(data_dir)) == dirs_before
     assert t.remove_orphans(older_than_s=0.0) == []
 
 

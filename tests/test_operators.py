@@ -43,6 +43,26 @@ def test_dedup_exact_keeps_one_per_text(spark):
     assert out.filter(F.col("doc_id") >= 500000).count() == 0
 
 
+def test_ngram_sets_refuses_non_integral_ids(spark):
+    """ngram_sets casts ids to bigint, so a string id would turn into
+    NULL without a word: the operator refuses it, naming column and
+    type, and keeps accepting every integral width."""
+    from icerunner_spark.operators.dedup import ngram_sets
+
+    docs = spark.createDataFrame(
+        [("a1", "the quick brown fox"), ("b2", "the quick brown fax")],
+        "doc_id string, text string",
+    )
+    with pytest.raises(ValueError, match=r"'doc_id'.*integral.*string"):
+        ngram_sets(docs, "doc_id", "text", shingle=3)
+    for t in ("tinyint", "smallint", "int", "bigint"):
+        ids = docs.select(
+            F.substring("doc_id", 2, 1).cast(t).alias("doc_id"), "text"
+        )
+        got = sorted(r["id"] for r in ngram_sets(ids, "doc_id", "text", shingle=3).collect())
+        assert got == [1, 2], t
+
+
 def test_minhash_recall_against_exact(spark, docs_with_dups):
     """EXACT set equality at the registry config (k=48, bands=12): the
     dedup_minhash_lsh driver oracle IS the exact inverted-index
