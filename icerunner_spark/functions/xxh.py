@@ -13,7 +13,7 @@ two kernels as ``mapInArrow`` batch functions over numpy uint64 ops.
 Hash parity is EXACT, not merely injective: every value equals what
 ``F.xxhash64`` computes, so gram sets, MinHash signatures, LSH buckets
 and every downstream oracle-paired result are bit-identical to the
-expression formulation (pinned in tests/test_r12_opts.py against
+expression formulation (pinned in tests/test_operators.py against
 F.xxhash64 directly, and transitively by every dedup equivalence pin).
 Spark's semantics replicated here:
 

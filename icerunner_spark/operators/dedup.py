@@ -6,19 +6,27 @@ Five families, all partition-parallel, none driver-side:
 - **exact n-gram Jaccard**: inverted-index join on character shingles —
   the exact-similarity baseline the approximate methods are measured
   against. One shuffle on the shingle, one on the pair.
-- **MinHash + LSH**: k hash functions -> banded signatures -> bucket join.
-  Candidate generation touches only same-bucket pairs; at 100 TB the
-  bucket join replaces the quadratic all-pairs comparison.
-- **SimHash**: 64-bit signature whose hamming distance tracks token-set
-  similarity; near-dup = distance <= k, candidates via chunk banding
-  (pigeonhole over c chunks: distance <= c-1 => one chunk equal; 8x8-bit
-  chunks for distance <= 7, 4x16-bit for distance <= 3), buckets
-  skew-capped like MinHash's.
+- **MinHash + LSH**: k hash functions -> banded signatures -> bucket
+  pairs -> estimate prefilter -> exact-Jaccard verify.
+- **SimHash** (and every other 64-bit hamming signature: image dHash,
+  audio and video fingerprints): near-dup = distance <= k, candidates
+  via chunk banding (pigeonhole over c chunks: distance <= c-1 => one
+  chunk equal; 8x8-bit chunks for distance <= 7, 4x16-bit for
+  distance <= 3), distance exact from the signatures.
 - **embedding cosine**: see operators/similarity.py.
 
-Everything is built from xxhash64 / higher-order array functions — pure
-Catalyst expressions, no Python UDFs, so the whole pipeline stays in
-whole-stage codegen.
+Both banded families share ONE candidate operator, :func:`banded_pairs`:
+each family only supplies its band keys (MinHash: a hash of each
+signature slice; hamming: each chunk's value) and the doc payload its
+verify needs. The operator groups (band, key) buckets, drops degenerate
+ones (the ``max_bucket`` skew cap) and expands the rest into distinct
+pairs. It serves the batch operators here and the CDC-incremental ones
+in ``operators.incremental``: a batch run marks every row as delta, an
+incremental run marks the persisted prior state as not delta, and the
+same code pairs each delta doc with its smaller-id bucket-mates.
+
+Everything is built from xxhash64 / higher-order array functions or
+vectorized Arrow kernels — no row-at-a-time Python UDFs.
 """
 
 from __future__ import annotations
@@ -286,6 +294,94 @@ def prefix_jaccard_pairs(
 
 
 # --------------------------------------------------------------------------- #
+# banded buckets -> candidate pairs (shared by MinHash LSH and hamming)
+# --------------------------------------------------------------------------- #
+
+
+def banded_pairs(
+    sigs: DataFrame,
+    keys: list[Column],
+    fields: tuple[str, ...],
+    *,
+    max_bucket: int,
+    prior: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct candidate pairs from banded signature buckets — the one
+    bucket-group-and-pair-expansion of every LSH family here.
+
+    Rows: one (band, key, doc, is_delta) per band key of every signature
+    in ``sigs`` (is_delta true) and in ``prior`` (false, when given).
+    The doc is a flat struct of ``fields``, ``id`` first — ``("id",)``
+    when the verify only needs ids, ``("id", "sig")`` when it reads the
+    signatures — and ids are unique across both frames.
+
+    Buckets: group by (band, key); keep those with 2..``max_bucket``
+    members and at least one delta member. The cap is the skew guard: a
+    bucket that big means the band carries no signal for those docs
+    (boilerplate, empty strings), and expanding it would cost
+    |bucket|^2/2 pairs. Delta-free buckets are pruned before any
+    expansion, so an incremental run's pair work follows the delta.
+
+    Expansion: members sorted by id; each delta member pairs with the
+    members sorted before it, via a ``slice`` of that prefix — only
+    id1 < id2 pairs are ever materialized (array lambdas are
+    interpreted, so the constant factor matters in the capped worst
+    case). A batch run marks every row delta, so this is the full upper
+    triangle; an incremental run pairs each delta doc with every
+    smaller bucket-mate, prior or delta.
+
+    Plan shape: flat member structs, the sort inside the aggregate,
+    ``inline`` for the explode, no extra filter. A first form (nested doc
+    struct, separate sort projection, id filter) cost 28% more CPU on
+    this stage than the MinHash-only expansion it replaced; this one
+    about 7% (sf0.1 documents, local[4], JVM plus driver CPU, medians
+    of 9-11 runs).
+
+    Returns distinct rows of ``<field>1`` and ``<field>2`` for each
+    field (side 2 always a delta doc) plus ``prior``, true iff side 1
+    came from ``prior``."""
+
+    def rows(frame: DataFrame, is_prior: bool) -> DataFrame:
+        return frame.select(
+            F.posexplode(F.array(*keys)).alias("band", "key"),
+            F.struct(*fields, F.lit(is_prior).alias("prior")).alias("m"),
+        )
+
+    members = rows(sigs, False)
+    if prior is not None:
+        members = rows(prior, True).unionByName(members)
+    m = F.col("m")
+    return (
+        members.groupBy("band", "key")
+        .agg(
+            F.sort_array(F.collect_list("m")).alias("m"),
+            F.bool_and("m.prior").alias("no_delta"),
+        )
+        .filter(
+            (F.size(m) >= 2) & (F.size(m) <= max_bucket) & ~F.col("no_delta")
+        )
+        .select(
+            F.inline(
+                F.flatten(
+                    F.transform(
+                        m,
+                        lambda x, i: F.transform(
+                            F.slice(m, 1, F.when(x["prior"], 0).otherwise(i)),
+                            lambda y: F.struct(
+                                *[y[f].alias(f"{f}1") for f in fields],
+                                *[x[f].alias(f"{f}2") for f in fields],
+                                y["prior"].alias("prior"),
+                            ),
+                        ),
+                    )
+                )
+            )
+        )
+        .distinct()
+    )
+
+
+# --------------------------------------------------------------------------- #
 # MinHash + LSH
 # --------------------------------------------------------------------------- #
 
@@ -328,8 +424,7 @@ def ngram_sets(
     re-derivation was ~a full corpus pass — the single biggest lever in
     corpus_clean_pipeline).
 
-    ``hashed=True`` (r11 optimization round, guide §2.3 "narrower
-    types") emits ``array<bigint>`` — each shingle replaced by its
+    ``hashed=True`` emits ``array<bigint>`` — each shingle replaced by its
     xxhash64 — for pipelines that treat grams as OPAQUE set elements
     (MinHash signatures, array_intersect verify): every downstream
     stage then hashes/ships/compares 8-byte longs instead of n-char
@@ -362,24 +457,23 @@ def ngram_sets(
     # two projections on purpose: the normalization materializes before
     # the gram lambda (see functions.text.normalize_ws — an inlined norm
     # re-runs the regex once PER GRAM, measured 2.7x on this stage).
-    # Spread gated on detected under-parallelism (r12, r11 verdict
-    # "what's wrong" #3): the unconditional repartition both exchanged
-    # the full text AND capped the stage at core-count partitions at
-    # scale; at the fixtures (1-partition scans) it still fires.
+    # Spread gated on detected under-parallelism: an unconditional
+    # repartition both exchanged the full text AND capped the stage at
+    # core-count partitions at scale; at the fixtures (1-partition
+    # scans) it still fires.
     normed = spread_if_narrow(df, id_col).select(
         F.col(id_col).cast("long").alias("id"),
         normalize_ws(text_col).alias("__norm"),
     )
     if hashed and engine == "arrow":
-        # r12 (guide §4.2): shingle+hash runs as a vectorized numpy
-        # mapInArrow kernel with EXACT F.xxhash64 parity instead of
-        # interpreted Catalyst array lambdas — the r12 stage
-        # decomposition measured the expression form as the single
-        # biggest executor cost of the minhash family (89 s of
-        # dedup_minhash_lsh's 206 s total at sf0.1; ~12 us per gram of
-        # per-element interpretation). Values are bit-identical
+        # shingle+hash runs as a vectorized numpy mapInArrow kernel
+        # with EXACT F.xxhash64 parity instead of interpreted Catalyst
+        # array lambdas — a stage decomposition measured the expression
+        # form as the single biggest executor cost of the minhash family
+        # (89 s of dedup_minhash_lsh's 206 s total at sf0.1; ~12 us per
+        # gram of per-element interpretation). Values are bit-identical
         # (functions/xxh.py; pinned vs F.xxhash64 in
-        # tests/test_r12_opts.py); only the set's element ORDER differs
+        # tests/test_operators.py); only the set's element ORDER differs
         # (sorted vs first-occurrence), and every consumer treats g as a
         # set (explode aggregates, array_intersect sizes). Normalization
         # stays in the JVM so its regex/lower semantics are unchanged;
@@ -431,11 +525,11 @@ def minhash_signatures_from_grams(grams: DataFrame, *, n_hashes: int = 64) -> Da
     # correlate across i, the Jaccard estimator biases high, and LSH
     # candidate counts blew up ~2x on the fixtures.)
     #
-    # r12 (guide §4.2): over hashed (array<bigint>) gram frames the
-    # k-seeded-min computation runs as a vectorized numpy mapInArrow
-    # kernel with EXACT parity to min(xxhash64(gram, lit(s))) — Spark
-    # chains hashInt(s, hashLong(gram, 42)), replicated bit-for-bit in
-    # functions/xxh.py (pinned in tests/test_r12_opts.py). The codegen'd
+    # Over hashed (array<bigint>) gram frames the k-seeded-min
+    # computation runs as a vectorized numpy mapInArrow kernel with
+    # EXACT parity to min(xxhash64(gram, lit(s))) — Spark chains
+    # hashInt(s, hashLong(gram, 42)), replicated bit-for-bit in
+    # functions/xxh.py (pinned in tests/test_operators.py). The codegen'd
     # explode+agg form measured 39 s executor of dedup_minhash_lsh's
     # 206 s at sf0.1 (64 full hashes per gram occurrence; the kernel
     # computes hashLong once per gram and 64 cheap 4-byte links). The
@@ -480,6 +574,16 @@ def minhash_signatures(
     )
 
 
+def minhash_band_keys(n_hashes: int, bands: int) -> list[Column]:
+    """MinHash band keys over a ``sig`` column: band b's key is the
+    xxhash64 of signature slice b (n_hashes/bands rows per band), so two
+    docs share a bucket iff they agree on every row of one band."""
+    if n_hashes % bands:
+        raise ValueError("bands must divide n_hashes")
+    rows = n_hashes // bands
+    return [F.xxhash64(F.slice("sig", b * rows + 1, rows)) for b in range(bands)]
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -491,55 +595,72 @@ def minhash_lsh_candidates(
     max_bucket: int = 200,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash LSH.
-
-    rows/band = n_hashes/bands; a pair collides if any band's sub-signature
-    matches. Pipeline: signature -> explode band hashes -> groupBy bucket
-    (skew-guarded by ``max_bucket``: degenerate buckets — e.g. empty
-    strings — are dropped rather than joined quadratically) -> per-bucket
-    pair expansion -> distinct. Returns (id1, id2)."""
-    if n_hashes % bands:
-        raise ValueError("bands must divide n_hashes")
-    rows_per_band = n_hashes // bands
+    """Candidate near-dup pairs via banded MinHash LSH: a pair collides
+    if any band's sub-signature matches. Signatures -> band keys ->
+    :func:`banded_pairs` (degenerate buckets — e.g. empty strings —
+    dropped by ``max_bucket`` rather than joined quadratically).
+    Returns (id1, id2)."""
+    keys = minhash_band_keys(n_hashes, bands)
     with_sig = sigs if sigs is not None else minhash_signatures(
         df, id_col, text_col, n_hashes=n_hashes, shingle=shingle
     )
-    # one pass: band hashes built directly from signature slices
-    buckets = with_sig.select(
-        "id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bh"),
+    return banded_pairs(with_sig, keys, ("id",), max_bucket=max_bucket).select(
+        "id1", "id2"
     )
-    grouped = buckets.groupBy("band", "bh").agg(
-        F.array_sort(F.collect_list("id")).alias("ids")
+
+
+def minhash_estimate_prefilter(
+    cands: DataFrame, sigs1: DataFrame, sigs2: DataFrame, *,
+    n_hashes: int, threshold: float,
+) -> DataFrame:
+    """Candidates (id1, id2, ...) whose MinHash Jaccard estimate clears
+    ``threshold`` minus a 2.5σ margin; id1/id2 signatures come from
+    ``sigs1``/``sigs2``. The signature-position match rate is an
+    unbiased Jaccard estimator (σ <= sqrt(0.25/k)), so a true-J=threshold
+    pair fails this cut with p ~ 0.6% while the expensive verify only
+    sees plausible pairs: LSH banding over-generates heavily on
+    template-heavy corpora (measured ~220k candidates -> ~10x fewer
+    after this filter at sf0.1). The cut is deterministic in the
+    signatures, so full and incremental runs decide every shared pair
+    identically."""
+    s1 = sigs1.select(F.col("id").alias("id1"), F.col("sig").alias("s1"))
+    s2 = sigs2.select(F.col("id").alias("id2"), F.col("sig").alias("s2"))
+    est = F.size(
+        F.filter(F.zip_with("s1", "s2", lambda a, b: a == b), lambda x: x)
+    ) / F.lit(n_hashes)
+    margin = 2.5 * 0.5 / (n_hashes ** 0.5)
+    return (
+        cands.join(s1, "id1")
+        .join(s2, "id2")
+        .filter(est >= F.lit(threshold - margin))
+        .select(*cands.columns)
     )
-    grouped = grouped.filter((F.size("ids") >= 2) & (F.size("ids") <= max_bucket))
-    # upper-triangle expansion over the sorted id list: element i pairs
-    # with the slice AFTER it, so only i<j pairs are ever materialized —
-    # half the structs of the all-pairs+filter form, and no filter pass
-    # (array lambdas are interpreted, so the constant factor matters in
-    # the skew-capped worst case of max_bucket² structs per bucket).
-    ids = F.col("ids")
-    pairs = grouped.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    ids,
-                    lambda x, i: F.transform(
-                        F.slice(ids, i + F.lit(2), F.size(ids)),
-                        lambda y: F.struct(x.alias("id1"), y.alias("id2")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id1", "p.id2").distinct()
-    return pairs
+
+
+def jaccard_verify(
+    cands: DataFrame, grams1: DataFrame, grams2: DataFrame, *, threshold: float
+) -> DataFrame:
+    """Candidates (id1, id2, ...) plus ``jaccard``, the exact Jaccard of
+    their n-gram sets (id1's from ``grams1``, id2's from ``grams2``),
+    kept when it reaches ``threshold``. Shuffle-hash joins on the id
+    (hash lookup, no sort of the big gram arrays; both sides partition
+    by id so this scales out — broadcast would cap at driver memory).
+    |A∪B| comes from |A|+|B|-|A∩B| (gram arrays are distinct by
+    construction), so only ONE O(n) array op per pair."""
+    g1 = grams1.select(
+        F.col("id").alias("id1"), F.col("g").alias("g1"), F.size("g").alias("n1")
+    )
+    g2 = grams2.select(
+        F.col("id").alias("id2"), F.col("g").alias("g2"), F.size("g").alias("n2")
+    )
+    inter = F.size(F.array_intersect("g1", "g2"))
+    jac = inter / (F.col("n1") + F.col("n2") - inter)
+    return (
+        cands.join(g1.hint("shuffle_hash"), "id1")
+        .join(g2.hint("shuffle_hash"), "id2")
+        .select(*cands.columns, jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def minhash_neardup_pairs(
@@ -571,48 +692,10 @@ def minhash_neardup_pairs(
         df, id_col, text_col, n_hashes=n_hashes, bands=bands, shingle=shingle,
         sigs=sigs,
     )
-    # cheap prefilter before the exact verify: the signature-position match
-    # rate is an unbiased Jaccard estimator (sigma ~ 1/sqrt(k)); discard
-    # candidates whose estimate is far below threshold (2.5 sigma margin)
-    # so the expensive n-gram-set join only sees plausible pairs. LSH
-    # banding over-generates heavily on template-heavy corpora (measured
-    # ~220k candidates -> ~10x fewer after this filter at sf0.1).
-    s1 = sigs.select(F.col("id").alias("id1"), F.col("sig").alias("s1"))
-    s2 = sigs.select(F.col("id").alias("id2"), F.col("sig").alias("s2"))
-    est = F.size(
-        F.filter(F.zip_with("s1", "s2", lambda a, b: a == b), lambda x: x)
-    ) / F.lit(n_hashes)
-    # 2.5 sigma at the worst-case estimator variance sqrt(J(1-J)/k) <=
-    # sqrt(0.25/k): a true-J=threshold pair fails this cut with p ~ 0.6%
-    margin = 2.5 * 0.5 / (n_hashes ** 0.5)
-    plausible = (
-        cands.join(s1, "id1")
-        .join(s2, "id2")
-        .filter(est >= F.lit(threshold - margin))
-        .select("id1", "id2")
+    plausible = minhash_estimate_prefilter(
+        cands, sigs, sigs, n_hashes=n_hashes, threshold=threshold
     )
-    # exact verify: shuffle-hash joins on the id (hash lookup, no sort of
-    # the big shingle arrays; both sides partition by id so this scales
-    # out — broadcast would cap at driver memory on a real corpus). The
-    # g1/g2 sides are two lineages of the SAME cached gram frame the
-    # signatures were built from — no re-shingling. |A∪B| comes from
-    # |A|+|B|-|A∩B| (the gram arrays are distinct by construction), so
-    # only ONE O(n) array op per candidate pair — array_union would be a
-    # second full hash pass for a number the sizes already determine.
-    g1 = grams.select(
-        F.col("id").alias("id1"), F.col("g").alias("g1"), F.size("g").alias("n1")
-    )
-    g2 = grams.select(
-        F.col("id").alias("id2"), F.col("g").alias("g2"), F.size("g").alias("n2")
-    )
-    inter = F.size(F.array_intersect("g1", "g2"))
-    jac = inter / (F.col("n1") + F.col("n2") - inter)
-    out = (
-        plausible.join(g1.hint("shuffle_hash"), "id1")
-        .join(g2.hint("shuffle_hash"), "id2")
-        .select("id1", "id2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    out = jaccard_verify(plausible, grams, grams, threshold=threshold)
     if _return_internal:
         return out, grams, sigs
     return out
@@ -700,32 +783,24 @@ def simhash_neardup_pairs(
     )
 
 
-def hamming_neardup_pairs(
+def hamming_pairs(
     sigs: DataFrame,
     *,
-    max_distance: int = 6,
-    chunk_bits: int | None = None,
-    max_bucket: int = 200,
+    max_distance: int,
+    chunk_bits: int | None,
+    max_bucket: int,
+    prior: DataFrame | None = None,
 ) -> DataFrame:
-    """Near-dup pairs over any (``id``, ``sig``) 64-bit signature frame
-    (simhash, image dHash, audio fingerprints): hamming(sig) <=
-    max_distance, without an all-pairs join.
-
-    Candidates via the pigeonhole principle: split the 64-bit signature
-    into 64/chunk_bits chunks; distance <= n_chunks-1 implies at least
-    one chunk is identical, so only same-chunk-value pairs are compared.
-    ``chunk_bits`` defaults by radius: 16-bit chunks (4 chunks, 65536
-    bucket values per chunk) when max_distance <= 3, else 8-bit chunks
-    (8 chunks, 256 values — needed for the looser distance <= 7
-    guarantee).
-
-    Buckets are built by groupBy(chunk, value) + capped pair expansion —
-    same skew guard as MinHash LSH: with only 2^chunk_bits values per
-    chunk an uncapped self-join degrades toward n^2/2^chunk_bits pairs
-    on a template-heavy corpus, so buckets larger than ``max_bucket``
-    are dropped (a bucket that big means the chunk carries no signal
-    for those docs, not that they're all near-dups).
-    Returns (id1, id2, distance)."""
+    """(id1, id2, distance, prior): :func:`banded_pairs` over the
+    ``chunk_bits`` chunks of each 64-bit ``sig``, kept when hamming
+    distance <= ``max_distance``. Pigeonhole: with c chunks, distance
+    <= c-1 leaves at least one chunk identical, so same-chunk-value
+    pairs are a complete candidate set — a ``max_distance`` beyond that
+    is refused. ``chunk_bits`` defaults by radius: 16-bit chunks (4
+    chunks, 65536 bucket values per chunk) when max_distance <= 3, else
+    8-bit chunks (8 chunks, 256 values — needed for the looser
+    distance <= 7 guarantee). The distance is exact from the signatures
+    the pair carries (bit_count of XOR), so there is no verify pass."""
     if chunk_bits is None:
         chunk_bits = 16 if max_distance <= 3 else 8
     if 64 % chunk_bits:
@@ -737,51 +812,40 @@ def hamming_neardup_pairs(
             f"distance <= {n_chunks - 1}"
         )
     mask = F.lit((1 << chunk_bits) - 1)
-    chunks = sigs.select(
-        F.struct("id", "sig").alias("doc"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("sig", chunk_bits * c).bitwiseAND(mask)
-                    for c in range(n_chunks)
-                ]
-            )
-        ).alias("chunk", "cv"),
+    keys = [
+        F.shiftrightunsigned("sig", chunk_bits * c).bitwiseAND(mask)
+        for c in range(n_chunks)
+    ]
+    pairs = banded_pairs(
+        sigs, keys, ("id", "sig"), max_bucket=max_bucket, prior=prior
     )
-    grouped = (
-        chunks.groupBy("chunk", "cv")
-        .agg(F.collect_list("doc").alias("docs"))
-        .filter((F.size("docs") >= 2) & (F.size("docs") <= max_bucket))
-    )
-    pairs = (
-        grouped.select(
-            F.explode(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            F.col("docs"),
-                            lambda x: F.transform(
-                                F.col("docs"),
-                                lambda y: F.struct(
-                                    x["id"].alias("id1"),
-                                    y["id"].alias("id2"),
-                                    x["sig"].alias("s1"),
-                                    y["sig"].alias("s2"),
-                                ),
-                            ),
-                        )
-                    ),
-                    lambda p: p["id1"] < p["id2"],
-                )
-            ).alias("p")
-        )
-        .select("p.id1", "p.id2", "p.s1", "p.s2")
-        .distinct()
-    )
-    return (
-        pairs.select("id1", "id2", hamming64(F.col("s1"), F.col("s2")).alias("distance"))
-        .filter(F.col("distance") <= max_distance)
-    )
+    return pairs.select(
+        "id1",
+        "id2",
+        hamming64(F.col("sig1"), F.col("sig2")).alias("distance"),
+        "prior",
+    ).filter(F.col("distance") <= max_distance)
+
+
+def hamming_neardup_pairs(
+    sigs: DataFrame,
+    *,
+    max_distance: int = 6,
+    chunk_bits: int | None = None,
+    max_bucket: int = 200,
+) -> DataFrame:
+    """Near-dup pairs over any (``id``, ``sig``) 64-bit signature frame
+    (simhash, image dHash, audio fingerprints): hamming(sig) <=
+    max_distance, without an all-pairs join — candidates from chunk
+    banding (:func:`hamming_pairs`), buckets skew-capped like
+    MinHash's: with only 2^chunk_bits values per chunk an uncapped
+    self-join degrades toward n^2/2^chunk_bits pairs on a
+    template-heavy corpus, so buckets larger than ``max_bucket`` are
+    dropped. Returns (id1, id2, distance)."""
+    return hamming_pairs(
+        sigs, max_distance=max_distance, chunk_bits=chunk_bits,
+        max_bucket=max_bucket,
+    ).select("id1", "id2", "distance")
 
 
 # --------------------------------------------------------------------------- #

@@ -28,6 +28,15 @@ Prior-DROPPED documents never matter under the greedy rule (a doc is
 only ever dropped by a KEPT smaller doc), so the persisted state is just
 the retained docs' signatures — the state table a daily pipeline keeps
 anyway, and it SHRINKS relative to raw corpus history.
+
+Near-dup candidates — MinHash bands and 64-bit hamming chunks alike —
+come from ``operators.dedup.banded_pairs``, the operator the batch
+paths run: the persisted state enters as prior rows, the delta as delta
+rows, buckets without a delta member are pruned before any expansion,
+and each pair carries whether its smaller side is prior. After the
+family's verify, a delta doc paired with a prior doc drops at once and
+the rest resolve by :func:`greedy_dropped_ids` over the delta-delta
+pairs. An empty prior is therefore exactly the batch greedy dedup.
 """
 
 from __future__ import annotations
@@ -37,6 +46,11 @@ from pyspark.sql import functions as F
 
 from icerunner_spark.functions.text import fingerprint64
 from icerunner_spark.operators.dedup import (
+    banded_pairs,
+    hamming_pairs,
+    jaccard_verify,
+    minhash_band_keys,
+    minhash_estimate_prefilter,
     minhash_signatures_from_grams,
     ngram_sets,
 )
@@ -169,6 +183,27 @@ def greedy_dropped_ids(
     return dropped.distinct()
 
 
+def _greedy_delta_drops(verified: DataFrame) -> DataFrame:
+    """(id) of the delta docs the greedy rule drops, from verified
+    (id1, id2, prior) pairs whose id2 is a delta doc. A delta doc paired
+    with a prior doc drops at once: prior kept docs are all smaller-id
+    and final. The other delta docs resolve through
+    :func:`greedy_dropped_ids` over the delta-delta pairs between them.
+    With an empty prior every pair is delta-delta, so this is the batch
+    greedy rule."""
+    # checkpointed: both filters below read it, and its lineage is the
+    # whole candidate-and-verify pipeline
+    v = verified.select("id1", "id2", "prior").localCheckpoint(eager=True)
+    by_prior = v.filter("prior").select(F.col("id2").alias("id")).distinct()
+    delta_pairs = (
+        v.filter(~F.col("prior"))
+        .select("id1", "id2")
+        .join(by_prior.withColumnRenamed("id", "id1"), "id1", "left_anti")
+        .join(by_prior.withColumnRenamed("id", "id2"), "id2", "left_anti")
+    )
+    return by_prior.union(greedy_dropped_ids(delta_pairs))
+
+
 # --------------------------------------------------------------------------- #
 # MinHash-LSH incremental near-dup dedup
 # --------------------------------------------------------------------------- #
@@ -230,17 +265,13 @@ def incremental_minhash_dedup(
     can differ. Both runs stay within the greedy contract; the
     equivalence tests pin with caps the fixtures never hit.
     """
-    if n_hashes % bands:
-        raise ValueError("bands must divide n_hashes")
-    rows_per_band = n_hashes // bands
-
+    keys = minhash_band_keys(n_hashes, bands)
     delta_grams = ngram_sets(
         delta, id_col, text_col, shingle=shingle, hashed=True
     ).cache()
-    # cached: three consumers (band buckets, the estimate prefilter's s1
-    # via all_sigs AND s2) — uncached, the 64-seeded-hash signature
-    # aggregate re-ran per consumer (r11 optimization round, measured
-    # ~70 s of duplicated executor time at sf0.1 across the repeats)
+    # cached: three consumers (band buckets and both prefilter sides) —
+    # uncached, the 64-seeded-hash signature aggregate re-ran per
+    # consumer (measured ~70 s of duplicated executor time at sf0.1)
     delta_sigs = minhash_signatures_from_grams(
         delta_grams, n_hashes=n_hashes
     ).cache()
@@ -251,125 +282,32 @@ def incremental_minhash_dedup(
             prior_kept, id_col, text_col, n_hashes=n_hashes, shingle=shingle
         )
     )
-
-    def band_buckets(sigs: DataFrame, is_delta: bool) -> DataFrame:
-        return sigs.select(
-            "id",
-            F.lit(is_delta).alias("is_delta"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band))
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("band", "bh"),
-        )
-
-    buckets = band_buckets(prior_sigs, False).unionByName(
-        band_buckets(delta_sigs, True)
+    cand = banded_pairs(
+        delta_sigs, keys, ("id",), max_bucket=max_bucket, prior=prior_sigs
     )
-    grouped = (
-        buckets.groupBy("band", "bh")
-        .agg(
-            F.array_sort(F.collect_list("id")).alias("ids"),
-            F.array_sort(
-                F.collect_list(F.when(F.col("is_delta"), F.col("id")))
-            ).alias("delta_ids"),
-        )
-        # delta-touched, non-degenerate buckets only: everything else is
-        # pruned before any pair expansion
-        .filter(
-            (F.size("delta_ids") >= 1)
-            & (F.size("ids") >= 2)
-            & (F.size("ids") <= max_bucket)
-        )
+    # id2 is always a delta doc; id1's signature may be prior or delta
+    cand = minhash_estimate_prefilter(
+        cand, prior_sigs.unionByName(delta_sigs), delta_sigs,
+        n_hashes=n_hashes, threshold=threshold,
     )
-    # pairs (smaller id, delta id): each delta doc pairs with every
-    # smaller bucket-mate — prior docs are all smaller by the monotone-id
-    # contract; delta-delta pairs orient id1 < id2 automatically
-    ids, dids = F.col("ids"), F.col("delta_ids")
-    cand = (
-        grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        dids,
-                        lambda d: F.transform(
-                            F.filter(ids, lambda x: x < d),
-                            lambda x: F.struct(x.alias("id1"), d.alias("id2")),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id1", "p.id2")
-        .distinct()
-    )
-    # signature-estimate prefilter — the SAME deterministic cut
-    # minhash_neardup_pairs applies (2.5σ below threshold): signatures
-    # are identical between a full and an incremental run, so the filter
-    # decides every shared pair identically and the full==incremental
-    # equivalence is preserved while the expensive verify only sees
-    # plausible pairs.
-    all_sigs = prior_sigs.unionByName(delta_sigs)
-    s1 = all_sigs.select(F.col("id").alias("id1"), F.col("sig").alias("s1"))
-    s2 = delta_sigs.select(F.col("id").alias("id2"), F.col("sig").alias("s2"))
-    est = F.size(
-        F.filter(F.zip_with("s1", "s2", lambda a, b: a == b), lambda x: x)
-    ) / F.lit(n_hashes)
-    margin = 2.5 * 0.5 / (n_hashes ** 0.5)
-    cand = (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .filter(est >= F.lit(threshold - margin))
-        .select("id1", "id2")
-    )
-    # exact-Jaccard verify. id2 is always a delta doc; id1 may be prior
-    # (re-shingle only the candidate prior docs via a semi-join — delta-
-    # scaled, not corpus-scaled) or delta (grams already cached).
-    prior_cand = (
-        prior_kept.join(
-            cand.select(F.col("id1").alias(id_col)).distinct(), id_col, "left_semi"
-        )
+    # exact-Jaccard verify re-shingles only the candidate prior docs
+    # (semi-join — delta-scaled, not corpus-scaled); delta grams are cached
+    prior_cand = prior_kept.join(
+        cand.filter("prior").select(F.col("id1").alias(id_col)).distinct(),
+        id_col,
+        "left_semi",
     )
     prior_cand_grams = ngram_sets(
         prior_cand, id_col, text_col, shingle=shingle, hashed=True
     )
-    all_grams = prior_cand_grams.unionByName(delta_grams)
-    g1 = all_grams.select(
-        F.col("id").alias("id1"), F.col("g").alias("g1"), F.size("g").alias("n1")
+    verified = jaccard_verify(
+        cand, prior_cand_grams.unionByName(delta_grams), delta_grams,
+        threshold=threshold,
     )
-    g2 = delta_grams.select(
-        F.col("id").alias("id2"), F.col("g").alias("g2"), F.size("g").alias("n2")
-    )
-    inter = F.size(F.array_intersect("g1", "g2"))
-    jac = inter / (F.col("n1") + F.col("n2") - inter)
-    verified = (
-        cand.join(g1.hint("shuffle_hash"), "id1")
-        .join(g2.hint("shuffle_hash"), "id2")
-        .select("id1", "id2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    # greedy resolution
-    max_prior = F.broadcast(
-        prior_kept.agg(F.max(id_col).alias("__max_prior"))
-    )
-    v = verified.crossJoin(max_prior).localCheckpoint(eager=True)
-    dropped_by_prior = (
-        v.filter(F.col("id1") <= F.col("__max_prior"))
-        .select(F.col("id2").alias("id"))
-        .distinct()
-    )
-    delta_pairs = (
-        v.filter(F.col("id1") > F.col("__max_prior"))
-        .select("id1", "id2")
-        .join(dropped_by_prior.withColumnRenamed("id", "id1"), "id1", "left_anti")
-        .join(dropped_by_prior.withColumnRenamed("id", "id2"), "id2", "left_anti")
-    )
-    dropped = dropped_by_prior.union(greedy_dropped_ids(delta_pairs))
     return delta.join(
-        dropped.withColumnRenamed("id", id_col), id_col, "left_anti"
+        _greedy_delta_drops(verified).withColumnRenamed("id", id_col),
+        id_col,
+        "left_anti",
     )
 
 
@@ -449,94 +387,11 @@ def incremental_hamming_dedup(
     table physically bucketed by (chunk, value), a partition-pruned
     read). Distance needs no re-verify pass: it is exact from the
     signatures themselves (bit_count of XOR)."""
-    if chunk_bits is None:
-        chunk_bits = 16 if max_distance <= 3 else 8
-    if 64 % chunk_bits:
-        raise ValueError("chunk_bits must divide 64")
-    n_chunks = 64 // chunk_bits
-    if max_distance > n_chunks - 1:
-        raise ValueError(
-            f"{n_chunks}-chunk banding guarantees candidates only for "
-            f"distance <= {n_chunks - 1}"
-        )
-    mask = F.lit((1 << chunk_bits) - 1)
-
-    def chunked(sigs: DataFrame, is_delta: bool) -> DataFrame:
-        return sigs.select(
-            F.struct("id", "sig").alias("doc"),
-            F.lit(is_delta).alias("is_delta"),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftrightunsigned("sig", chunk_bits * c)
-                        .bitwiseAND(mask)
-                        for c in range(n_chunks)
-                    ]
-                )
-            ).alias("chunk", "cv"),
-        )
-
-    buckets = chunked(prior_sigs, False).unionByName(chunked(delta_sigs, True))
-    grouped = (
-        buckets.groupBy("chunk", "cv")
-        .agg(
-            F.collect_list("doc").alias("docs"),
-            F.collect_list(F.when(F.col("is_delta"), F.col("doc"))).alias(
-                "delta_docs"
-            ),
-        )
-        # delta-touched, non-degenerate, skew-capped buckets only
-        .filter(
-            (F.size("delta_docs") >= 1)
-            & (F.size("docs") >= 2)
-            & (F.size("docs") <= max_bucket)
-        )
+    verified = hamming_pairs(
+        delta_sigs, max_distance=max_distance, chunk_bits=chunk_bits,
+        max_bucket=max_bucket, prior=prior_sigs,
     )
-    docs, ddocs = F.col("docs"), F.col("delta_docs")
-    pairs = (
-        grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ddocs,
-                        lambda d: F.transform(
-                            F.filter(docs, lambda x: x["id"] < d["id"]),
-                            lambda x: F.struct(
-                                x["id"].alias("id1"),
-                                d["id"].alias("id2"),
-                                x["sig"].alias("s1"),
-                                d["sig"].alias("s2"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id1", "p.id2", "p.s1", "p.s2")
-        .distinct()
-    )
-    from icerunner_spark.operators.dedup import hamming64
-
-    verified = pairs.select(
-        "id1", "id2", hamming64(F.col("s1"), F.col("s2")).alias("distance")
-    ).filter(F.col("distance") <= max_distance)
-    max_prior = F.broadcast(
-        prior_sigs.agg(F.max("id").alias("__max_prior"))
-    )
-    v = verified.crossJoin(max_prior).localCheckpoint(eager=True)
-    dropped_by_prior = (
-        v.filter(F.col("id1") <= F.col("__max_prior"))
-        .select(F.col("id2").alias("id"))
-        .distinct()
-    )
-    delta_pairs = (
-        v.filter(F.col("id1") > F.col("__max_prior"))
-        .select("id1", "id2")
-        .join(dropped_by_prior.withColumnRenamed("id", "id1"), "id1", "left_anti")
-        .join(dropped_by_prior.withColumnRenamed("id", "id2"), "id2", "left_anti")
-    )
-    dropped = dropped_by_prior.union(greedy_dropped_ids(delta_pairs))
-    return delta_sigs.join(dropped, "id", "left_anti")
+    return delta_sigs.join(_greedy_delta_drops(verified), "id", "left_anti")
 
 
 def greedy_hamming_dedup(

@@ -4,11 +4,10 @@ Compact fixture tables (a few MB of parquet holding a whole corpus
 slice) scan as fewer partitions than cores — often ONE task, since
 parquet splits cannot cross a row group — which serializes
 scan-disproportionate per-row work (shingle builds, regex chains,
-vector normalization). The r9-r11 operators fixed that with an
-unconditional ``repartition(defaultParallelism, key)``; the r11 verdict
-flagged the pattern twice at the 100 TB design point (items 2/"what's
-wrong" 3): the exchanged payload is the document text / embedding
-itself, so the unconditional form adds a corpus-sized exchange AND caps
+vector normalization). An unconditional
+``repartition(defaultParallelism, key)`` fixes that at the fixtures but
+hurts at the 100 TB design point: the exchanged payload is the document
+text / embedding itself, so it adds a corpus-sized exchange AND caps
 the stage at core-count partitions on a scan that already has
 thousands of splits.
 
@@ -29,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from icerunner_spark.plans import is_costly_lineage
+
 
 def spread_if_narrow(df: DataFrame, *key: str) -> DataFrame:
     # Probe partitioning ONLY for scan-shaped lineages. Two reasons the
@@ -40,12 +41,8 @@ def spread_if_narrow(df: DataFrame, *key: str) -> DataFrame:
     # width — the single-task problem this helper exists for is a
     # property of narrow SCANS. For non-trivial lineages the frame is
     # returned untouched.
-    from icerunner_spark.table import _COSTLY_PLAN_NODES
-
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    for line in plan.splitlines():
-        if line.lstrip(" +-:").startswith(_COSTLY_PLAN_NODES):
-            return df
+    if is_costly_lineage(df):
+        return df
     cores = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= cores:
         return df

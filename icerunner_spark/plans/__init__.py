@@ -12,7 +12,8 @@ report so tests can pin those properties per query.
 
 from icerunner_spark.plans.introspect import (
     explain_text,
+    is_costly_lineage,
     plan_report,
 )
 
-__all__ = ["explain_text", "plan_report"]
+__all__ = ["explain_text", "is_costly_lineage", "plan_report"]

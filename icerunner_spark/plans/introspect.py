@@ -191,6 +191,44 @@ def forced_broadcast_tables(df: DataFrame) -> set[str]:
     return offenders
 
 
+# Logical node classes whose re-execution does real work: a join,
+# aggregate, window, explode, union, sort, expand, dedup, shuffle or
+# Python map. Matched as class-name prefixes (WindowGroupLimit is a
+# Window, FlatMapGroupsInPandasWithState a FlatMapGroupsInPandas).
+_COSTLY_PLAN_NODES = (
+    "Join",
+    "Aggregate",
+    "Window",
+    "Generate",
+    "Union",
+    "Sort",
+    "Expand",
+    "Deduplicate",
+    "RepartitionByExpression",
+    "Repartition",
+    "FlatMapGroupsInPandas",
+    "MapInPandas",
+    "MapInArrow",
+    "CoGroup",
+)
+
+
+def is_costly_lineage(df: DataFrame) -> bool:
+    """True iff the optimized logical plan of ``df`` holds a costly node
+    (``_COSTLY_PLAN_NODES``) anywhere, subquery plans included. Walks
+    node classes, not the printed plan. A cached relation or a
+    checkpoint is a leaf: it is read, not re-executed. Driver-only
+    (analysis and optimization, no job)."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getSimpleName().startswith(_COSTLY_PLAN_NODES):
+            return True
+        for seq in (node.children(), node.subqueries()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return False
+
+
 def _first_group(pattern: str, s: str) -> str | None:
     m = re.search(pattern, s, re.DOTALL)
     return m.group(1) if m else None

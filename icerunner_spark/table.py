@@ -60,6 +60,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from icerunner_spark.plans import is_costly_lineage
+
 
 class CommitConflict(Exception):
     """Raised when optimistic commit loses the race too many times."""
@@ -274,24 +276,6 @@ def _load_snapshot_payload(text: str, metadata_dir: str) -> Snapshot:
     return snap
 
 
-_COSTLY_PLAN_NODES = (
-    "Join",
-    "Aggregate",
-    "Window",
-    "Generate",
-    "Union",
-    "Sort",
-    "Expand",
-    "Deduplicate",
-    "RepartitionByExpression",
-    "Repartition",
-    "FlatMapGroupsInPandas",
-    "MapInPandas",
-    "MapInArrow",
-    "CoGroup",
-)
-
-
 def _materialize_if_costly(df: DataFrame) -> DataFrame:
     """Eagerly ``localCheckpoint`` a multiply-consumed delta frame ONLY
     when re-executing its lineage involves real work — a join, aggregate,
@@ -300,18 +284,14 @@ def _materialize_if_costly(df: DataFrame) -> DataFrame:
     a merge). A trivial lineage (scan/filter/project) is cheaper to
     recompute two or three times than to materialize: the checkpoint's
     fixed per-call cost (an extra job + executor-local block writes)
-    dominated the driver's tiny-delta merge benchmarks (r11 verdict item
-    3 — maint merge entries 1.9-2.5x vs the untouched band), and an
+    dominated the tiny-delta merge benchmarks (maint merge entries
+    1.9-2.5x vs the untouched band), and an
     eager pin of a scan-shaped frame is also the unbounded-size risk the
     MOR paths must avoid (a broad predicate matches a table-sized frame
     and localCheckpoint pins it to executor disk, unrecoverable on
     executor loss). The plan probe runs on the driver only (analysis +
     optimization, no job)."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    for line in plan.splitlines():
-        if line.lstrip(" +-:").startswith(_COSTLY_PLAN_NODES):
-            return df.localCheckpoint(eager=True)
-    return df
+    return df.localCheckpoint(eager=True) if is_costly_lineage(df) else df
 
 
 def _new_snapshot_id() -> int:

@@ -819,6 +819,217 @@ def test_incremental_hamming_dedup_equals_full(spark):
     assert 105 in got and 102 not in got and 109 not in got
 
 
+@pytest.mark.parametrize("family", ["minhash", "hamming"])
+def test_incremental_dedup_with_empty_prior_equals_greedy(spark, family):
+    """With nothing retained yet, incremental dedup of a delta is the
+    batch greedy dedup of that delta: near-duplicates 1 and 2 keep only
+    1, unrelated 3 stays."""
+    from icerunner_spark.operators.incremental import (
+        greedy_hamming_dedup,
+        greedy_minhash_dedup,
+        incremental_hamming_dedup,
+        incremental_minhash_dedup,
+    )
+
+    if family == "minhash":
+        text = "the quick brown fox jumps over the lazy dog by the river bank"
+        delta = spark.createDataFrame(
+            [
+                (1, text + " today"),
+                (2, text + " again"),
+                (3, "an unrelated note on adaptive query execution in spark"),
+            ],
+            "doc_id long, text string",
+        )
+        prior = spark.createDataFrame([], "doc_id long, text string")
+        inc = incremental_minhash_dedup(prior, delta, "doc_id", "text")
+        full = greedy_minhash_dedup(delta, "doc_id", "text")
+        col = "doc_id"
+    else:
+        base = 0x0123456789ABCDEF
+        delta = spark.createDataFrame(
+            [(1, base), (2, base ^ 0b101), (3, 0x7EDCBA9876543210)],
+            "id long, sig long",
+        )
+        prior = spark.createDataFrame([], "id long, sig long")
+        inc = incremental_hamming_dedup(prior, delta, max_distance=6)
+        full = greedy_hamming_dedup(delta, max_distance=6)
+        col = "id"
+    got = sorted(r[col] for r in inc.select(col).collect())
+    want = sorted(r[col] for r in full.select(col).collect())
+    assert want == [1, 3]
+    assert got == want
+
+
+# --------------------------------------------------------------------------- #
+# banded candidate sets against a driver-side brute force
+# --------------------------------------------------------------------------- #
+
+
+def _greedy_survivors(ids, pairs, kept_prior=()):
+    """Greedy-by-id in plain Python: ascending over ``ids``, a doc is
+    kept iff no neighbour in ``pairs`` is already kept; ``kept_prior``
+    docs are kept and final. Returns the kept docs among ``ids``."""
+    nbrs: dict = {}
+    for a, b in pairs:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    kept = set(kept_prior)
+    for i in sorted(ids):
+        if not nbrs.get(i, set()) & kept:
+            kept.add(i)
+    return kept - set(kept_prior)
+
+
+def _planted_hamming_sigs(seed=23, n_base=20):
+    """(id, sig) rows: random 64-bit bases, each followed by neighbours
+    at distances 0..7 (d distinct flipped bits)."""
+    import random
+
+    rng = random.Random(seed)
+    sigs = []
+    for _ in range(n_base):
+        base = rng.getrandbits(64)
+        sigs.append(base)
+        for d in range(8):
+            v = base
+            for p in rng.sample(range(64), d):
+                v ^= 1 << p
+            sigs.append(v)
+    signed = [v - (1 << 64) if v >= 1 << 63 else v for v in sigs]
+    return list(enumerate(signed))
+
+
+def _brute_hamming_pairs(rows, max_distance):
+    out = set()
+    for i, (a, sa) in enumerate(rows):
+        for b, sb in rows[i + 1:]:
+            d = bin((sa ^ sb) & ((1 << 64) - 1)).count("1")
+            if d <= max_distance:
+                out.add((min(a, b), max(a, b), d))
+    return out
+
+
+@pytest.mark.parametrize("max_distance", [3, 7])
+def test_hamming_banding_equals_brute_force(spark, max_distance):
+    """Pigeonhole guarantee: 16-bit chunks at distance 3, 8-bit chunks
+    at distance 7 find exactly the all-pairs popcount(a ^ b) <= d set —
+    batch pairs, and the delta form's survivors against a kept prior."""
+    from icerunner_spark.operators.dedup import hamming_neardup_pairs
+    from icerunner_spark.operators.incremental import incremental_hamming_dedup
+
+    rows = _planted_hamming_sigs()
+    want = _brute_hamming_pairs(rows, max_distance)
+    df = spark.createDataFrame(rows, "id long, sig long")
+    got = {
+        (r["id1"], r["id2"], r["distance"])
+        for r in hamming_neardup_pairs(
+            df, max_distance=max_distance, max_bucket=10_000
+        ).collect()
+    }
+    assert {p[2] for p in want} == set(range(max_distance + 1))
+    assert got == want
+
+    # delta form: every prior doc is kept, so a delta doc drops iff a
+    # kept smaller doc (prior or delta) is within the radius
+    split = len(rows) // 2 + 4
+    prior, delta = rows[:split], rows[split:]
+    pairs = {(a, b) for a, b, _ in want}
+    expect = _greedy_survivors(
+        [i for i, _ in delta], pairs, kept_prior=[i for i, _ in prior]
+    )
+    assert any(a < split <= b for a, b in pairs), "no prior-delta pair planted"
+    inc = incremental_hamming_dedup(
+        spark.createDataFrame(prior, "id long, sig long"),
+        spark.createDataFrame(delta, "id long, sig long"),
+        max_distance=max_distance,
+        max_bucket=10_000,
+    )
+    assert {r["id"] for r in inc.collect()} == expect
+
+
+def _planted_minhash_docs(seed=29, n_base=24):
+    """Docs of random words from a wide vocabulary, each base followed
+    by variants with one to three words replaced."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(6))
+        for _ in range(300)
+    ]
+    docs = []
+    for _ in range(n_base):
+        words = [rng.choice(vocab) for _ in range(14)]
+        docs.append(" ".join(words))
+        for k in (1, 2, 3):
+            variant = list(words)
+            for p in rng.sample(range(len(words)), k):
+                variant[p] = rng.choice(vocab)
+            docs.append(" ".join(variant))
+    return list(enumerate(docs))
+
+
+def _brute_band_pairs(sigs, n_hashes, bands):
+    """Pairs sharing any full band slice of their MinHash signatures."""
+    rows = n_hashes // bands
+    out = set()
+    for b in range(bands):
+        buckets: dict = {}
+        for i, sig in sigs.items():
+            buckets.setdefault(tuple(sig[b * rows:(b + 1) * rows]), []).append(i)
+        for ids in buckets.values():
+            ids.sort()
+            out.update(
+                (x, y) for k, x in enumerate(ids) for y in ids[k + 1:]
+            )
+    return out
+
+
+def test_minhash_banding_equals_brute_force(spark):
+    """MinHash LSH candidates are exactly the pairs that share any band
+    slice, computed in Python from the collected signatures — batch
+    candidates, and the delta form's survivors at threshold 0 (where
+    every candidate passes the prefilter and the verify, so the greedy
+    graph IS the candidate graph)."""
+    from icerunner_spark.operators.dedup import (
+        minhash_lsh_candidates,
+        minhash_signatures,
+    )
+    from icerunner_spark.operators.incremental import incremental_minhash_dedup
+
+    rows = _planted_minhash_docs()
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    sigs = {
+        r["id"]: list(r["sig"])
+        for r in minhash_signatures(df, "doc_id", "text", n_hashes=64).collect()
+    }
+    want = _brute_band_pairs(sigs, 64, 16)
+    got = {
+        (r["id1"], r["id2"])
+        for r in minhash_lsh_candidates(
+            df, "doc_id", "text", n_hashes=64, bands=16, max_bucket=10_000
+        ).collect()
+    }
+    assert len(want) >= len(rows) // 2, "fixture must plant colliding pairs"
+    assert got == want
+
+    split = len(rows) // 2 + 2
+    expect = _greedy_survivors(
+        [i for i, _ in rows[split:]], want, kept_prior=range(split)
+    )
+    assert any(a < split <= b for a, b in want), "no prior-delta pair planted"
+    inc = incremental_minhash_dedup(
+        df.filter(F.col("doc_id") < split),
+        df.filter(F.col("doc_id") >= split),
+        "doc_id",
+        "text",
+        threshold=0.0,
+        max_bucket=10_000,
+    )
+    assert {r["doc_id"] for r in inc.collect()} == expect
+
+
 # --------------------------------------------------------------------------- #
 # hard-negative mining
 # --------------------------------------------------------------------------- #

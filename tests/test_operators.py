@@ -85,6 +85,95 @@ def test_minhash_recall_against_exact(spark, docs_with_dups):
     )
 
 
+def _expr_hashed_sets(df, shingle):
+    from icerunner_spark.functions.text import char_ngrams, normalize_ws
+
+    return (
+        df.repartition(4, "doc_id")
+        .select(
+            F.col("doc_id").cast("long").alias("id"),
+            normalize_ws("text").alias("__norm"),
+        )
+        .select(
+            "id",
+            F.array_distinct(
+                char_ngrams(F.col("__norm"), shingle, normalized=True)
+            ).alias("g"),
+        )
+        .select(
+            "id",
+            F.array_distinct(F.transform("g", lambda x: F.xxhash64(x))).alias("g"),
+        )
+    )
+
+
+def _edge_docs(spark):
+    rows = [
+        (1, "ab"),                   # shorter than the shingle
+        (2, ""),                     # empty -> one gram, the empty string
+        (3, None),                   # null -> {42} (xxhash64(null) = seed)
+        (4, "héllo wörld — non-ascii fallback päth"),
+        (5, "aaaaaaaaaa"),           # one distinct gram
+        (6, "hello world hello world"),  # duplicate grams collapse
+        (7, "plain ascii body long enough for several grams"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_arrow_gram_kernel_matches_xxhash64_expressions(spark):
+    """mapInArrow gram kernel: EXACT F.xxhash64 parity (not merely
+    injective) on fixture docs and every edge shape — short, empty,
+    null, non-ascii, duplicate-gram."""
+    from icerunner_spark.operators.dedup import ngram_sets
+    from icerunner_spark.sources.testdata import load_table
+
+    for df in (_edge_docs(spark), load_table(spark, "documents", SF)):
+        for n in (4, 5):
+            new = {
+                r["id"]: frozenset(r["g"])
+                for r in ngram_sets(df, "doc_id", "text", shingle=n, hashed=True).collect()
+            }
+            ref = {
+                r["id"]: frozenset(r["g"])
+                for r in _expr_hashed_sets(df, n).collect()
+            }
+            assert new == ref
+            # the expr engine (ngram_jaccard_pairs' path) agrees too
+            expr = {
+                r["id"]: frozenset(r["g"])
+                for r in ngram_sets(
+                    df, "doc_id", "text", shingle=n, hashed=True, engine="expr"
+                ).collect()
+            }
+            assert expr == ref
+
+
+def test_arrow_sig_kernel_matches_xxhash64_expressions(spark):
+    """mapInArrow signature kernel: min over xxhash64(gram, lit(s))
+    is bit-identical to the explode + k-min-aggregate formulation."""
+    from icerunner_spark.operators.dedup import (
+        minhash_signatures_from_grams,
+        ngram_sets,
+    )
+
+    grams = ngram_sets(
+        _edge_docs(spark), "doc_id", "text", shingle=5, hashed=True
+    ).cache()
+    new = {
+        r["id"]: tuple(r["sig"])
+        for r in minhash_signatures_from_grams(grams, n_hashes=48).collect()
+    }
+    ex = grams.select("id", F.explode("g").alias("gram"))
+    mins = ex.groupBy("id").agg(
+        *[F.min(F.xxhash64("gram", F.lit(s))).alias(f"m{s}") for s in range(48)]
+    )
+    ref = {
+        r["id"]: tuple(r[f"m{s}"] for s in range(48)) for r in mins.collect()
+    }
+    grams.unpersist()
+    assert new == ref
+
+
 def test_hashed_gram_jaccard_equals_string_grams(spark, docs_with_dups):
     """r11: ngram_jaccard_pairs hashes shingles to longs before the
     inverted-index join (guide §2.3 narrower types). Jaccard is a count

@@ -10,9 +10,12 @@ from pyspark.sql import functions as F
 
 from icerunner_spark import queries as q
 from icerunner_spark.plans import plan_report
+from icerunner_spark.queries import _spread_if_narrow, queries
 from icerunner_spark.sources.testdata import load_table
+from icerunner_spark.table import _materialize_if_costly
 
 SF = "/root/testdata/sf0.01"
+SF_SMALL = SF.replace("sf0.01", "sf0.001")
 
 
 def _report(spark, name):
@@ -223,3 +226,117 @@ def test_decontam_semantic_no_pair_frame(spark):
     assert "Join" not in plan, plan
     # row-at-a-time Python remains banned here like everywhere else
     assert "BatchEvalPython" not in plan, plan
+
+
+# --------------------------------------------------------------------------- #
+# plan-shape gates: both must be INVISIBLE in results
+#
+# - ``queries._spread_if_narrow``: the fixture-parallelism spreads
+#   (pii_redact / decontam_eval / url_canonical) must still fire on the
+#   single-row-group fixtures but be SKIPPED when the input scan already
+#   carries >= cores partitions — an unconditional spread of a
+#   (doc_id, text) projection is a corpus-sized exchange at 100 TB.
+# - ``table._materialize_if_costly``: the merge paths' eager
+#   localCheckpoints must fire only for non-trivial lineages (joins,
+#   aggregates, ...); a filter-shaped delta is cheaper to recompute than
+#   to materialize, and eagerly pinning a scan-shaped frame is unbounded.
+# --------------------------------------------------------------------------- #
+
+
+def _docs_like(spark, n_partitions: int):
+    return (
+        spark.range(0, 200, 1, n_partitions)
+        .select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("text "), F.col("id")).alias("text"),
+        )
+    )
+
+
+def test_spread_fires_on_narrow_input(spark):
+    cores = spark.sparkContext.defaultParallelism
+    narrow = _docs_like(spark, 1)
+    out = _spread_if_narrow(narrow, "doc_id")
+    assert out is not narrow
+    assert out.rdd.getNumPartitions() == cores
+    # keyed, not round-robin: no sortBeforeRepartition surprise
+    assert "RepartitionByExpression" in out._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_spread_skipped_on_wide_input(spark):
+    cores = spark.sparkContext.defaultParallelism
+    wide = _docs_like(spark, cores + 2)
+    out = _spread_if_narrow(wide, "doc_id")
+    assert out is wide  # untouched plan: no exchange exists to pay
+
+
+def test_spread_results_identical_both_ways(spark):
+    narrow = _docs_like(spark, 1)
+    spread = _spread_if_narrow(narrow, "doc_id")
+    a = sorted(tuple(r) for r in narrow.collect())
+    b = sorted(tuple(r) for r in spread.collect())
+    assert a == b
+
+
+def test_fixture_queries_still_spread(spark):
+    """At the sf fixtures (single-row-group parquet, scans as ONE task)
+    the gated spread must still be in the plan."""
+    for name in ("pii_redact_documents", "decontam_eval_containment",
+                 "url_canonical_dedup"):
+        df = queries()[name](spark, SF_SMALL)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "RepartitionByExpression" in plan, f"{name} lost its spread"
+
+
+def test_materialize_skips_trivial_lineage(spark):
+    trivial = _docs_like(spark, 2).where(F.col("doc_id") % 7 == 0)
+    out = _materialize_if_costly(trivial)
+    assert out is trivial  # scan/filter/project: recompute, don't pin
+
+
+def test_materialize_fires_on_costly_lineage(spark):
+    base = _docs_like(spark, 2)
+    agg = base.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+    out = _materialize_if_costly(agg)
+    assert out is not agg
+    assert "LogicalRDD" in out._jdf.queryExecution().optimizedPlan().toString()
+    joined = base.join(base.select("doc_id"), "doc_id")
+    assert _materialize_if_costly(joined) is not joined
+
+
+def test_merge_results_unchanged_by_gate(spark, tmp_path):
+    """A trivial-lineage MOR merge (the gated-away checkpoint) must
+    produce exactly the rows the table semantics promise."""
+    from icerunner_spark.table import IceTable
+
+    t = IceTable(spark, str(tmp_path / "gate_merge"))
+    base = _docs_like(spark, 2).withColumn("v", F.lit(1))
+    t.create(base)
+    upd = (
+        _docs_like(spark, 2)
+        .where(F.col("doc_id") % 10 == 0)
+        .withColumn("v", F.lit(2))
+    )
+    t.merge(upd, ["doc_id"], mode="merge-on-read")
+    got = {(r["doc_id"], r["v"]) for r in t.scan().select("doc_id", "v").collect()}
+    expect = {
+        (i, 2 if i % 10 == 0 else 1) for i in range(0, 200)
+    }
+    assert got == expect
+
+
+def test_costly_lineage_walks_subqueries_and_stops_at_cache(spark):
+    """The plan-shape predicate reads node classes: a costly node inside
+    a subquery plan counts, and a cached relation is a leaf (it is read,
+    not re-executed)."""
+    from icerunner_spark.plans import is_costly_lineage
+
+    base = _docs_like(spark, 2)
+    assert not is_costly_lineage(base.where(F.col("doc_id") > 3))
+    sub = spark.sql(
+        "SELECT * FROM range(10) WHERE id > (SELECT max(id) FROM range(5))"
+    )
+    assert is_costly_lineage(sub)
+    cached = base.groupBy("text").count().cache()
+    assert not is_costly_lineage(cached)
+    cached.unpersist()

@@ -3937,3 +3937,31 @@ def test_run_maintenance_ttl_expires_rows(spark, warehouse):
 
     with _pytest.raises(ValueError, match="timestamp or"):
         t4.run_maintenance()
+
+
+def _docs_like(spark, n_partitions: int):
+    return (
+        spark.range(0, 200, 1, n_partitions)
+        .select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("text "), F.col("id")).alias("text"),
+        )
+    )
+
+
+def test_update_where_mor_unpins_cache(spark, tmp_path):
+    """update_where(merge-on-read) persists the matched scan for its two
+    writes and must release it before returning (no storage leak), while
+    producing the same rows as before."""
+    from icerunner_spark.table import IceTable
+
+    t = IceTable(spark, str(tmp_path / "gate_update"))
+    t.create(_docs_like(spark, 2).withColumn("v", F.lit(1)))
+    jsc = spark.sparkContext._jsc.sc()
+    before = jsc.getRDDStorageInfo()
+    t.update_where("doc_id % 5 = 0", {"v": "v + 41"}, mode="merge-on-read")
+    after = jsc.getRDDStorageInfo()
+    assert len(after) == len(before), "matched-scan cache leaked"
+    got = {(r["doc_id"], r["v"]) for r in t.scan().select("doc_id", "v").collect()}
+    expect = {(i, 42 if i % 5 == 0 else 1) for i in range(0, 200)}
+    assert got == expect
