@@ -53,12 +53,23 @@ file's layout group, footer schemas read once per file, and row/byte
 totals summed from the manifest's recorded row counts. Snapshots and data
 files never change, so a plan is built on the first RPC that sees a
 snapshot and reused until a commit makes a new one; the server keeps the
-``PLAN_CACHE_SIZE`` most recently used. Reads that span snapshots (the
-``get_changes`` file walk) and the Spark spill paths stay uncached.
+``PLAN_CACHE_SIZE`` most recently used.
+
+Reads that span snapshots, and every rule for which snapshot a ticket
+reads, live on :class:`IceTable`; the server keeps the wire side (serve
+plans, file streams, spills, table refusals as ``FlightServerError``).
+``get_changes`` streams the files of the table's append-only range walk,
+the same walk over one ``snapshots()`` listing that ``scan_changes`` and
+``scan_changelog`` use, under its context snapshot's plan. ``scan`` and
+``get_slice`` tickets pin their snapshot through the table's time-travel
+resolver. A snapshot with pending merge-on-read deletes is served from the
+table's delete-applied read through one spill helper, whichever ticket
+asked. The range walk and the spill paths stay uncached.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import threading
@@ -73,12 +84,12 @@ from pyspark.sql.types import StructType
 from icerunner_spark.connector import Connector
 from icerunner_spark.table import (
     IceTable,
+    NoSuchTableError,
     Snapshot,
     _commit_dir_of,
     _decode_bound,
     _hive_partition_values,
     _normalize_predicates,
-    _predicates_to_column,
 )
 
 DEFAULT_PORT = 8816
@@ -92,17 +103,20 @@ def _spark_schema_to_arrow(struct_type) -> pa.Schema:
     return to_arrow_schema(struct_type)
 
 
-def _layout_keys(snap: Snapshot, files_rel, logical, mappings=None) -> dict:
+def _layout_keys(
+    snap: Snapshot, files_rel, logical, mappings=None, dir_specs=None
+) -> dict:
     """Layout key of each table-relative data file: ``(physical name of
     each logical column, partition values, partition spec)``, resolved
     through the snapshot's field ids (table.py field-id indirection).
     Partition columns are physical-None: they live in the hive path
     (``lang=en/``), not the file, and their decoded values ride in the
-    key. ``mappings`` replaces the snapshot's per-dir physical names (a
-    changes read whose files come from several snapshots)."""
+    key. ``mappings`` and ``dir_specs`` replace the snapshot's per-dir
+    physical names and partition specs (a changes read whose files come
+    from several snapshots)."""
     fid = snap.field_ids
     spec = list(snap.partition_spec or [])
-    dir_specs = dict(snap.dir_specs or {})
+    dir_specs = (snap.dir_specs or {}) if dir_specs is None else dir_specs
     mappings = snap.file_mappings if mappings is None else mappings
     per_dir: dict = {}
     keys = {}
@@ -305,6 +319,55 @@ class IceFlightServer(flight.FlightServerBase):
             while len(self._plans) > PLAN_CACHE_SIZE:
                 self._plans.popitem(last=False)
         return plan
+
+    @staticmethod
+    @contextlib.contextmanager
+    def _table_errors(name):
+        """Table-API refusals reach the client as ``FlightServerError``:
+        a ``ValueError`` (unknown snapshot or tag, a refused change
+        range) with its message, an empty history as a missing table."""
+        try:
+            yield
+        except ValueError as e:
+            raise flight.FlightServerError(str(e)) from None
+        except NoSuchTableError:
+            raise flight.FlightServerError(f"table not found: {name}") from None
+
+    @staticmethod
+    def _ticket_int(cmd: dict, key: str) -> int | None:
+        """Integer field of a ticket (a snapshot id, ``as_of_ms``); None
+        when absent. A value that is not an integer is refused."""
+        val = cmd.get(key)
+        if val is None:
+            return None
+        try:
+            return int(val)
+        except (TypeError, ValueError):
+            raise flight.FlightServerError(f"invalid {key}: {val!r}") from None
+
+    def _ticket_range(self, cmd: dict) -> tuple[int | None, int | None]:
+        """``(start, end)`` snapshot ids of a ``get_changes`` or
+        ``get_changelog`` ticket. A start of "", "full_sync" or "unknown"
+        (a mirror's cursor before its first sync) reads from the
+        beginning of the table's history."""
+        start = (
+            None
+            if cmd.get("snapshot_id") in ("", "full_sync", "unknown")
+            else self._ticket_int(cmd, "snapshot_id")
+        )
+        return start, self._ticket_int(cmd, "end_snapshot_id")
+
+    def _ticket_snapshot(self, t: IceTable, cmd: dict) -> Snapshot:
+        """The snapshot a ``scan`` or ``get_slice`` ticket pins: its
+        ``snapshot_id``, ``tag`` or ``as_of_ms`` (remote VERSION /
+        TIMESTAMP AS OF), else the current one, resolved by the table's
+        own time-travel rules (at most one selector)."""
+        snapshot_id = self._ticket_int(cmd, "snapshot_id")
+        as_of_ms = self._ticket_int(cmd, "as_of_ms")
+        with self._table_errors(cmd["table"]):
+            return t._resolve_snapshot(
+                snapshot_id, tag=cmd.get("tag"), as_of_ms=as_of_ms
+            )
 
     @staticmethod
     def _typed_preds(plan: _ServePlan, where) -> list[tuple]:
@@ -583,6 +646,16 @@ class IceFlightServer(flight.FlightServerBase):
 
         return flight.GeneratorStream(schema, gen())
 
+    def _stream_deletes_applied(self, plan: _ServePlan, preds, columns):
+        """Stream a snapshot with pending merge-on-read deletes
+        (positional anti-join or equality keys): Spark applies them in
+        the table's delete-applied read (pruned by ``preds``, filtered
+        exactly), and the result file-streams from a parquet spill, the
+        bounded-memory path of SQL tickets. Compaction materializes the
+        deletes and restores zero-copy manifest streaming."""
+        df = plan.table._scan_at(plan.snap, preds)
+        return self._stream_df(df.select(*columns) if columns else df)
+
     # ------------------------------------------------------------------ #
     # Flight verbs
     # ------------------------------------------------------------------ #
@@ -663,7 +736,7 @@ class IceFlightServer(flight.FlightServerBase):
             t, snap = plan.table, plan.snap
             n = max(1, int(cmd.get("n", 4)))
             where = cmd.get("where") or []
-            if snap.delete_files or snap.eq_delete_files:
+            if snap.pending_deletes:
                 # manifest slicing can't honor pending merge-on-read
                 # (positional or equality) deletes; degrade to ONE
                 # delete-applied endpoint
@@ -721,15 +794,9 @@ class IceFlightServer(flight.FlightServerBase):
         except (UnicodeDecodeError, json.JSONDecodeError, ValueError):
             # raw table-name ticket (reference parity, icerunner.py:272-282)
             plan = self._current(raw.decode())
-            snap = plan.snap
-            if snap.delete_files or snap.eq_delete_files:
-                # pending merge-on-read deletes (positional anti-join or
-                # equality keys) — Spark applies them and the result
-                # file-streams from a parquet spill (same bounded-memory
-                # path as SQL tickets). Compaction materializes the
-                # deletes and restores zero-copy manifest streaming.
-                return self._stream_df(plan.table._scan_snapshot(snap))
-            return self._stream_resolved(plan, snap.manifest)
+            if plan.snap.pending_deletes:
+                return self._stream_deletes_applied(plan, [], None)
+            return self._stream_resolved(plan, plan.snap.manifest)
 
         if "sql" in cmd:
             return self._stream_df(self.connector.sql_df(cmd["sql"]))
@@ -745,77 +812,17 @@ class IceFlightServer(flight.FlightServerBase):
             empty = pa.RecordBatch.from_pylist([], schema=schema)
             return flight.GeneratorStream(schema, iter([empty]))
         if op == "get_changes":
+            # the table's append-only range walk picks the files (its
+            # refusals — an overwrite/delete/merge in range, an unknown
+            # or misordered id — reach the client verbatim); its context
+            # snapshot's plan file-streams them under that schema
             name = cmd["table"]
-            snapshot_id = cmd.get("snapshot_id")
-            if snapshot_id in ("", None, "full_sync", "unknown"):
-                snapshot_id = None
-            else:
-                snapshot_id = int(snapshot_id)
-            end_snapshot_id = cmd.get("end_snapshot_id")
-            end_snapshot_id = None if end_snapshot_id is None else int(end_snapshot_id)
             t = self._table(name)
-            snaps = t.snapshots()
-            if not snaps:
-                raise flight.FlightServerError(f"table not found: {name}")
-            # validate ids up front so the ordering error is precise: an
-            # end that precedes the start used to surface as a misleading
-            # "unknown snapshot: <start>" (the walk broke at end first)
-            ids = [s.snapshot_id for s in snaps]
-            if snapshot_id is not None and snapshot_id not in ids:
-                raise flight.FlightServerError(f"unknown snapshot: {snapshot_id}")
-            if end_snapshot_id is not None:
-                if end_snapshot_id not in ids:
-                    raise flight.FlightServerError(
-                        f"unknown end snapshot: {end_snapshot_id}"
-                    )
-                if snapshot_id is not None and ids.index(end_snapshot_id) < ids.index(snapshot_id):
-                    raise flight.FlightServerError(
-                        f"end snapshot {end_snapshot_id} precedes start "
-                        f"snapshot {snapshot_id} in table history"
-                    )
-            started = snapshot_id is None
-            seen_end = end_snapshot_id is None
-            files: list[str] = []
-            # physical-name mappings come from the CONTRIBUTING snapshots
-            # (a later compaction prunes replaced dirs from current's map)
-            mappings: dict = {}
-            ctx = None
-            for s in snaps:
-                if started:
-                    # Mirror IceTable.scan_changes' contract (table.py): an
-                    # overwrite in range invalidates append-only diffing —
-                    # erroring here forces mirror clients onto their
-                    # full-overwrite resync path instead of silently
-                    # appending rows the source logically deleted.
-                    if s.operation in ("overwrite", "delete", "merge", "rollback"):
-                        raise flight.FlightServerError(
-                            "get_changes crosses an overwrite/delete/merge "
-                            "snapshot; incremental diff is append-only — "
-                            "full resync required"
-                        )
-                    if s.operation != "replace":
-                        # 'replace' = compaction, same rows -> no delta
-                        files.extend(s.added_files)
-                        for f in s.added_files:
-                            d = _commit_dir_of(f)
-                            if d in s.file_mappings:
-                                mappings[d] = s.file_mappings[d]
-                if s.snapshot_id == snapshot_id:
-                    started = True
-                if end_snapshot_id is not None and s.snapshot_id == end_snapshot_id:
-                    seen_end = True
-                    ctx = s
-                    break
-            if not started:
-                raise flight.FlightServerError(f"unknown snapshot: {snapshot_id}")
-            if not seen_end:
-                raise flight.FlightServerError(
-                    f"unknown end snapshot: {end_snapshot_id}"
-                )
-            # the walk's last snapshot is the current one at listing time:
-            # its schema describes exactly the files walked
-            plan = self._plan(t, ctx or snaps[-1])
-            keys = _layout_keys(plan.snap, files, plan.logical, mappings)
+            start, end = self._ticket_range(cmd)
+            with self._table_errors(name):
+                ctx, files, mappings, specs = t._append_range(start, end)
+            plan = self._plan(t, ctx)
+            keys = _layout_keys(plan.snap, files, plan.logical, mappings, specs)
             return self._stream_resolved(plan, files, keys)
         if op == "get_changelog":
             # Row-level incremental read (insert/delete rows with a
@@ -824,21 +831,12 @@ class IceFlightServer(flight.FlightServerBase):
             # Mirror clients try get_changes first (zero-copy file stream),
             # fall to this, and only full-resync on a true overwrite.
             name = cmd["table"]
-            snapshot_id = cmd.get("snapshot_id")
-            if snapshot_id in ("", None, "full_sync", "unknown"):
-                snapshot_id = None
-            else:
-                snapshot_id = int(snapshot_id)
-            end_snapshot_id = cmd.get("end_snapshot_id")
-            end_snapshot_id = None if end_snapshot_id is None else int(end_snapshot_id)
             t = self._table(name)
-            try:
+            start, end = self._ticket_range(cmd)
+            with self._table_errors(name):
                 df = t.scan_changelog(
-                    snapshot_id, end_snapshot_id,
-                    with_lineage=bool(cmd.get("lineage")),
+                    start, end, with_lineage=bool(cmd.get("lineage"))
                 )
-            except ValueError as e:
-                raise flight.FlightServerError(str(e))
             # spill-backed stream: the delta is written by Spark's
             # distributed writer and file-streamed — server memory stays
             # bounded by chunk_rows regardless of delta size
@@ -849,59 +847,25 @@ class IceFlightServer(flight.FlightServerBase):
             # (zero IO for excluded files), then the pyarrow stream
             # applies the residual filter row-exactly — a filtered table
             # leaves the server as O(matching files + matching rows), no
-            # Spark engaged unless merge-on-read deletes are pending
-            name = cmd["table"]
-            t = self._table(name)
-            # remote time travel: the ticket may pin a snapshot id, a
-            # named tag, or a wall-clock timestamp (VERSION/TIMESTAMP AS
-            # OF over the wire) — resolution mirrors IceTable.scan
-            try:
-                snap_id = cmd.get("snapshot_id")
-                if cmd.get("tag") is not None:
-                    refs = t.tags()
-                    if cmd["tag"] not in refs:
-                        raise ValueError(f"no such tag: {cmd['tag']}")
-                    snap_id = refs[cmd["tag"]]
-                if cmd.get("as_of_ms") is not None:
-                    older = [
-                        s
-                        for s in t.snapshots()
-                        if s.timestamp_ms <= int(cmd["as_of_ms"])
-                    ]
-                    if not older:
-                        raise ValueError(
-                            f"no snapshot at or before {cmd['as_of_ms']}"
-                        )
-                    snap_id = older[-1].snapshot_id
-                snap = (
-                    t.current_snapshot()
-                    if snap_id is None
-                    else t.snapshot_by_id(int(snap_id))
-                )
-            except ValueError as e:
-                raise flight.FlightServerError(str(e))
-            if snap is None:
-                raise flight.FlightServerError(f"table not found: {name}")
-            plan = self._plan(t, snap)
+            # Spark engaged unless merge-on-read deletes are pending.
+            # The ticket may pin a snapshot (remote time travel).
+            t = self._table(cmd["table"])
+            plan = self._plan(t, self._ticket_snapshot(t, cmd))
+            snap = plan.snap
             preds = self._typed_preds(plan, cmd.get("where") or [])
             cols = self._proj_columns(plan, cmd.get("columns"))
-            if snap.delete_files or snap.eq_delete_files:
-                df = t._scan_snapshot(snap)
-                if preds:
-                    df = df.where(_predicates_to_column(preds))
-                if cols:
-                    df = df.select(*cols)
-                return self._stream_df(df)
+            if snap.pending_deletes:
+                return self._stream_deletes_applied(plan, preds, cols)
             files = t._prune_files(snap, snap.manifest, preds)
             return self._stream_resolved(plan, files, preds=preds, columns=cols)
         if op == "get_slice":
             t = self._table(cmd["table"])
-            snap = t.snapshot_by_id(int(cmd["snapshot_id"]))
-            plan = self._plan(t, snap)
+            plan = self._plan(t, self._ticket_snapshot(t, cmd))
+            snap = plan.snap
             i, n = int(cmd["index"]), int(cmd["of"])
             preds = self._typed_preds(plan, cmd.get("where") or [])
             cols = self._proj_columns(plan, cmd.get("columns"))
-            if snap.delete_files or snap.eq_delete_files:
+            if snap.pending_deletes:
                 # deletes pending: the manifest under-describes the rows,
                 # so slicing can't apply. get_slices advertises ONE
                 # endpoint, but clients that CRAFT i-of-n tickets (the
@@ -917,12 +881,7 @@ class IceFlightServer(flight.FlightServerBase):
                         schema,
                         iter([pa.RecordBatch.from_pylist([], schema=schema)]),
                     )
-                df = t._scan_snapshot(snap)
-                if preds:
-                    df = df.where(_predicates_to_column(preds))
-                if cols:
-                    df = df.select(*cols)
-                return self._stream_df(df)
+                return self._stream_deletes_applied(plan, preds, cols)
             # prune FIRST, slice the pruned list: every crafted i-of-n
             # ticket against the same pinned snapshot + where sees the
             # same file list, so slices stay disjoint and exhaustive

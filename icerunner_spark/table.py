@@ -145,6 +145,12 @@ class Snapshot:
     # as the file's commit sequence. None = pre-lineage legacy snapshot.
     next_row_id: int | None = None
 
+    @property
+    def pending_deletes(self) -> bool:
+        """Merge-on-read deletes (positional or equality) not yet
+        materialized: the manifest alone over-describes the rows."""
+        return bool(self.delete_files or self.eq_delete_files)
+
     def to_json(self) -> str:
         return json.dumps(
             {
@@ -306,6 +312,19 @@ def _commit_dir_of(relpath: str) -> str:
     parts = relpath.replace(os.sep, "/").split("/")
     return parts[1] if len(parts) >= 3 and parts[0] == "data" else relpath
 
+
+
+def _note_added_layouts(snap: Snapshot, mappings: dict, specs: dict) -> None:
+    """Record, per commit dir ``snap`` added, the physical-name mapping
+    and partition spec that ``snap`` itself records for it. A change read
+    resolves its files through these, not the context snapshot's maps: a
+    later compaction prunes replaced dirs from those, and a dir missing
+    there would read under the newer snapshot's spec."""
+    for f in snap.added_files:
+        d = _commit_dir_of(f)
+        if d in snap.file_mappings:
+            mappings[d] = snap.file_mappings[d]
+        specs[d] = snap.dir_specs.get(d, snap.partition_spec)
 
 def _timestamps_to_us(data: pa.Table) -> pa.Table:
     """Cast top-level timestamp columns to microseconds (Spark's native
@@ -1104,7 +1123,39 @@ class IceTable:
         for snap in self.snapshots():
             if snap.snapshot_id == snapshot_id:
                 return snap
-        raise ValueError(f"no snapshot {snapshot_id} in {self.path}")
+        raise ValueError(f"no snapshot {snapshot_id} in table history")
+
+    def _resolve_snapshot(
+        self,
+        snapshot_id: int | None = None,
+        *,
+        tag: str | None = None,
+        as_of_ms: int | None = None,
+    ) -> Snapshot:
+        """The snapshot a read pins: by id, by named tag (`VERSION AS OF
+        'tag'`), or the newest one committed at or before ``as_of_ms``
+        (`TIMESTAMP AS OF`). At most one selector; none means the current
+        snapshot, one ``current_snapshot()`` read and no history walk."""
+        if sum(x is not None for x in (snapshot_id, tag, as_of_ms)) > 1:
+            raise ValueError("pass at most one of snapshot_id, tag, as_of_ms")
+        if tag is not None:
+            refs = self.tags()
+            if tag not in refs:
+                raise ValueError(f"no such tag: {tag}")
+            snapshot_id = refs[tag]
+        if as_of_ms is not None:
+            older = [s for s in self.snapshots() if s.timestamp_ms <= as_of_ms]
+            if not older:
+                raise ValueError(
+                    f"no snapshot at or before timestamp {as_of_ms}"
+                )
+            return older[-1]
+        if snapshot_id is not None:
+            return self.snapshot_by_id(snapshot_id)
+        snap = self.current_snapshot()
+        if snap is None:
+            raise NoSuchTableError(self.path)
+        return snap
 
     def schema(self) -> StructType:
         snap = self.current_snapshot()
@@ -1802,13 +1853,7 @@ class IceTable:
         compaction rewrites."""
         import base64
 
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
+        snap = self._resolve_snapshot(snapshot_id)
         fid = str(snap.field_ids.get(col, ""))
         sketches: list[bytes] = []
         missing: list[str] = []
@@ -2569,13 +2614,8 @@ class IceTable:
             )
             .distinct()
         )
-        commit_dir = f"snap-{uuid.uuid4().hex[:12]}-deletes"
-        out = os.path.join(self.data_dir, commit_dir)
-        matched.write.mode("error").parquet(out)
-        new_deletes = sorted(
-            os.path.join("data", commit_dir, f)
-            for f in os.listdir(out)
-            if f.endswith(".parquet")
+        new_deletes, _ = self._write_delete_files(
+            matched, f"snap-{uuid.uuid4().hex[:12]}-deletes"
         )
         _, files = self._write_data_files(
             updates, list(snap.partition_spec), field_ids=snap.field_ids
@@ -2778,13 +2818,8 @@ class IceTable:
             )
         new_deletes: list[str] = []
         if n_touched:
-            commit_dir = f"snap-{uuid.uuid4().hex[:12]}-deletes"
-            out = os.path.join(self.data_dir, commit_dir)
-            coords.write.mode("error").parquet(out)
-            new_deletes = sorted(
-                os.path.join("data", commit_dir, f)
-                for f in os.listdir(out)
-                if f.endswith(".parquet")
+            new_deletes, _ = self._write_delete_files(
+                coords, f"snap-{uuid.uuid4().hex[:12]}-deletes"
             )
         files = (
             self._write_data_files(
@@ -2902,8 +2937,6 @@ class IceTable:
             raise ValueError(f"unknown update mode: {mode}")
         import shutil as _shutil
 
-        import pyarrow.parquet as _pq
-
         # The matched scan feeds two writes (coordinates, updated rows).
         # NOT localCheckpoint-ed (r12, r11 verdict item 3): "O(matched
         # rows)" is not delta-bounded here — a broad predicate matches a
@@ -2915,22 +2948,18 @@ class IceTable:
         matched = self._scan_snapshot(snap, with_pos=True).where(cond).persist()
         try:
             commit_dir = f"snap-{uuid.uuid4().hex[:12]}-deletes"
-            out = os.path.join(self.data_dir, commit_dir)
-            matched.select(
-                F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
-            ).distinct().write.mode("error").parquet(out)
-            new_deletes = sorted(
-                os.path.join("data", commit_dir, f)
-                for f in os.listdir(out)
-                if f.endswith(".parquet")
+            new_deletes, n = self._write_delete_files(
+                matched.select(
+                    F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
+                ).distinct(),
+                commit_dir,
             )
             # no-op check from the already-written footers (no extra Spark
             # job): publish nothing when the condition matched zero rows
-            if not any(
-                _pq.read_metadata(os.path.join(self.path, p)).num_rows
-                for p in new_deletes
-            ):
-                _shutil.rmtree(out, ignore_errors=True)
+            if not n:
+                _shutil.rmtree(
+                    os.path.join(self.data_dir, commit_dir), ignore_errors=True
+                )
                 return None
             updated_rows = matched.select(
                 *[
@@ -2985,23 +3014,13 @@ class IceTable:
                 ]
             ).distinct()
             commit_dir = f"snap-{uuid.uuid4().hex[:12]}-eqdeletes"
-            out = os.path.join(self.data_dir, commit_dir)
-            kdf.write.mode("error").parquet(out)
-            paths = sorted(
-                os.path.join("data", commit_dir, f)
-                for f in os.listdir(out)
-                if f.endswith(".parquet")
-            )
-            import pyarrow.parquet as _pq
-
-            n = sum(
-                _pq.read_metadata(os.path.join(self.path, p)).num_rows
-                for p in paths
-            )
+            paths, n = self._write_delete_files(kdf, commit_dir)
             if n == 0:
                 import shutil as _shutil
 
-                _shutil.rmtree(out, ignore_errors=True)
+                _shutil.rmtree(
+                    os.path.join(self.data_dir, commit_dir), ignore_errors=True
+                )
                 return None
             return self._publish(
                 "delete", [], self.schema().json(),
@@ -3027,6 +3046,28 @@ class IceTable:
         )
         return self._publish_positional_deletes(matches, allow_empty=False)
 
+    def _write_delete_files(
+        self, df: DataFrame, commit_dir: str
+    ) -> tuple[list[str], int]:
+        """Write ``df`` (positional delete coordinates or equality-delete
+        key values) to the fresh commit dir ``data/<commit_dir>``. Returns
+        its parquet files as table-relative paths and their row count,
+        summed from the footers (no Spark job), so a caller can publish
+        nothing when nothing matched."""
+        import pyarrow.parquet as _pq
+
+        out = os.path.join(self.data_dir, commit_dir)
+        df.write.mode("error").parquet(out)
+        paths = sorted(
+            os.path.join("data", commit_dir, f)
+            for f in os.listdir(out)
+            if f.endswith(".parquet")
+        )
+        rows = sum(
+            _pq.read_metadata(os.path.join(self.path, p)).num_rows for p in paths
+        )
+        return paths, rows
+
     def _publish_positional_deletes(
         self, matches: DataFrame, *, allow_empty: bool = True
     ) -> Snapshot | None:
@@ -3038,25 +3079,14 @@ class IceTable:
             F.col("__file").alias("file_path"), F.col("__pos").alias("pos")
         ).distinct()
         commit_dir = f"snap-{uuid.uuid4().hex[:12]}-deletes"
-        out = os.path.join(self.data_dir, commit_dir)
-        coords.write.mode("error").parquet(out)
-        new_deletes = sorted(
-            os.path.join("data", commit_dir, f)
-            for f in os.listdir(out)
-            if f.endswith(".parquet")
-        )
-        if not allow_empty:
-            import pyarrow.parquet as _pq
+        new_deletes, n = self._write_delete_files(coords, commit_dir)
+        if not allow_empty and n == 0:
+            import shutil as _shutil
 
-            n = sum(
-                _pq.read_metadata(os.path.join(self.path, f)).num_rows
-                for f in new_deletes
+            _shutil.rmtree(
+                os.path.join(self.data_dir, commit_dir), ignore_errors=True
             )
-            if n == 0:
-                import shutil as _shutil
-
-                _shutil.rmtree(out, ignore_errors=True)
-                return None
+            return None
         return self._publish(
             "delete", [], self.schema().json(),
             summary={"operation_detail": "delete merge-on-read"},
@@ -3156,13 +3186,7 @@ class IceTable:
         CREATE TAG` parity): pins the snapshot for `scan(tag=...)` and
         protects it (and its files) from expire_snapshots. O_EXCL create
         — tags cannot be silently retargeted; drop and recreate."""
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
+        snap = self._resolve_snapshot(snapshot_id)
         with open(self._ref_path(name), "x") as f:
             f.write(
                 json.dumps(
@@ -3222,13 +3246,7 @@ class IceTable:
         self._require_main("create_branch")
         if not name or not name.replace("-", "_").isidentifier():
             raise ValueError(f"invalid branch name: {name!r}")
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
+        snap = self._resolve_snapshot(snapshot_id)
         bdir = os.path.join(self._branches_root(), name)
         if os.path.isdir(bdir):
             raise ValueError(f"branch already exists: {name}")
@@ -3599,18 +3617,10 @@ class IceTable:
         )
         n = dels.count()
         n_out = max(1, -(-n // max(1, int(target_file_rows))))
-        commit_dir = f"snap-{uuid.uuid4().hex[:12]}-deletes"
-        out = os.path.join(self.data_dir, commit_dir)
-        (
+        new_deletes, _ = self._write_delete_files(
             dels.repartitionByRange(n_out, "file_path", "pos")
-            .sortWithinPartitions("file_path", "pos")
-            .write.mode("error")
-            .parquet(out)
-        )
-        new_deletes = sorted(
-            os.path.join("data", commit_dir, f)
-            for f in os.listdir(out)
-            if f.endswith(".parquet")
+            .sortWithinPartitions("file_path", "pos"),
+            f"snap-{uuid.uuid4().hex[:12]}-deletes",
         )
         return self._publish(
             "replace", [], snap.schema_json, inherit_schema=True,
@@ -3781,7 +3791,7 @@ class IceTable:
         small = _int("maintenance.small-file-rows")
         if small is not None:
             cur = self.current_snapshot()
-            dirty = bool(cur.delete_files or cur.eq_delete_files) or any(
+            dirty = cur.pending_deletes or any(
                 int((cur.file_stats.get(f) or {}).get("__rows__") or 0) < small
                 for f in cur.manifest
                 if (cur.file_stats.get(f) or {}).get("__rows__") is not None
@@ -4299,13 +4309,7 @@ class IceTable:
         manifest filtered through per-file column bounds and partition
         paths. Exposed for planners/tests; ``len(plan_files(w)) <
         len(manifest)`` is the file-skipping win."""
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
+        snap = self._resolve_snapshot(snapshot_id)
         preds = _normalize_predicates(where)
         return self._prune_files(snap, snap.manifest, preds)
 
@@ -4328,13 +4332,7 @@ class IceTable:
         the tier that actually dropped it. Pure driver-side — use it to
         check a predicate prunes BEFORE paying for the scan, and to see
         which tier (layout, stats, blooms) is doing the work."""
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
+        snap = self._resolve_snapshot(snapshot_id)
         preds = _normalize_predicates(where)
         skipped: dict = {}
         files = self._prune_files(snap, snap.manifest, preds, report=skipped)
@@ -4383,13 +4381,7 @@ class IceTable:
         comparisons are false on NULL); one unprovable file → ``None``.
         Pending equality deletes always → ``None`` (their matched
         multiplicity is unknowable without reading data)."""
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
+        snap = self._resolve_snapshot(snapshot_id)
         if snap.eq_delete_files:
             return None
         preds = _normalize_predicates(where)
@@ -4476,14 +4468,8 @@ class IceTable:
         hidden NaN makes the metadata answer wrong), or any live file
         lacking bounds that isn't provably all-NULL/empty. NULLs are
         ignored, matching SQL MIN/MAX."""
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
-        if snap.delete_files or snap.eq_delete_files:
+        snap = self._resolve_snapshot(snapshot_id)
+        if snap.pending_deletes:
             return None
         schema = StructType.fromJson(json.loads(snap.schema_json))
         types = {f.name: f.dataType for f in schema.fields}
@@ -4540,30 +4526,16 @@ class IceTable:
         ``with_lineage=True`` adds Iceberg v3 row-lineage columns
         ``_row_id`` / ``_last_updated_sequence`` derived from metadata
         (see :meth:`_with_lineage` for the stability contract)."""
-        if sum(x is not None for x in (snapshot_id, tag, as_of_ms)) > 1:
-            raise ValueError("pass at most one of snapshot_id, tag, as_of_ms")
-        if tag is not None:
-            refs = self.tags()
-            if tag not in refs:
-                raise ValueError(f"no such tag: {tag}")
-            snapshot_id = refs[tag]
-        if as_of_ms is not None:
-            older = [
-                s for s in self.snapshots() if s.timestamp_ms <= as_of_ms
-            ]
-            if not older:
-                raise ValueError(
-                    f"no snapshot at or before timestamp {as_of_ms}"
-                )
-            snapshot_id = older[-1].snapshot_id
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
-        preds = _normalize_predicates(where)
+        snap = self._resolve_snapshot(snapshot_id, tag=tag, as_of_ms=as_of_ms)
+        return self._scan_at(snap, _normalize_predicates(where), with_lineage)
+
+    def _scan_at(
+        self, snap: Snapshot, preds: list[tuple], with_lineage: bool = False
+    ) -> DataFrame:
+        """Delete-applied read of one resolved snapshot: prune the
+        manifest with the normalized conjuncts ``preds``, read it through
+        :meth:`_scan_snapshot` (pending merge-on-read deletes applied),
+        then filter the rows exactly with the same conjuncts."""
         files = (
             self._prune_files(snap, snap.manifest, preds) if preds else None
         )
@@ -4661,7 +4633,7 @@ class IceTable:
         ``files`` restricts the read to a subset of the manifest (file
         pruning, bin-pack compaction) — delete coordinates naming files
         outside the subset simply never match."""
-        need_pos = with_pos or bool(snap.delete_files) or bool(snap.eq_delete_files)
+        need_pos = with_pos or snap.pending_deletes
         df = self._read_files(
             snap.manifest if files is None else files,
             StructType.fromJson(json.loads(snap.schema_json)),
@@ -5084,6 +5056,67 @@ class IceTable:
             schema_evolve=schema_evolve,
         )
 
+    def _snapshot_range(
+        self, start_snapshot_id: int | None, end_snapshot_id: int | None
+    ) -> tuple[Snapshot, list[tuple[Snapshot, Snapshot | None]]]:
+        """The snapshots in ``(start, end]``, each with its parent, from
+        ONE ``snapshots()`` listing, plus the context snapshot whose
+        schema and layout describe the range: the end snapshot, or the
+        listing's last one when ``end_snapshot_id`` is None (never a
+        second read of the table, which a racing commit could have moved
+        past the walked range). ``start_snapshot_id=None`` means "since
+        the beginning". Raises :class:`NoSuchTableError` on an empty
+        history and ``ValueError`` for an unknown start or end, or an end
+        that precedes the start."""
+        snaps = self.snapshots()
+        if not snaps:
+            raise NoSuchTableError(self.path)
+        ids = [s.snapshot_id for s in snaps]
+        if start_snapshot_id is not None and start_snapshot_id not in ids:
+            raise ValueError(f"start snapshot {start_snapshot_id} not found")
+        lo = 0 if start_snapshot_id is None else ids.index(start_snapshot_id) + 1
+        hi = len(snaps) - 1
+        if end_snapshot_id is not None:
+            if end_snapshot_id not in ids:
+                raise ValueError(f"end snapshot {end_snapshot_id} not found")
+            hi = ids.index(end_snapshot_id)
+            if hi < lo - 1:
+                raise ValueError(
+                    f"end snapshot {end_snapshot_id} precedes start "
+                    f"snapshot {start_snapshot_id} in table history"
+                )
+        walk = [(snaps[i], snaps[i - 1] if i else None) for i in range(lo, hi + 1)]
+        return snaps[hi], walk
+
+    def _append_range(
+        self, start_snapshot_id: int | None, end_snapshot_id: int | None
+    ) -> tuple[Snapshot, list[str], dict, dict]:
+        """``(ctx, files, mappings, specs)`` of an append-only change
+        range: the context snapshot (see :meth:`_snapshot_range`), the
+        data files the range's snapshots added, and each added commit
+        dir's physical-name mapping and partition spec as the snapshot
+        that added it records them (:func:`_note_added_layouts`). An
+        'overwrite', 'delete', 'merge' or 'rollback' in range raises —
+        merge-on-read deletes and upserts remove rows without an
+        overwrite commit, so the diff is no longer append-only; a
+        'replace' (compaction: same rows) adds nothing, as Iceberg's
+        incremental read skips rewrite snapshots."""
+        ctx, walk = self._snapshot_range(start_snapshot_id, end_snapshot_id)
+        files: list[str] = []
+        mappings: dict = {}
+        specs: dict = {}
+        for snap, _parent in walk:
+            if snap.operation in ("overwrite", "delete", "merge", "rollback"):
+                raise ValueError(
+                    "change range crosses an overwrite/delete/merge "
+                    "snapshot; incremental diff is append-only — full "
+                    "resync required"
+                )
+            if snap.operation != "replace":
+                files.extend(snap.added_files)
+                _note_added_layouts(snap, mappings, specs)
+        return ctx, files, mappings, specs
+
     def scan_changes(
         self,
         start_snapshot_id: int | None,
@@ -5100,55 +5133,15 @@ class IceTable:
         Only 'append'/'create' snapshots contribute; an 'overwrite' in range
         raises, as the diff is no longer append-only (Iceberg's incremental
         read has the same restriction). ``where`` file-skips the added
-        files against their manifest bounds like :meth:`scan`."""
-        snaps = self.snapshots()
-        # up-front id validation: distinguishes "end precedes start" from
-        # "snapshot unknown" (the walk below would otherwise report the
-        # start as missing when the end merely came first in history)
-        ids = [s.snapshot_id for s in snaps]
-        if start_snapshot_id is not None and start_snapshot_id not in ids:
-            raise ValueError(f"start snapshot {start_snapshot_id} not found")
-        if end_snapshot_id is not None:
-            if end_snapshot_id not in ids:
-                raise ValueError(f"end snapshot {end_snapshot_id} not found")
-            if (
-                start_snapshot_id is not None
-                and ids.index(end_snapshot_id) < ids.index(start_snapshot_id)
-            ):
-                raise ValueError(
-                    f"end snapshot {end_snapshot_id} precedes start "
-                    f"snapshot {start_snapshot_id} in table history"
-                )
-        started = start_snapshot_id is None
-        files: list[str] = []
-        # Resolve physical names from the CONTRIBUTING snapshots' own
-        # mappings: a compaction after the range would have pruned the
-        # replaced dirs from the current snapshot's file_mappings.
-        mappings: dict = {}
-        ctx = None
-        for snap in snaps:
-            if started:
-                if snap.operation in ("overwrite", "delete", "merge", "rollback"):
-                    # merge-on-read deletes/upserts remove or replace rows
-                    # without an overwrite commit — equally non-append
-                    raise ValueError(
-                        "scan_changes crosses an overwrite/delete/merge "
-                        "snapshot; incremental diff is append-only"
-                    )
-                if snap.operation != "replace":
-                    # 'replace' = compaction: same rows, no delta (Iceberg
-                    # parity — incremental reads skip rewrite snapshots)
-                    files.extend(snap.added_files)
-                    for f in snap.added_files:
-                        d = _commit_dir_of(f)
-                        if d in snap.file_mappings:
-                            mappings[d] = snap.file_mappings[d]
-            if snap.snapshot_id == start_snapshot_id:
-                started = True
-            if end_snapshot_id is not None and snap.snapshot_id == end_snapshot_id:
-                ctx = snap
-                break
-        ctx = ctx or self.current_snapshot()
+        files against their manifest bounds like :meth:`scan`.
+
+        The range is walked over one ``snapshots()`` listing, and the rows
+        are read under the context snapshot's schema: the end snapshot,
+        or the listing's last one (see :meth:`_snapshot_range`). The
+        Flight ``get_changes`` ticket serves the same range walk."""
+        ctx, files, mappings, specs = self._append_range(
+            start_snapshot_id, end_snapshot_id
+        )
         preds = _normalize_predicates(where)
         if preds:
             files = self._prune_files(ctx, files, preds)
@@ -5158,7 +5151,7 @@ class IceTable:
             field_ids=ctx.field_ids,
             file_mappings=mappings,
             partition_spec=ctx.partition_spec,
-            dir_specs=ctx.dir_specs,
+            dir_specs=specs,
             field_defaults=ctx.field_defaults,
         )
         return df.where(_predicates_to_column(preds)) if preds else df
@@ -5287,73 +5280,52 @@ class IceTable:
         CDC consumer following one partition of a 100 TB table reads
         O(that partition's delta), not O(the table's delta). A residual
         Catalyst filter keeps the result exact (delete rows filter by
-        their VALUES, delta-sized reads either way)."""
-        snaps = self.snapshots()
-        ids = [s.snapshot_id for s in snaps]
-        if start_snapshot_id is not None and start_snapshot_id not in ids:
-            raise ValueError(f"start snapshot {start_snapshot_id} not found")
-        if end_snapshot_id is not None:
-            if end_snapshot_id not in ids:
-                raise ValueError(f"end snapshot {end_snapshot_id} not found")
-            if (
-                start_snapshot_id is not None
-                and ids.index(end_snapshot_id) < ids.index(start_snapshot_id)
-            ):
-                raise ValueError(
-                    f"end snapshot {end_snapshot_id} precedes start "
-                    f"snapshot {start_snapshot_id} in table history"
-                )
-        started = start_snapshot_id is None
+        their VALUES, delta-sized reads either way).
+
+        Like :meth:`scan_changes`, the range is walked over one
+        ``snapshots()`` listing, each snapshot against its parent in that
+        listing, and every row is expressed in the context snapshot's
+        schema: the end snapshot, or the listing's last one."""
+        ctx, walk = self._snapshot_range(start_snapshot_id, end_snapshot_id)
         insert_files: list[str] = []
         insert_parts: list[tuple[int, list[str]]] = []
         insert_mappings: dict = {}
+        insert_specs: dict = {}
         ins_lineage: dict = {}
         delete_parts: list[tuple[Snapshot, list[str]]] = []
         eq_parts: list[tuple[Snapshot, Snapshot | None, list]] = []
-        ctx = None
-        prev: Snapshot | None = None
-        for snap in snaps:
-            if started:
-                if snap.operation in ("overwrite", "rollback"):
-                    raise ValueError(
-                        "scan_changelog crosses an overwrite/rollback "
-                        "snapshot; a wholesale replace has no row-level "
-                        "diff — full resync required"
-                    )
-                if snap.operation in ("append", "create", "merge"):
-                    insert_files.extend(snap.added_files)
-                    if snap.added_files:
-                        insert_parts.append((snap.sequence, snap.added_files))
-                    for f in snap.added_files:
-                        d = _commit_dir_of(f)
-                        if d in snap.file_mappings:
-                            insert_mappings[d] = snap.file_mappings[d]
-                        # row-id block starts, captured from the PRODUCING
-                        # snapshot (a later compaction may have dropped
-                        # the file from the end snapshot's stats)
-                        per = snap.file_stats.get(f) or {}
-                        if "__first_row_id__" in per:
-                            ins_lineage[f] = {
-                                "__first_row_id__": per["__first_row_id__"]
-                            }
-                if snap.operation in ("delete", "merge"):
-                    prior = set(prev.delete_files) if prev else set()
-                    new_dels = [f for f in snap.delete_files if f not in prior]
-                    if new_dels:
-                        delete_parts.append((snap, new_dels))
-                    # equality entries are append-only between replaces,
-                    # so the new ones are the suffix past the parent's
-                    n_prior_eq = len(prev.eq_delete_files) if prev else 0
-                    new_eq = snap.eq_delete_files[n_prior_eq:]
-                    if new_eq:
-                        eq_parts.append((snap, prev, new_eq))
-            if snap.snapshot_id == start_snapshot_id:
-                started = True
-            if end_snapshot_id is not None and snap.snapshot_id == end_snapshot_id:
-                ctx = snap
-                break
-            prev = snap
-        ctx = ctx or self.current_snapshot()
+        for snap, prev in walk:
+            if snap.operation in ("overwrite", "rollback"):
+                raise ValueError(
+                    "scan_changelog crosses an overwrite/rollback "
+                    "snapshot; a wholesale replace has no row-level "
+                    "diff — full resync required"
+                )
+            if snap.operation in ("append", "create", "merge"):
+                insert_files.extend(snap.added_files)
+                if snap.added_files:
+                    insert_parts.append((snap.sequence, snap.added_files))
+                _note_added_layouts(snap, insert_mappings, insert_specs)
+                for f in snap.added_files:
+                    # row-id block starts, captured from the PRODUCING
+                    # snapshot (a later compaction may have dropped
+                    # the file from the end snapshot's stats)
+                    per = snap.file_stats.get(f) or {}
+                    if "__first_row_id__" in per:
+                        ins_lineage[f] = {
+                            "__first_row_id__": per["__first_row_id__"]
+                        }
+            if snap.operation in ("delete", "merge"):
+                prior = set(prev.delete_files) if prev else set()
+                new_dels = [f for f in snap.delete_files if f not in prior]
+                if new_dels:
+                    delete_parts.append((snap, new_dels))
+                # equality entries are append-only between replaces,
+                # so the new ones are the suffix past the parent's
+                n_prior_eq = len(prev.eq_delete_files) if prev else 0
+                new_eq = snap.eq_delete_files[n_prior_eq:]
+                if new_eq:
+                    eq_parts.append((snap, prev, new_eq))
         schema = StructType.fromJson(json.loads(ctx.schema_json))
         preds = _normalize_predicates(where)
         if preds:
@@ -5376,7 +5348,7 @@ class IceTable:
                 field_ids=ctx.field_ids,
                 file_mappings=insert_mappings,
                 partition_spec=ctx.partition_spec,
-                dir_specs=ctx.dir_specs,
+                dir_specs=insert_specs,
                 field_defaults=ctx.field_defaults,
                 with_pos=with_lineage,
             )
@@ -5543,13 +5515,7 @@ class IceTable:
         skew and small-file problems before compacting."""
         import pyarrow.parquet as _pq
 
-        snap = (
-            self.current_snapshot()
-            if snapshot_id is None
-            else self.snapshot_by_id(snapshot_id)
-        )
-        if snap is None:
-            raise NoSuchTableError(self.path)
+        snap = self._resolve_snapshot(snapshot_id)
         spec = list(snap.partition_spec)
         rows = []
         # content mirrors Iceberg: 'data' rows are the live manifest,

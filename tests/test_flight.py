@@ -461,6 +461,93 @@ def test_get_changes_end_before_start_error(server):
         client.do_get(flight.Ticket(json.dumps(cmd).encode())).read_all()
 
 
+@pytest.mark.parametrize(
+    "case", ["slice_unknown", "slice_expired", "changes_not_int", "changelog_not_int"]
+)
+def test_bad_ticket_snapshot_id_is_a_server_error(server, case):
+    """A ticket naming a snapshot the table does not have (never had, or
+    expired) or a snapshot id that is not an integer is refused with a
+    FlightServerError, not a raw Python error with the server's traceback."""
+    c = server.connector
+    c.create_table("ids", _writer_table([1], ["a"]))
+    old = c.get_current_snapshot_id("ids")
+    c.insert("ids", _writer_table([2], ["b"]))
+    if case.startswith("slice"):
+        if case == "slice_expired":
+            c.table("ids").expire_snapshots(keep_last=1)
+        cmd = {"command": "get_slice", "table": "ids", "index": 0, "of": 1,
+               "snapshot_id": old if case == "slice_expired" else 123456789}
+    else:
+        op = {"changes_not_int": "get_changes", "changelog_not_int": "get_changelog"}
+        cmd = {"command": op[case], "table": "ids", "snapshot_id": "abc"}
+    with pytest.raises(flight.FlightServerError) as err:
+        _client(server).do_get(flight.Ticket(json.dumps(cmd).encode())).read_all()
+    assert c.catalog.warehouse_path not in str(err.value)
+
+
+@pytest.mark.parametrize("via", ["table", "wire"])
+def test_scan_refuses_more_than_one_time_travel_selector(server, via):
+    """snapshot_id, tag and as_of_ms each pin a snapshot; a read given
+    two of them is refused on the table API and over the wire alike,
+    instead of one selector silently winning."""
+    from icerunner_spark.flight.client import read_table_filtered
+
+    c = server.connector
+    c.create_table("sel", _writer_table([1], ["a"]))
+    s0 = c.get_current_snapshot_id("sel")
+    if via == "table":
+        with pytest.raises(ValueError, match="at most one"):
+            c.table("sel").scan(snapshot_id=s0, as_of_ms=1)
+    else:
+        with pytest.raises(flight.FlightServerError, match="at most one"):
+            read_table_filtered(
+                "127.0.0.1", server.port, "sel", [], snapshot_id=s0, as_of_ms=1
+            )
+
+
+def test_get_changes_matches_scan_changes_on_every_range(spark, server):
+    """get_changes serves the table's own change ranges: over a history
+    with an append, a rename, add_column with a default, a compaction, a
+    partition-spec change and a merge-on-read delete, every (start, end)
+    pair of snapshot ids gives the same rows on the wire as
+    scan_changes, and the wire refuses exactly the pairs the table
+    refuses."""
+    c = server.connector
+    t = c.catalog.table("par")
+    t.create(spark.createDataFrame([(0, "a", 0)], "id long, v string, g long"))
+    t.append(spark.createDataFrame([(1, "b", 1), (2, "c", 0)], "id long, v string, g long"))
+    t.rename_column("v", "label")
+    t.add_column("x", "int", default=7)
+    t.compact()
+    t.update_partition_spec(["g"])
+    t.append(spark.createDataFrame(
+        [(3, "d", 1, 8), (4, "e", 0, None)], "id long, label string, g long, x int"
+    ))
+    t.delete_where(F.col("id") == 1, mode="merge-on-read")
+    ids = [s.snapshot_id for s in t.snapshots()]
+    assert len(ids) == 8
+    client = _client(server)
+    served = 0
+    for start in ids:
+        for end in ids:
+            try:
+                df = t.scan_changes(start, end)
+                want = (df.columns, sorted(tuple(r) for r in df.collect()))
+            except ValueError:
+                want = "refused"
+            cmd = {"command": "get_changes", "table": "par",
+                   "snapshot_id": start, "end_snapshot_id": end}
+            try:
+                got = client.do_get(flight.Ticket(json.dumps(cmd).encode())).read_all()
+                got = (got.schema.names,
+                       sorted(tuple(r.values()) for r in got.to_pylist()))
+            except flight.FlightServerError:
+                got = "refused"
+            assert got == want, (ids.index(start), ids.index(end))
+            served += want != "refused"
+    assert 0 < served < len(ids) ** 2
+
+
 def test_mirror_repairs_after_unpinned_sync(spark, server, tmp_path):
     """ADVICE r2: a pass whose predecessor used an unpinned full read must
     NOT append the incremental delta (possible duplicates) — it repairs by

@@ -191,6 +191,57 @@ def test_scan_changes_end_before_start_error(spark, warehouse):
         t.scan_changes(123456789, None)
 
 
+@pytest.mark.parametrize("method", ["scan_changes", "scan_changelog"])
+def test_change_reads_use_the_schema_of_the_walked_listing(spark, warehouse, method):
+    """A change read walks one snapshots() listing and reads under that
+    listing's last snapshot. A commit landing right after the listing
+    (here add_column with a default) is outside the walked range, so its
+    column must not appear in the result."""
+    import os
+
+    t = IceTable(spark, os.path.join(warehouse, "one_listing"))
+    t.create(spark.createDataFrame([(1, "a")], "id long, v string"))
+    s0 = t.current_snapshot().snapshot_id
+    t.append(spark.createDataFrame([(2, "b")], "id long, v string"))
+    listing = t.snapshots
+    committed = []
+
+    def snapshots_then_commit():
+        snaps = listing()
+        if not committed:
+            committed.append(
+                IceTable(spark, t.path).add_column("x", "int", default=7)
+            )
+        return snaps
+
+    t.snapshots = snapshots_then_commit
+    df = getattr(t, method)(s0)
+    assert committed  # the commit did land between listing and read
+    changelog = method == "scan_changelog"
+    assert df.columns == ["id", "v"] + (["_change_type"] if changelog else [])
+    assert [tuple(r) for r in df.collect()] == [
+        (2, "b", "insert") if changelog else (2, "b")
+    ]
+
+
+def test_change_reads_use_the_spec_files_were_written_with(spark, warehouse):
+    """Files written under a partition spec keep their partition values
+    in a change read after the spec is dropped and a compaction has
+    rewritten their dir out of the current snapshot."""
+    import os
+
+    t = IceTable(spark, os.path.join(warehouse, "spec_changes"))
+    t.create(spark.createDataFrame([(0, 0)], "id long, g long"), partition_by=["g"])
+    s0 = t.current_snapshot().snapshot_id
+    t.append(spark.createDataFrame([(1, 1), (2, 0)], "id long, g long"))
+    t.update_partition_spec([])
+    t.compact()
+    assert sorted(tuple(r) for r in t.scan_changes(s0).collect()) == [(1, 1), (2, 0)]
+    assert sorted(tuple(r) for r in t.scan_changelog(s0).collect()) == [
+        (1, 1, "insert"), (2, 0, "insert")
+    ]
+
+
 def test_expire_snapshots_drops_history_and_files(spark, warehouse):
     import os
 
