@@ -582,15 +582,18 @@ def run_mirror_streaming(
 
     def _applied_high_water(t) -> int:
         """Highest mirror_batch_id this stream has committed to the
-        target (scan of snapshot summaries — metadata-only, cheap at
-        mirror cadence; foreign snapshots without our stamp are skipped)."""
-        last = -1
-        for s in t.snapshots():
-            if s.summary.get("mirror_stream") == key:
-                b = s.summary.get("mirror_batch_id")
-                if b is not None:
-                    last = max(last, int(b))
-        return last
+        target. Batch ids only grow, so a newest-first walk of snapshot
+        summaries stops at the newest snapshot stamped with this
+        stream's key; foreign snapshots without the stamp are skipped."""
+        stamped = next(
+            (
+                s for s in t._walk_history()
+                if s.summary.get("mirror_stream") == key
+                and s.summary.get("mirror_batch_id") is not None
+            ),
+            None,
+        )
+        return -1 if stamped is None else int(stamped.summary["mirror_batch_id"])
 
     def _sink(batch_df, batch_id):  # runs on the driver per microbatch
         t = connector.catalog.table(target)

@@ -59,10 +59,10 @@ Reads that span snapshots, and every rule for which snapshot a ticket
 reads, live on :class:`IceTable`; the server keeps the wire side (serve
 plans, file streams, spills, table refusals as ``FlightServerError``).
 ``get_changes`` streams the files of the table's append-only range walk,
-the same walk over one ``snapshots()`` listing that ``scan_changes`` and
-``scan_changelog`` use, under its context snapshot's plan. ``scan`` and
-``get_slice`` tickets pin their snapshot through the table's time-travel
-resolver. A snapshot with pending merge-on-read deletes is served from the
+the same newest-first history walk, stopped at the start snapshot, that
+``scan_changes`` and ``scan_changelog`` use, under its context snapshot's
+plan. ``scan`` and ``get_slice`` tickets pin their snapshot through the
+table's time-travel resolver. A snapshot with pending merge-on-read deletes is served from the
 table's delete-applied read through one spill helper, whichever ticket
 asked. The range walk and the spill paths stay uncached.
 """

@@ -32,6 +32,8 @@ non-null value remains, and derives AVG as sum/nn).
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,16 +94,12 @@ class IncrementalAggView:
         concurrent refresh committing in between cannot slip a newer
         state (and its already-applied delta) under this one. Every
         commit this class makes stamps the cursor, so the pinned
-        snapshot almost always answers; the fallback walks sequences
-        newest-first one snapshot at a time."""
-        for seq in range(pinned.sequence, -1, -1):
-            try:
-                snap = (
-                    pinned if seq == pinned.sequence
-                    else self.mv._load_snapshot_by_seq(seq)
-                )
-            except FileNotFoundError:
-                break  # expired history: nothing older to find
+        snapshot almost always answers; the fallback walks the older
+        history newest-first, across expired gaps, to the first stamp."""
+        history = itertools.chain(
+            (pinned,), self.mv._walk_history(pinned.sequence - 1)
+        )
+        for snap in history:
             if _CURSOR_KEY in (snap.summary or {}):
                 return int(snap.summary[_CURSOR_KEY])
         raise NoSuchTableError(f"no materialization cursor at {self.mv.path}")

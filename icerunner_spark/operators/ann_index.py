@@ -32,6 +32,7 @@ while recall at partial probe is pinned in tests.
 
 from __future__ import annotations
 
+import itertools
 import json
 
 from pyspark.sql import DataFrame
@@ -80,15 +81,12 @@ class IncrementalAnnIndex:
 
     def _cursor_from(self, pinned) -> int:
         """Cursor as of the PINNED index snapshot (refresh anchors its
-        conflict guards on the same pin)."""
-        for seq in range(pinned.sequence, -1, -1):
-            try:
-                snap = (
-                    pinned if seq == pinned.sequence
-                    else self.index._load_snapshot_by_seq(seq)
-                )
-            except FileNotFoundError:
-                break
+        conflict guards on the same pin), falling back to the older
+        history newest-first, across expired gaps."""
+        history = itertools.chain(
+            (pinned,), self.index._walk_history(pinned.sequence - 1)
+        )
+        for snap in history:
             if _CURSOR_KEY in (snap.summary or {}):
                 return int(snap.summary[_CURSOR_KEY])
         raise NoSuchTableError(f"no ANN cursor at {self.index.path}")

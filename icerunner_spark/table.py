@@ -51,8 +51,12 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
+import threading
 import time
 import uuid
+from collections import OrderedDict
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 import pyarrow as pa
@@ -245,12 +249,17 @@ def _load_segment(path: str) -> tuple:
     return _load_segment_cached(path)
 
 
+_SNAPSHOT_CACHE_SIZE = 64  # parsed snapshots kept per process
+_snapshot_cache: OrderedDict = OrderedDict()
+_snapshot_cache_lock = threading.Lock()
+
+
 def _load_snapshot_payload(text: str, metadata_dir: str) -> Snapshot:
     """Parse a snapshot file in either format:
 
     - legacy/full: self-contained JSON carrying the whole manifest and
-      per-file stats inline (``Snapshot.to_json`` — still written by
-      branch copies and accepted forever);
+      per-file stats inline (``Snapshot.to_json``; no longer written,
+      still read);
     - slim (``"format": 2``): the O(files) fields — manifest + file_stats
       — live in immutable SEGMENT files under ``metadata/segments/``,
       one per commit's added files; the snapshot stores segment refs
@@ -280,6 +289,39 @@ def _load_snapshot_payload(text: str, metadata_dir: str) -> Snapshot:
     snap._segments = list(d.get("segments", []))  # type: ignore[attr-defined]
     snap._tombstones = sorted(tomb)  # type: ignore[attr-defined]
     return snap
+
+
+def _slim_json(snap: Snapshot, segments: list[str], tombstones: list[str]) -> str:
+    """``snap`` as slim (format 2) JSON over the given segment refs and
+    tombstones. Built field by field: the O(files) manifest and
+    file_stats are never serialized, which is what keeps a commit's
+    metadata CPU O(delta) and not only its IO."""
+    return json.dumps(
+        {
+            "format": 2,
+            "snapshot_id": snap.snapshot_id,
+            "sequence": snap.sequence,
+            "parent_id": snap.parent_id,
+            "timestamp_ms": snap.timestamp_ms,
+            "operation": snap.operation,
+            "added_files": snap.added_files,
+            "schema_json": snap.schema_json,
+            "summary": snap.summary,
+            "field_ids": snap.field_ids,
+            "next_field_id": snap.next_field_id,
+            "file_mappings": snap.file_mappings,
+            "partition_spec": snap.partition_spec,
+            "delete_files": snap.delete_files,
+            "eq_delete_files": snap.eq_delete_files,
+            "dir_seqs": snap.dir_seqs,
+            "dir_specs": snap.dir_specs,
+            "properties": snap.properties,
+            "field_defaults": snap.field_defaults,
+            "next_row_id": snap.next_row_id,
+            "segments": segments,
+            "tombstones": tombstones,
+        }
+    )
 
 
 def _materialize_if_costly(df: DataFrame) -> DataFrame:
@@ -995,8 +1037,27 @@ class IceTable:
         return os.path.join(self.metadata_dir, f"snap-{seq}.json")
 
     def _load_snapshot_by_seq(self, seq: int) -> Snapshot:
-        with open(self._snapshot_path(seq)) as f:
-            return _load_snapshot_payload(f.read(), self.metadata_dir)
+        """Snapshot ``seq``, parsed once per process while it stays in
+        the ``_SNAPSHOT_CACHE_SIZE``-entry LRU. The key is the opened
+        file's identity (path, inode, mtime, size), not the sequence
+        number: a failed fast-forward deletes the files it claimed and a
+        later commit reuses their numbers. Cached snapshots are shared;
+        callers copy before they change anything."""
+        path = self._snapshot_path(seq)
+        with open(path) as f:
+            st = os.fstat(f.fileno())
+            key = (path, st.st_ino, st.st_mtime_ns, st.st_size)
+            with _snapshot_cache_lock:
+                snap = _snapshot_cache.get(key)
+                if snap is not None:
+                    _snapshot_cache.move_to_end(key)
+                    return snap
+            snap = _load_snapshot_payload(f.read(), self.metadata_dir)
+        with _snapshot_cache_lock:
+            _snapshot_cache[key] = snap
+            if len(_snapshot_cache) > _SNAPSHOT_CACHE_SIZE:
+                _snapshot_cache.popitem(last=False)
+        return snap
 
     def _segments_dir(self) -> str:
         return os.path.join(self.metadata_dir, "segments")
@@ -1066,53 +1127,73 @@ class IceTable:
                 else []
             )
             tomb = []
-        # field-by-field slim dict — never serializing the O(files)
-        # manifest/file_stats just to delete them (the whole point of
-        # the format is O(delta) commit CPU, not just O(delta) IO)
-        d = {
-            "format": 2,
-            "snapshot_id": snap.snapshot_id,
-            "sequence": snap.sequence,
-            "parent_id": snap.parent_id,
-            "timestamp_ms": snap.timestamp_ms,
-            "operation": snap.operation,
-            "added_files": snap.added_files,
-            "schema_json": snap.schema_json,
-            "summary": snap.summary,
-            "field_ids": snap.field_ids,
-            "next_field_id": snap.next_field_id,
-            "file_mappings": snap.file_mappings,
-            "partition_spec": snap.partition_spec,
-            "delete_files": snap.delete_files,
-            "eq_delete_files": snap.eq_delete_files,
-            "dir_seqs": snap.dir_seqs,
-            "dir_specs": snap.dir_specs,
-            "properties": snap.properties,
-            "field_defaults": snap.field_defaults,
-            "next_row_id": snap.next_row_id,
-            "segments": segs,
-            "tombstones": tomb,
-        }
         snap._segments = segs  # type: ignore[attr-defined]
         snap._tombstones = tomb  # type: ignore[attr-defined]
-        return json.dumps(d)
+        return _slim_json(snap, segs, tomb)
+
+    def _copied_snapshot_text(self, snap: Snapshot, src_metadata_dir: str) -> str:
+        """Slim text of ``snap``, read from the log at ``src_metadata_dir``,
+        for this handle's log (a branch fork, or a fast-forward onto
+        main). Segments are immutable and uniquely named, so the ones
+        ``snap`` references are hard-linked into this log's segments dir
+        (copied where a link is refused) and both logs share them; a
+        legacy full-format snapshot is reseeded into one segment. Each
+        linked segment's mtime is refreshed: until the snapshot that
+        references it is visible, only the GC age guard protects it."""
+        segs = getattr(snap, "_segments", None)
+        if segs is None:
+            segs = (
+                [self._write_segment(snap.manifest, snap.file_stats)]
+                if snap.manifest
+                else []
+            )
+            return _slim_json(snap, segs, [])
+        os.makedirs(self._segments_dir(), exist_ok=True)
+        for ref in segs:
+            src = os.path.join(src_metadata_dir, "segments", ref)
+            dst = os.path.join(self._segments_dir(), ref)
+            try:
+                os.link(src, dst)
+            except FileExistsError:
+                pass
+            except OSError:
+                shutil.copyfile(src, dst)
+            os.utime(dst)
+        return _slim_json(snap, segs, snap._tombstones)
 
     def current_snapshot(self) -> Snapshot | None:
         if not self.exists():
             return None
         return self._load_snapshot_by_seq(self._read_current_seq())
 
-    def snapshots(self) -> list[Snapshot]:
-        """All snapshots in commit order (like Iceberg's .snapshots table)."""
+    def _walk_history(self, upto: int | None = None) -> Iterator[Snapshot]:
+        """The table's snapshots newest first, from the current one (or
+        from sequence ``upto``, if lower) back to the oldest. Sequence
+        numbers come from one listing of the metadata dir, so the walk
+        steps over the gaps ``expire_snapshots`` leaves (tagged snapshots
+        survive, their neighbours may not); a file expired after the
+        listing is stepped over too. Snapshots load lazily: a caller that
+        stops at its answer parses only the snapshots it walked."""
         if not os.path.isdir(self.metadata_dir):
-            return []
-        seqs = sorted(
+            return
+        top = self._read_current_seq() if self.exists() else -1
+        if upto is not None:
+            top = min(top, upto)
+        seqs = [
             int(f[len("snap-") : -len(".json")])
             for f in os.listdir(self.metadata_dir)
             if f.startswith("snap-") and f.endswith(".json")
-        )
-        current = self._read_current_seq() if self.exists() else -1
-        return [self._load_snapshot_by_seq(s) for s in seqs if s <= current]
+        ]
+        for seq in sorted((s for s in seqs if s <= top), reverse=True):
+            try:
+                snap = self._load_snapshot_by_seq(seq)
+            except FileNotFoundError:
+                continue
+            yield snap
+
+    def snapshots(self) -> list[Snapshot]:
+        """All snapshots in commit order (like Iceberg's .snapshots table)."""
+        return list(self._walk_history())[::-1]
 
     def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
         # the current snapshot is the common pin (a Flight slice ticket,
@@ -1120,7 +1201,7 @@ class IceTable:
         cur = self.current_snapshot()
         if cur is not None and cur.snapshot_id == snapshot_id:
             return cur
-        for snap in self.snapshots():
+        for snap in self._walk_history():
             if snap.snapshot_id == snapshot_id:
                 return snap
         raise ValueError(f"no snapshot {snapshot_id} in table history")
@@ -1144,12 +1225,15 @@ class IceTable:
                 raise ValueError(f"no such tag: {tag}")
             snapshot_id = refs[tag]
         if as_of_ms is not None:
-            older = [s for s in self.snapshots() if s.timestamp_ms <= as_of_ms]
-            if not older:
+            snap = next(
+                (s for s in self._walk_history() if s.timestamp_ms <= as_of_ms),
+                None,
+            )
+            if snap is None:
                 raise ValueError(
                     f"no snapshot at or before timestamp {as_of_ms}"
                 )
-            return older[-1]
+            return snap
         if snapshot_id is not None:
             return self.snapshot_by_id(snapshot_id)
         snap = self.current_snapshot()
@@ -2205,22 +2289,25 @@ class IceTable:
         writer. The table property is authoritative whenever present —
         every append_once commit stamps it, so a long-running stream
         answers from ONE metadata read per microbatch, O(1) in history
-        length. The O(history) summary walk runs only for histories from
-        before the property existed (a legacy table whose stamps live
-        solely in snapshot summaries)."""
+        length. The summary walk runs only for histories from before the
+        property existed (a legacy table whose stamps live solely in
+        snapshot summaries); batch ids only grow, so it stops at the
+        newest stamped snapshot."""
         snap = self.current_snapshot()
         prop = (snap.properties if snap else {}).get(
             f"stream.{writer_id}.high-water"
         )
         if prop is not None:
             return int(prop)
-        last = -1
-        for s in self.snapshots():
-            if s.summary.get("stream_writer") == writer_id:
-                b = s.summary.get("stream_batch_id")
-                if b is not None:
-                    last = max(last, int(b))
-        return last
+        stamped = next(
+            (
+                s for s in self._walk_history()
+                if s.summary.get("stream_writer") == writer_id
+                and s.summary.get("stream_batch_id") is not None
+            ),
+            None,
+        )
+        return -1 if stamped is None else int(stamped.summary["stream_batch_id"])
 
     def append_once(
         self, df: DataFrame, *, writer_id: str, batch_id: int,
@@ -3220,8 +3307,9 @@ class IceTable:
     #
     # A branch is an independently-advancing metadata sub-log at
     # ``metadata/branches/<name>/`` that SHARES the table's data dir:
-    # forking copies the head snapshot's self-contained JSON (O(1)
-    # metadata, zero data IO), branch commits CAS against the branch's
+    # forking writes a slim copy of the head snapshot and hard-links its
+    # manifest segments into the branch log (zero data IO; fast-forward
+    # links them back the same way), branch commits CAS against the branch's
     # own ``current`` pointer, and ``fast_forward`` publishes the branch
     # chain back onto main by claiming main's next sequence slots —
     # atomic via the same open("x") CAS as every commit, so a concurrent
@@ -3242,7 +3330,8 @@ class IceTable:
     ) -> "IceTable":
         """Fork a writable branch at the current (or given) snapshot and
         return its handle. The fork is metadata-only: the branch log
-        starts with a copy of the fork snapshot's JSON."""
+        starts with a slim copy of the fork snapshot that shares its
+        manifest segments (:meth:`_copied_snapshot_text`)."""
         self._require_main("create_branch")
         if not name or not name.replace("-", "_").isidentifier():
             raise ValueError(f"invalid branch name: {name!r}")
@@ -3251,8 +3340,10 @@ class IceTable:
         if os.path.isdir(bdir):
             raise ValueError(f"branch already exists: {name}")
         os.makedirs(bdir)
+        fork = IceTable(self.spark, self.path)
+        fork.metadata_dir = bdir
         with open(os.path.join(bdir, f"snap-{snap.sequence}.json"), "x") as f:
-            f.write(snap.to_json())
+            f.write(fork._copied_snapshot_text(snap, self.metadata_dir))
         with open(os.path.join(bdir, "current"), "w") as f:
             f.write(str(snap.sequence))
         return self.branch(name)
@@ -3313,22 +3404,31 @@ class IceTable:
         head = self.current_snapshot()
         if head is None:
             raise NoSuchTableError(self.path)
-        bsnaps = b.snapshots()
-        ids = [s.snapshot_id for s in bsnaps]
-        if head.snapshot_id not in ids:
+        pending: list[Snapshot] = []
+        for s in b._walk_history():
+            if s.snapshot_id == head.snapshot_id:
+                break
+            pending.append(s)
+        else:
             raise CommitConflict(
                 f"main advanced past branch {name!r}'s fork point; "
                 "fast-forward requires main to be an ancestor of the branch"
             )
-        pending = bsnaps[ids.index(head.snapshot_id) + 1 :]
+        pending.reverse()
         if not pending:
             return head
+        # every payload (and its linked segments) is ready before the
+        # first slot is claimed: a claim can then only lose a race
+        payloads = [
+            (self._snapshot_path(s.sequence),
+             self._copied_snapshot_text(s, b.metadata_dir))
+            for s in pending
+        ]
         claimed: list[str] = []
         try:
-            for s in pending:
-                dst = self._snapshot_path(s.sequence)
+            for dst, payload in payloads:
                 with open(dst, "x") as f:
-                    f.write(s.to_json())
+                    f.write(payload)
                 claimed.append(dst)
         except FileExistsError:
             for p in claimed:
@@ -3863,14 +3963,13 @@ class IceTable:
             # data files landed since the last clustering rewrite with
             # this exact layout (snapshot summaries are the ledger)
             backlog = 0
-            for s in self.snapshots():
+            for s in self._walk_history():
                 if (
                     s.summary.get("cluster-strategy") == strategy
                     and s.summary.get("cluster-columns") == ",".join(cols)
                 ):
-                    backlog = 0
-                else:
-                    backlog += len(s.added_files)
+                    break
+                backlog += len(s.added_files)
             if backlog >= min_new:
                 try:
                     out = self.compact(
@@ -5059,34 +5158,49 @@ class IceTable:
     def _snapshot_range(
         self, start_snapshot_id: int | None, end_snapshot_id: int | None
     ) -> tuple[Snapshot, list[tuple[Snapshot, Snapshot | None]]]:
-        """The snapshots in ``(start, end]``, each with its parent, from
-        ONE ``snapshots()`` listing, plus the context snapshot whose
-        schema and layout describe the range: the end snapshot, or the
-        listing's last one when ``end_snapshot_id`` is None (never a
-        second read of the table, which a racing commit could have moved
-        past the walked range). ``start_snapshot_id=None`` means "since
-        the beginning". Raises :class:`NoSuchTableError` on an empty
-        history and ``ValueError`` for an unknown start or end, or an end
-        that precedes the start."""
-        snaps = self.snapshots()
-        if not snaps:
-            raise NoSuchTableError(self.path)
-        ids = [s.snapshot_id for s in snaps]
-        if start_snapshot_id is not None and start_snapshot_id not in ids:
-            raise ValueError(f"start snapshot {start_snapshot_id} not found")
-        lo = 0 if start_snapshot_id is None else ids.index(start_snapshot_id) + 1
-        hi = len(snaps) - 1
-        if end_snapshot_id is not None:
-            if end_snapshot_id not in ids:
-                raise ValueError(f"end snapshot {end_snapshot_id} not found")
+        """The snapshots in ``(start, end]`` in commit order, each with
+        its predecessor in the history (None before the first), plus the
+        context snapshot whose schema and layout describe the range: the
+        end snapshot, or the newest one when ``end_snapshot_id`` is None.
+        One newest-first walk (:meth:`_walk_history`) answers everything
+        and stops at the start snapshot, so the cost is the snapshots
+        newer than the start, not the table's history; the context is
+        never a second read of the table, which a racing commit could
+        have moved past the walked range. ``start_snapshot_id=None``
+        means "since the beginning" and walks the whole history. Raises
+        :class:`NoSuchTableError` on an empty history and ``ValueError``
+        for an unknown start or end, or an end that precedes the start."""
+        history = self._walk_history()
+        newer: list[Snapshot] = []  # newest first, down to the start
+        start = None
+        for s in history:
+            if s.snapshot_id == start_snapshot_id:
+                start = s
+                break
+            newer.append(s)
+        if start is None:
+            if not newer:
+                raise NoSuchTableError(self.path)
+            if start_snapshot_id is not None:
+                raise ValueError(f"start snapshot {start_snapshot_id} not found")
+        ids = [s.snapshot_id for s in newer]
+        if end_snapshot_id is None:
+            hi = 0
+        elif end_snapshot_id in ids:
             hi = ids.index(end_snapshot_id)
-            if hi < lo - 1:
-                raise ValueError(
-                    f"end snapshot {end_snapshot_id} precedes start "
-                    f"snapshot {start_snapshot_id} in table history"
-                )
-        walk = [(snaps[i], snaps[i - 1] if i else None) for i in range(lo, hi + 1)]
-        return snaps[hi], walk
+        elif start is not None and end_snapshot_id == start.snapshot_id:
+            return start, []
+        elif any(s.snapshot_id == end_snapshot_id for s in history):
+            raise ValueError(
+                f"end snapshot {end_snapshot_id} precedes start "
+                f"snapshot {start_snapshot_id} in table history"
+            )
+        else:
+            raise ValueError(f"end snapshot {end_snapshot_id} not found")
+        if not newer:  # the start is the newest snapshot: an empty range
+            return start, []
+        in_range = newer[hi:][::-1]
+        return newer[hi], list(zip(in_range, [start, *in_range[:-1]]))
 
     def _append_range(
         self, start_snapshot_id: int | None, end_snapshot_id: int | None
@@ -5135,10 +5249,11 @@ class IceTable:
         read has the same restriction). ``where`` file-skips the added
         files against their manifest bounds like :meth:`scan`.
 
-        The range is walked over one ``snapshots()`` listing, and the rows
-        are read under the context snapshot's schema: the end snapshot,
-        or the listing's last one (see :meth:`_snapshot_range`). The
-        Flight ``get_changes`` ticket serves the same range walk."""
+        The range comes from one newest-first history walk that stops at
+        the start snapshot, and the rows are read under the context
+        snapshot's schema: the end snapshot, or the newest one (see
+        :meth:`_snapshot_range`). The Flight ``get_changes`` ticket
+        serves the same range walk."""
         ctx, files, mappings, specs = self._append_range(
             start_snapshot_id, end_snapshot_id
         )
@@ -5282,10 +5397,11 @@ class IceTable:
         Catalyst filter keeps the result exact (delete rows filter by
         their VALUES, delta-sized reads either way).
 
-        Like :meth:`scan_changes`, the range is walked over one
-        ``snapshots()`` listing, each snapshot against its parent in that
-        listing, and every row is expressed in the context snapshot's
-        schema: the end snapshot, or the listing's last one."""
+        Like :meth:`scan_changes`, the range comes from one newest-first
+        history walk that stops at the start snapshot, each snapshot is
+        diffed against its predecessor in the history, and every row is
+        expressed in the context snapshot's schema: the end snapshot, or
+        the newest one."""
         ctx, walk = self._snapshot_range(start_snapshot_id, end_snapshot_id)
         insert_files: list[str] = []
         insert_parts: list[tuple[int, list[str]]] = []

@@ -193,8 +193,8 @@ def test_scan_changes_end_before_start_error(spark, warehouse):
 
 @pytest.mark.parametrize("method", ["scan_changes", "scan_changelog"])
 def test_change_reads_use_the_schema_of_the_walked_listing(spark, warehouse, method):
-    """A change read walks one snapshots() listing and reads under that
-    listing's last snapshot. A commit landing right after the listing
+    """A change read walks one listing of the history and reads under the
+    newest snapshot it walked. A commit landing right after the listing
     (here add_column with a default) is outside the walked range, so its
     column must not appear in the result."""
     import os
@@ -203,18 +203,21 @@ def test_change_reads_use_the_schema_of_the_walked_listing(spark, warehouse, met
     t.create(spark.createDataFrame([(1, "a")], "id long, v string"))
     s0 = t.current_snapshot().snapshot_id
     t.append(spark.createDataFrame([(2, "b")], "id long, v string"))
-    listing = t.snapshots
+    walk = t._walk_history
     committed = []
 
-    def snapshots_then_commit():
-        snaps = listing()
+    def walk_then_commit(*args):
+        history = walk(*args)
+        newest = next(history, None)  # the listing is taken here
         if not committed:
             committed.append(
                 IceTable(spark, t.path).add_column("x", "int", default=7)
             )
-        return snaps
+        if newest is not None:
+            yield newest
+        yield from history
 
-    t.snapshots = snapshots_then_commit
+    t._walk_history = walk_then_commit
     df = getattr(t, method)(s0)
     assert committed  # the commit did land between listing and read
     changelog = method == "scan_changelog"
