@@ -118,7 +118,8 @@ class Connector:
     def sql_df(self, sql_command: str) -> DataFrame:
         # the engine's text/vector primitives are in scope as SQL
         # functions (ice_token_count, ice_cos_sim, ...) for every SQL
-        # entry point: this method, Flight sql tickets, the CLI verb
+        # entry point: this method, Flight sql tickets, the CLI verb;
+        # registered on the session's first statement only
         from icerunner_spark.functions.sql_udfs import register_sql_functions
 
         register_sql_functions(self.spark)

@@ -40,11 +40,13 @@ the reference's mirror client speaks but its own server never implemented
 
 Serve-path scale: a full-table ``do_get`` streams record batches straight
 from the manifest's parquet files through ``pyarrow.dataset`` — zero
-driver materialization, constant memory. Spark is only engaged for SQL
-tickets, changelog reads and reads of tables with pending merge-on-read
-deletes (those three spill to parquet), puts into partitioned tables, and
-opt-in bloom/NDV sidecar harvests. This is the design SURVEY.md §7 calls
-out as "the one place the reference's architecture actively fights Spark".
+driver materialization, constant memory. Pending merge-on-read deletes
+apply in the same stream, per data file: deleted row positions drop and
+equality-deleted keys anti-join in pyarrow. Spark is only engaged for
+SQL tickets and changelog reads (those two spill to parquet), puts into
+partitioned tables, and opt-in bloom/NDV sidecar harvests. This is the
+design SURVEY.md §7 calls out as "the one place the reference's
+architecture actively fights Spark".
 
 Metadata work is per commit, not per RPC. Each RPC reads the table's
 snapshot once and answers from that snapshot's serve plan
@@ -62,9 +64,10 @@ plans, file streams, spills, table refusals as ``FlightServerError``).
 the same newest-first history walk, stopped at the start snapshot, that
 ``scan_changes`` and ``scan_changelog`` use, under its context snapshot's
 plan. ``scan`` and ``get_slice`` tickets pin their snapshot through the
-table's time-travel resolver. A snapshot with pending merge-on-read deletes is served from the
-table's delete-applied read through one spill helper, whichever ticket
-asked. The range walk and the spill paths stay uncached.
+table's time-travel resolver. Every table read of a snapshot, whichever
+ticket asked, goes through one file stream that applies the snapshot's
+pending deletes, read once into its plan. The range walk and the spill
+path stay uncached.
 """
 
 from __future__ import annotations
@@ -75,7 +78,9 @@ import os
 import threading
 from collections import OrderedDict
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.flight as flight
 import pyarrow.parquet as pq
@@ -151,7 +156,9 @@ class _ServePlan:
     """What the serve path derives from one snapshot of one table, built
     once. A snapshot and its data files never change (data files are
     uniquely named), so a plan never goes stale: a commit makes a new
-    snapshot id, and the server builds a new plan for it."""
+    snapshot id, and the server builds a new plan for it. It also holds
+    the snapshot's pending merge-on-read deletes as Arrow state, read on
+    the first read that needs them (:meth:`file_deletes`)."""
 
     def __init__(self, table: IceTable, snap: Snapshot):
         self.table, self.snap = table, snap
@@ -162,6 +169,7 @@ class _ServePlan:
         self.keys = _layout_keys(snap, snap.manifest, self.logical)
         self._footers: dict = {}
         self._totals: tuple[int, int] | None = None  # filled on first use
+        self._deletes: tuple[dict, list] | None = None  # filled on first use
         # initial column defaults (add_column(default=)): columns absent
         # from a group's files serve the default, NOT null — same answer
         # as IceTable.scan. Keyed by logical name via the field ids.
@@ -252,6 +260,84 @@ class _ServePlan:
                 rows -= pq.read_metadata(os.path.join(t.path, f)).num_rows
             self._totals = rows, bytes_
         return self._totals
+
+    def _read_deletes(self) -> tuple[dict, list]:
+        """``(positions, eq)``: each data file's sorted deleted row
+        positions from the positional delete files, and each equality
+        delete as ``(keys, sequence)`` with its key values under the
+        snapshot's logical names (resolved through the field ids, so a
+        renamed key column still matches). A key field dropped since the
+        delete raises ``ValueError``, as the table's own read does."""
+        snap, root = self.snap, self.table.path
+        positions = {}
+        if snap.delete_files:
+            coords = pads.dataset(
+                [os.path.join(root, f) for f in snap.delete_files], format="parquet"
+            ).to_table(columns=["file_path", "pos"])
+            per_file = coords.group_by("file_path").aggregate([("pos", "list")])
+            for f, pos in zip(
+                per_file.column("file_path").to_pylist(),
+                per_file.column("pos_list").combine_chunks(),
+            ):
+                positions[f] = np.sort(pos.values.to_numpy())
+        inv = {int(v): k for k, v in snap.field_ids.items()}
+        eq = []
+        for paths, fids, dseq in snap.eq_delete_files:
+            names = [inv.get(int(f)) for f in fids]
+            if any(n is None for n in names):
+                raise ValueError(
+                    f"equality delete references dropped field ids {fids}; "
+                    "compact before dropping key columns"
+                )
+            keys = pads.dataset(
+                [os.path.join(root, p) for p in paths], format="parquet"
+            ).to_table(columns=[f"__eq_{int(f)}" for f in fids])
+            eq.append((keys.rename_columns(names), int(dseq)))
+        return positions, eq
+
+    def file_deletes(self, files_rel) -> dict:
+        """The pending deletes that apply to each of ``files_rel``
+        (table-relative data files of this snapshot), keyed by absolute
+        path like :meth:`groups`: ``(sorted deleted positions or None,
+        [equality key tables])``. An equality delete applies to files committed
+        strictly before it (Iceberg's sequence rule; a dir without a
+        recorded sequence is older than every delete). Files with no
+        applicable delete are absent, so a clean snapshot maps to {}."""
+        snap = self.snap
+        if not snap.pending_deletes:
+            return {}
+        if self._deletes is None:
+            self._deletes = self._read_deletes()
+        positions, eq = self._deletes
+        out = {}
+        for f in files_rel:
+            seq = int(snap.dir_seqs.get(_commit_dir_of(f), 0))
+            keys = [k for k, dseq in eq if dseq > seq]
+            pos = positions.get(f)
+            if pos is not None or keys:
+                out[os.path.join(self.table.path, f)] = (pos, keys)
+        return out
+
+
+def _null_safe_in(tbl: pa.Table, keys: pa.Table) -> np.ndarray:
+    """Boolean mask of the rows of ``tbl`` equal to some row of ``keys``
+    on every column of ``keys``, NULL matching NULL (Spark's ``<=>``;
+    pyarrow's hash join never matches nulls). Each column's values and
+    key values are dictionary-encoded together, nulls taking a code of
+    their own, and the per-column codes fold into one code per row."""
+    n = tbl.num_rows
+    code = None
+    for c in keys.column_names:
+        col = tbl.column(c)
+        both = pa.concat_arrays(
+            col.chunks + keys.column(c).cast(col.type).chunks
+        )
+        idx = pc.dictionary_encode(both, null_encoding="encode").indices
+        idx = idx.to_numpy().astype(np.int64)
+        if code is not None:
+            idx = np.unique(code * len(both) + idx, return_inverse=True)[1]
+        code = idx
+    return np.isin(code[:n], code[n:])
 
 
 class IceFlightServer(flight.FlightServerBase):
@@ -402,8 +488,6 @@ class IceFlightServer(flight.FlightServerBase):
         results AND parquet row-group statistics skipping, still without
         engaging Spark. ``rename`` maps logical -> physical column names
         for post-rename file groups."""
-        import pyarrow.compute as pc
-
         expr = None
         for col, op, val in preds:
             f = pc.field((rename or {}).get(col, col))
@@ -474,22 +558,34 @@ class IceFlightServer(flight.FlightServerBase):
         self, plan: _ServePlan, files_rel, keys=None, preds=None, columns=None
     ):
         """File-stream ``files_rel`` under the plan snapshot's logical names.
-        No schema evolution in play -> the zero-copy single-dataset path.
-        Otherwise: one dataset scan per physical layout, each batch's
-        columns renamed (zero-copy — Arrow rename is metadata) / padded
-        with typed nulls to the logical schema. Memory stays bounded by
-        chunk_rows either way. ``preds`` (typed conjuncts) become pyarrow
-        dataset filters — row-exact, with parquet row-group skipping — and
-        evaluate against group-constant partition values driver-side.
-        ``columns`` projects the stream (normalized to table-schema order
-        by the ticket handlers): only those column chunks are decoded and
-        leave the server; predicates may still name dropped columns.
-        ``keys`` overrides the manifest's layout keys (:meth:`_ServePlan.groups`)."""
+        No schema evolution and no pending delete in play -> the zero-copy
+        single-dataset path. Otherwise: one dataset scan per physical
+        layout, each batch's columns renamed (zero-copy — Arrow rename is
+        metadata) / padded with typed nulls to the logical schema. Memory
+        stays bounded by chunk_rows either way. ``preds`` (typed conjuncts)
+        become pyarrow dataset filters — row-exact, with parquet row-group
+        skipping — and evaluate against group-constant partition values
+        driver-side. ``columns`` projects the stream (normalized to
+        table-schema order by the ticket handlers): only those column
+        chunks are decoded and leave the server; predicates may still name
+        dropped columns. ``keys`` overrides the manifest's layout keys
+        (:meth:`_ServePlan.groups`) for files from outside the plan's
+        snapshot (a change range), which its pending deletes never name.
+
+        Files of the plan's snapshot that a pending merge-on-read delete
+        applies to (:meth:`_ServePlan.file_deletes`) are scanned without
+        the filter, so each batch's row positions are known: deleted
+        positions drop, rows NULL-safe equal to an equality delete's keys
+        drop, then the conjuncts filter and the projection applies."""
         groups = plan.groups(files_rel, keys)
+        try:
+            deletes = plan.file_deletes(files_rel) if keys is None else {}
+        except ValueError as e:  # an equality key field was dropped
+            raise flight.FlightServerError(str(e)) from None
         identity = all(
             p == l for _, pairs, _pv in groups for p, l in pairs
         ) and not any(pv for _f, _p, pv in groups)
-        if len(groups) <= 1 and identity:
+        if not deletes and len(groups) <= 1 and identity:
             files = groups[0][0] if groups else []
             arrow_schema = plan.footer(files[0]) if files else plan.spark_arrow
             return self._stream_files(
@@ -507,6 +603,25 @@ class IceFlightServer(flight.FlightServerBase):
             if val_str is None:
                 return pa.nulls(n, type=typ)
             return pa.array([val_str] * n, type=pa.string()).cast(typ)
+
+        def _arrays(batch, idx, pair_of, pvals, names):
+            """Logical columns ``names`` of one scanned batch: physical
+            columns (``idx``: physical name -> batch column), else the
+            group's partition value, initial default or typed nulls."""
+            arrays = []
+            for l in names:
+                p, typ = pair_of.get(l), plan.arrow_schema.field(l).type
+                if p is not None:
+                    arrays.append(batch.column(idx[p]))
+                elif l in pvals:
+                    arrays.append(_const(pvals[l], batch.num_rows, typ))
+                elif l in defaults:
+                    arrays.append(
+                        pa.array([defaults[l]] * batch.num_rows).cast(typ)
+                    )
+                else:
+                    arrays.append(pa.nulls(batch.num_rows, type=typ))
+            return arrays
 
         def gen():
             for files, pairs, pvals in groups:
@@ -546,34 +661,67 @@ class IceFlightServer(flight.FlightServerBase):
                 # on non-projected columns still evaluate, the scanner's
                 # column list decodes only what leaves the server
                 pair_of = {l: p for p, l in pairs}
-                out_pairs = [(pair_of.get(l), l) for l in out_schema.names]
-                proj_phys = [p for p, _ in out_pairs if p is not None]
-                idx = {p: i for i, p in enumerate(proj_phys)}
-                dataset = pads.dataset(files, format="parquet", schema=read_schema)
-                scanner = dataset.scanner(
-                    batch_size=self.chunk_rows,
-                    columns=proj_phys,
-                    filter=(
-                        self._arrow_filter(file_preds, rename)
-                        if file_preds
-                        else None
-                    ),
-                )
-                for batch in scanner.to_reader():
-                    arrays = []
-                    for p, l in out_pairs:
-                        typ = out_schema.field(l).type
-                        if p is not None:
-                            arrays.append(batch.column(idx[p]))
-                        elif l in pvals:
-                            arrays.append(_const(pvals[l], batch.num_rows, typ))
-                        elif l in defaults:
-                            arrays.append(
-                                pa.array([defaults[l]] * batch.num_rows).cast(typ)
-                            )
-                        else:
-                            arrays.append(pa.nulls(batch.num_rows, type=typ))
-                    yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+                clean = [f for f in files if f not in deletes]
+                if clean:
+                    proj_phys = [
+                        pair_of[l] for l in out_schema.names
+                        if pair_of.get(l) is not None
+                    ]
+                    idx = {p: i for i, p in enumerate(proj_phys)}
+                    dataset = pads.dataset(
+                        clean, format="parquet", schema=read_schema
+                    )
+                    scanner = dataset.scanner(
+                        batch_size=self.chunk_rows,
+                        columns=proj_phys,
+                        filter=(
+                            self._arrow_filter(file_preds, rename)
+                            if file_preds
+                            else None
+                        ),
+                    )
+                    for batch in scanner.to_reader():
+                        yield pa.RecordBatch.from_arrays(
+                            _arrays(batch, idx, pair_of, pvals, out_schema.names),
+                            schema=out_schema,
+                        )
+                dirty = [f for f in files if f in deletes]
+                if not dirty:
+                    continue
+                # delete application also reads the equality key columns
+                # and the conjuncts' columns, assembled under logical names
+                need = list(dict.fromkeys([
+                    *out_schema.names,
+                    *(c for f in dirty for k in deletes[f][1] for c in k.column_names),
+                    *(c for c, _op, _v in file_preds),
+                ]))
+                need_phys = [pair_of[l] for l in need if pair_of.get(l) is not None]
+                idx = {p: i for i, p in enumerate(need_phys)}
+                residual = self._arrow_filter(file_preds) if file_preds else None
+                offsets = dict.fromkeys(dirty, 0)
+                scanner = pads.dataset(
+                    dirty, format="parquet", schema=read_schema
+                ).scanner(batch_size=self.chunk_rows, columns=need_phys)
+                for tagged in scanner.scan_batches():
+                    batch, path = tagged.record_batch, tagged.fragment.path
+                    n, off = batch.num_rows, offsets[path]
+                    offsets[path] = off + n
+                    positions, key_tables = deletes[path]
+                    tbl = pa.Table.from_arrays(
+                        _arrays(batch, idx, pair_of, pvals, need), names=need
+                    )
+                    keep = np.ones(n, dtype=bool)
+                    if positions is not None:
+                        lo, hi = np.searchsorted(positions, [off, off + n])
+                        keep[positions[lo:hi] - off] = False
+                    for k in key_tables:
+                        keep &= ~_null_safe_in(tbl, k)
+                    if not keep.all():
+                        tbl = tbl.filter(pa.array(keep))
+                    if residual is not None:
+                        tbl = tbl.filter(residual)
+                    for b in tbl.select(out_schema.names).to_batches():
+                        yield pa.RecordBatch.from_arrays(b.columns, schema=out_schema)
 
         return flight.GeneratorStream(out_schema, gen())
 
@@ -645,16 +793,6 @@ class IceFlightServer(flight.FlightServerBase):
                 shutil.rmtree(tmp, ignore_errors=True)
 
         return flight.GeneratorStream(schema, gen())
-
-    def _stream_deletes_applied(self, plan: _ServePlan, preds, columns):
-        """Stream a snapshot with pending merge-on-read deletes
-        (positional anti-join or equality keys): Spark applies them in
-        the table's delete-applied read (pruned by ``preds``, filtered
-        exactly), and the result file-streams from a parquet spill, the
-        bounded-memory path of SQL tickets. Compaction materializes the
-        deletes and restores zero-copy manifest streaming."""
-        df = plan.table._scan_at(plan.snap, preds)
-        return self._stream_df(df.select(*columns) if columns else df)
 
     # ------------------------------------------------------------------ #
     # Flight verbs
@@ -736,12 +874,7 @@ class IceFlightServer(flight.FlightServerBase):
             t, snap = plan.table, plan.snap
             n = max(1, int(cmd.get("n", 4)))
             where = cmd.get("where") or []
-            if snap.pending_deletes:
-                # manifest slicing can't honor pending merge-on-read
-                # (positional or equality) deletes; degrade to ONE
-                # delete-applied endpoint
-                n = 1
-            elif where:
+            if where:
                 # predicate pushdown: size the endpoint fan-out by the
                 # PRUNED file count, not the manifest — a selective read
                 # of a huge table gets few streams, each moving only
@@ -794,8 +927,6 @@ class IceFlightServer(flight.FlightServerBase):
         except (UnicodeDecodeError, json.JSONDecodeError, ValueError):
             # raw table-name ticket (reference parity, icerunner.py:272-282)
             plan = self._current(raw.decode())
-            if plan.snap.pending_deletes:
-                return self._stream_deletes_applied(plan, [], None)
             return self._stream_resolved(plan, plan.snap.manifest)
 
         if "sql" in cmd:
@@ -847,15 +978,14 @@ class IceFlightServer(flight.FlightServerBase):
             # (zero IO for excluded files), then the pyarrow stream
             # applies the residual filter row-exactly — a filtered table
             # leaves the server as O(matching files + matching rows), no
-            # Spark engaged unless merge-on-read deletes are pending.
-            # The ticket may pin a snapshot (remote time travel).
+            # Spark engaged; each file's pending merge-on-read deletes
+            # apply as it streams. The ticket may pin a snapshot (remote
+            # time travel).
             t = self._table(cmd["table"])
             plan = self._plan(t, self._ticket_snapshot(t, cmd))
             snap = plan.snap
             preds = self._typed_preds(plan, cmd.get("where") or [])
             cols = self._proj_columns(plan, cmd.get("columns"))
-            if snap.pending_deletes:
-                return self._stream_deletes_applied(plan, preds, cols)
             files = t._prune_files(snap, snap.manifest, preds)
             return self._stream_resolved(plan, files, preds=preds, columns=cols)
         if op == "get_slice":
@@ -865,26 +995,10 @@ class IceFlightServer(flight.FlightServerBase):
             i, n = int(cmd["index"]), int(cmd["of"])
             preds = self._typed_preds(plan, cmd.get("where") or [])
             cols = self._proj_columns(plan, cmd.get("columns"))
-            if snap.pending_deletes:
-                # deletes pending: the manifest under-describes the rows,
-                # so slicing can't apply. get_slices advertises ONE
-                # endpoint, but clients that CRAFT i-of-n tickets (the
-                # streaming CDC source's initial load) still send every
-                # index — serve the full delete-applied scan on slice 0
-                # ONLY and empty streams for the rest, or each slice
-                # would duplicate the whole table.
-                if i != 0:
-                    schema = plan.arrow_schema
-                    if cols:
-                        schema = pa.schema([schema.field(c) for c in cols])
-                    return flight.GeneratorStream(
-                        schema,
-                        iter([pa.RecordBatch.from_pylist([], schema=schema)]),
-                    )
-                return self._stream_deletes_applied(plan, preds, cols)
             # prune FIRST, slice the pruned list: every crafted i-of-n
             # ticket against the same pinned snapshot + where sees the
-            # same file list, so slices stay disjoint and exhaustive
+            # same file list, so slices stay disjoint and exhaustive; each
+            # slice applies the pending deletes of its own files
             files = (
                 t._prune_files(snap, snap.manifest, preds)
                 if preds

@@ -14,9 +14,11 @@ the Column-builder originals in functions/text.py / functions/vector.py
 they mirror. No BatchEvalPython ever appears; the 100 TB scan-speed
 story of the originals carries over verbatim.
 
-Registration is idempotent (CREATE OR REPLACE) and session-scoped;
-``Connector.sql_df`` calls it before planning, which also covers the
-Flight server's SQL tickets and the CLI verb.
+Temporary functions are session-scoped, so registration runs once per
+SparkSession: ``Connector.sql_df`` (behind the Flight server's SQL
+tickets and the CLI verb) calls :func:`register_sql_functions` on every
+statement, and every call after the session's first is one catalog
+lookup with no DDL.
 """
 
 from __future__ import annotations
@@ -76,8 +78,13 @@ def _statements() -> list[str]:
 
 
 def register_sql_functions(spark: SparkSession) -> None:
-    """Install (or refresh) the ice_* SQL function surface in this
-    session. Safe to call per query — CREATE OR REPLACE of a temporary
-    function is a catalog no-op-sized operation."""
+    """Install the ice_* SQL function surface in this session unless it
+    is there already. The check is a catalog lookup of the function the
+    last statement creates, so an interrupted registration runs again;
+    the DDL costs hundreds of milliseconds per call, the lookup a few.
+    A new session (``spark.newSession()``) has its own temporary
+    functions and registers them on its first call."""
+    if spark.catalog.functionExists("ice_cos_sim"):
+        return
     for stmt in _statements():
         spark.sql(stmt)

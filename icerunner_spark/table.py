@@ -155,6 +155,15 @@ class Snapshot:
         materialized: the manifest alone over-describes the rows."""
         return bool(self.delete_files or self.eq_delete_files)
 
+    def referenced_files(self) -> set[str]:
+        """Table-relative paths of every file this snapshot needs: its
+        live data files, the files it added, and its positional and
+        equality delete files."""
+        out = set(self.manifest) | set(self.added_files) | set(self.delete_files)
+        for paths, _fids, _seq in self.eq_delete_files:
+            out.update(paths)
+        return out
+
     def to_json(self) -> str:
         return json.dumps(
             {
@@ -3462,11 +3471,7 @@ class IceTable:
                         s = _load_snapshot_payload(fh.read(), bdir)
                 except (OSError, ValueError, KeyError):
                     continue
-                out.update(s.manifest)
-                out.update(s.added_files)
-                out.update(s.delete_files)
-                for paths, _fids, _seq in s.eq_delete_files:
-                    out.update(paths)
+                out |= s.referenced_files()
         return out
 
     # ---------- maintenance (Iceberg: expire_snapshots / remove_orphan_files) ----------
@@ -3770,17 +3775,10 @@ class IceTable:
         # branch refs protect their files like tags protect snapshots
         keep_files: set[str] = self._branch_referenced_files()
         for s in kept:
-            keep_files.update(s.manifest)
-            keep_files.update(s.added_files)
-            keep_files.update(s.delete_files)
-            for paths, _fids, _seq in s.eq_delete_files:
-                keep_files.update(paths)
+            keep_files |= s.referenced_files()
         removed: list[str] = []
         for s in expired:
-            expired_eq = {
-                p for paths, _fids, _seq in s.eq_delete_files for p in paths
-            }
-            for f in set(s.manifest) | set(s.added_files) | set(s.delete_files) | expired_eq:
+            for f in s.referenced_files():
                 if f in keep_files or f in removed:
                     continue
                 try:
@@ -4011,11 +4009,7 @@ class IceTable:
         self._require_main("remove_orphans")
         referenced: set[str] = self._branch_referenced_files()
         for s in self.snapshots():
-            referenced.update(s.manifest)
-            referenced.update(s.added_files)
-            referenced.update(s.delete_files)
-            for paths, _fids, _seq in s.eq_delete_files:
-                referenced.update(paths)
+            referenced |= s.referenced_files()
         cutoff = time.time() - older_than_s
         removed: list[str] = []
         for root, _dirs, files in os.walk(self.data_dir):

@@ -17,6 +17,7 @@ from icerunner_spark.connector import Connector
 from icerunner_spark.flight.client import (
     get_remote_tables,
     parse_flight_url,
+    read_table_filtered,
     read_table_once,
     write_batch,
 )
@@ -548,6 +549,86 @@ def test_get_changes_matches_scan_changes_on_every_range(spark, server):
     assert 0 < served < len(ids) ** 2
 
 
+def _job_ids(spark) -> set:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+@pytest.mark.parametrize("partitioned", [False, True], ids=["plain", "partitioned"])
+def test_reads_with_pending_deletes_match_table_scan(spark, server, partitioned):
+    """Every table read of a snapshot takes one path, pending deletes or
+    not: after positional deletes, equality deletes (one- and
+    two-column, a NULL key, a key re-inserted after its delete), a
+    rename, add_column with a default and a partition-spec change, the
+    raw ticket, a scan ticket with where and columns, and the union of
+    the get_slices endpoints each serve exactly IceTable.scan's rows,
+    and none of those reads starts a Spark job."""
+    c = server.connector
+    t = c.catalog.table("dels")
+    schema = "id long, k string, v long, g long"
+
+    def rows(lo, hi, *extra):
+        return [(i, f"k{i}", i % 7, i % 3, *extra) for i in range(lo, hi)]
+
+    t.create(
+        spark.createDataFrame(rows(0, 12) + [(None, "knull", 1, 0)], schema),
+        partition_by=["g"] if partitioned else None,
+    )
+    t.append(spark.createDataFrame(rows(12, 24), schema))
+    host, port, client = "127.0.0.1", server.port, _client(server)
+
+    def wire(tbl):
+        return sorted((tuple(r.values()) for r in tbl.to_pylist()), key=repr)
+
+    def frame(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    def check(step):
+        want = frame(t.scan())
+        want_sel = frame(t.scan(where=[("v", ">", 2)]).select("id", "g"))
+        before = _job_ids(spark)
+        raw = wire(read_table_once(host, port, "dels"))
+        sel = wire(read_table_filtered(
+            host, port, "dels", [["v", ">", 2]], columns=["id", "g"]
+        ))
+        info = client.get_flight_info(flight.FlightDescriptor.for_command(
+            json.dumps({"command": "get_slices", "table": "dels", "n": 4}).encode()
+        ))
+        sliced = wire(pa.concat_tables(
+            [client.do_get(ep.ticket).read_all() for ep in info.endpoints]
+        ))
+        assert _job_ids(spark) - before == set(), step
+        assert len(info.endpoints) == 4, step
+        assert raw == want and sliced == want, step
+        assert sel == want_sel, step
+
+    t.delete_where(F.col("v") == 0, mode="merge-on-read")
+    check("positional")
+    t.delete_rows(
+        spark.createDataFrame([(3,), (None,), (15,)], "id long"), ["id"],
+        mode="equality",
+    )
+    check("equality with a null key")
+    t.append(spark.createDataFrame([(3, "again", 5, 0)], schema))
+    check("re-insert after the equality delete")
+    t.delete_rows(
+        spark.createDataFrame([(4, "k4"), (16, "k16"), (5, "other")], "id long, k string"),
+        ["id", "k"], mode="equality",
+    )
+    check("two-column equality")
+    t.rename_column("k", "label")
+    check("rename of a key column")
+    t.add_column("x", "int", default=7)
+    check("initial default")
+    t.update_partition_spec(["v"] if partitioned else ["g"])
+    t.append(spark.createDataFrame(
+        rows(24, 30, 8), "id long, label string, v long, g long, x int"
+    ))
+    t.delete_where(F.col("id") % 4 == 1, mode="merge-on-read")
+    check("spec change")
+    assert len(t.current_snapshot().delete_files) == 2
+    assert len(t.current_snapshot().eq_delete_files) == 2
+
+
 def test_mirror_repairs_after_unpinned_sync(spark, server, tmp_path):
     """ADVICE r2: a pass whose predecessor used an unpinned full read must
     NOT append the incremental delta (possible duplicates) — it repairs by
@@ -999,9 +1080,10 @@ def test_mirror_replicates_partition_spec(spark, server, tmp_path):
 
 def test_do_get_applies_merge_on_read_deletes(spark, server):
     """A table with pending positional deletes must stream the
-    delete-applied rows (spill fallback), report subtracted totals, and
-    degrade get_slices to one endpoint; after compaction the zero-copy
-    manifest path serves the same rows."""
+    delete-applied rows, report subtracted totals, and fan get_slices
+    out like a clean table, the endpoints together serving the live
+    rows; after compaction the zero-copy manifest path serves the same
+    rows."""
     c = server.connector
     c.create_table("mor", _writer_table([1, 2, 3, 4], ["a", "b", "c", "d"]))
     t = c.table("mor")
@@ -1019,9 +1101,13 @@ def test_do_get_applies_merge_on_read_deletes(spark, server):
             json.dumps({"command": "get_slices", "table": "mor", "n": 4}).encode()
         )
     )
-    assert len(slices.endpoints) == 1  # degraded while deletes pending
-    got = client.do_get(slices.endpoints[0].ticket).read_all()
-    assert sorted(got.column("id").to_pylist()) == [1, 3, 4]
+    assert len(slices.endpoints) > 1
+    got = [
+        i
+        for ep in slices.endpoints
+        for i in client.do_get(ep.ticket).read_all().column("id").to_pylist()
+    ]
+    assert sorted(got) == [1, 3, 4]
 
     t.compact()
     out2 = read_table_once("127.0.0.1", server.port, "mor")
@@ -1154,7 +1240,8 @@ def test_crafted_slice_tickets_no_duplication_with_pending_deletes(spark, server
     """Clients that craft i-of-n get_slice tickets themselves (the
     streaming CDC source's initial load does) must not receive the full
     delete-applied table PER SLICE: with merge-on-read deletes pending,
-    slice 0 carries everything and the rest are empty. Regression test —
+    each slice applies the deletes of its own files, so the slices stay
+    disjoint and together hold the live rows. Regression test —
     a fresh streaming mirror of a maintained table previously received
     n copies of every row."""
     c = server.connector
@@ -1529,7 +1616,7 @@ def test_scan_projection_evolved_partitioned_and_mor(spark, warehouse, server):
     their physical names per file group, identity-partition columns are
     served from path values inside a projection, initial defaults fill
     projected columns older files lack, and pending merge-on-read deletes
-    fall back to the Spark path with the same projected shape."""
+    apply inside the projected stream with the same projected shape."""
     from icerunner_spark.flight.client import read_table_filtered
 
     c = server.connector
@@ -1555,7 +1642,7 @@ def test_scan_projection_evolved_partitioned_and_mor(spark, warehouse, server):
     assert by_val[88.0]["flag"] == "new" and by_val[88.0]["s"] == "s1"
     assert by_val[9.5]["flag"] == "fresh" and by_val[9.5]["s"] == "s9"
 
-    # pending MOR deletes: projection holds on the Spark fallback path
+    # pending MOR deletes: projection holds while the deletes apply
     t.delete_where(F.col("k") % 2 == 1, mode="merge-on-read")
     got = read_table_filtered(
         host, port, "proj_evo", [["k", "<", 10]], columns=["k"]

@@ -159,6 +159,32 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS ord_bkt")
 
 
+def test_sql_functions_register_once_per_session(spark, warehouse, monkeypatch):
+    """Connector.sql_df registers the ice_* SQL functions once per
+    SparkSession: a second statement in the session issues no CREATE
+    ... FUNCTION, and a new session still resolves them."""
+    from icerunner_spark.connector import Connector
+
+    c = Connector(spark, warehouse)
+    c.sql_df("SELECT 1")
+    statements = []
+    real_sql = spark.sql
+
+    def spy(query, *args, **kwargs):
+        statements.append(query)
+        return real_sql(query, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "sql", spy)
+    c.sql_df("SELECT ice_token_count('a b') AS n")
+    assert statements and not any("FUNCTION" in s.upper() for s in statements)
+    monkeypatch.undo()
+
+    other = spark.newSession()
+    assert not other.catalog.functionExists("ice_token_count")
+    got = Connector(other, warehouse).sql_df("SELECT ice_token_count('a b') AS n")
+    assert got.collect()[0]["n"] == 2
+
+
 def test_sql_udfs_inline_and_match_column_builders(spark):
     """Spark 4 SQL UDFs (functions/sql_udfs.py) are expression macros:
     Catalyst inlines the bodies (no Python eval operator in the plan),
