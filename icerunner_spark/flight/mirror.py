@@ -400,8 +400,8 @@ def perform_sync(
                     src_fields, state.get("source_field_ids"), connector, target_table
                 )
             # Replay source partition-spec EVOLUTION (update_partition_spec
-            # is metadata-only; the target's existing dirs keep their own
-            # layout via dir_specs, exactly like the source's). Layout is
+            # is metadata-only; the target's existing dirs keep the spec
+            # their layout records hold, like the source's). Layout is
             # an optimization — a failed replay logs and never blocks the
             # row sync.
             try:

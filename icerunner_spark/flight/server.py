@@ -94,6 +94,7 @@ from icerunner_spark.table import (
     _commit_dir_of,
     _decode_bound,
     _hive_partition_values,
+    _layout_of,
     _normalize_predicates,
 )
 
@@ -108,21 +109,17 @@ def _spark_schema_to_arrow(struct_type) -> pa.Schema:
     return to_arrow_schema(struct_type)
 
 
-def _layout_keys(
-    snap: Snapshot, files_rel, logical, mappings=None, dir_specs=None
-) -> dict:
+def _layout_keys(snap: Snapshot, files_rel, logical, layouts=None) -> dict:
     """Layout key of each table-relative data file: ``(physical name of
     each logical column, partition values, partition spec)``, resolved
-    through the snapshot's field ids (table.py field-id indirection).
-    Partition columns are physical-None: they live in the hive path
-    (``lang=en/``), not the file, and their decoded values ride in the
-    key. ``mappings`` and ``dir_specs`` replace the snapshot's per-dir
-    physical names and partition specs (a changes read whose files come
-    from several snapshots)."""
+    through the snapshot's field ids and each commit dir's layout record
+    (table.py field-id indirection). Partition columns are
+    physical-None: they live in the hive path (``lang=en/``), not the
+    file, and their decoded values ride in the key. ``layouts`` replaces
+    the snapshot's per-dir records (a changes read whose files come from
+    several snapshots)."""
     fid = snap.field_ids
-    spec = list(snap.partition_spec or [])
-    dir_specs = (snap.dir_specs or {}) if dir_specs is None else dir_specs
-    mappings = snap.file_mappings if mappings is None else mappings
+    layouts = snap.layouts if layouts is None else layouts
     per_dir: dict = {}
     keys = {}
     for f in files_rel:
@@ -131,14 +128,11 @@ def _layout_keys(
             # spec evolution: each dir serves under the spec it was
             # written with (identity columns of THAT spec come from the
             # hive path; other dirs carry the column physically)
-            dspec = dir_specs.get(d, spec)
-            m = mappings.get(d)
+            rec = _layout_of(layouts, d, snap.partition_spec)
             per_dir[d] = (
-                tuple(dspec),
+                tuple(rec.spec),
                 tuple(
-                    None
-                    if n in dspec
-                    else (n if m is None else m.get(str(fid.get(n))))
+                    None if n in rec.spec else rec.physical(str(fid.get(n)), n)
                     for n in logical
                 ),
             )
@@ -311,7 +305,7 @@ class _ServePlan:
         positions, eq = self._deletes
         out = {}
         for f in files_rel:
-            seq = int(snap.dir_seqs.get(_commit_dir_of(f), 0))
+            seq = snap.layout(_commit_dir_of(f)).seq
             keys = [k for k, dseq in eq if dseq > seq]
             pos = positions.get(f)
             if pos is not None or keys:
@@ -951,9 +945,9 @@ class IceFlightServer(flight.FlightServerBase):
             t = self._table(name)
             start, end = self._ticket_range(cmd)
             with self._table_errors(name):
-                ctx, files, mappings, specs = t._append_range(start, end)
+                ctx, files, dirs = t._append_range(start, end)
             plan = self._plan(t, ctx)
-            keys = _layout_keys(plan.snap, files, plan.logical, mappings, specs)
+            keys = _layout_keys(plan.snap, files, plan.logical, dirs)
             return self._stream_resolved(plan, files, keys)
         if op == "get_changelog":
             # Row-level incremental read (insert/delete rows with a

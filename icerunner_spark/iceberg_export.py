@@ -650,7 +650,8 @@ class IcebergExporter:
         raw: list = [[]]
         seen: set = {json.dumps([])}
         for s in snaps:
-            for spec in [s.partition_spec, *s.dir_specs.values()]:
+            dir_specs = (s.layout(d).spec for d in s.layouts)
+            for spec in [s.partition_spec, *dir_specs]:
                 key = json.dumps(list(spec or []))
                 if key not in seen:
                     seen.add(key)
@@ -1153,10 +1154,10 @@ class IcebergExporter:
         }
         claimed: dict = {}
         for s in snaps:
-            for d, mapping in s.file_mappings.items():
-                if d not in live_dirs:
+            for d, rec in s.layouts.items():
+                if d not in live_dirs or rec.mapping is None:
                     continue
-                for fid_s, phys in mapping.items():
+                for fid_s, phys in rec.mapping.items():
                     fid = int(fid_s)
                     prev = claimed.get(phys)
                     if prev is not None and prev != fid:
@@ -1243,7 +1244,7 @@ class IcebergExporter:
             schema_json_meta = json.dumps(schemas[sid])
             manifests = []
             for d, files in sorted(by_dir.items()):
-                spec_list = s.dir_specs.get(d, s.partition_spec) or []
+                spec_list = s.layout(d).spec
                 spec_id = spec_index[json.dumps(list(spec_list))]
                 manifests.append(
                     self._write_manifest(

@@ -58,6 +58,7 @@ import uuid
 from collections import OrderedDict
 from collections.abc import Iterator
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -75,6 +76,54 @@ class NoSuchTableError(Exception):
     pass
 
 
+class DirLayout(NamedTuple):
+    """How one commit dir's files were written: ``mapping`` (field id as
+    a string -> physical column name; None for a dir written before
+    field ids, whose columns resolve by name), ``seq`` (the sequence of
+    the commit that added the dir; an equality delete applies to dirs
+    strictly older than itself) and ``spec`` (the partition spec the
+    files were written under; None for a dir written before per-dir
+    specs, which reads under its snapshot's spec)."""
+
+    mapping: dict | None
+    seq: int
+    spec: list | None
+
+    def physical(self, fid: str, name: str) -> str | None:
+        """The physical column holding field ``fid`` (logical ``name``)
+        in this dir's files; None when the dir predates the field."""
+        return name if self.mapping is None else self.mapping.get(fid)
+
+
+def _layout_of(layouts: dict, d: str, spec: list) -> DirLayout:
+    """Commit dir ``d``'s layout record with the legacy defaults applied
+    — the one place they live: a dir without a record resolves columns
+    by name and has sequence 0 (older than every equality delete), and a
+    dir without a recorded spec reads under ``spec``."""
+    rec = layouts.get(d)
+    if rec is None:
+        return DirLayout(None, 0, list(spec or []))
+    return rec if rec.spec is not None else rec._replace(spec=list(spec or []))
+
+
+# the per-dir maps snapshot files carried before layout records moved
+# into the manifest segments; still read, and still written by to_json
+_LAYOUT_MAP_KEYS = ("file_mappings", "dir_seqs", "dir_specs")
+
+
+def _layouts_from_maps(d: dict, manifest: list[str]) -> dict:
+    """Layout records of the live dirs of a snapshot file that carries
+    the per-dir maps (``_LAYOUT_MAP_KEYS``)."""
+    mappings, seqs, specs = (d.get(k) or {} for k in _LAYOUT_MAP_KEYS)
+    dirs = set(mappings) | set(seqs) | set(specs)
+    if dirs:
+        dirs &= {_commit_dir_of(f) for f in manifest}
+    return {
+        x: DirLayout(mappings.get(x), int(seqs.get(x, 0)), specs.get(x))
+        for x in dirs
+    }
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -88,13 +137,12 @@ class Snapshot:
     summary: dict = field(default_factory=dict)
     # Field-id indirection (Iceberg schema-evolution parity): columns are
     # identified by a stable integer id, not by name. ``field_ids`` maps the
-    # snapshot's LOGICAL column names to ids; ``file_mappings`` records, per
-    # commit directory, the PHYSICAL column name each id was written under.
-    # Rename = metadata-only id remap; a re-added name gets a fresh id so
-    # bytes written under the dropped id can never resurface.
+    # snapshot's LOGICAL column names to ids; each commit dir's layout
+    # record (``layouts``) holds the PHYSICAL name each id was written
+    # under. Rename = metadata-only id remap; a re-added name gets a fresh
+    # id so bytes written under the dropped id can never resurface.
     field_ids: dict = field(default_factory=dict)  # logical name -> id
     next_field_id: int = 1
-    file_mappings: dict = field(default_factory=dict)  # commit dir -> {id: name}
     # Identity partition spec (Iceberg partition-spec parity, minus
     # transforms — derive transform columns with e.g.
     # sources.layout.with_date_partition before writing). Data files land
@@ -112,16 +160,17 @@ class Snapshot:
     # ``sequence`` (so re-inserting a deleted key later survives —
     # Iceberg's sequence-number rule). Committing one is O(keys) with no
     # table read at all — even cheaper than positional deletes for
-    # key-addressed CDC apply. ``dir_seqs`` records each live commit
-    # dir's sequence so scans can evaluate the strictly-older rule.
+    # key-addressed CDC apply. The dir's layout record carries the
+    # sequence of the commit that wrote its files.
     eq_delete_files: list = field(default_factory=list)
-    dir_seqs: dict = field(default_factory=dict)
-    # Per-commit-dir partition spec (Iceberg partition-spec EVOLUTION
-    # parity): each data dir records the spec its files were WRITTEN
-    # under, so update_partition_spec changes the layout going forward
-    # while historical dirs keep reading/pruning under their own layout.
-    # Dirs absent from the map (legacy) default to the snapshot's spec.
-    dir_specs: dict = field(default_factory=dict)
+    # One :class:`DirLayout` per live commit dir: its physical names, its
+    # commit sequence and the partition spec its files were written under
+    # (Iceberg keeps the spec id on the manifest and the sequence on the
+    # manifest entry). A record is built once, by the commit that adds
+    # the dir, and stored in the manifest segment that carries the dir's
+    # files; loading a slim snapshot rebuilds this map from its segments.
+    # Read it through :meth:`layout`, which applies the legacy defaults.
+    layouts: dict = field(default_factory=dict)  # commit dir -> DirLayout
     # Per-data-file column min/max bounds (Iceberg manifest-stats parity):
     # {relpath: {field_id(str): [lo, hi]}} harvested from parquet footers
     # at write time. Planning-time file skipping (plan_files / scan(where=))
@@ -149,6 +198,10 @@ class Snapshot:
     # as the file's commit sequence. None = pre-lineage legacy snapshot.
     next_row_id: int | None = None
 
+    def layout(self, commit_dir: str) -> DirLayout:
+        """``commit_dir``'s layout record, legacy defaults applied."""
+        return _layout_of(self.layouts, commit_dir, self.partition_spec)
+
     @property
     def pending_deletes(self) -> bool:
         """Merge-on-read deletes (positional or equality) not yet
@@ -165,6 +218,9 @@ class Snapshot:
         return out
 
     def to_json(self) -> str:
+        """The legacy self-contained format: manifest, file stats and the
+        per-dir maps inline."""
+        lays = self.layouts.items()
         return json.dumps(
             {
                 "snapshot_id": self.snapshot_id,
@@ -178,12 +234,14 @@ class Snapshot:
                 "summary": self.summary,
                 "field_ids": self.field_ids,
                 "next_field_id": self.next_field_id,
-                "file_mappings": self.file_mappings,
+                "file_mappings": {
+                    d: r.mapping for d, r in lays if r.mapping is not None
+                },
                 "partition_spec": self.partition_spec,
                 "delete_files": self.delete_files,
                 "eq_delete_files": self.eq_delete_files,
-                "dir_seqs": self.dir_seqs,
-                "dir_specs": self.dir_specs,
+                "dir_seqs": {d: r.seq for d, r in lays},
+                "dir_specs": {d: r.spec for d, r in lays if r.spec is not None},
                 "file_stats": self.file_stats,
                 "properties": self.properties,
                 "field_defaults": self.field_defaults,
@@ -198,7 +256,7 @@ class Snapshot:
     @staticmethod
     def from_dict(d: dict) -> "Snapshot":
         # Legacy manifests (pre field-id) carry no id metadata: derive ids
-        # positionally and leave file_mappings empty — the read path then
+        # positionally and record no dir layouts — the read path then
         # falls back to name-based resolution, the old behavior exactly.
         field_ids = d.get("field_ids")
         if not field_ids:
@@ -216,12 +274,10 @@ class Snapshot:
             summary=d.get("summary", {}),
             field_ids=field_ids,
             next_field_id=d.get("next_field_id", 1 + max(field_ids.values(), default=0)),
-            file_mappings=d.get("file_mappings", {}),
             partition_spec=d.get("partition_spec", []),
             delete_files=d.get("delete_files", []),
             eq_delete_files=d.get("eq_delete_files", []),
-            dir_seqs=d.get("dir_seqs", {}),
-            dir_specs=d.get("dir_specs", {}),
+            layouts=_layouts_from_maps(d, d["manifest"]),
             file_stats=d.get("file_stats", {}),
             properties=d.get("properties", {}),
             field_defaults=d.get("field_defaults", {}),
@@ -232,27 +288,30 @@ class Snapshot:
 _SEG_CACHE_MAX_BYTES = 4 << 20  # don't pin consolidated full-table segments
 
 
-@functools.lru_cache(maxsize=512)
-def _load_segment_cached(path: str) -> tuple:
+def _parse_segment(path: str) -> tuple:
     with open(path) as f:
         seg = json.load(f)
-    return seg["files"], seg.get("file_stats", {})
+    layouts = {d: DirLayout(**r) for d, r in seg.get("layouts", {}).items()}
+    return seg["files"], seg.get("file_stats", {}), layouts
+
+
+_load_segment_cached = functools.lru_cache(maxsize=512)(_parse_segment)
 
 
 def _load_segment(path: str) -> tuple:
-    """(files, file_stats) of one manifest segment. Segments are
-    immutable and their uuid names are never reused, so caching by path
-    is safe across GC; history walks (snapshots(), CDC, expire) parse
-    each segment once per process instead of once per snapshot that
-    references it. Only small (delta-sized) segments are cached — an
+    """(files, file_stats, layouts) of one manifest segment: its data
+    files, their stats and the layout record of each commit dir they
+    sit in (segments written before layout records carry none).
+    Segments are immutable and their uuid names are never reused, so
+    caching by path is safe across GC; history walks (snapshots(), CDC,
+    expire) parse each segment once per process instead of once per
+    snapshot that references it. Only small (delta-sized) segments are cached — an
     entry-count LRU doesn't bound MEMORY when a consolidated segment
     carries a whole table's file list, so those parse uncached. Callers
     treat the returned structures as read-only."""
     try:
         if os.path.getsize(path) > _SEG_CACHE_MAX_BYTES:
-            with open(path) as f:
-                seg = json.load(f)
-            return seg["files"], seg.get("file_stats", {})
+            return _parse_segment(path)
     except OSError:
         pass  # race with GC: fall through, the open below raises cleanly
     return _load_segment_cached(path)
@@ -266,45 +325,70 @@ _snapshot_cache_lock = threading.Lock()
 def _load_snapshot_payload(text: str, metadata_dir: str) -> Snapshot:
     """Parse a snapshot file in either format:
 
-    - legacy/full: self-contained JSON carrying the whole manifest and
-      per-file stats inline (``Snapshot.to_json``; no longer written,
-      still read);
+    - legacy/full: self-contained JSON carrying the whole manifest,
+      per-file stats and the per-dir maps inline (``Snapshot.to_json``;
+      no longer written, still read);
     - slim (``"format": 2``): the O(files) fields — manifest + file_stats
-      — live in immutable SEGMENT files under ``metadata/segments/``,
-      one per commit's added files; the snapshot stores segment refs
-      plus a tombstone list of removed paths. A commit's metadata write
-      is then O(delta), not O(table files) — Iceberg's manifest-list
-      indirection — while the reconstructed in-memory Snapshot is
-      identical either way.
+      — and the commit dirs' layout records live in immutable SEGMENT
+      files under ``metadata/segments/``, one per commit's added files;
+      the snapshot stores segment refs plus a tombstone list of removed
+      paths. A commit's metadata write is then O(delta), not O(table
+      files or dirs) — Iceberg's manifest-list indirection — while the
+      reconstructed in-memory Snapshot is identical either way. A slim
+      file written before the records moved into segments still carries
+      the per-dir maps inline; it loads from those, and the next commit,
+      fork or fast-forward over it reseeds its state into one segment
+      (:func:`_shareable_segments`).
     """
     d = json.loads(text)
     if d.get("format") != 2:
-        return Snapshot.from_json(text)
+        return Snapshot.from_dict(d)
     seg_dir = os.path.join(metadata_dir, "segments")
     manifest: list[str] = []
     fstats: dict = {}
+    layouts: dict = {}
     for ref in d.get("segments", []):
-        files, stats = _load_segment(os.path.join(seg_dir, ref))
+        files, stats, lays = _load_segment(os.path.join(seg_dir, ref))
         manifest.extend(files)
         fstats.update(stats)
+        layouts.update(lays)
     tomb = set(d.get("tombstones", []))
     if tomb:
         manifest = [f for f in manifest if f not in tomb]
+        live_dirs = {_commit_dir_of(f) for f in manifest}
+        layouts = {x: r for x, r in layouts.items() if x in live_dirs}
     live = set(manifest)
     d = dict(d)
     d["manifest"] = manifest
     d["file_stats"] = {f: s for f, s in fstats.items() if f in live}
     snap = Snapshot.from_dict(d)
+    if any(k in d for k in _LAYOUT_MAP_KEYS):
+        snap._inline_layouts = True  # type: ignore[attr-defined]
+    else:
+        snap.layouts = layouts
     snap._segments = list(d.get("segments", []))  # type: ignore[attr-defined]
     snap._tombstones = sorted(tomb)  # type: ignore[attr-defined]
     return snap
 
 
+def _shareable_segments(snap: Snapshot) -> list[str] | None:
+    """The segment refs a snapshot written after (or copied from)
+    ``snap`` can reference, or None when ``snap``'s state has to be
+    reseeded into one segment first: a legacy full-format snapshot has
+    no segments, and the segments of a slim one that carries the per-dir
+    maps inline hold no layout records. Segment GC still counts the
+    latter's refs, so the old snapshot stays readable."""
+    if getattr(snap, "_inline_layouts", False):
+        return None
+    return getattr(snap, "_segments", None)
+
+
 def _slim_json(snap: Snapshot, segments: list[str], tombstones: list[str]) -> str:
     """``snap`` as slim (format 2) JSON over the given segment refs and
     tombstones. Built field by field: the O(files) manifest and
-    file_stats are never serialized, which is what keeps a commit's
-    metadata CPU O(delta) and not only its IO."""
+    file_stats and the O(dirs) layout records live in the segments and
+    are never serialized here, which is what keeps a commit's metadata
+    CPU O(delta) and not only its IO."""
     return json.dumps(
         {
             "format": 2,
@@ -318,12 +402,9 @@ def _slim_json(snap: Snapshot, segments: list[str], tombstones: list[str]) -> st
             "summary": snap.summary,
             "field_ids": snap.field_ids,
             "next_field_id": snap.next_field_id,
-            "file_mappings": snap.file_mappings,
             "partition_spec": snap.partition_spec,
             "delete_files": snap.delete_files,
             "eq_delete_files": snap.eq_delete_files,
-            "dir_seqs": snap.dir_seqs,
-            "dir_specs": snap.dir_specs,
             "properties": snap.properties,
             "field_defaults": snap.field_defaults,
             "next_row_id": snap.next_row_id,
@@ -363,19 +444,6 @@ def _commit_dir_of(relpath: str) -> str:
     parts = relpath.replace(os.sep, "/").split("/")
     return parts[1] if len(parts) >= 3 and parts[0] == "data" else relpath
 
-
-
-def _note_added_layouts(snap: Snapshot, mappings: dict, specs: dict) -> None:
-    """Record, per commit dir ``snap`` added, the physical-name mapping
-    and partition spec that ``snap`` itself records for it. A change read
-    resolves its files through these, not the context snapshot's maps: a
-    later compaction prunes replaced dirs from those, and a dir missing
-    there would read under the newer snapshot's spec."""
-    for f in snap.added_files:
-        d = _commit_dir_of(f)
-        if d in snap.file_mappings:
-            mappings[d] = snap.file_mappings[d]
-        specs[d] = snap.dir_specs.get(d, snap.partition_spec)
 
 def _timestamps_to_us(data: pa.Table) -> pa.Table:
     """Cast top-level timestamp columns to microseconds (Spark's native
@@ -1071,16 +1139,21 @@ class IceTable:
     def _segments_dir(self) -> str:
         return os.path.join(self.metadata_dir, "segments")
 
-    def _write_segment(self, files: list[str], file_stats: dict) -> str:
-        """Write one immutable manifest segment; returns its ref."""
+    def _write_segment(self, files: list[str], snap: Snapshot) -> str:
+        """Write one immutable manifest segment of ``files`` with their
+        stats and the layout record of each commit dir they sit in, all
+        taken from ``snap``; returns its ref."""
         os.makedirs(self._segments_dir(), exist_ok=True)
         ref = f"seg-{uuid.uuid4().hex[:12]}.json"
+        stats, lays = snap.file_stats, snap.layouts
+        dirs = {_commit_dir_of(p) for p in files}
         with open(os.path.join(self._segments_dir(), ref), "w") as f:
             json.dump(
                 {
                     "files": list(files),
-                    "file_stats": {
-                        p: file_stats[p] for p in files if p in file_stats
+                    "file_stats": {p: stats[p] for p in files if p in stats},
+                    "layouts": {
+                        d: lays[d]._asdict() for d in sorted(dirs) if d in lays
                     },
                 },
                 f,
@@ -1091,12 +1164,14 @@ class IceTable:
         self, snap: Snapshot, parent: Snapshot | None, *, fresh: bool = False
     ) -> str:
         """Serialize ``snap`` in slim (format 2): added files land in a
-        fresh segment, the parent's segments are referenced (a legacy-
-        format parent is reseeded into one segment first), and paths no
-        longer in the manifest become tombstones. When tombstones or the
-        segment list outgrow the manifest, everything consolidates into
-        one fresh segment — the self-tuning equivalent of Iceberg's
-        rewrite_manifests, amortized O(1) extra writes per commit."""
+        fresh segment with the layout records of their dirs, the parent's
+        segments are referenced (a parent whose segments cannot be
+        shared, :func:`_shareable_segments`, is reseeded into one segment
+        first), and paths no longer in the manifest become tombstones.
+        When tombstones or the segment list outgrow the manifest,
+        everything consolidates into one fresh segment — the self-tuning
+        equivalent of Iceberg's rewrite_manifests, amortized O(1) extra
+        writes per commit."""
         if parent is None or fresh:
             # a wholesale replace (create/overwrite) IS the new state:
             # start a fresh segment chain instead of tombstoning the
@@ -1105,12 +1180,12 @@ class IceTable:
             ptomb: list[str] = []
             base_union: set[str] = set()
         else:
-            psegs = getattr(parent, "_segments", None)
+            psegs = _shareable_segments(parent)
             ptomb = getattr(parent, "_tombstones", []) or []
             if psegs is None:
-                # legacy full-format parent: seed its state as a segment
+                # seed the parent's state as one segment
                 psegs = (
-                    [self._write_segment(parent.manifest, parent.file_stats)]
+                    [self._write_segment(parent.manifest, parent)]
                     if parent.manifest
                     else []
                 )
@@ -1118,9 +1193,7 @@ class IceTable:
             base_union = set(parent.manifest) | set(ptomb)
         segs = list(psegs)
         if snap.added_files:
-            segs.append(
-                self._write_segment(list(snap.added_files), snap.file_stats)
-            )
+            segs.append(self._write_segment(list(snap.added_files), snap))
             base_union |= set(snap.added_files)
         tomb = sorted(base_union - set(snap.manifest))
         if (
@@ -1130,11 +1203,7 @@ class IceTable:
             or len(tomb) > max(64, len(snap.manifest))
             or len(segs) > 256
         ):
-            segs = (
-                [self._write_segment(snap.manifest, snap.file_stats)]
-                if snap.manifest
-                else []
-            )
+            segs = [self._write_segment(snap.manifest, snap)] if snap.manifest else []
             tomb = []
         snap._segments = segs  # type: ignore[attr-defined]
         snap._tombstones = tomb  # type: ignore[attr-defined]
@@ -1146,16 +1215,13 @@ class IceTable:
         main). Segments are immutable and uniquely named, so the ones
         ``snap`` references are hard-linked into this log's segments dir
         (copied where a link is refused) and both logs share them; a
-        legacy full-format snapshot is reseeded into one segment. Each
-        linked segment's mtime is refreshed: until the snapshot that
-        references it is visible, only the GC age guard protects it."""
-        segs = getattr(snap, "_segments", None)
+        snapshot whose segments cannot be shared is reseeded into one
+        segment (:func:`_shareable_segments`). Each linked segment's
+        mtime is refreshed: until the snapshot that references it is
+        visible, only the GC age guard protects it."""
+        segs = _shareable_segments(snap)
         if segs is None:
-            segs = (
-                [self._write_segment(snap.manifest, snap.file_stats)]
-                if snap.manifest
-                else []
-            )
+            segs = [self._write_segment(snap.manifest, snap)] if snap.manifest else []
             return _slim_json(snap, segs, [])
         os.makedirs(self._segments_dir(), exist_ok=True)
         for ref in segs:
@@ -1301,11 +1367,11 @@ class IceTable:
         reverting a concurrent widen's type, or (worse) publishing a
         schema whose column names no longer match the winning parent's
         field_ids, which makes the mismatched column resolve to NO field
-        id and read as typed NULL (caught by the r8 conflict-stress run:
-        widen racing rename). The transform re-validates against the
-        winning parent and raises ValueError when the race made the
-        operation meaningless (column renamed away, already widened) —
-        the same surfaced-race contract rename/widen already document.
+        id and read as typed NULL (a widen racing a rename does exactly
+        this). The transform re-validates against the winning parent and
+        raises ValueError when the race made the operation meaningless
+        (column renamed away, already widened) — the same surfaced-race
+        contract rename/widen already document.
 
         Conflict validation (Iceberg parity — a retry must not silently
         undo a concurrent commit):
@@ -1340,18 +1406,10 @@ class IceTable:
         new_delete_refs: set[str] = (
             self._delete_file_refs(add_delete_files) if add_delete_files else set()
         )
-        sidecars = {
-            d: self._load_write_mapping(d)
-            for d in {_commit_dir_of(f) for f in added_files or []}
-        }
-        stats_sidecars = {
-            d: self._load_file_stats_sidecar(d)
-            for d in {_commit_dir_of(f) for f in added_files or []}
-        }
-        spec_sidecars = {
-            d: self._load_write_spec(d)
-            for d in {_commit_dir_of(f) for f in added_files or []}
-        }
+        added_dirs = {_commit_dir_of(f) for f in added_files or []}
+        sidecars = {d: self._load_write_mapping(d) for d in added_dirs}
+        stats_sidecars = {d: self._load_file_stats_sidecar(d) for d in added_dirs}
+        spec_sidecars = {d: self._load_write_spec(d) for d in added_dirs}
         for _ in range(max_retries):
             parent = self.current_snapshot()
             if require_parent_snapshot_id is not None and (
@@ -1377,12 +1435,10 @@ class IceTable:
                 names = _schema_names(df_schema_json)
                 field_ids = {n: i + 1 for i, n in enumerate(names)}
                 next_id = len(names) + 1
-                mappings: dict = {}
                 spec = list(partition_spec or [])
             else:
                 field_ids = dict(parent.field_ids)
                 next_id = parent.next_field_id
-                mappings = dict(parent.file_mappings)
                 spec = (
                     list(partition_spec)
                     if partition_spec is not None
@@ -1427,57 +1483,47 @@ class IceTable:
                     )
             if evolve is not None:
                 field_ids, next_id = evolve(field_ids, next_id)
-            # Stamp the physical name each field id was written under for
-            # every new commit dir. The staged sidecar mapping (written
-            # WITH the files, under the stage-time ids/names) wins: it is
-            # the only record that survives a schema change racing between
-            # stage and publish. Without one, the mapping is computed from
-            # the publish-time schema — and a written name the winning
-            # field_ids no longer knows means that race happened, so the
-            # commit conflicts instead of silently stamping a mapping that
-            # would read those columns back as NULL.
-            if added_files:
-                unmapped = [
-                    n for n in _schema_names(df_schema_json) if n not in field_ids
-                ]
-                default_mapping = {
-                    str(field_ids[n]): n
-                    for n in _schema_names(df_schema_json)
-                    if n in field_ids
-                }
-                for f in added_files:
-                    d = _commit_dir_of(f)
-                    if d not in mappings:
-                        side = sidecars.get(d)
-                        if side is None and unmapped:
-                            raise CommitConflict(
-                                f"schema changed between write and publish "
-                                f"(columns {unmapped} are not in the current "
-                                f"schema) and no write-time mapping was staged"
-                            )
-                        mappings[d] = side or default_mapping
-            # Prune mappings to dirs this snapshot can still see — older
-            # snapshots are self-contained JSON, so time travel keeps its
-            # own copies.
+            # One layout record per live commit dir: inherited dirs keep
+            # the record of the commit that added them; each dir this
+            # commit adds gets the physical name each field id was written
+            # under, this commit's sequence (the strictly-older rule of
+            # equality deletes) and the spec its files were written under.
+            # The staged sidecar mapping (written WITH the files, under the
+            # stage-time ids/names) wins: it is the only record that
+            # survives a schema change racing between stage and publish.
+            # Without one, the mapping is computed from the publish-time
+            # schema — and a written name the winning field_ids no longer
+            # knows means that race happened, so the commit conflicts
+            # instead of silently stamping a mapping that would read those
+            # columns back as NULL. A sidecar-less dir's spec is the one
+            # this snapshot publishes (pre-evolution behavior).
             live_dirs = {_commit_dir_of(f) for f in manifest}
-            mappings = {d: m for d, m in mappings.items() if d in live_dirs}
-            # commit-sequence per dir: newly added dirs get THIS commit's
-            # sequence (the strictly-older comparison for equality
-            # deletes); inherited dirs keep their original one
-            dseqs = dict(parent.dir_seqs) if parent else {}
-            for f in added_files or []:
-                dseqs.setdefault(_commit_dir_of(f), seq)
-            dseqs = {d: s for d, s in dseqs.items() if d in live_dirs}
-            # spec each dir was written under (partition-spec evolution):
-            # the write-time sidecar wins; sidecar-less dirs default to
-            # the spec this snapshot publishes (pre-evolution behavior)
-            dspecs = dict(parent.dir_specs) if parent else {}
-            for f in added_files or []:
-                d = _commit_dir_of(f)
-                if d not in dspecs:
-                    side = spec_sidecars.get(d)
-                    dspecs[d] = list(side) if side is not None else list(spec)
-            dspecs = {d: s for d, s in dspecs.items() if d in live_dirs}
+            layouts = {
+                d: r
+                for d, r in (parent.layouts.items() if parent else ())
+                if d in live_dirs
+            }
+            new_dirs = added_dirs - set(layouts)
+            if new_dirs:
+                names = _schema_names(df_schema_json)
+                unmapped = [n for n in names if n not in field_ids]
+                default_mapping = {
+                    str(field_ids[n]): n for n in names if n in field_ids
+                }
+                for d in new_dirs:
+                    side = sidecars.get(d)
+                    if side is None and unmapped:
+                        raise CommitConflict(
+                            f"schema changed between write and publish "
+                            f"(columns {unmapped} are not in the current "
+                            f"schema) and no write-time mapping was staged"
+                        )
+                    wspec = spec_sidecars.get(d)
+                    layouts[d] = DirLayout(
+                        side or default_mapping,
+                        seq,
+                        list(spec if wspec is None else wspec),
+                    )
             # Column bounds: inherit the parent's per-file stats, add the
             # new files' (sidecar physical names resolved to field ids
             # through the dir's mapping), prune to the live manifest.
@@ -1487,7 +1533,8 @@ class IceTable:
                 per = stats_sidecars.get(d, {}).get(f)
                 if not per:
                     continue
-                inv = {phys: fid for fid, phys in (mappings.get(d) or {}).items()}
+                mapping = _layout_of(layouts, d, spec).mapping or {}
+                inv = {phys: fid for fid, phys in mapping.items()}
                 conv = {
                     inv[phys]: bounds
                     for phys, bounds in per.items()
@@ -1581,12 +1628,10 @@ class IceTable:
                 summary=summ,
                 field_ids=field_ids,
                 next_field_id=next_id,
-                file_mappings=mappings,
                 partition_spec=spec,
                 delete_files=dels,
                 eq_delete_files=eq_dels,
-                dir_seqs=dseqs,
-                dir_specs=dspecs,
+                layouts=layouts,
                 file_stats=fstats,
                 properties=props,
                 field_defaults=dfl,
@@ -1709,8 +1754,7 @@ class IceTable:
         if not side:
             return None
         fid = str(snap.field_ids.get(col, ""))
-        phys = (snap.file_mappings.get(d) or {}).get(fid, col)
-        return side.get(rel, {}).get(phys)
+        return side.get(rel, {}).get(snap.layout(d).physical(fid, col))
 
     def _harvest_column_stats(self, rel_files: list[str]) -> dict:
         """Per-file column min/max from the just-written parquet footers:
@@ -1952,7 +1996,7 @@ class IceTable:
         missing: list[str] = []
         for rel in snap.manifest:
             d = _commit_dir_of(rel)
-            phys = (snap.file_mappings.get(d) or {}).get(fid, col)
+            phys = snap.layout(d).physical(fid, col)
             side = self._load_ndv_sidecar(d)
             b64 = side.get(rel, {}).get(phys)
             if b64 is not None:
@@ -2143,8 +2187,8 @@ class IceTable:
 
         - ``field_ids`` (the WRITE-time logical-name -> id map) stages a
           ``_write_mapping.json`` recording the physical name each id was
-          written under. ``_publish`` prefers it when stamping
-          ``file_mappings`` — the record that keeps a staged append
+          written under. ``_publish`` prefers it when building the
+          dir's layout record — the record that keeps a staged append
           resolvable when a rename/drop commits between write and publish
           (publish-time ids would stamp the wrong names and the columns
           would silently read back as NULL).
@@ -2646,10 +2690,10 @@ class IceTable:
         # arbitrarily expensive (a changelog aggregation, a table scan);
         # uncheckpointed it would re-execute for the dupe check, the
         # distinct-keys probe, and the data write. Materialized once
-        # when (and only when) the lineage is non-trivial (r12, r11
-        # verdict item 3): a filter-shaped delta is cheaper to recompute
-        # than to checkpoint, and the gate keeps the checkpoint's fixed
-        # cost off the tiny-delta fast path.
+        # when (and only when) the lineage is non-trivial: a
+        # filter-shaped delta is cheaper to recompute than to
+        # checkpoint, and the gate keeps the checkpoint's fixed cost off
+        # the tiny-delta fast path.
         updates = _materialize_if_costly(updates)
         dupes = (
             updates.groupBy(*key_cols).count().where(F.col("count") > 1).limit(1).count()
@@ -2778,7 +2822,6 @@ class IceTable:
         # its lineage re-executes for every downstream consumer (dupe
         # check, the classify join, the insert anti-join, the write) —
         # materialize once, but only when the lineage is non-trivial
-        # (r12, r11 verdict item 3)
         source = _materialize_if_costly(source)
         dupes = (
             source.groupBy(*key_cols).count()
@@ -3034,8 +3077,8 @@ class IceTable:
         import shutil as _shutil
 
         # The matched scan feeds two writes (coordinates, updated rows).
-        # NOT localCheckpoint-ed (r12, r11 verdict item 3): "O(matched
-        # rows)" is not delta-bounded here — a broad predicate matches a
+        # NOT localCheckpoint-ed: "O(matched rows)" is not
+        # delta-bounded here — a broad predicate matches a
         # table-sized frame, and an eager checkpoint would pin it to
         # executor-local disk (lost on executor failure, no eviction).
         # A plain persist() is the bounded escape hatch: it spills to
@@ -3232,12 +3275,10 @@ class IceTable:
                 summary={"operation_detail": f"rollback_to {snapshot_id}"},
                 field_ids=dict(target.field_ids),
                 next_field_id=max(target.next_field_id, parent.next_field_id),
-                file_mappings=dict(target.file_mappings),
                 partition_spec=list(target.partition_spec),
                 delete_files=list(target.delete_files),
                 eq_delete_files=[list(e) for e in target.eq_delete_files],
-                dir_seqs=dict(target.dir_seqs),
-                dir_specs=dict(target.dir_specs),
+                layouts=dict(target.layouts),
                 file_stats=dict(target.file_stats),
                 # restore the ancestor's properties with its state (a
                 # rollback undoes config changes too)
@@ -3661,7 +3702,7 @@ class IceTable:
             if f in deleted_refs
             or (
                 eq_max is not None
-                and int(snap.dir_seqs.get(_commit_dir_of(f), 0)) < eq_max
+                and snap.layout(_commit_dir_of(f)).seq < eq_max
             )
             or int(
                 snap.file_stats.get(f, {}).get("__rows__")
@@ -4062,20 +4103,18 @@ class IceTable:
     def _read_files(
         self,
         files: list[str],
-        schema: StructType | None = None,
+        snap: Snapshot,
         *,
-        field_ids: dict | None = None,
-        file_mappings: dict | None = None,
-        partition_spec: list | None = None,
-        dir_specs: dict | None = None,
-        field_defaults: dict | None = None,
+        layouts: dict | None = None,
         with_pos: bool = False,
     ) -> DataFrame:
-        """Read data files resolving columns BY FIELD ID: each file group's
-        physical column names come from its commit's ``file_mappings``
-        entry, aliased back to the snapshot's logical names. Groups are
-        keyed by the resolved physical-name tuple, so a table that never
-        renamed anything stays ONE parquet scan (one relation, full
+        """Read data files under ``snap``'s schema resolving columns BY
+        FIELD ID: each file group's physical column names come from its
+        commit dir's layout record, aliased back to the snapshot's
+        logical names. ``layouts`` replaces the snapshot's records (a
+        change read, whose files were added by several snapshots). Groups
+        are keyed by the resolved physical-name tuple, so a table that
+        never renamed anything stays ONE parquet scan (one relation, full
         pushdown); after a rename the plan is a union of one scan per
         distinct write-schema — bounded by the number of schema changes,
         not the number of files. Columns the mapping lacks (added after
@@ -4083,18 +4122,7 @@ class IceTable:
         logical field claims (dropped, or a retired id under a re-added
         name) are never selected — which is what makes
         add/drop/rename_column metadata-only and resurrection-proof."""
-        if schema is None or field_ids is None or partition_spec is None:
-            snap = self.current_snapshot()
-            if snap is None:
-                raise NoSuchTableError(self.path)
-            schema = schema or StructType.fromJson(json.loads(snap.schema_json))
-            field_ids = field_ids if field_ids is not None else snap.field_ids
-            if file_mappings is None:
-                file_mappings = snap.file_mappings
-            if partition_spec is None:
-                partition_spec = snap.partition_spec
-            if dir_specs is None:
-                dir_specs = snap.dir_specs
+        schema = StructType.fromJson(json.loads(snap.schema_json))
         if not files:
             df = self.spark.createDataFrame([], schema)
             if with_pos:
@@ -4102,19 +4130,11 @@ class IceTable:
                     "__pos", F.lit(None).cast("long")
                 )
             return df
-        file_mappings = file_mappings or {}
-        partition_spec = partition_spec or []
         from pyspark.sql.types import StructField
 
-        # Legacy fallback (no mapping recorded): physical name == logical.
-        default_key = tuple(f.name for f in schema.fields)
-
-        def _resolved(m):
-            return (
-                default_key
-                if m is None
-                else tuple(m.get(str(field_ids.get(fld.name))) for fld in schema.fields)
-            )
+        field_ids = snap.field_ids
+        layouts = snap.layouts if layouts is None else layouts
+        fids = [str(field_ids.get(fld.name)) for fld in schema.fields]
 
         # Partitioned tables read per commit dir: partition columns live in
         # the hive-style paths, so each read needs that dir as basePath for
@@ -4124,17 +4144,20 @@ class IceTable:
         # physical layout instead, which collapses a never-renamed table to
         # ONE scan over all commits.
         groups: dict = {}
-        dir_specs = dir_specs or {}
+        group_of: dict = {}  # commit dir -> its group key
         for f in files:
             d = _commit_dir_of(f)
-            # spec evolution: each dir reads under the spec it was
-            # WRITTEN with (dir_specs), not the snapshot's current one
-            dspec = dir_specs.get(d, partition_spec)
-            key = _resolved(file_mappings.get(d))
-            if dspec:
-                groups.setdefault((d, key), []).append(f)
-            else:
-                groups.setdefault((None, key), []).append(f)
+            g = group_of.get(d)
+            if g is None:
+                # spec evolution: each dir reads under the spec it was
+                # WRITTEN with, not the snapshot's current one
+                rec = _layout_of(layouts, d, snap.partition_spec)
+                key = tuple(
+                    rec.physical(fid, fld.name)
+                    for fid, fld in zip(fids, schema.fields)
+                )
+                g = group_of[d] = (d if rec.spec else None, key)
+            groups.setdefault(g, []).append(f)
         parts = []
         for (d, key), fs in groups.items():
             paths = [os.path.join(self.path, p) for p in fs]
@@ -4157,7 +4180,7 @@ class IceTable:
                     "basePath", os.path.join(self.data_dir, d)
                 )
             df = reader.parquet(*paths)
-            dfl = field_defaults or {}
+            dfl = snap.field_defaults or {}
 
             def _absent(fld):
                 # column added after this file was written: initial-
@@ -4231,9 +4254,7 @@ class IceTable:
         # spec evolution: prune each file under the spec its COMMIT DIR
         # was written with, not the snapshot's current one (cached per dir)
         def _dir_layout(d: str):
-            spec_fields = _parse_spec(
-                (snap.dir_specs or {}).get(d, snap.partition_spec or [])
-            )
+            spec_fields = _parse_spec(snap.layout(d).spec)
             identity = {
                 sf.source for sf in spec_fields if sf.transform == "identity"
             }
@@ -4672,7 +4693,7 @@ class IceTable:
             *[
                 x
                 for d in sorted(dirs)
-                for x in (F.lit(d), F.lit(int(snap.dir_seqs.get(d, 0))))
+                for x in (F.lit(d), F.lit(snap.layout(d).seq))
             ]
         ) if dirs else F.create_map()
         out = (
@@ -4728,14 +4749,7 @@ class IceTable:
         outside the subset simply never match."""
         need_pos = with_pos or snap.pending_deletes
         df = self._read_files(
-            snap.manifest if files is None else files,
-            StructType.fromJson(json.loads(snap.schema_json)),
-            field_ids=snap.field_ids,
-            file_mappings=snap.file_mappings,
-            partition_spec=snap.partition_spec,
-            dir_specs=snap.dir_specs,
-            field_defaults=snap.field_defaults,
-            with_pos=need_pos,
+            snap.manifest if files is None else files, snap, with_pos=need_pos
         )
         if snap.delete_files:
             # rename to reserved names before joining: the DATA schema may
@@ -4772,20 +4786,13 @@ class IceTable:
 
         inv = {int(v): k for k, v in snap.field_ids.items()}
         dir_col = F.regexp_extract(F.col("__file"), "^data/([^/]+)/", 1)
-        if snap.dir_seqs:
-            seq_map = F.create_map(
-                *[
-                    x
-                    for d, s in snap.dir_seqs.items()
-                    for x in (F.lit(d), F.lit(int(s)))
-                ]
-            )
-            # dirs older than the feature have no recorded sequence:
-            # treat as 0 (older than every delete) — conservative-correct
-            seq_col = F.coalesce(seq_map[dir_col], F.lit(0))
-        else:
-            seq_col = F.lit(0)
-        df = df.withColumn("__dirseq", seq_col)
+        dirs = sorted({_commit_dir_of(f) for f in snap.manifest})
+        seq_map = F.create_map(
+            *[x for d in dirs for x in (F.lit(d), F.lit(snap.layout(d).seq))]
+        )
+        # a file outside data/<dir>/ has no commit dir the pattern can
+        # name: it reads as the oldest, like a dir without a record
+        df = df.withColumn("__dirseq", F.coalesce(seq_map[dir_col], F.lit(0)))
         for paths, fids, dseq in snap.eq_delete_files:
             names = [inv.get(int(f)) for f in fids]
             if any(n is None for n in names):
@@ -4891,7 +4898,7 @@ class IceTable:
         if snap is None:
             return []
         return [list(snap.partition_spec or [])] + [
-            list(s) for s in (snap.dir_specs or {}).values()
+            snap.layout(d).spec for d in snap.layouts
         ]
 
     def _derived_pnames(self) -> set:
@@ -4909,8 +4916,8 @@ class IceTable:
         """Partition-spec EVOLUTION (Iceberg ``ALTER TABLE ... ADD/DROP
         PARTITION FIELD``): metadata-only — commits from here on write
         the new layout while every existing commit dir keeps reading,
-        pruning, and CDC-ing under the spec it was written with
-        (``dir_specs``). No data file is touched; compaction gradually
+        pruning, and CDC-ing under the spec it was written with (its
+        layout record). No data file is touched; compaction gradually
         migrates old dirs to the current layout since its rewrites use
         the current spec. Validation matches :meth:`create`."""
         if not self.exists():
@@ -5092,8 +5099,7 @@ class IceTable:
         name — still resolves through its commit's id->physical-name
         mapping. No data file is touched; time travel to pre-rename
         snapshots still reads under the old name (each snapshot pins its
-        own schema + ids). This is the field-id indirection the format
-        previously documented as a limitation (VERDICT r3 §missing-4)."""
+        own schema + ids)."""
         from pyspark.sql.types import StructField
 
         schema = self.schema()
@@ -5198,12 +5204,13 @@ class IceTable:
 
     def _append_range(
         self, start_snapshot_id: int | None, end_snapshot_id: int | None
-    ) -> tuple[Snapshot, list[str], dict, dict]:
-        """``(ctx, files, mappings, specs)`` of an append-only change
-        range: the context snapshot (see :meth:`_snapshot_range`), the
-        data files the range's snapshots added, and each added commit
-        dir's physical-name mapping and partition spec as the snapshot
-        that added it records them (:func:`_note_added_layouts`). An
+    ) -> tuple[Snapshot, list[str], dict]:
+        """``(ctx, files, dirs)`` of an append-only change range: the
+        context snapshot (see :meth:`_snapshot_range`), the data files
+        the range's snapshots added, and each added commit dir's layout
+        record as the snapshot that added it resolves it — the context
+        snapshot may no longer hold it (a later compaction dropped the
+        dir) or may hold a newer spec. An
         'overwrite', 'delete', 'merge' or 'rollback' in range raises —
         merge-on-read deletes and upserts remove rows without an
         overwrite commit, so the diff is no longer append-only; a
@@ -5211,8 +5218,7 @@ class IceTable:
         incremental read skips rewrite snapshots."""
         ctx, walk = self._snapshot_range(start_snapshot_id, end_snapshot_id)
         files: list[str] = []
-        mappings: dict = {}
-        specs: dict = {}
+        dirs: dict = {}
         for snap, _parent in walk:
             if snap.operation in ("overwrite", "delete", "merge", "rollback"):
                 raise ValueError(
@@ -5222,8 +5228,10 @@ class IceTable:
                 )
             if snap.operation != "replace":
                 files.extend(snap.added_files)
-                _note_added_layouts(snap, mappings, specs)
-        return ctx, files, mappings, specs
+                dirs.update(
+                    (d, snap.layout(d)) for d in map(_commit_dir_of, snap.added_files)
+                )
+        return ctx, files, dirs
 
     def scan_changes(
         self,
@@ -5248,21 +5256,11 @@ class IceTable:
         snapshot's schema: the end snapshot, or the newest one (see
         :meth:`_snapshot_range`). The Flight ``get_changes`` ticket
         serves the same range walk."""
-        ctx, files, mappings, specs = self._append_range(
-            start_snapshot_id, end_snapshot_id
-        )
+        ctx, files, dirs = self._append_range(start_snapshot_id, end_snapshot_id)
         preds = _normalize_predicates(where)
         if preds:
             files = self._prune_files(ctx, files, preds)
-        df = self._read_files(
-            files,
-            StructType.fromJson(json.loads(ctx.schema_json)),
-            field_ids=ctx.field_ids,
-            file_mappings=mappings,
-            partition_spec=ctx.partition_spec,
-            dir_specs=specs,
-            field_defaults=ctx.field_defaults,
-        )
+        df = self._read_files(files, ctx, layouts=dirs)
         return df.where(_predicates_to_column(preds)) if preds else df
 
     def _align_snapshot_columns(
@@ -5305,16 +5303,7 @@ class IceTable:
             if with_lineage:
                 out = out.withColumn("_row_id", F.lit(None).cast("long"))
             return out
-        data = self._read_files(
-            refs,
-            schema,
-            field_ids=snap.field_ids,
-            file_mappings=snap.file_mappings,
-            partition_spec=snap.partition_spec,
-            dir_specs=snap.dir_specs,
-            field_defaults=snap.field_defaults,
-            with_pos=True,
-        )
+        data = self._read_files(refs, snap, with_pos=True)
         dels = (
             self.spark.read.schema("file_path string, pos long")
             .parquet(*[os.path.join(self.path, f) for f in new_delete_files])
@@ -5399,8 +5388,7 @@ class IceTable:
         ctx, walk = self._snapshot_range(start_snapshot_id, end_snapshot_id)
         insert_files: list[str] = []
         insert_parts: list[tuple[int, list[str]]] = []
-        insert_mappings: dict = {}
-        insert_specs: dict = {}
+        insert_dirs: dict = {}
         ins_lineage: dict = {}
         delete_parts: list[tuple[Snapshot, list[str]]] = []
         eq_parts: list[tuple[Snapshot, Snapshot | None, list]] = []
@@ -5415,7 +5403,9 @@ class IceTable:
                 insert_files.extend(snap.added_files)
                 if snap.added_files:
                     insert_parts.append((snap.sequence, snap.added_files))
-                _note_added_layouts(snap, insert_mappings, insert_specs)
+                insert_dirs.update(
+                    (d, snap.layout(d)) for d in map(_commit_dir_of, snap.added_files)
+                )
                 for f in snap.added_files:
                     # row-id block starts, captured from the PRODUCING
                     # snapshot (a later compaction may have dropped
@@ -5453,14 +5443,7 @@ class IceTable:
 
         def _insert_df(files):
             df = self._read_files(
-                files,
-                schema,
-                field_ids=ctx.field_ids,
-                file_mappings=insert_mappings,
-                partition_spec=ctx.partition_spec,
-                dir_specs=insert_specs,
-                field_defaults=ctx.field_defaults,
-                with_pos=with_lineage,
+                files, ctx, layouts=insert_dirs, with_pos=with_lineage
             )
             if with_lineage:
                 df = self._lineage_join(df, ins_lineage, files).drop(

@@ -19,6 +19,14 @@ import icerunner_spark.table as table_mod
 from icerunner_spark.matview import IncrementalAggView
 from icerunner_spark.operators.ann_index import IncrementalAnnIndex
 from icerunner_spark.table import CommitConflict, IceTable
+from tests.inline_layout_maps import (
+    MAP_KEYS,
+    carries_maps,
+    layout_rich_table,
+    more_rows,
+    rewrite_with_inline_maps,
+    rows,
+)
 
 
 def _rows(lo: int, hi: int) -> pa.Table:
@@ -100,7 +108,7 @@ def test_range_reads_parse_only_their_range(spark, warehouse, parses):
 
     table_mod._snapshot_cache.clear()
     parses.clear()
-    ctx, files, _m, _s = t._append_range(start.snapshot_id, None)
+    ctx, files, _dirs = t._append_range(start.snapshot_id, None)
     assert ctx == snaps[-1]
     assert files == [f for s in snaps[-10:] for f in s.added_files]
     assert len(parses) <= 11
@@ -119,6 +127,16 @@ def test_range_reads_parse_only_their_range(spark, warehouse, parses):
     parses.clear()
     assert t.snapshot_by_id(snaps[-1].parent_id) == snaps[-2]
     assert len(parses) <= 2
+
+    # a snapshot file holds its refs and its own delta: the per-dir
+    # layout records live in the segments, not in every file
+    texts = {}
+    for seq in (50, 300):
+        with open(t._snapshot_path(seq)) as f:
+            texts[seq] = f.read()
+    assert len(texts[300]) <= len(texts[50]) + 1024
+    for text in texts.values():
+        assert not any(k in text for k in MAP_KEYS)
 
 
 def test_reused_sequence_after_failed_fast_forward_is_reparsed(
@@ -246,6 +264,23 @@ def test_branch_fork_of_legacy_snapshot_reseeds_segment(spark, warehouse):
     t.fast_forward("audit")
     assert _formats(t.metadata_dir) == {None, 2}
     assert t.scan().count() == 5
+
+    # a slim head that carries the per-dir maps inline (see
+    # tests/inline_layout_maps.py): the fork reseeds it into one segment
+    # with every layout record, and the fast-forward publishes it back
+    t = layout_rich_table(spark, warehouse + "/maps")
+    want = rows(t.scan())
+    head = t.current_snapshot()
+    rewrite_with_inline_maps(t)
+    b = t.create_branch("audit")
+    fork = os.path.join(b.metadata_dir, f"snap-{head.sequence}.json")
+    assert not carries_maps(fork)
+    assert len(json.load(open(fork))["segments"]) == 1
+    assert rows(b.scan()) == want
+    b.append(more_rows(spark, 30, 31))
+    t.fast_forward("audit")
+    assert rows(t.scan()) == sorted(want + [(30, "c30", "z")])
+    assert rows(t.scan(snapshot_id=head.snapshot_id)) == want
 
 
 def test_cache_is_thread_safe_under_eviction(spark, warehouse):

@@ -10,6 +10,13 @@ import os
 from pyspark.sql import functions as F
 
 from icerunner_spark.table import IceTable
+from tests.inline_layout_maps import (
+    carries_maps,
+    layout_rich_table,
+    more_rows,
+    rewrite_with_inline_maps,
+    rows,
+)
 
 
 def _snap_file(t: IceTable):
@@ -31,12 +38,16 @@ def test_commit_metadata_is_o_delta(spark, warehouse):
         )
         sizes.append(os.path.getsize(_snap_file(t)))
     # manifest grows 2 files per commit (32 total), but each snapshot
-    # JSON stores only segment REFS — growth per commit is a ~50-byte
-    # ref, not a full manifest copy. A full-format snapshot here is
-    # several KB of paths+stats per commit and grows linearly by ~1KB.
+    # JSON stores only segment REFS — the file grows by one ref per
+    # commit, not by a manifest copy or a per-dir layout record. A
+    # full-format snapshot here is several KB of paths+stats per commit
+    # and grows linearly by ~1KB.
     d = json.load(open(_snap_file(t)))
     assert d["format"] == 2 and len(d["segments"]) == 16
-    assert sizes[-1] - sizes[0] < 16 * 120  # refs only, far below 1KB/commit
+    ref = len(json.dumps(d["segments"][-1])) + len(", ")
+    # 14 more refs than the first append's file, plus a few digits of
+    # growing counters (sequence, totals, next row id)
+    assert sizes[-1] - sizes[0] <= 14 * ref + 16
     # reconstruction is exact
     assert len(t.current_snapshot().manifest) == 32
     assert t.scan().count() == 1600
@@ -79,6 +90,32 @@ def test_legacy_full_format_parent_interop(spark, warehouse):
     d = json.load(open(_snap_file(t)))
     assert d["format"] == 2
     assert t.scan().count() == 300
+
+    # a slim log whose files carry the per-dir maps inline and whose
+    # segments carry no layout records: the mapping, the spec and the
+    # sequence of its dirs each change the rows read
+    t = layout_rich_table(spark, warehouse + "/maps")
+    want = rows(t.scan())
+    assert (1, "b1", "z") in want and (0, "a0", "x") in want
+    assert all(k != 1 or w == "b1" for k, w, _p in want)
+    head = t.current_snapshot().snapshot_id
+    rewrite_with_inline_maps(t)
+    assert carries_maps(_snap_file(t))
+    assert rows(t.scan()) == want
+    t.create_tag("maps", head)
+    # the next commit reseeds the head into one segment with every record
+    t.append(more_rows(spark, 20, 22))
+    assert not carries_maps(_snap_file(t))
+    assert len(json.load(open(_snap_file(t)))["segments"]) == 2
+    grown = sorted(want + [(20, "c20", "z"), (21, "c21", "z")])
+    assert rows(t.scan()) == grown
+    t.compact(target_file_rows=1000)
+    assert rows(t.scan()) == grown
+    t.expire_snapshots(keep_last=1)
+    t._gc_segments(t.snapshots(), min_age_s=0)
+    assert rows(t.scan()) == grown
+    # time travel to the rewritten head still finds its segments
+    assert rows(t.scan(snapshot_id=head)) == want
 
 
 def test_rollback_past_consolidation_covers_manifest(spark, warehouse):
