@@ -23,11 +23,12 @@ index as its own :class:`IceTable`:
   cursor only advances on the final commit and both operations are
   idempotent for the same delta.
 
-Query-side, ``topk`` scores the probed cells' vectors with the same
-codegen'd cosine the brute-force baseline uses; with
-``n_probe = n_centroids`` the result is EXACT (equals brute force over
-the base table) — the property the oracle-paired registry query pins,
-while recall at partial probe is pinned in tests.
+Query-side, ``topk`` is one more candidate generator in front of the
+exact rescore every similarity top-k shares
+(operators.similarity._rescore): the probed cells' partitions are the
+candidates. With ``n_probe = n_centroids`` the result is EXACT (equals
+brute force over the base table) — the property the oracle-paired
+registry query pins, while recall at partial probe is pinned in tests.
 """
 
 from __future__ import annotations
@@ -38,9 +39,11 @@ import json
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from icerunner_spark.functions.vector import cosine_similarity
 from icerunner_spark.operators.similarity import (
+    _as_double_array,
     _deterministic_centroids,
+    _nearest_cells,
+    _rescore,
     ivf_assign,
 )
 from icerunner_spark.table import IceTable, NoSuchTableError
@@ -94,10 +97,7 @@ class IncrementalAnnIndex:
     def _assigned(self, df: DataFrame, cents) -> DataFrame:
         return ivf_assign(
             df.select(
-                F.col(self.id_col),
-                F.transform(F.col(self.vec_col), lambda x: x.cast("double")).alias(
-                    self.vec_col
-                ),
+                F.col(self.id_col), _as_double_array(self.vec_col).alias(self.vec_col)
             ),
             cents,
             vec_col=self.vec_col,
@@ -209,25 +209,16 @@ class IncrementalAnnIndex:
         planning (zero IO). ``n_probe=None`` probes everything — exact
         search through the index, the oracle-comparable mode."""
         cents = self.centroids()
-        if n_probe is None or n_probe >= len(cents):
-            probed = None
-        else:
-            scored = sorted(
-                range(len(cents)),
-                key=lambda c: -sum(a * b for a, b in zip(query_vec, cents[c])),
-            )
-            probed = scored[:n_probe]
+        probed = (
+            _nearest_cells(query_vec, cents, len(cents) if n_probe is None else n_probe)
+            if cents
+            else []
+        )
         df = (
             self.index.scan(where=[("cell", "in", probed)])
-            if probed is not None
+            if len(probed) < len(cents)
             else self.index.scan()
         )
-        qarr = F.array(*[F.lit(float(x)) for x in query_vec])
-        return (
-            df.select(
-                F.col(self.id_col),
-                cosine_similarity(F.col(self.vec_col), qarr).alias("cos_sim"),
-            )
-            .orderBy(F.desc("cos_sim"), F.asc(self.id_col))
-            .limit(k)
+        return _rescore(
+            df, query_vec, vec_col=self.vec_col, id_cols=(self.id_col,), k=k
         )

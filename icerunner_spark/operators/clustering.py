@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from icerunner_spark.operators.similarity import _as_double_array
+
 __all__ = [
     "seed_centroids",
     "assign_clusters",
@@ -34,11 +36,6 @@ __all__ = [
     "kmeans",
     "cluster_balanced_sample",
 ]
-
-
-def _as_double(vec_col) -> Column:
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(c, lambda x: x.cast("double"))
 
 
 def _dist2_lit(vec: Column, centroid: list[float]) -> Column:
@@ -59,7 +56,7 @@ def seed_centroids(
     """The k vectors with the smallest md5(id): deterministic,
     engine-portable seeding (bounded k-row collect)."""
     rows = (
-        df.select(_as_double(vec_col).alias("__v"))
+        df.select(_as_double_array(vec_col).alias("__v"))
         .where(F.col("__v").isNotNull())
         .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
         .limit(k)
@@ -79,13 +76,13 @@ def assign_clusters(
     """Nearest-centroid assignment as one Catalyst expression: an array
     of (dist2, index) structs reduced by array_min (lexicographic struct
     order = min distance, ties to the lowest index). NULL or
-    wrong-length vectors assign NULL, never fail (ADVICE r4: dirty
-    embedding data must degrade, not crash). Scales per-row; for large
+    wrong-length vectors assign NULL, never fail (dirty embedding data
+    must degrade, not crash). Scales per-row; for large
     k prefer ivf_assign's matmul."""
     if not centroids:
         raise ValueError("assign_clusters needs at least one centroid")
     dim = len(centroids[0])
-    v = _as_double(vec_col)
+    v = _as_double_array(vec_col)
     best = F.array_min(
         F.array(
             *[
@@ -113,7 +110,7 @@ def lloyd_step(
     rows keeps its previous centroid. Driver transfer: k x dim rows."""
     dim = len(centroids[0])
     assigned = assign_clusters(
-        df.select(_as_double(vec_col).alias("__v")),
+        df.select(_as_double_array(vec_col).alias("__v")),
         centroids,
         vec_col="__v",
         out_col="__c",

@@ -386,32 +386,6 @@ def banded_pairs(
 # --------------------------------------------------------------------------- #
 
 
-_MAX_LONG = (1 << 63) - 1
-
-
-def minhash_signature(text_col: str, *, n_hashes: int = 64, shingle: int = 5) -> Column:
-    """array<bigint> MinHash signature: element i = min over shingles of
-    xxhash64(shingle, seed=i).
-
-    Single fold over the shingle array: acc starts as [MAX_LONG]*k and each
-    shingle zips in via least(acc_i, xxhash64(g, i)). One pass — the naive
-    formulation (k independent ``array_min(transform(grams, ...))``) makes
-    Catalyst re-derive the shingle array k times per row (no CSE across
-    array lambdas), which measured ~300x slower at sf0.1."""
-    grams = F.array_distinct(char_ngrams(text_col, shingle))
-    init = F.array_repeat(F.lit(_MAX_LONG), n_hashes)
-    seeds = list(range(n_hashes))
-
-    def fold(acc: Column, g: Column) -> Column:
-        return F.zip_with(
-            acc,
-            F.array(*[F.xxhash64(g, F.lit(s)) for s in seeds]),
-            lambda a, h: F.least(a, h),
-        )
-
-    return F.aggregate(grams, init, fold)
-
-
 def ngram_sets(
     df: DataFrame, id_col: str, text_col: str, *, shingle: int = 5,
     hashed: bool = False, engine: str = "arrow",
@@ -704,22 +678,6 @@ def minhash_neardup_pairs(
 # --------------------------------------------------------------------------- #
 # SimHash
 # --------------------------------------------------------------------------- #
-
-
-def simhash64(text_col: str) -> Column:
-    """64-bit SimHash over token hashes: bit b is set iff more than half the
-    tokens have bit b set in xxhash64(token). Column-expression form (64
-    interpreted array filters) — fine for ad-hoc use on small frames; the
-    pipeline path is :func:`simhash_signatures`, the codegen formulation."""
-    toks = F.array_distinct(tokens(text_col))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    n = F.size(hashes)
-    bits = []
-    for b in range(64):
-        mask = F.lit(1 << b if b < 63 else -(2**63))
-        cnt = F.size(F.filter(hashes, lambda h: h.bitwiseAND(mask) != 0))
-        bits.append(F.when(cnt * 2 > n, mask).otherwise(F.lit(0)))
-    return functools.reduce(operator.add, bits).cast("long")
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

@@ -148,15 +148,3 @@ def user_value_trends_vectorized(
         .sortWithinPartitions("user_id", time_col)
     )
     return src.mapInPandas(fit_partition, schema=_TREND_SCHEMA)
-
-
-def grouped_apply(
-    df: DataFrame,
-    keys: Iterable[str],
-    fn,
-    schema: StructType | str,
-) -> DataFrame:
-    """Thin generic wrapper: groupBy(keys).applyInPandas(fn, schema) with
-    the scale contract documented once — fn receives one pandas frame per
-    group, must return a pandas frame matching schema."""
-    return df.groupBy(*keys).applyInPandas(fn, schema=schema)

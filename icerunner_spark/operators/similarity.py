@@ -1,16 +1,29 @@
 """Similarity search over embedding columns (SURVEY.md §2.C).
 
-Two paths:
+Every single-query top-k is a candidate generator followed by ONE exact
+rescore (:func:`_rescore`): cosine against the literal query, a
+codegen'd zip_with/aggregate fold, then top-k by (cos_sim desc, ids asc)
+as TakeOrderedAndProject (per-partition heaps + a driver merge of k
+rows, no global sort). The generators differ only in which rows reach
+the rescore:
 
-- **Brute-force cosine top-k** — the exact baseline. Scoring is a
-  codegen'd zip_with/aggregate against a broadcast query vector; top-k is
-  TakeOrderedAndProject (per-partition heaps + driver merge of k rows —
-  no global sort). At 100 TB this is a full scan, but a *scan-speed* one.
-- **Random-hyperplane LSH (SimHash for vectors)** — the scale path. H
-  seeded hyperplanes -> H-bit signature -> search only candidates whose
-  signature matches the query's bucket (optionally multi-probe hamming-1
-  neighborhoods). Recall is tunable via (n_planes, n_probes); candidates
-  are re-scored exactly, so precision is 1.
+- **brute force** (:func:`cosine_topk`): every row — the exact baseline,
+  a full scan at scan speed;
+- **random-hyperplane LSH** (:func:`ann_lsh_topk`): rows whose H-bit
+  signature lies within ``probe_hamming`` bit flips of the query's;
+- **IVF** (:func:`ivf_topk`): rows in the ``n_probe`` cells whose
+  centroids are nearest the query;
+- **PQ** (:func:`pq_topk`): the ``k * rerank`` rows with the best
+  asymmetric distance over their product-quantized codes;
+- **persisted IVF index** (``operators.ann_index``): the probed cells'
+  partitions, pruned at planning.
+
+Because the rescore is exact, precision is 1 and recall depends only on
+the candidate set: a generator that passes every row returns brute
+force's answer. int8 quantization (:func:`quantize_embeddings`) narrows
+what candidate generation moves. The batch operators (:func:`knn_join`,
+:func:`cosine_neardup_pairs`) share the LSH signature and the
+normalize-once projection (:func:`_unit_vectors`).
 
 Hyperplanes are generated from a fixed seed driver-side (tiny: H x dim
 floats) and broadcast as literals — deterministic across runs and engines.
@@ -27,12 +40,38 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from icerunner_spark.functions.vector import cosine_similarity
+from icerunner_spark.functions.vector import cosine_similarity, dot, l2_norm
 
 
 def _as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.transform(c, lambda x: x.cast("double"))
+
+
+def _rescore(
+    cand: DataFrame,
+    query_vec: list[float],
+    *,
+    vec_col: str,
+    id_cols: tuple[str, ...],
+    k: int,
+) -> DataFrame:
+    """The exact stage every top-k ends in: cosine of each candidate
+    against the literal query, top k by (cos_sim desc, ids asc).
+    Returns (*id_cols, cos_sim)."""
+    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    scored = cand.select(
+        *id_cols,
+        cosine_similarity(_as_double_array(vec_col), q).alias("cos_sim"),
+    )
+    return scored.orderBy(F.desc("cos_sim"), *[F.asc(c) for c in id_cols]).limit(k)
+
+
+def _check_query_dim(query_vec: list[float], dim: int, index: str) -> None:
+    if len(query_vec) != dim:
+        raise ValueError(
+            f"query has dimension {len(query_vec)} but the {index} have dimension {dim}"
+        )
 
 
 def cosine_topk(
@@ -43,13 +82,9 @@ def cosine_topk(
     id_cols: tuple[str, ...] = ("vec_id",),
     k: int = 10,
 ) -> DataFrame:
-    """Exact top-k by cosine similarity against a literal query vector."""
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = df.select(
-        *id_cols,
-        cosine_similarity(_as_double_array(vec_col), q).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), *[F.asc(c) for c in id_cols]).limit(k)
+    """Exact top-k by cosine similarity against a literal query vector:
+    every row is a candidate."""
+    return _rescore(df, query_vec, vec_col=vec_col, id_cols=id_cols, k=k)
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -68,13 +103,21 @@ def lsh_signature(vec_col: Column | str, planes: list[list[float]]) -> Column:
     v = _as_double_array(vec_col)
     bits = []
     for p, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(x) for x in plane])
-        d = F.aggregate(F.zip_with(v, lit_plane, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
+        d = dot(v, F.array(*[F.lit(x) for x in plane]))
         bits.append(F.when(d >= 0, F.lit(1 << p)).otherwise(F.lit(0)))
     out = bits[0]
     for b in bits[1:]:
         out = out + b
     return out.cast("int")
+
+
+def _query_signature(query_vec: list[float], planes: list[list[float]]) -> int:
+    """Driver-side :func:`lsh_signature` of a literal query vector."""
+    return sum(
+        1 << p
+        for p, plane in enumerate(planes)
+        if sum(a * b for a, b in zip(query_vec, plane)) >= 0
+    )
 
 
 def _signature_probes(sig_value: int, n_planes: int, probe_hamming: int) -> list[int]:
@@ -117,27 +160,42 @@ def ann_lsh_topk(
     ``__lsh_sig``), enabling partition pruning when the table is written
     partitioned by signature — the on-disk layout a 100 TB deployment
     would use."""
-    dim = len(query_vec)
-    planes = _hyperplanes(dim, n_planes, seed)
-    # driver-side signature of the query (same math as lsh_signature)
-    sig = 0
-    for p, plane in enumerate(planes):
-        if sum(a * b for a, b in zip(query_vec, plane)) >= 0:
-            sig |= 1 << p
-    probes = _signature_probes(sig, n_planes, probe_hamming)
-
-    if "__lsh_sig" in df.columns:
-        cand = df.filter(F.col("__lsh_sig").isin(probes))
-    else:
-        cand = df.withColumn("__lsh_sig", lsh_signature(vec_col, planes)).filter(
-            F.col("__lsh_sig").isin(probes)
-        )
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
-    scored = cand.select(
-        *id_cols,
-        cosine_similarity(_as_double_array(vec_col), q).alias("cos_sim"),
+    planes = _hyperplanes(len(query_vec), n_planes, seed)
+    probes = _signature_probes(
+        _query_signature(query_vec, planes), n_planes, probe_hamming
     )
-    return scored.orderBy(F.desc("cos_sim"), *[F.asc(c) for c in id_cols]).limit(k)
+    if "__lsh_sig" not in df.columns:
+        df = df.withColumn("__lsh_sig", lsh_signature(vec_col, planes))
+    cand = df.filter(F.col("__lsh_sig").isin(probes))
+    return _rescore(cand, query_vec, vec_col=vec_col, id_cols=id_cols, k=k)
+
+
+def _dim_and_planes(
+    df: DataFrame, vec_col: str, n_planes: int, seed: int
+) -> tuple[int, list[list[float]]] | None:
+    """The first row's vector dimension and the hyperplanes sized to it,
+    or None for an empty frame (the caller returns its empty result)."""
+    row = df.select(F.size(_as_double_array(vec_col)).alias("d")).first()
+    if row is None:
+        return None
+    return row["d"], _hyperplanes(row["d"], n_planes, seed)
+
+
+def _unit_vectors(df: DataFrame, id_col: Column, vec_col: str) -> DataFrame:
+    """(id_col, v): each vector divided by its L2 norm ONCE (zero vectors
+    pass through unchanged), so every later pair pays a single dot
+    product instead of dot + 2 norms. It runs after spread_if_narrow,
+    which spreads the pair stage: embedding parquet is compact, so the
+    scan alone may give fewer partitions than cores (measured 20x on
+    local[32] at sf0.1)."""
+    from icerunner_spark.operators.spread import spread_if_narrow
+
+    v = _as_double_array(vec_col)
+    norm = l2_norm(v)
+    return spread_if_narrow(df).select(
+        id_col,
+        F.when(norm > 0, F.transform(v, lambda x: x / norm)).otherwise(v).alias("v"),
+    )
 
 
 def cosine_neardup_pairs(
@@ -160,33 +218,19 @@ def cosine_neardup_pairs(
     ~``block_size``-row blocks, the (nb * (nb+1) / 2) block pairs are
     enumerated by a broadcast range join and scored with one numpy
     ``V1 @ V2.T`` per pair of blocks inside an Arrow-batched stage.
-    Same O(n^2) work as the r6 pair-join formulation but at BLAS
-    throughput instead of ~3 us per interpreted fold (the r7 sf1 probe
+    Same O(n^2) work as a pair join scored by a fold, but at BLAS
+    throughput instead of ~3 us per interpreted fold (an sf1 probe
     measured the fold version at >600 s for 20k vectors; the matmul
     takes ~2 s) — which moves exact all-pairs from "demo only" to
     "feasible up to ~10M vectors"; beyond that the LSH/IVF candidate
     generators are the path regardless. Returns (id1, id2, cos_sim)."""
-    dim_row = df.select(F.size(_as_double_array(vec_col)).alias("d")).first()
-    if dim_row is None:
+    prelude = _dim_and_planes(df, vec_col, n_planes, seed)
+    if prelude is None:
         return df.sparkSession.createDataFrame([], "id1 long, id2 long, cos_sim double")
-    planes = _hyperplanes(dim_row["d"], n_planes, seed)
-
-    # Normalize each vector ONCE so every pair pays a single dot product
-    # instead of dot+2 norms. The repartition spreads the pair stage:
-    # embedding parquet is compact, so the scan alone may give fewer
-    # partitions than cores (measured 20x on local[32] at sf0.1).
-    from icerunner_spark.operators.spread import spread_if_narrow
-
-    v = _as_double_array(vec_col)
-    norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a_, x: a_ + x * x))
-    base = spread_if_narrow(df).select(
-        F.col(id_col).cast("long").alias("id"),
-        F.when(
-            norm > 0, F.transform(v, lambda x: x / norm)
-        ).otherwise(v).alias("v"),
-    )
+    dim, planes = prelude
+    base = _unit_vectors(df, F.col(id_col).cast("long").alias("id"), vec_col)
     if exact:
-        return _exact_block_matmul_pairs(base, threshold, dim_row["d"])
+        return _exact_block_matmul_pairs(base, threshold, dim)
     a = base.withColumn("__b", lsh_signature("v", planes)).select(
         F.col("id").alias("id1"), F.col("v").alias("v1"), F.col("__b").alias("b1")
     )
@@ -196,10 +240,7 @@ def cosine_neardup_pairs(
     joined = a.join(
         b, (F.col("b1") == F.col("b2")) & (F.col("id1") < F.col("id2"))
     )
-    dot = F.aggregate(
-        F.zip_with("v1", "v2", lambda x, y: x * y), F.lit(0.0), lambda a_, x: a_ + x
-    )
-    return joined.select("id1", "id2", dot.alias("cos_sim")).filter(
+    return joined.select("id1", "id2", dot("v1", "v2").alias("cos_sim")).filter(
         F.col("cos_sim") >= threshold
     )
 
@@ -350,40 +391,23 @@ def knn_join(
     per query. Recall pinned vs brute force in tests/test_operators.py."""
     from pyspark.sql import Window
 
-    dim_row = corpus.select(F.size(_as_double_array(vec_col)).alias("d")).first()
-    if dim_row is None:
+    prelude = _dim_and_planes(corpus, vec_col, n_planes, seed)
+    if prelude is None:
         return corpus.sparkSession.createDataFrame(
             [], f"{query_id_col} long, {corpus_id_col} long, cos_sim double, rn int"
         )
-    planes = _hyperplanes(dim_row["d"], n_planes, seed)
-    from icerunner_spark.operators.spread import spread_if_narrow
-
-    def _normed(df: DataFrame, id_col: str, out_id: str) -> DataFrame:
-        v = _as_double_array(vec_col)
-        norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a_, x: a_ + x * x))
-        return spread_if_narrow(df).select(
-            F.col(id_col).alias(out_id),
-            F.when(norm > 0, F.transform(v, lambda x: x / norm)).otherwise(v).alias("v"),
-        )
-
-    c = _normed(corpus, corpus_id_col, "c_id").select(
+    _, planes = prelude
+    c = _unit_vectors(corpus, F.col(corpus_id_col).alias("c_id"), vec_col).select(
         "c_id", F.col("v").alias("cv"), lsh_signature("v", planes).alias("sig")
     )
-    q = _normed(queries, query_id_col, "q_id_").withColumn(
+    q = _unit_vectors(queries, F.col(query_id_col).alias("q_id_"), vec_col).withColumn(
         "sig0", lsh_signature("v", planes)
     )
-    # all bit-flip masks within probe_hamming of the query signature —
-    # XOR with each mask enumerates the probe neighborhood (distinct
-    # masks => distinct probe sigs => no pair ever joins twice)
-    from itertools import combinations
-
-    masks = [0]
-    for h in range(1, probe_hamming + 1):
-        for flips in combinations(range(n_planes), h):
-            m = 0
-            for f in flips:
-                m |= 1 << f
-            masks.append(m)
+    # the probes of signature 0 are the bit-flip masks within
+    # probe_hamming: XOR with each enumerates the query's probe
+    # neighborhood (distinct masks => distinct probe sigs => no pair
+    # ever joins twice)
+    masks = _signature_probes(0, n_planes, probe_hamming)
     probe_cols = [F.col("sig0").bitwiseXOR(F.lit(m)) for m in masks]
     qp = q.select(
         "q_id_",
@@ -396,10 +420,7 @@ def knn_join(
     # (worker round-trip dominates at pair cardinality) — the opposite of
     # the n_centroids-way matmuls in ivf/pq, where the literal expression
     # tree fell out of codegen and numpy won ~10x
-    dot_ = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: x * y), F.lit(0.0), lambda a_, x: a_ + x
-    )
-    scored = pairs.select("q_id_", "c_id", dot_.alias("cos_sim"))
+    scored = pairs.select("q_id_", "c_id", dot("qv", "cv").alias("cos_sim"))
     w = Window.partitionBy("q_id_").orderBy(F.desc("cos_sim"), F.asc("c_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -416,6 +437,49 @@ def knn_join(
 # --------------------------------------------------------------------------- #
 # IVF (inverted-file) ANN — the coarse-quantizer scale path
 # --------------------------------------------------------------------------- #
+
+
+def _hash_sample(df: DataFrame, *, vec_col: str, id_col: str, n: int) -> list[list[float]]:
+    """The non-null vectors among the ``n`` rows with the smallest
+    xxhash64(id) (ties to the lower id): a stable pseudo-random sample,
+    identical across runs and engines. A bounded n-row collect."""
+    rows = (
+        df.select(F.col(id_col).alias("i"), _as_double_array(vec_col).alias("v"))
+        .orderBy(F.xxhash64(F.col("i").cast("string")), F.col("i"))
+        .limit(n)
+        .collect()
+    )
+    return [list(r["v"]) for r in rows if r["v"] is not None]
+
+
+def _stack_valid(v: pd.Series, dim: int) -> tuple[np.ndarray, np.ndarray | None]:
+    """(valid mask, float64 matrix of the valid rows) for one Arrow batch
+    of array values. NULL or wrong-dimension vectors (dirty embedding
+    data) are masked out, so the UDF emits NULL for them instead of
+    failing the task."""
+    arrs = v.to_numpy()
+    valid = np.fromiter(
+        (a is not None and len(a) == dim for a in arrs),
+        dtype=bool,
+        count=len(arrs),
+    )
+    E = np.stack(arrs[valid]).astype(np.float64) if valid.any() else None
+    return valid, E
+
+
+def _nearest_cells(
+    query_vec: list[float], centroids: list[list[float]], n_probe: int
+) -> list[int]:
+    """Indices of the ``n_probe`` centroids nearest the query: max dot
+    with the normalized query, ties to the lower index."""
+    _check_query_dim(query_vec, len(centroids[0]), "centroids")
+    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
+    q = [x / qn for x in query_vec]
+    by_dist = sorted(
+        range(len(centroids)),
+        key=lambda i: -sum(a * b for a, b in zip(q, centroids[i])),
+    )
+    return by_dist[:n_probe]
 
 
 def _deterministic_centroids(
@@ -436,18 +500,15 @@ def _deterministic_centroids(
     n_centroids x dim aggregate rows — bounded, never corpus-sized. (At
     100 TB you'd refine on a bounded sample first, as FAISS does — the
     aggregation shape is the same.)"""
-    rows = (
-        df.select(F.col(id_col).alias("i"), _as_double_array(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("i").cast("string")), F.col("i"))
-        .limit(n_centroids)
-        .collect()
-    )
 
     def _unit(v: list[float]) -> list[float]:
         n = math.sqrt(sum(x * x for x in v)) or 1.0
         return [x / n for x in v]
 
-    cents = [_unit(list(r["v"])) for r in rows if r["v"] is not None]
+    cents = [
+        _unit(v)
+        for v in _hash_sample(df, vec_col=vec_col, id_col=id_col, n=n_centroids)
+    ]
     # fewer vectors than requested centroids (tiny/empty corpus): train on
     # what exists — every later step sizes off len(cents), never the ask
     if not cents or lloyd_iters <= 0:
@@ -482,13 +543,6 @@ def _deterministic_centroids(
     return cents
 
 
-def _dot_lit(vec: Column, lit_vec: list[float]) -> Column:
-    arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-    return F.aggregate(
-        F.zip_with(vec, arr, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: list[list[float]],
@@ -510,23 +564,15 @@ def ivf_assign(
     # the matmul, and the gap widens with n_centroids. Ties break to the
     # lowest cell index (np.argmax == first max), matching the old
     # array_position semantics; zero-norm vectors land in cell 0 likewise.
-    # NULL or wrong-dimension vectors (dirty embedding data) get a NULL
-    # cell instead of failing the task — the same null propagation the
-    # pure-Catalyst formulation had.
+    # NULL or wrong-dimension vectors get a NULL cell — the same null
+    # propagation the pure-Catalyst formulation had.
     @pandas_udf("int")
     def _nearest_cell(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype="Int32")
-        dim = C.shape[1]
-        arrs = v.to_numpy()
-        valid = np.fromiter(
-            (a is not None and len(a) == dim for a in arrs),
-            dtype=bool,
-            count=len(arrs),
-        )
-        out = pd.array([pd.NA] * len(arrs), dtype="Int32")
+        valid, E = _stack_valid(v, C.shape[1])
+        out = pd.array([pd.NA] * len(v), dtype="Int32")
         if valid.any():
-            E = np.stack(arrs[valid]).astype(np.float64)
             norms = np.linalg.norm(E, axis=1)
             norms[norms == 0.0] = 1.0
             sims = (E / norms[:, None]) @ C.T
@@ -562,22 +608,10 @@ def ivf_topk(
         return df.select(
             *id_cols, F.lit(None).cast("double").alias("cos_sim")
         ).limit(0)
-    qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
-    q = [x / qn for x in query_vec]
-    by_dist = sorted(
-        range(len(cents)),
-        key=lambda i: -sum(a * b for a, b in zip(q, cents[i])),
-    )
-    probes = by_dist[:n_probe]
-
+    probes = _nearest_cells(query_vec, cents, n_probe)
     cand = df if "__ivf_cell" in df.columns else ivf_assign(df, cents, vec_col=vec_col)
     cand = cand.filter(F.col("__ivf_cell").isin(probes))
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = cand.select(
-        *id_cols,
-        cosine_similarity(_as_double_array(vec_col), qlit).alias("cos_sim"),
-    )
-    return scored.orderBy(F.desc("cos_sim"), *[F.asc(c) for c in id_cols]).limit(k)
+    return _rescore(cand, query_vec, vec_col=vec_col, id_cols=id_cols, k=k)
 
 
 # --------------------------------------------------------------------------- #
@@ -605,23 +639,17 @@ def pq_train_codebooks(
     bit-identical books. Driver transfer per round is m x n_codes x sub
     aggregate rows, bounded. Returns ``codebooks[s][j]`` = centroid j of
     subspace s."""
-    rows = (
-        df.select(F.col(id_col).alias("i"), _as_double_array(vec_col).alias("v"))
-        .orderBy(F.xxhash64(F.col("i").cast("string")), F.col("i"))
-        .limit(n_codes)
-        .collect()
-    )
-    rows = [r for r in rows if r["v"] is not None]
-    if not rows:
+    sample = _hash_sample(df, vec_col=vec_col, id_col=id_col, n=n_codes)
+    if not sample:
         raise ValueError("pq_train_codebooks: no non-null vectors to train on")
-    dim = len(rows[0]["v"])
+    dim = len(sample[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
     # fewer vectors than requested codes: train the codes that exist —
     # every later step sizes off the actual book length, never the ask
     books = [
-        [[float(x) for x in r["v"][s * sub : (s + 1) * sub]] for r in rows]
+        [[float(x) for x in v[s * sub : (s + 1) * sub]] for v in sample]
         for s in range(m)
     ]
     n_codes = len(books[0])
@@ -691,22 +719,15 @@ def pq_encode(
     m = B.shape[0]
     sub = B.shape[2]
 
-    # NULL / wrong-dimension vectors encode to NULL instead of failing
-    # the task (dirty embedding data must degrade, not kill the job).
+    # NULL / wrong-dimension vectors encode to NULL: dirty embedding
+    # data must degrade, not kill the job.
     @pandas_udf("array<int>")
     def _codes(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype=object)
-        arrs = v.to_numpy()
-        dim = m * sub
-        valid = np.fromiter(
-            (a is not None and len(a) == dim for a in arrs),
-            dtype=bool,
-            count=len(arrs),
-        )
-        results = np.empty(len(arrs), dtype=object)
+        valid, E = _stack_valid(v, m * sub)
+        results = np.empty(len(v), dtype=object)
         if valid.any():
-            E = np.stack(arrs[valid]).astype(np.float64)
             out = np.empty((len(E), m), dtype=np.int32)
             for s in range(m):
                 sub_e = E[:, s * sub : (s + 1) * sub]
@@ -743,6 +764,7 @@ def pq_topk(
         df, vec_col=vec_col, id_col=id_col, m=m, n_codes=n_codes
     )
     sub = len(books[0][0])
+    _check_query_dim(query_vec, len(books) * sub, "codebooks (m * sub)")
     enc = pq_encode(df, books, vec_col=vec_col)
     approx = None
     for s, book in enumerate(books):
@@ -756,17 +778,8 @@ def pq_topk(
         enc.withColumn("__adc", approx)
         .orderBy(F.desc("__adc"), id_col)
         .limit(k * rerank)
-        .drop("__adc", "pq_code")
     )
-    from icerunner_spark.functions.vector import cosine_similarity
-
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        cands.withColumn("cos_sim", cosine_similarity(_as_double_array(vec_col), qcol))
-        .orderBy(F.desc("cos_sim"), id_col)
-        .limit(k)
-        .select(id_col, "cos_sim")
-    )
+    return _rescore(cands, query_vec, vec_col=vec_col, id_cols=(id_col,), k=k)
 
 
 def semantic_best_match(
@@ -797,10 +810,10 @@ def semantic_best_match(
     first maximum). The emitted cos_sim is the RAW double of the winning
     pair, so callers apply their engine's own ROUND for display parity.
 
-    Replaces the r5/r6 broadcast-cross-join + map-side max(struct(...))
+    Replaces a broadcast-cross-join + map-side max(struct(...))
     formulation: that plan was shuffle-optimal (one row per doc crossed
     the wire) but paid ~3 interpreted expression folds per (doc, eval)
-    pair; the r7 sf1 scale probe measured it at ~26 us/pair = 362 s for
+    pair; an sf1 scale probe measured it at ~26 us/pair = 362 s for
     a 19k x 690 corpus. The matmul scores the same pairs in vectorized
     C at ~1000x the throughput, with the same one-row-per-doc output
     cardinality. Rows with NULL or wrong-dimension vectors are dropped

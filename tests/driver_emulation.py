@@ -1,6 +1,9 @@
 """Emulate the driver's correctness harness: a VANILLA SparkSession (none
 of session.py's confs) running every queries() entry at sf0.01, compared
 against oracle_sql() via DuckDB where present, rows-only otherwise.
+Every status line that collected rows carries ``sha256=`` of the sorted
+rows, so two runs (say, before and after a refactor) diff entry by entry,
+rows-only entries included.
 
 Run manually: python tests/driver_emulation.py [pattern]
 
@@ -12,6 +15,7 @@ factory — this script is the regression gate for that class of bug.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -20,6 +24,16 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
+
+
+def rows_digest(rows: list[dict]) -> str:
+    """sha256 over the rows' reprs, sorted: order-free, bit-exact on
+    doubles (repr round-trips)."""
+    h = hashlib.sha256()
+    for line in sorted(repr(r) for r in rows):
+        h.update(line.encode())
+        h.update(b"\n")
+    return h.hexdigest()[:16]
 
 
 def main() -> int:
@@ -62,6 +76,7 @@ def main() -> int:
             else:
                 ok = True
                 status = f"rows-only ({len(rows)} rows)"
+            status += f" sha256={rows_digest(rows)}"
         except Exception as exc:  # noqa: BLE001 - harness surface
             ok = False
             status = f"ERROR {type(exc).__name__}: {exc}"

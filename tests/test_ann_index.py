@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from icerunner_spark.functions.vector import cosine_similarity
@@ -104,3 +105,20 @@ def test_second_refresh_cycle_stays_incremental(spark, warehouse):
         q = _qvec(spark)
         got = [r["vec_id"] for r in idx.topk(q, k=5, n_probe=None).collect()]
         assert got == _brute_ids(base, q, k=5)
+
+
+def test_topk_rejects_wrong_query_dimension(spark, warehouse):
+    """A wrong-length query used to rank cells on a truncating zip (or,
+    at full probe, score every row NULL and return k arbitrary ids)."""
+    base = IceTable(spark, warehouse + "/base")
+    base.create(
+        spark.createDataFrame(
+            [(i, [float(i), 1.0, 0.0, 2.0]) for i in range(6)],
+            "vec_id long, embedding array<double>",
+        )
+    )
+    idx = IncrementalAnnIndex(base, warehouse + "/idx", n_centroids=2)
+    idx.build(lloyd_iters=0)
+    for n_probe in (None, 1):
+        with pytest.raises(ValueError, match=r"dimension 3 .* dimension 4"):
+            idx.topk([1.0, 0.0, 2.0], k=3, n_probe=n_probe)

@@ -419,6 +419,31 @@ def test_ann_lsh_recall_on_clustered_corpus(spark, fixture_embeddings):
     assert mean_recall >= 0.9, f"clustered ann recall {mean_recall:.2f} below pin"
 
 
+@pytest.mark.parametrize(
+    "generator, kwargs",
+    [
+        ("ann_lsh_topk", {"n_planes": 4, "probe_hamming": 4}),
+        ("ivf_topk", {"n_centroids": 8, "n_probe": 8}),
+        ("pq_topk", {"rerank": 50}),
+    ],
+)
+def test_full_probe_equals_brute_force(spark, fixture_embeddings, generator, kwargs):
+    """Every candidate generator ends in the same exact rescore, so one
+    that passes the whole corpus (all 2^n_planes buckets, all cells, or
+    k*rerank >= the corpus rows) returns brute force's ids AND cos_sim
+    values exactly."""
+    from icerunner_spark.operators import similarity
+
+    e = fixture_embeddings
+    if generator == "pq_topk":
+        assert 10 * kwargs["rerank"] >= e.count()  # every row is rescored
+    row = load_table(spark, "embeddings", SF).filter(F.col("vec_id") == 0).first()
+    q = [float(x) for x in row["embedding"]]
+    exact = [(r["vec_id"], r["cos_sim"]) for r in cosine_topk(e, q, k=10).collect()]
+    got = getattr(similarity, generator)(e, q, k=10, **kwargs).collect()
+    assert [(r["vec_id"], r["cos_sim"]) for r in got] == exact
+
+
 def test_analyze_documents_profile(spark):
     d = load_table(spark, "documents", SF)
     out = analyze_documents(d).collect()
@@ -530,6 +555,18 @@ class TestIVF:
         # single-query pre-Lloyd).
         mean = sum(recalls) / len(recalls)
         assert mean >= 0.6, f"ivf mean recall {mean} below pin ({recalls})"
+
+    def test_ivf_topk_rejects_wrong_query_dimension(self, spark):
+        """A query shorter than the centroids would rank cells on a
+        truncating zip and score every row NULL; it must raise instead."""
+        from icerunner_spark.operators.similarity import ivf_topk
+
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+        )
+        cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]]
+        with pytest.raises(ValueError, match=r"dimension 3 .* dimension 4"):
+            ivf_topk(df, [1.0, 0.0, 0.0], k=1, n_probe=1, centroids=cents)
 
     def test_ivf_assign_covers_all_cells_input(self, spark):
         from icerunner_spark.operators.similarity import (
@@ -937,6 +974,18 @@ class TestProductQuantization:
                 assert r["pq_code"] is None
             else:
                 assert len(r["pq_code"]) == 4
+
+    def test_pq_topk_rejects_wrong_query_dimension(self, spark):
+        """A query whose length is not the codebooks' m * sub would be
+        sliced into misaligned subspaces; it must raise instead."""
+        from icerunner_spark.operators.similarity import pq_topk
+
+        df = spark.createDataFrame(
+            [(1, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<double>"
+        )
+        books = [[[1.0, 0.0], [0.0, 1.0]], [[1.0, 0.0], [0.0, 1.0]]]
+        with pytest.raises(ValueError, match=r"dimension 5 .* dimension 4"):
+            pq_topk(df, [1.0, 0.0, 0.0, 0.0, 0.0], k=1, codebooks=books)
 
     def test_pq_recall_against_bruteforce(self, spark):
         from icerunner_spark.operators.similarity import cosine_topk, pq_topk
