@@ -48,7 +48,8 @@ would not change.
 
 from __future__ import annotations
 
-import functools
+import contextlib
+import copy
 import json
 import os
 import shutil
@@ -60,6 +61,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -197,6 +199,14 @@ class Snapshot:
     # first_row_id + position at read time, ``_last_updated_sequence``
     # as the file's commit sequence. None = pre-lineage legacy snapshot.
     next_row_id: int | None = None
+    # Scan-planning index (:class:`_PruneIndex`): the columnar view of
+    # ``manifest`` and ``file_stats`` that pruning evaluates conjuncts
+    # over. Built on the first pruned scan (:func:`_prune_index`) and
+    # shared by every reader of this snapshot through the snapshot
+    # cache; derived state, never serialized or compared.
+    prune_index: _PruneIndex | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     def layout(self, commit_dir: str) -> DirLayout:
         """``commit_dir``'s layout record, legacy defaults applied."""
@@ -295,26 +305,42 @@ def _parse_segment(path: str) -> tuple:
     return seg["files"], seg.get("file_stats", {}), layouts
 
 
-_load_segment_cached = functools.lru_cache(maxsize=512)(_parse_segment)
+_SEG_CACHE_SIZE = 512  # parsed segments kept per process
+_seg_cache: OrderedDict = OrderedDict()  # (segments dir, ref) -> parsed
+_seg_cache_lock = threading.Lock()
 
 
-def _load_segment(path: str) -> tuple:
-    """(files, file_stats, layouts) of one manifest segment: its data
-    files, their stats and the layout record of each commit dir they
-    sit in (segments written before layout records carry none).
-    Segments are immutable and their uuid names are never reused, so
-    caching by path is safe across GC; history walks (snapshots(), CDC,
-    expire) parse each segment once per process instead of once per
-    snapshot that references it. Only small (delta-sized) segments are cached — an
-    entry-count LRU doesn't bound MEMORY when a consolidated segment
-    carries a whole table's file list, so those parse uncached. Callers
-    treat the returned structures as read-only."""
+def _load_segment(seg_dir: str, ref: str) -> tuple:
+    """(files, file_stats, layouts) of manifest segment ``ref`` in
+    ``seg_dir``: its data files, their stats and the layout record of
+    each commit dir they sit in (segments written before layout records
+    carry none). Segments are immutable and their uuid names are never
+    reused, so caching by name is safe across GC; history walks
+    (snapshots(), CDC, expire) parse each segment once per process
+    instead of once per snapshot that references it, and a cache hit
+    touches neither the path nor the file. Only small (delta-sized)
+    segments are cached — an entry-count LRU doesn't bound MEMORY when a
+    consolidated segment carries a whole table's file list, so those,
+    sized on a miss, parse uncached. Callers treat the returned
+    structures as read-only."""
+    key = (seg_dir, ref)
+    with _seg_cache_lock:
+        got = _seg_cache.get(key)
+        if got is not None:
+            _seg_cache.move_to_end(key)
+            return got
+    path = os.path.join(seg_dir, ref)
     try:
-        if os.path.getsize(path) > _SEG_CACHE_MAX_BYTES:
-            return _parse_segment(path)
+        small = os.path.getsize(path) <= _SEG_CACHE_MAX_BYTES
     except OSError:
-        pass  # race with GC: fall through, the open below raises cleanly
-    return _load_segment_cached(path)
+        small = False  # race with GC: the open below raises cleanly
+    got = _parse_segment(path)
+    if small:
+        with _seg_cache_lock:
+            _seg_cache[key] = got
+            if len(_seg_cache) > _SEG_CACHE_SIZE:
+                _seg_cache.popitem(last=False)
+    return got
 
 
 _SNAPSHOT_CACHE_SIZE = 64  # parsed snapshots kept per process
@@ -348,7 +374,7 @@ def _load_snapshot_payload(text: str, metadata_dir: str) -> Snapshot:
     fstats: dict = {}
     layouts: dict = {}
     for ref in d.get("segments", []):
-        files, stats, lays = _load_segment(os.path.join(seg_dir, ref))
+        files, stats, lays = _load_segment(seg_dir, ref)
         manifest.extend(files)
         fstats.update(stats)
         layouts.update(lays)
@@ -1044,6 +1070,330 @@ def _bounds_all_match(lo, hi, op: str, val, *, float_type: bool = False) -> bool
     except TypeError:
         return False  # incomparable -> can't prove anything
     return False
+
+
+def _bounds_keep(
+    lo: np.ndarray, hi: np.ndarray, nan: np.ndarray, op: str, val,
+    *, float_type: bool = False,
+) -> np.ndarray:
+    """:func:`_bounds_may_match` over object arrays of decoded bounds:
+    which files could hold a row satisfying ``col <op> val``. ``nan``
+    marks files with a NaN bound. The rules are the scalar function's;
+    a comparison that raises ``TypeError`` keeps every file."""
+    n = len(lo)
+    keep = np.ones(n, dtype=bool)
+    if _is_nan(val) and op in ("<", "<="):
+        if op == "<=":
+            return keep
+        # col < NaN holds for every non-NaN row; an all-NaN file fails it
+        return ~np.fromiter(map(_is_nan, lo), dtype=bool, count=n)
+    if float_type:
+        # a NaN row hides outside the bounds and satisfies these
+        if op in (">", ">=", "!=", "not_in"):
+            return keep
+        if op == "=" and _is_nan(val):
+            return keep
+        if op == "in" and any(_is_nan(x) for x in val):
+            return keep
+    v = np.empty((), dtype=object)
+    v[()] = val  # a 0-d cell: the literal compares whole, never broadcast
+    # a NaN compares False, as in Python, without a floating-point warning
+    quiet = nan.any() or _is_nan(val)
+    try:
+        with np.errstate(invalid="ignore") if quiet else contextlib.nullcontext():
+            if op == "=":
+                return np.less_equal(lo, v) & np.less_equal(v, hi)
+            if op == "<":
+                return np.less(lo, v)
+            if op == "<=":
+                return np.less_equal(lo, v)
+            if op == ">":
+                return np.greater(hi, v)
+            if op == ">=":
+                return np.greater_equal(hi, v)
+            if op == "in":
+                # any literal inside [lo, hi]: the smallest literal >= lo
+                # must be <= hi. NaN literals match no bound and NaN bounds
+                # no literal (they would also break the binary search)
+                xs = sorted({x for x in val if not _is_nan(x)})
+                lits = np.empty(len(xs), dtype=object)
+                lits[:] = xs
+                out = np.zeros(n, dtype=bool)
+                ok = np.flatnonzero(~nan)
+                at = np.searchsorted(lits, lo[ok], side="left")
+                inside = at < len(xs)
+                out[ok[inside]] = np.less_equal(lits[at[inside]], hi[ok[inside]])
+                return out
+            if op == "!=":
+                # only a single-valued file (lo == hi == val) provably fails
+                return ~(np.equal(lo, hi) & np.equal(hi, v))
+            if op == "not_in":
+                for i in np.flatnonzero(np.equal(lo, hi)):
+                    keep[i] = lo[i] not in val
+                return keep
+    except TypeError:
+        return np.ones(n, dtype=bool)  # incomparable (mixed types) -> keep
+    return keep
+
+
+class _PruneGroup(NamedTuple):
+    """The files of one (commit dir spec, partition path) pair: the spec
+    parsed once, and the hive values decoded from the path."""
+
+    identity: frozenset  # identity-partitioned source columns
+    transforms: dict  # source column -> [_SpecField] of its transforms
+    pvals: dict  # hive partition column -> decoded value (None = null)
+
+
+class _ColumnStats(NamedTuple):
+    """One column's recorded statistics, one row per index position."""
+
+    has: np.ndarray  # the file records bounds for the column
+    nulls: np.ndarray  # null count, -1 when unrecorded
+    valid: np.ndarray  # lo and hi recorded, and typed through the schema
+    lo: np.ndarray  # decoded lower bounds (object)
+    hi: np.ndarray  # decoded upper bounds (object)
+    nan: np.ndarray  # lo or hi is a float NaN
+
+
+class _Located(NamedTuple):
+    """Where the files of one pruning call sit in a :class:`_PruneIndex`."""
+
+    pos: np.ndarray  # index position; files outside it get the "no stats" row
+    gid: np.ndarray  # into ``groups``
+    groups: list
+    sources: frozenset  # columns some group partitions on
+
+
+class _Groups:
+    """The partition groups of the files placed so far. A group is a
+    (dir spec, partition path) pair — what the transform and identity-
+    partition tiers decide on — so its spec is parsed and its path
+    decoded once however many files share it. When no commit dir was
+    written under a partition spec, every file is in the one flat group
+    and placing one costs nothing."""
+
+    def __init__(self, snap: Snapshot):
+        self._layouts = snap.layouts
+        self._spec = snap.partition_spec
+        self.flat = not self._spec and not any(r.spec for r in self._layouts.values())
+        self._dir_specs: dict = {}  # commit dir -> spec tuple
+        self._ids: dict = {}  # (spec tuple, path segments) -> group id
+        self._parsed: dict = {}  # spec tuple -> [_SpecField]
+        self.groups: list = [_PruneGroup(frozenset(), {}, {})] if self.flat else []
+
+    def fork(self) -> _Groups:
+        """A copy that places further files without changing this one."""
+        out = copy.copy(self)
+        out._dir_specs, out._ids = dict(self._dir_specs), dict(self._ids)
+        out.groups = list(self.groups)
+        return out
+
+    def place(self, rel: str) -> int:
+        """The group id of ``rel``, registering a new group."""
+        if self.flat:
+            return 0
+        d = _commit_dir_of(rel)
+        spec = self._dir_specs.get(d)
+        if spec is None:
+            # spec evolution: a file prunes under the spec its COMMIT DIR
+            # was written with, not the snapshot's current one
+            spec = self._dir_specs[d] = tuple(_layout_of(self._layouts, d, self._spec).spec)
+        key = (spec, tuple(rel.replace(os.sep, "/").split("/")[2:-1]) if spec else ())
+        gi = self._ids.get(key)
+        if gi is None:
+            fields = self._parsed.get(spec)
+            if fields is None:
+                fields = self._parsed[spec] = _parse_spec(list(spec))
+            transforms: dict = {}
+            for sf in fields:
+                if sf.transform != "identity":
+                    transforms.setdefault(sf.source, []).append(sf)
+            gi = self._ids[key] = len(self.groups)
+            self.groups.append(_PruneGroup(
+                frozenset(sf.source for sf in fields if sf.transform == "identity"),
+                transforms,
+                _hive_partition_values(rel) if fields else {},
+            ))
+        return gi
+
+    def sources(self) -> frozenset:
+        """The columns some group partitions on, by identity or transform."""
+        out: set = set()
+        for g in self.groups:
+            out |= g.identity | g.transforms.keys()
+        return frozenset(out)
+
+
+class _PruneIndex:
+    """Columnar view of one snapshot's file metadata, which scan
+    planning (:meth:`IceTable._prune_files`) evaluates each conjunct
+    over in one pass instead of once per file. Per file it holds the row
+    count and the partition group (:class:`_Groups`); built on first
+    use, the commit dir ids (for the bloom tier) and, per column, the
+    decoded bounds and null count (:class:`_ColumnStats`). Position
+    ``len(files)`` is a "no stats" row that files outside the
+    snapshot's stats (a change range's files) read. Read-only once
+    built, so concurrent readers share it: a lazy part is built whole,
+    then published by one assignment."""
+
+    def __init__(self, snap: Snapshot):
+        schema = StructType.fromJson(json.loads(snap.schema_json))
+        self.types = {f.name: f.dataType for f in schema.fields}
+        self._field_ids = snap.field_ids
+        self._stats = snap.file_stats
+        self._manifest = snap.manifest
+        files = list(snap.manifest)
+        listed = set(files)
+        files += [f for f in snap.file_stats if f not in listed]
+        self.files = files
+        self.pos = {f: i for i, f in enumerate(files)}
+        rows = [(snap.file_stats.get(f) or {}).get("__rows__") for f in files]
+        self.rows = np.array(
+            [-1 if r is None else int(r) for r in rows] + [-1], dtype=np.int64
+        )
+        self._groups = _Groups(snap)
+        self._gid = np.array(
+            [self._groups.place(f) for f in files] + [-1], dtype=np.intp
+        )
+        self._sources = self._groups.sources()
+        self._dirs: tuple | None = None
+        self._columns: dict = {}  # column name -> _ColumnStats
+
+    def locate(self, files: list[str]) -> _Located:
+        """Index positions and partition groups of one call's ``files``.
+        A file outside the index reads the "no stats" row; its group is
+        placed in a fork, so the shared index never changes."""
+        if files is self._manifest:
+            pos = np.arange(len(files), dtype=np.intp)
+        else:
+            get = self.pos.get
+            pos = np.fromiter((get(f, -1) for f in files), dtype=np.intp, count=len(files))
+        outside = np.flatnonzero(pos < 0)
+        pos[outside] = len(self.files)
+        gid = self._gid[pos]
+        if not len(outside):
+            return _Located(pos, gid, self._groups.groups, self._sources)
+        groups = self._groups.fork()
+        for i in outside:
+            gid[i] = groups.place(files[i])
+        return _Located(pos, gid, groups.groups, groups.sources())
+
+    def dirs(self) -> tuple[np.ndarray, list]:
+        """(commit dir id per position, the dirs); the "no stats" row
+        reads -1."""
+        got = self._dirs
+        if got is None:
+            ids: dict = {}
+            at = [ids.setdefault(_commit_dir_of(f), len(ids)) for f in self.files]
+            got = self._dirs = (np.array(at + [-1], dtype=np.intp), list(ids))
+        return got
+
+    def column(self, col: str) -> _ColumnStats:
+        """``col``'s statistics (its type must be in ``types``), decoded
+        through the snapshot's schema on first use. A bound that does not
+        decode reads as no bound."""
+        got = self._columns.get(col)
+        if got is not None:
+            return got
+        dt = self.types[col]
+        tname = dt.typeName()
+        decode = tname in ("timestamp", "timestamp_ntz", "date", "decimal")
+        float_type = tname in ("float", "double")
+        fid = str(self._field_ids.get(col, ""))
+        n = len(self.files) + 1
+        has = np.zeros(n, dtype=bool)
+        valid = np.zeros(n, dtype=bool)
+        nan = np.zeros(n, dtype=bool)
+        nulls = np.full(n, -1, dtype=np.int64)
+        lo = np.empty(n, dtype=object)
+        hi = np.empty(n, dtype=object)
+        for i, rel in enumerate(self.files):
+            b = (self._stats.get(rel) or {}).get(fid)
+            if not b:
+                continue
+            has[i] = True
+            if len(b) > 2 and b[2] is not None:
+                nulls[i] = b[2]
+            lb, hb = b[0], b[1]
+            if lb is None or hb is None:
+                continue
+            if decode:
+                try:
+                    lb, hb = _decode_bound(dt, lb), _decode_bound(dt, hb)
+                except (ValueError, TypeError, ArithmeticError):
+                    continue
+            lo[i], hi[i], valid[i] = lb, hb, True
+            nan[i] = float_type and (_is_nan(lb) or _is_nan(hb))
+        got = self._columns[col] = _ColumnStats(has, nulls, valid, lo, hi, nan)
+        return got
+
+
+def _prune_index(snap: Snapshot) -> _PruneIndex:
+    """``snap``'s scan-planning index, built on first use. Two threads
+    racing here build two equal indexes and one is kept: no lock."""
+    idx = snap.prune_index
+    if idx is None:
+        idx = snap.prune_index = _PruneIndex(snap)
+    return idx
+
+
+def _partition_verdict(g: _PruneGroup, col: str, op: str, val, dt) -> int:
+    """What the path tiers decide for one conjunct over one partition
+    group: ``_DROP_TRANSFORM`` or ``_DROP_PARTITION`` (no file of the
+    group can match), ``_PARTITION_KEEP`` (an identity-partition column:
+    the path decides and the bloom and bounds tiers do not run) or
+    ``_NEXT_TIER``."""
+    for sf in g.transforms.get(col, ()):
+        # hidden partitioning: a predicate on the SOURCE column prunes
+        # via the derived path value. Every supported transform maps
+        # NULL -> NULL, so the null partition dir is exactly the null
+        # source rows.
+        if sf.pname not in g.pvals:
+            continue
+        pv = g.pvals[sf.pname]
+        if op == "is_null":
+            drop = pv is not None
+        elif op == "is_not_null":
+            drop = pv is None
+        elif pv is None:
+            drop = True  # null partition: no comparison can match
+        else:
+            drop = dt is not None and not _transform_may_match(sf, pv, op, val, dt)
+        if drop:
+            return _DROP_TRANSFORM
+    if col not in g.identity:
+        return _NEXT_TIER
+    # partition values are strings in the path; only equality-shaped and
+    # null ops prune here (Catalyst's partition pruning handles ranges
+    # once columns materialize)
+    if col not in g.pvals:
+        return _PARTITION_KEEP
+    pv = g.pvals[col]
+    if op == "is_null":
+        drop = pv is not None
+    elif op == "is_not_null":
+        drop = pv is None
+    elif pv is None:
+        drop = True  # null partition matches no comparison
+    elif op == "=":
+        hv = _hive_value_str(val)
+        drop = hv is not None and pv != hv
+    elif op == "in":
+        hvs = {_hive_value_str(x) for x in val}
+        drop = None not in hvs and pv not in hvs
+    elif op == "!=":
+        # identity partition: every row carries pv exactly
+        hv = _hive_value_str(val)
+        drop = hv is not None and pv == hv
+    elif op == "not_in":
+        drop = pv in {_hive_value_str(x) for x in val}
+    else:
+        drop = False
+    return _DROP_PARTITION if drop else _PARTITION_KEEP
+
+
+_NEXT_TIER, _DROP_TRANSFORM, _DROP_PARTITION, _PARTITION_KEEP = range(4)
 
 
 def _predicates_to_column(preds: list[tuple]):
@@ -4224,196 +4574,123 @@ class IceTable:
         report: dict | None = None,
     ) -> list[str]:
         """Manifest pruning: drop files whose recorded column bounds (or
-        hive partition path values) prove no row can satisfy the
-        conjunction. Conservative — a file without bounds for a predicate
-        column always survives. Pure driver-side metadata: O(#files ×
-        #conjuncts), no IO. ``report`` (optional dict) counts skipped
-        files per tier: transform / partition / bloom / bounds — the
+        hive partition path values, or blooms) prove no row can satisfy
+        the conjunction. Conservative — a file without bounds for a
+        predicate column always survives. Pure driver-side metadata, no
+        IO but bloom sidecars: each conjunct is evaluated once over the
+        snapshot's columnar index (:class:`_PruneIndex`, built once per
+        snapshot), its tiers in order — empty file, transform, identity
+        partition (once per partition group), bloom (surviving files
+        only), bounds (vectorized). ``report`` (optional dict) counts
+        skipped files per tier — transform / partition / bloom / bounds,
+        each file under the first (conjunct, tier) that drops it — the
         explain_scan observability surface."""
-        schema = StructType.fromJson(json.loads(snap.schema_json))
-        types = {f.name: f.dataType for f in schema.fields}
-        # bounds-tier facts per conjunct, derived once per call rather
-        # than once per file: the column's type, field id, float flag,
-        # and whether its bounds need decoding at all (_decode_bound is
-        # the identity but for temporal and decimal types). The literal
-        # decodes on the first file that has bounds for it, so an
-        # undecodable literal fails where it always did.
-        conj = []
-        for col, _op, _val in preds:
-            dt = types.get(col)
-            tname = dt.typeName() if dt is not None else None
-            conj.append((
-                dt,
-                str(snap.field_ids.get(col, "")),
-                tname in ("float", "double"),
-                tname in ("timestamp", "timestamp_ntz", "date", "decimal"),
-            ))
-        literals: dict = {}  # conjunct index -> decoded literal
-        undecodable = object()
+        if not preds:
+            return list(files)
+        idx = _prune_index(snap)
+        loc = idx.locate(files)
+        alive = np.ones(len(files), dtype=bool)
 
-        # spec evolution: prune each file under the spec its COMMIT DIR
-        # was written with, not the snapshot's current one (cached per dir)
-        def _dir_layout(d: str):
-            spec_fields = _parse_spec(snap.layout(d).spec)
-            identity = {
-                sf.source for sf in spec_fields if sf.transform == "identity"
-            }
-            transforms: dict[str, list[_SpecField]] = {}
-            for sf in spec_fields:
-                if sf.transform != "identity":
-                    transforms.setdefault(sf.source, []).append(sf)
-            return spec_fields, identity, transforms
-
-        layouts: dict = {}
-        out = []
-        for rel in files:
-            keep = True
-            tier = None
-            if preds and snap.file_stats.get(rel, {}).get("__rows__") == 0:
-                # provably empty file: no predicate can match a row
+        def drop(mask, tier):
+            mask = mask & alive
+            n = int(np.count_nonzero(mask))
+            if n:
+                alive[mask] = False
                 if report is not None:
-                    report["bounds"] = report.get("bounds", 0) + 1
+                    report[tier] = report.get(tier, 0) + n
+
+        rows = idx.rows[loc.pos]
+        drop(rows == 0, "bounds")  # provably empty: no predicate can match a row
+        for col, op, val in preds:
+            dt = idx.types.get(col)
+            rest = alive  # files the bloom and bounds tiers see
+            if col in loc.sources:
+                verdict = np.array(
+                    [_partition_verdict(g, col, op, val, dt) for g in loc.groups],
+                    dtype=np.int8,
+                )[loc.gid]
+                drop(verdict == _DROP_TRANSFORM, "transform")
+                drop(verdict == _DROP_PARTITION, "partition")
+                rest = verdict == _NEXT_TIER
+            if dt is None:
                 continue
-            d = _commit_dir_of(rel)
-            if d not in layouts:
-                layouts[d] = _dir_layout(d)
-            spec_fields, spec, transforms = layouts[d]
-            pvals = _hive_partition_values(rel) if spec_fields else {}
-            for i, (col, op, val) in enumerate(preds):
-                for sf in transforms.get(col, []):
-                    # hidden partitioning: a predicate on the SOURCE
-                    # column prunes via the derived path value. Every
-                    # supported transform maps NULL -> NULL, so the null
-                    # partition dir is exactly the null source rows.
-                    if sf.pname not in pvals:
-                        continue
-                    pv = pvals[sf.pname]
-                    if op == "is_null":
-                        if pv is not None:
-                            keep = False
-                    elif op == "is_not_null":
-                        if pv is None:
-                            keep = False
-                    elif pv is None:
-                        # null partition: no comparison can match
-                        keep = False
-                    elif col in types and not (
-                        _transform_may_match(sf, pv, op, val, types[col])
-                    ):
-                        keep = False
-                    if not keep:
-                        tier = "transform"
-                        break
-                if not keep:
-                    break
-                if col in spec:
-                    # partition values are strings in the path; only
-                    # equality-shaped and null ops prune here (Catalyst's
-                    # partition pruning handles ranges once columns
-                    # materialize)
-                    if col not in pvals:
-                        continue
-                    pv = pvals[col]
-                    if op == "is_null":
-                        if pv is not None:
-                            keep, tier = False, "partition"
-                            break
-                    elif op == "is_not_null":
-                        if pv is None:
-                            keep, tier = False, "partition"
-                            break
-                    elif pv is None:
-                        # null partition matches no comparison
-                        keep, tier = False, "partition"
-                        break
-                    elif op == "=":
-                        hv = _hive_value_str(val)
-                        if hv is not None and pv != hv:
-                            keep, tier = False, "partition"
-                            break
-                    elif op == "in":
-                        hvs = {_hive_value_str(x) for x in val}
-                        if None not in hvs and pv not in hvs:
-                            keep, tier = False, "partition"
-                            break
-                    elif op == "!=":
-                        # identity partition: every row carries pv exactly
-                        hv = _hive_value_str(val)
-                        if hv is not None and pv == hv:
-                            keep, tier = False, "partition"
-                            break
-                    elif op == "not_in":
-                        hvs = {_hive_value_str(x) for x in val}
-                        if pv in hvs:
-                            keep, tier = False, "partition"
-                            break
-                    continue
-                if op in ("=", "in") and col in types:
-                    # per-file bloom (write.bloom.columns): equality
-                    # skipping where min/max can't help — unclustered
-                    # high-cardinality keys whose bounds span every file.
-                    # Type must equal the hash-time type (a widened
-                    # column hashes differently — skip, never mis-prune).
-                    ent = self._bloom_entry(snap, d, rel, col)
-                    if ent is not None and ent["type"] == types[col].simpleString():
-                        hit = False
-                        for v in val if op == "in" else [val]:
-                            if v is None:
-                                hit = True  # conservative on NULL literal
-                                break
-                            h = _spark_xxhash64(v, types[col])
-                            if h is None or _bloom_may_contain(
-                                ent["_bits"], ent["nbits"], ent["k"], h
-                            ):
-                                hit = True
-                                break
-                        if not hit:
-                            keep, tier = False, "bloom"
-                            break
-                per = snap.file_stats.get(rel, {})
-                dt, fid, float_type, decode = conj[i]
-                bounds = per.get(fid)
-                if not bounds or dt is None:
-                    continue
-                nc = bounds[2] if len(bounds) > 2 else None
-                rows = per.get("__rows__")
-                if op == "is_null":
-                    if nc == 0:
-                        keep, tier = False, "bounds"
-                        break
-                    continue
-                if nc is not None and rows is not None and nc == rows:
-                    # all-null column: neither is_not_null nor any
-                    # comparison can match a row in this file
-                    keep, tier = False, "bounds"
-                    break
-                if op == "is_not_null" or bounds[0] is None or bounds[1] is None:
-                    continue
-                lo, hi = bounds[0], bounds[1]
-                if decode:
-                    try:
-                        lo, hi = _decode_bound(dt, lo), _decode_bound(dt, hi)
-                    except (ValueError, TypeError):
-                        continue
-                if i not in literals:
-                    try:
-                        literals[i] = (
-                            [_decode_bound(dt, _encode_bound(x) or x) for x in val]
-                            if op == "in"
-                            else _decode_bound(dt, _encode_bound(val) or val)
-                        )
-                    except (ValueError, TypeError):
-                        literals[i] = undecodable
-                v = literals[i]
-                if v is undecodable:
-                    continue
-                if not _bounds_may_match(lo, hi, op, v, float_type=float_type):
-                    keep, tier = False, "bounds"
-                    break
-            if keep:
-                out.append(rel)
-            elif report is not None:
-                report[tier] = report.get(tier, 0) + 1
+            if op in ("=", "in"):
+                drop(self._bloom_misses(
+                    snap, idx, files, loc.pos, rest & alive, col, op, val, dt
+                ), "bloom")
+            st = idx.column(col)
+            sel = rest & alive & st.has[loc.pos]
+            nulls = st.nulls[loc.pos]
+            if op == "is_null":
+                drop(sel & (nulls == 0), "bounds")
+                continue
+            # all-null column: neither is_not_null nor any comparison can
+            # match a row in this file
+            drop(sel & (nulls >= 0) & (nulls == rows), "bounds")
+            if op == "is_not_null":
+                continue
+            at = np.flatnonzero(sel & alive & st.valid[loc.pos])
+            if not len(at):
+                continue
+            try:
+                v = (
+                    [_decode_bound(dt, _encode_bound(x) or x) for x in val]
+                    if op == "in"
+                    else _decode_bound(dt, _encode_bound(val) or val)
+                )
+            except (ValueError, TypeError):
+                continue  # undecodable literal: the bounds cannot decide
+            p = loc.pos[at]
+            keep = _bounds_keep(
+                st.lo[p], st.hi[p], st.nan[p], op, v,
+                float_type=dt.typeName() in ("float", "double"),
+            )
+            miss = np.zeros(len(files), dtype=bool)
+            miss[at[~keep]] = True
+            drop(miss, "bounds")
+        return [files[i] for i in np.flatnonzero(alive)]
+
+    def _bloom_misses(
+        self, snap: Snapshot, idx: _PruneIndex, files: list[str],
+        pos: np.ndarray, cand: np.ndarray, col: str, op: str, val, dt,
+    ) -> np.ndarray:
+        """Mask of the ``cand`` files whose bloom on ``col``
+        (write.bloom.columns) proves no row equals any ``=``/``in``
+        literal: equality skipping where min/max can't help — unclustered
+        high-cardinality keys whose bounds span every file. Only files
+        in dirs with a bloom sidecar are visited. An entry hashed under
+        another type (a widened column hashes differently) or a literal
+        that cannot be hashed never prunes."""
+        out = np.zeros(len(files), dtype=bool)
+        at = np.flatnonzero(cand)
+        if not len(at):
+            return out
+        dir_of, dirs = idx.dirs()
+        ids = dir_of[pos[at]]
+        sided = np.isin(ids, [
+            k for k in np.unique(ids) if k >= 0 and self._load_bloom_sidecar(dirs[k])
+        ])
+        visit = [(i, dirs[k]) for i, k in zip(at[sided], ids[sided])]
+        for i in at[ids < 0]:  # outside the index: place by path
+            d = _commit_dir_of(files[i])
+            if self._load_bloom_sidecar(d):
+                visit.append((i, d))
+        tname = dt.simpleString()
+        hashes = None
+        for i, d in visit:
+            ent = self._bloom_entry(snap, d, files[i], col)
+            if ent is None or ent["type"] != tname:
+                continue
+            if hashes is None:
+                vals = val if op == "in" else [val]
+                hashes = [None if v is None else _spark_xxhash64(v, dt) for v in vals]
+                if any(h is None for h in hashes):
+                    return out  # a NULL or unhashable literal: keep all
+            if not any(
+                _bloom_may_contain(ent["_bits"], ent["nbits"], ent["k"], h)
+                for h in hashes
+            ):
+                out[i] = True
         return out
 
     def plan_files(
@@ -4443,9 +4720,11 @@ class IceTable:
 
         Tiers are attributed in evaluation order (cheapest first): a file
         skipped by both its partition value and its bounds counts under
-        the tier that actually dropped it. Pure driver-side — use it to
-        check a predicate prunes BEFORE paying for the scan, and to see
-        which tier (layout, stats, blooms) is doing the work."""
+        the first (conjunct, tier) that drops it. Pure driver-side, over
+        the snapshot's columnar stats index (one vectorized pass per
+        conjunct, see :meth:`_prune_files`) — use it to check a predicate
+        prunes BEFORE paying for the scan, and to see which tier (layout,
+        stats, blooms) is doing the work."""
         snap = self._resolve_snapshot(snapshot_id)
         preds = _normalize_predicates(where)
         skipped: dict = {}

@@ -84,7 +84,7 @@ def rewrite_with_inline_maps(t: IceTable) -> None:
         with open(path, "w") as f:
             json.dump(seg, f)
     table_mod._snapshot_cache.clear()
-    table_mod._load_segment_cached.cache_clear()
+    table_mod._seg_cache.clear()
 
 
 def carries_maps(path: str) -> bool:

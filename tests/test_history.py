@@ -139,6 +139,47 @@ def test_range_reads_parse_only_their_range(spark, warehouse, parses):
         assert not any(k in text for k in MAP_KEYS)
 
 
+def test_warm_segments_are_not_sized_again(spark, warehouse, parses, monkeypatch):
+    """A cached segment costs neither a stat nor a path join: only a
+    miss sizes its file, and an oversized segment still parses on every
+    load, uncached."""
+    t = _create(spark, warehouse + "/t")
+    for i in range(20):
+        t.append(_rows(10 + i, 11 + i))
+    table_mod._seg_cache.clear()
+    snaps = t.snapshots()  # cold: sizes each segment once
+    seg_dir = t._segments_dir()
+    sized, parsed = [], []
+    real_getsize, real_parse = os.path.getsize, table_mod._parse_segment
+
+    def getsize(path):
+        if os.path.dirname(path) == seg_dir:
+            sized.append(path)
+        return real_getsize(path)
+
+    def parse(path):
+        parsed.append(path)
+        return real_parse(path)
+
+    monkeypatch.setattr(table_mod.os.path, "getsize", getsize)
+    monkeypatch.setattr(table_mod, "_parse_segment", parse)
+    table_mod._snapshot_cache.clear()
+    parses.clear()
+    assert t.snapshots() == snaps
+    assert len(parses) == len(snaps)  # every snapshot file parsed again
+    assert sized == [] and parsed == []  # no segment sized or parsed
+
+    monkeypatch.setattr(table_mod, "_SEG_CACHE_MAX_BYTES", 0)
+    table_mod._seg_cache.clear()
+    head = t.current_snapshot()
+    refs = len(head._segments)
+    for _ in range(2):
+        table_mod._snapshot_cache.clear()
+        assert t.current_snapshot() == head
+    assert len(sized) == len(parsed) == 2 * refs
+    assert len(table_mod._seg_cache) == 0
+
+
 def test_reused_sequence_after_failed_fast_forward_is_reparsed(
     spark, warehouse, monkeypatch
 ):

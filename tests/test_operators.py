@@ -1777,3 +1777,86 @@ def test_canonicalize_url_postconditions_random(spark):
                 p.startswith(("utm_", "fbclid=", "gclid=", "msclkid=", "ref="))
                 for p in ps
             )
+
+
+@pytest.fixture(scope="module")
+def planted_embeddings(spark):
+    """300 random unit-ish vectors plus planted near-copies: 12 pairs and
+    a 3-member cluster of near-identical vectors (cosine > 0.9999), and
+    one pair at cosine ~0.85 that only the exact path must find. The
+    sf0.01 fixture has no pair above 0.8, so the registry's near-dup
+    entries never show that pairs are found; this corpus does."""
+    import numpy as np
+
+    rng = np.random.default_rng(20)
+    dim = 32
+    vecs = {i: rng.normal(size=dim) for i in range(300)}
+    for j, src in enumerate(range(0, 36, 3)):
+        vecs[1000 + j] = vecs[src] + rng.normal(scale=1e-4, size=dim)
+    vecs[2000] = vecs[100] + rng.normal(scale=1e-4, size=dim)
+    vecs[2001] = vecs[2000] + rng.normal(scale=1e-4, size=dim)
+    # a unit vector at a fixed 0.85 cosine to vector 200
+    u = vecs[200] / np.linalg.norm(vecs[200])
+    w = rng.normal(size=dim)
+    w -= (w @ u) * u
+    vecs[3000] = 0.85 * u + np.sqrt(1 - 0.85**2) * w / np.linalg.norm(w)
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in vecs.items()],
+        "vec_id long, embedding array<double>",
+    ).cache()
+    return df, vecs
+
+
+def _brute_force_pairs(vecs: dict, threshold: float) -> set:
+    import numpy as np
+
+    ids = sorted(vecs)
+    m = np.array([vecs[i] / np.linalg.norm(vecs[i]) for i in ids])
+    sims = m @ m.T
+    return {
+        (ids[a], ids[b])
+        for a, b in zip(*np.nonzero(sims >= threshold))
+        if ids[a] < ids[b]
+    }
+
+
+def test_cosine_neardup_pairs_find_planted_pairs(spark, planted_embeddings):
+    from icerunner_spark.operators.similarity import cosine_neardup_pairs
+
+    df, vecs = planted_embeddings
+    want = _brute_force_pairs(vecs, 0.8)
+    planted = {(s, 1000 + j) for j, s in enumerate(range(0, 36, 3))}
+    planted |= {(100, 2000), (100, 2001), (2000, 2001)}
+    assert planted <= want and (200, 3000) in want
+    exact = cosine_neardup_pairs(df, threshold=0.8, exact=True).collect()
+    assert {(r["id1"], r["id2"]) for r in exact} == want
+    assert all(r["cos_sim"] >= 0.8 for r in exact)
+    lsh = cosine_neardup_pairs(df, threshold=0.8, exact=False).collect()
+    assert planted <= {(r["id1"], r["id2"]) for r in lsh}
+
+
+def test_resolve_near_duplicates_matches_union_find(spark, planted_embeddings):
+    from icerunner_spark.operators.corpus import resolve_near_duplicates
+    from icerunner_spark.operators.similarity import cosine_neardup_pairs
+
+    df, vecs = planted_embeddings
+    pairs = cosine_neardup_pairs(df, threshold=0.8, exact=True).select("id1", "id2")
+    parent = {i: i for i in vecs}
+
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    for a, b in _brute_force_pairs(vecs, 0.8):
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {i: (find(i), find(i) == i) for i in vecs}
+    got = {
+        r["vec_id"]: (r["cluster_id"], r["is_canonical"])
+        for r in resolve_near_duplicates(df.select("vec_id"), pairs, "vec_id").collect()
+    }
+    assert got == want
+    assert got[2001] == (100, False) and got[100] == (100, True)
+    assert sum(1 for c, canon in got.values() if not canon) >= 15

@@ -163,12 +163,50 @@ class TestWindowPolicy:
         return _load_module("tools/window_policy.py", "window_policy")
 
     def test_committed_window_satisfies_policy(self):
+        """Audited against the artifacts it was rotated from: the
+        rounds up to ``_DRIVER_WINDOW_ROUND``."""
         wp = self._mod()
         from icerunner_spark import queries as q
 
-        latest = wp.latest_rows()
+        latest = wp.latest_rows(max_round=q._DRIVER_WINDOW_ROUND)
         problems = wp.audit(list(q._DRIVER_WINDOW), list(q._QUERIES), latest)
         assert not problems, problems
+
+    def test_later_artifact_does_not_fail_the_committed_window(
+        self, tmp_path, monkeypatch
+    ):
+        """A round's artifact landing after the rotation leaves the
+        committed window green, while the same window audited against
+        every artifact (its rounds no longer the stalest) and a window
+        that breaks the policy against its own artifacts both fail."""
+        import shutil
+
+        wp = self._mod()
+        from icerunner_spark import queries as q
+
+        rnd = q._DRIVER_WINDOW_ROUND
+        window, registry = list(q._DRIVER_WINDOW), list(q._QUERIES)
+        for p in os.listdir(wp.HERE):
+            if p.startswith("CORRECTNESS_r"):
+                shutil.copy(os.path.join(wp.HERE, p), tmp_path / p)
+        # the next round checks the window's names: they are now the
+        # freshest, and a from-scratch audit sees a stale cohort skipped
+        with open(tmp_path / f"CORRECTNESS_r{rnd + 1:02d}.json", "w") as f:
+            json.dump({n: {"status": "pass"} for n in window}, f)
+        monkeypatch.setattr(wp, "HERE", str(tmp_path))
+        assert not wp.audit(window, registry, wp.latest_rows(max_round=rnd))
+        assert wp.audit(window, registry, wp.latest_rows())
+        own = wp.latest_rows(max_round=rnd)
+        head = [n for n in window if n not in wp.KEEPERS]
+        fresh = max(
+            (n for n in registry if n not in window and own.get(n, 0)),
+            key=lambda n: (own[n], n),
+        )
+        broken = [n for n in window if n != head[0]][: len(head) - 1]
+        broken = broken + [fresh] + wp.KEEPERS
+        assert any(
+            "stalest checked cohort" in p for p in wp.audit(broken, registry, own)
+        )
 
     def test_propose_is_policy_shaped(self):
         """The proposal is always window-sized, keeper-complete, leads

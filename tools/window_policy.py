@@ -19,12 +19,16 @@ exercise:
 ``--propose`` emits the python list literal to paste over
 ``_DRIVER_WINDOW`` for the NEXT round (it assumes the current round's
 window will earn green rows — pass ``--rounds N`` to cap which artifacts
-count if a round's rows were lost).
+count if a round's rows were lost), followed by the
+``_DRIVER_WINDOW_ROUND`` line recording the newest artifact round it
+counted.
 
-Exit status: 0 if the committed window satisfies the policy for the
-CURRENT artifact set, 1 with a diagnostic otherwise. A pytest in
-tests/test_tools.py runs the audit so window drift fails CI the moment
-an artifact lands.
+The audit counts the artifacts up to ``_DRIVER_WINDOW_ROUND`` (or
+``--rounds N``): a window is judged against the artifacts it was rotated
+from, so the next round's artifact landing does not turn it red, while a
+window that breaks the policy against those artifacts fails. Exit
+status: 0 if the committed window satisfies the policy, 1 with a
+diagnostic otherwise. A pytest in tests/test_tools.py runs the audit.
 """
 
 from __future__ import annotations
@@ -166,9 +170,9 @@ def main() -> int:
 
     registry = list(q._QUERIES)
     window = list(q._DRIVER_WINDOW)
-    latest = latest_rows(args.rounds)
 
     if args.propose:
+        latest = latest_rows(args.rounds)
         nxt = propose(registry, latest, assume_green=window)
         print("_DRIVER_WINDOW = [")
         for n in nxt:
@@ -177,8 +181,15 @@ def main() -> int:
             )
             print(f'    "{n}",  # {tag}')
         print("]")
+        print(f"_DRIVER_WINDOW_ROUND = {max(latest.values(), default=0)}")
         return 0
 
+    rounds = q._DRIVER_WINDOW_ROUND if args.rounds is None else args.rounds
+    latest = latest_rows(rounds)
+    newer = max(latest_rows().values(), default=0)
+    if newer > rounds:
+        print(f"note: artifacts up to r{newer} exist; the window counts up to "
+              f"r{rounds} (rotate with --propose)")
     problems = audit(window, registry, latest)
     if problems:
         for p in problems:
