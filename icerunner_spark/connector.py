@@ -14,7 +14,11 @@ Spark engine and the snapshot table format:
 - CDC is a true incremental read (files added in the snapshot range), not
   the reference's broken theta-join (icerunner.py:224-259).
 - Arrow is the interchange format at the API boundary, matching the
-  reference's columnar-everywhere model (SURVEY.md §1.2).
+  reference's columnar-everywhere model (SURVEY.md §1.2). Arrow creates
+  and inserts into unpartitioned tables are written in-process by
+  pyarrow, as the reference's PyIceberg path writes them
+  (icerunner.py:133-178): no Spark job. Partitioned tables go through
+  Spark's writer.
 """
 
 from __future__ import annotations
@@ -71,14 +75,17 @@ class Connector:
     ) -> bool:
         """Create from the first batch's schema and load it — the
         create-on-first-put flow (icerunner.py:133-161). Idempotent:
-        returns True if the table already exists. ``partition_by``
+        returns True if the table already exists. ``data`` goes to
+        :meth:`IceTable.create` as Arrow: an unpartitioned table is
+        written in-process with no Spark job, with the schema and file
+        layout Spark's writer would give it. ``partition_by``
         identity-partitions the table (hive-style layout, partition-
-        pruned scans; beyond reference parity — it creates every table
-        unpartitioned, icerunner.py:154-157)."""
+        pruned scans, written by Spark; beyond reference parity — it
+        creates every table unpartitioned, icerunner.py:154-157)."""
         t = self.catalog.table(table_name)
         if t.exists():
             return True
-        t.create(arrow_to_df(self.spark, data), partition_by=partition_by)
+        t.create(data, partition_by=partition_by)
         return True
 
     def insert(self, table_name: str, data: pa.Table) -> bool:

@@ -452,11 +452,7 @@ def perform_sync(
             logger.warning("incremental sync unavailable (%s); full overwrite sync", e)
             reader, source_snapshot, was_pinned = _pinned_full_reader()
             full = reader.read_all()
-            from icerunner_spark.connector import arrow_to_df
-
-            connector.table(target_table).overwrite(
-                arrow_to_df(connector.spark, full)
-            )
+            connector.table(target_table).overwrite(full)
             rows_synced = full.num_rows
             status = "full_resync" if was_pinned else "full_resync_unpinned"
 

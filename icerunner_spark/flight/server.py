@@ -44,7 +44,10 @@ driver materialization, constant memory. Pending merge-on-read deletes
 apply in the same stream, per data file: deleted row positions drop and
 equality-deleted keys anti-join in pyarrow. Spark is only engaged for
 SQL tickets and changelog reads (those two spill to parquet), puts into
-partitioned tables, and opt-in bloom/NDV sidecar harvests. This is the
+partitioned tables, and opt-in bloom/NDV sidecar harvests. Tables the
+mirror creates or resyncs from these streams are written in-process
+too, unless partitioned (``IceTable.create``/``overwrite`` take Arrow as
+``stage_append`` does). This is the
 design SURVEY.md §7 calls out as "the one place the reference's
 architecture actively fights Spark".
 
@@ -465,15 +468,18 @@ class IceFlightServer(flight.FlightServerBase):
                 out.append((col, op, None))
                 continue
             dt = plan.types[col]
-            out.append(
-                (
-                    col,
-                    op,
+            try:
+                val = (
                     [_decode_bound(dt, x) for x in val]
                     if op in ("in", "not_in")
-                    else _decode_bound(dt, val),
+                    else _decode_bound(dt, val)
                 )
-            )
+            except (ValueError, TypeError) as e:
+                raise flight.FlightServerError(
+                    f"bad value in where for column {col} "
+                    f"({dt.simpleString()}): {e}"
+                ) from None
+            out.append((col, op, val))
         return out
 
     @staticmethod

@@ -484,6 +484,20 @@ def _timestamps_to_us(data: pa.Table) -> pa.Table:
     return data.cast(pa.schema(fields))
 
 
+def _spark_schema_of(data: DataFrame | pa.Table) -> StructType:
+    """A DataFrame's schema, or the one ``arrow_to_df`` gives an Arrow
+    table (timestamps at microseconds, the session's NTZ preference)."""
+    if not isinstance(data, pa.Table):
+        return data.schema
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.utils import is_timestamp_ntz_preferred
+
+    return from_arrow_schema(
+        _timestamps_to_us(data.schema.empty_table()).schema,
+        prefer_timestamp_ntz=is_timestamp_ntz_preferred(),
+    )
+
+
 def _nullable_arrow(t: pa.DataType) -> pa.DataType:
     """``t`` with every nested field nullable (map keys stay required,
     as Arrow demands)."""
@@ -929,7 +943,15 @@ def _decode_bound(dtype, v):
             return v.date()
         return v if isinstance(v, datetime.date) else datetime.date.fromisoformat(str(v))
     if t == "decimal":
-        return decimal.Decimal(str(v))
+        # a literal that is no number (None, text, NaN) raises ValueError:
+        # the pruner then keeps every file, the server refuses the ticket
+        try:
+            out = decimal.Decimal(str(v))
+        except decimal.InvalidOperation:
+            out = None
+        if out is None or out.is_nan():
+            raise ValueError(f"not a decimal value: {v!r}")
+        return out
     return v
 
 
@@ -2463,55 +2485,70 @@ class IceTable:
     _ARROW_CODECS = {"uncompressed": "none", "lz4_raw": "lz4"}
 
     def _write_arrow_files(
-        self, data: pa.Table, *, field_ids: dict, properties: dict
+        self, data: pa.Table, *, field_ids: dict | None, properties: dict,
+        parts: int = 1,
     ) -> tuple[str, list[str]]:
         """In-process parquet write of one already-aligned Arrow table
-        into a fresh commit dir of an unpartitioned table: ONE file,
-        sorted like Spark's writer sorts (``write.sort.columns``,
-        ascending, nulls first, NaN last), in the table's codec — no
-        Spark job. Sidecars through :meth:`_stage_sidecars`."""
+        into a fresh commit dir of an unpartitioned table — no Spark job.
+        The rows split, in input order, into ``parts`` near-equal slices,
+        one file each, cut where Spark's ``parallelize`` cuts them (slice
+        ``i`` holds rows ``[i*n//parts, (i+1)*n//parts)``). Each file is
+        sorted like Spark's task-local sort (``write.sort.columns``,
+        ascending, nulls first, NaN last) and written in the table's
+        codec. One sidecar set for the dir, through
+        :meth:`_stage_sidecars`."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         sort_cols = self._sort_columns(properties, data.column_names)
-        if sort_cols:
+
+        def _sorted(piece: pa.Table) -> pa.Table:
             keys, order = {}, []
             for i, c in enumerate(sort_cols):
-                col = data.column(c)
+                col = piece.column(c)
                 if pa.types.is_floating(col.type):
                     keys[f"n{i}"] = pc.is_nan(col)
                     order.append((f"n{i}", "ascending"))
                 keys[f"k{i}"] = col
                 order.append((f"k{i}", "ascending"))
-            data = data.take(
+            return piece.take(
                 pc.sort_indices(
                     pa.table(keys), sort_keys=order, null_placement="at_start"
                 )
             )
+
         codec = properties.get("write.parquet.compression-codec", "snappy")
         codec = self._ARROW_CODECS.get(codec.lower(), codec.lower())
         commit_dir = f"snap-{uuid.uuid4().hex[:12]}"
         out = os.path.join(self.data_dir, commit_dir)
         os.makedirs(out)
-        rel = os.path.relpath(
-            os.path.join(out, f"part-00000-{uuid.uuid4()}.parquet"), self.path
-        )
+        tag = uuid.uuid4()
+        n = data.num_rows
+        cuts = [i * n // parts for i in range(parts + 1)]
+        rels = []
         try:
-            # no ARROW:schema: pyarrow then reads these files back from
-            # the parquet schema alone, exactly as it reads Spark's
-            pq.write_table(
-                data, os.path.join(self.path, rel), compression=codec,
-                store_schema=False,
-            )
+            for i, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+                piece = data.slice(lo, hi - lo)
+                rel = os.path.relpath(
+                    os.path.join(out, f"part-{i:05d}-{tag}.parquet"), self.path
+                )
+                # no ARROW:schema: pyarrow then reads these files back
+                # from the parquet schema alone, exactly as it reads Spark's
+                pq.write_table(
+                    _sorted(piece) if sort_cols else piece,
+                    os.path.join(self.path, rel), compression=codec,
+                    store_schema=False,
+                )
+                rels.append(rel)
             self._stage_sidecars(
-                commit_dir, [rel], data.column_names, field_ids, properties, []
+                commit_dir, rels, data.column_names, field_ids, properties, []
             )
         except BaseException:
             import shutil
 
             shutil.rmtree(out, ignore_errors=True)
             raise
-        return commit_dir, [rel]
+        return commit_dir, rels
 
     @staticmethod
     def _sort_columns(props: dict | None, columns: list[str]) -> list[str]:
@@ -2593,20 +2630,50 @@ class IceTable:
 
     # ---------- public write API ----------
 
+    def _write_whole(
+        self, data: DataFrame | pa.Table, schema: StructType, spec: list,
+        properties: dict,
+    ) -> list[str]:
+        """Data files of a create or overwrite of ``data`` (whose Spark
+        schema is ``schema``). An Arrow table bound for an unpartitioned
+        spec is written in-process, in the files Spark's writer would
+        make of it: one per ``parallelize`` slice, at most
+        ``defaultParallelism``. A DataFrame, or any partitioned spec
+        (hive paths, null partitions, transforms), goes through Spark's
+        writer."""
+        if isinstance(data, pa.Table):
+            if not spec:
+                parts = min(
+                    max(data.num_rows, 1),
+                    self.spark.sparkContext.defaultParallelism,
+                )
+                return self._write_arrow_files(
+                    self._align_arrow_to_schema(data, schema),
+                    field_ids=None, properties=properties, parts=parts,
+                )[1]
+            from icerunner_spark.connector import arrow_to_df
+
+            data = arrow_to_df(self.spark, data)
+        return self._write_data_files(data, spec, properties=properties)[1]
+
     def create(
-        self, df: DataFrame, *, overwrite_ok: bool = False,
+        self, data: DataFrame | pa.Table, *, overwrite_ok: bool = False,
         summary: dict | None = None, partition_by: list[str] | None = None,
         properties: dict | None = None,
     ) -> Snapshot:
+        """Create the table from ``data`` — a DataFrame, or an Arrow
+        table read as ``arrow_to_df`` reads it (see :meth:`_write_whole`
+        for which writer runs)."""
         if self.exists() and not overwrite_ok:
             raise ValueError(f"table already exists: {self.path}")
-        names = [f.name for f in df.schema.fields]
+        schema = _spark_schema_of(data)
+        names = schema.fieldNames()
         partition_by = list(partition_by or [])
         spec_fields = _parse_spec(partition_by)
         missing = [sf.source for sf in spec_fields if sf.source not in names]
         if missing:
             raise ValueError(f"partition columns not in schema: {missing}")
-        types = {f.name: f.dataType for f in df.schema.fields}
+        types = {f.name: f.dataType for f in schema.fields}
         bad = [
             sf
             for sf in spec_fields
@@ -2630,11 +2697,9 @@ class IceTable:
             raise ValueError(
                 f"derived partition column name collides with schema: {clash}"
             )
-        _, files = self._write_data_files(
-            df, partition_by, properties=properties or {}
-        )
+        files = self._write_whole(data, schema, partition_by, properties or {})
         return self._publish(
-            "create", files, df.schema.json(), replace_manifest=True,
+            "create", files, schema.json(), replace_manifest=True,
             summary={"added_rows_estimated": None, **(summary or {})},
             evolve=lambda fids, nid: _reconcile_ids(fids, nid, names),
             partition_spec=partition_by,
@@ -2800,18 +2865,14 @@ class IceTable:
         makes them."""
         from pyspark.sql.pandas.types import (
             _check_arrow_table_timestamps_localize,
-            from_arrow_schema,
             to_arrow_type,
         )
-        from pyspark.sql.utils import is_timestamp_ntz_preferred
 
         missing = [f.name for f in schema.fields if f.name not in data.column_names]
         if missing:
             raise ValueError(f"appended data lacks table columns {missing}")
         data = _timestamps_to_us(data.select([f.name for f in schema.fields]))
-        given = from_arrow_schema(
-            data.schema, prefer_timestamp_ntz=is_timestamp_ntz_preferred()
-        )
+        given = _spark_schema_of(data)
         for g, f in zip(given.fields, schema.fields):
             self._write_cast_needed(f.name, g.dataType, f.dataType)
         data = _check_arrow_table_timestamps_localize(
@@ -2836,8 +2897,10 @@ class IceTable:
         the same write-then-commit protocol Iceberg uses.
 
         The writer follows the input: an Arrow table bound for an
-        unpartitioned table is written in-process as one parquet file
-        (no Spark job — the data already sits in driver memory); a
+        unpartitioned table is written in-process by
+        :meth:`_write_arrow_files` (no Spark job — the data already sits
+        in driver memory), as one file: an append chunk is never split,
+        while a create or overwrite splits its rows as Spark would. A
         DataFrame, or any append to a partitioned table (hive paths and
         transforms), goes through Spark's writer."""
         snap = self.current_snapshot()
@@ -2968,13 +3031,16 @@ class IceTable:
         )
 
     def overwrite(
-        self, df: DataFrame, *, summary: dict | None = None
+        self, data: DataFrame | pa.Table, *, summary: dict | None = None
     ) -> Snapshot:
         """Full replace (new manifest drops previous files logically;
         physical files stay for time travel until expire_snapshots).
         The partition spec carries over when the new schema still has the
-        partition columns; otherwise the table becomes unpartitioned."""
-        names = [f.name for f in df.schema.fields]
+        partition columns; otherwise the table becomes unpartitioned.
+        ``data`` is a DataFrame or an Arrow table, written as
+        :meth:`_write_whole` says."""
+        schema = _spark_schema_of(data)
+        names = schema.fieldNames()
         spec = [
             entry
             for entry, src in zip(
@@ -2982,9 +3048,12 @@ class IceTable:
             )
             if src in names
         ]
-        _, files = self._write_data_files(df, spec)
+        snap0 = self.current_snapshot() if self.exists() else None
+        files = self._write_whole(
+            data, schema, spec, snap0.properties if snap0 else {}
+        )
         return self._publish(
-            "overwrite", files, df.schema.json(), replace_manifest=True,
+            "overwrite", files, schema.json(), replace_manifest=True,
             summary=summary,
             evolve=lambda fids, nid: _reconcile_ids(fids, nid, names),
             partition_spec=spec,

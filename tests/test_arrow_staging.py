@@ -1,8 +1,10 @@
-"""Arrow staging: ``stage_append(pa.Table)`` writes an unpartitioned
-append in-process with pyarrow; a DataFrame, or any append to a
-partitioned table, keeps Spark's writer. These tests hold the Arrow
-writer to the Spark writer's output (rows, footer bounds, refusals,
-properties, sidecars) and pin which ingest paths start Spark jobs."""
+"""Arrow staging: ``stage_append(pa.Table)``, ``create(pa.Table)`` and
+``overwrite(pa.Table)`` write an unpartitioned table in-process with
+pyarrow; a DataFrame, or any write to a partitioned table, keeps Spark's
+writer. These tests hold the Arrow writer to the Spark writer's output
+(schema, field ids, rows, footer bounds, file layout, row lineage,
+refusals, properties, sidecars) and pin which ingest paths start Spark
+jobs."""
 
 from __future__ import annotations
 
@@ -353,18 +355,197 @@ def test_sort_codec_bloom_and_ndv_properties_agree(conn):
     assert set(os.listdir(a.data_dir)) == dirs
 
 
+def _layout(t) -> list[int]:
+    """Rows per data file of the current snapshot, in manifest order."""
+    return [pq.read_metadata(os.path.join(t.path, f)).num_rows
+            for f in t.current_snapshot().manifest]
+
+
+def _lineage(t) -> list[tuple]:
+    return [tuple(r) for r in t.scan(with_lineage=True)
+            .select("i64", "_row_id", "_last_updated_sequence").orderBy("i64").collect()]
+
+
+def _assert_twins_agree(server, a, s) -> None:
+    """``a`` (written by the Arrow writer) and ``s`` (by Spark's) hold
+    the same table: schema, field ids, Spark and Flight rows, file
+    layout, row lineage, and footer bounds wherever Spark's files record
+    them — the one named exception is the int-backed decimal (precision
+    <= 18), whose INT32/INT64 statistics pyarrow cannot decode, while
+    pyarrow writes FIXED_LEN_BYTE_ARRAY with decodable bounds."""
+    sa, ss = a.current_snapshot(), s.current_snapshot()
+    assert sa.schema_json == ss.schema_json
+    assert sa.field_ids == ss.field_ids
+    assert sa.next_field_id == ss.next_field_id
+    assert a.scan().orderBy("i64").collect() == s.scan().orderBy("i64").collect()
+    fa = _flight_rows(server, os.path.basename(a.path))
+    fs = _flight_rows(server, os.path.basename(s.path))
+    assert fa.schema == fs.schema
+    assert fa.to_pylist() == fs.to_pylist()
+    assert _layout(a) == _layout(s)
+    assert _lineage(a) == _lineage(s)
+    ba, bs = _merged_bounds(a, sa.manifest), _merged_bounds(s, ss.manifest)
+    name_of = {str(v): k for k, v in sa.field_ids.items()}
+    for fid, (lo, hi, nc) in bs.items():
+        alo, ahi, anc = ba[fid]
+        if lo is not None:
+            assert (alo, ahi) == (lo, hi), name_of[fid]
+        elif alo is not None:
+            assert name_of[fid] in ("dec", "dec18"), name_of[fid]
+        if nc is not None:
+            assert anc == nc, name_of[fid]
+
+
+def test_arrow_and_spark_create_agree_on_every_lattice_type(spark, conn, server):
+    data = _lattice()
+    a, s = conn.table("via_arrow"), conn.table("via_spark")
+    a.create(data)
+    s.create(arrow_to_df(spark, data))
+    _assert_twins_agree(server, a, s)
+    assert a.current_snapshot().operation == "create"
+    assert a.scan().count() == N
+    assert len(a.current_snapshot().manifest) == min(N, spark.sparkContext.defaultParallelism)
+    # every part in ONE commit dir, with one sidecar set
+    files = a.current_snapshot().manifest
+    assert len({_commit_dir_of(f) for f in files}) == 1
+    assert files == sorted(files)
+    assert [os.path.basename(f)[:10] for f in files] == [
+        f"part-{i:05d}" for i in range(len(files))
+    ]
+    d = os.path.join(a.data_dir, _commit_dir_of(files[0]))
+    assert json.load(open(os.path.join(d, "_write_spec.json"))) == []
+    assert set(json.load(open(os.path.join(d, "_file_stats.json")))) == set(files)
+
+
+@pytest.mark.parametrize("n", [0, 3, 137])
+def test_create_file_layout_matches_spark(spark, conn, server, n):
+    """0 rows make one empty file, fewer rows than cores one file per
+    row, more rows one near-equal slice per core, in input order —
+    Spark's layout, so the rows and their lineage ids land alike."""
+    data = _lattice(n)
+    a, s = conn.table("via_arrow"), conn.table("via_spark")
+    a.create(data)
+    s.create(arrow_to_df(spark, data))
+    _assert_twins_agree(server, a, s)
+    assert len(_layout(a)) == min(max(n, 1), spark.sparkContext.defaultParallelism)
+    assert sum(_layout(a)) == n
+
+
+def test_create_sort_and_codec_properties_agree(spark, conn):
+    data = _lattice(60)
+    g = [None if i % 9 == 4 else (float("nan") if i % 11 == 5 else (i * 7) % 13 - 6.0)
+         for i in range(60)]
+    data = data.append_column("g", pa.array(g, pa.float64()))
+    props = {"write.sort.columns": "g,s", "write.parquet.compression-codec": "gzip"}
+    a, s = conn.table("via_arrow"), conn.table("via_spark")
+    a.create(data, properties=props)
+    s.create(arrow_to_df(spark, data), properties=props)
+    assert a.properties() == s.properties() == props
+
+    def _keys(t):
+        out = []
+        for f in t.current_snapshot().manifest:
+            path = os.path.join(t.path, f)
+            md = pq.read_metadata(path)
+            assert {md.row_group(0).column(i).compression
+                    for i in range(md.num_columns)} == {"GZIP"}
+            out.append([(_key(r["g"]), r["s"])
+                        for r in pq.read_table(path, columns=["g", "s"]).to_pylist()])
+        return out
+
+    # the same slices, each sorted as Spark's task-local sort sorts it
+    keys = _keys(a)
+    assert keys == _keys(s)
+    assert len(keys) > 1
+
+
+def test_arrow_and_spark_overwrite_agree(spark, conn, server):
+    """An overwrite that drops a column, keeps the rest and adds one:
+    ids carry over by name on both writers."""
+    seed = _lattice(12)
+    data = _lattice(45, id0=100).drop_columns(["m", "bin"]).append_column(
+        "extra", pa.array([f"e{i}" for i in range(45)], pa.string())
+    )
+    a, s = conn.table("via_arrow"), conn.table("via_spark")
+    for t in (a, s):
+        t.create(seed, properties={"write.sort.columns": "s"})
+    a.overwrite(data)
+    s.overwrite(arrow_to_df(spark, data))
+    _assert_twins_agree(server, a, s)
+    snap = a.current_snapshot()
+    assert snap.operation == "overwrite"
+    assert a.scan().count() == 45
+    assert snap.field_ids["i64"] == a.snapshots()[0].field_ids["i64"]
+    assert "m" not in snap.field_ids and "extra" in snap.field_ids
+
+
+def test_create_and_overwrite_refuse_alike(spark, conn):
+    """Inputs Spark's path refuses are refused by the Arrow path too,
+    before anything is written."""
+    lossy = pa.table({"id": pa.array([0, 1], pa.int64()),
+                      "ts": pa.array([0, 1_000_000_001], pa.timestamp("ns"))})
+    t = conn.table("lossy")
+    with pytest.raises(pa.ArrowInvalid):
+        arrow_to_df(spark, lossy)  # Spark's path refuses it on conversion
+    with pytest.raises(pa.ArrowInvalid):
+        t.create(lossy)
+    assert not t.exists()
+    assert not os.path.exists(t.data_dir) or not os.listdir(t.data_dir)
+    ok = lossy.set_column(1, "ts", pa.array([0, 1_000_000_000], pa.timestamp("ns")))
+    t.create(ok)
+    with pytest.raises(pa.ArrowInvalid):
+        t.overwrite(lossy)
+    assert t.scan().count() == 2
+    assert t.current_snapshot().operation == "create"
+
+    errors = []
+    for name, data in (("sa", ok), ("ss", arrow_to_df(spark, ok))):
+        with pytest.raises(ValueError) as e:
+            conn.table(name).create(data, properties={"write.sort.columns": "nope"})
+        errors.append(str(e.value))
+        assert not conn.table(name).exists()
+    assert errors[0] == errors[1] == "write.sort.columns references unknown columns ['nope']"
+
+
+def test_arrow_create_and_overwrite_start_no_spark_job(spark, conn):
+    data = _lattice(30)
+    before = _job_ids(spark)
+    assert conn.create_table("quiet", data)
+    conn.table("quiet").overwrite(_lattice(50, id0=7))
+    assert _job_ids(spark) - before == set()
+    assert conn.count("quiet") == 50
+
+    # a partitioned create, or a DataFrame one, still runs Spark's writer
+    before = _job_ids(spark)
+    conn.create_table("loud", data, partition_by=["b"])
+    assert _job_ids(spark) - before
+    added = conn.table("loud").current_snapshot().added_files
+    assert {f.split("/")[2] for f in added} == {"b=true", "b=false", "b=__HIVE_DEFAULT_PARTITION__"}
+    before = _job_ids(spark)
+    conn.table("loud").overwrite(_lattice(9))  # the spec carries over: Spark
+    assert _job_ids(spark) - before
+    before = _job_ids(spark)
+    conn.table("df").create(arrow_to_df(spark, data))
+    assert _job_ids(spark) - before
+    assert os.path.exists(os.path.join(
+        conn.table("df").data_dir,
+        _commit_dir_of(conn.table("df").current_snapshot().manifest[0]), "_SUCCESS"))
+
+
 def _job_ids(spark) -> set:
     return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
 
 
 def test_unpartitioned_put_and_sync_start_no_spark_job(spark, conn, server, tmp_path):
     rows = pa.table({"id": pa.array([0], pa.int64()), "v": pa.array(["a"], pa.string())})
+    before = _job_ids(spark)
     conn.create_table("hot", rows)
     url = f"grpc://127.0.0.1:{server.port}/hot"
     client = flight.connect(f"grpc://127.0.0.1:{server.port}")
     mirror = Connector(spark, str(tmp_path / "mirror"))
     state = SyncState(mirror.catalog.warehouse_path)
     assert perform_sync(client, url, "hot", "hot_m", mirror, state) == 1  # creates it
+    assert _job_ids(spark) - before == set()
 
     more = pa.table({"id": pa.array(range(1, 500), pa.int64()),
                      "v": pa.array([f"v{i}" for i in range(1, 500)], pa.string())})

@@ -1354,6 +1354,25 @@ def test_scan_predicate_pushdown(spark, warehouse, server):
         read_table_filtered(host, port, "push_t", [["nope", "=", 1]])
 
 
+@pytest.mark.parametrize("pred", [["price", "=", None], ["price", ">", "abc"],
+                                  ["price", "in", [None]]])
+def test_scan_ticket_refuses_undecodable_decimal_literal(server, pred):
+    """A where literal that is no decimal reaches the client as a server
+    error naming the column, not as an internal error."""
+    import decimal
+
+    from icerunner_spark.flight.client import read_table_filtered
+
+    server.connector.create_table("dec_t", pa.table({
+        "k": pa.array(range(8), pa.int64()),
+        "price": pa.array([decimal.Decimal(i) / 4 for i in range(8)], pa.decimal128(10, 2)),
+    }))
+    with pytest.raises(flight.FlightServerError, match="column price"):
+        read_table_filtered("127.0.0.1", server.port, "dec_t", [pred])
+    got = read_table_filtered("127.0.0.1", server.port, "dec_t", [["price", ">", "1.25"]])
+    assert sorted(got.column("k").to_pylist()) == [6, 7]
+
+
 def test_scan_pushdown_survives_rename_partition_and_deletes(spark, warehouse, server):
     """The pushdown composes with the format's features: renamed columns
     filter under their physical names per file group, identity-partition

@@ -434,8 +434,9 @@ def _file_lists(rng, snap, outside):
 
 def _outcome(prune, t, snap, files, preds):
     """(kept files, skipped-per-tier) of one pruning call, or the type
-    of the error it raised: a literal that cannot be typed through the
-    schema (None or text against a decimal column) raises in both."""
+    of the error it raised (both implementations keep every file for a
+    literal they cannot type, so no seeded predicate is expected to
+    raise; see test_undecodable_decimal_literal_keeps_every_file)."""
     report: dict = {}
     try:
         return prune(t, snap, files, preds, report), report
@@ -566,3 +567,31 @@ def test_concurrent_first_use_of_the_index(tmp_path):
         sys.setswitchinterval(old)
     assert not any(th.is_alive() for th in threads)
     assert errors == []
+
+
+_DECIMAL_JUNK = [("price", "=", None), ("price", ">", "abc"), ("price", "in", [None])]
+
+
+@pytest.mark.parametrize("pred", _DECIMAL_JUNK)
+def test_undecodable_decimal_literal_keeps_every_file(spark, warehouse, pred):
+    """A literal that is no decimal cannot be compared with a decimal
+    column's bounds: the pruner keeps every file, as it does for a
+    column without bounds, instead of raising out of planning."""
+    import pyarrow as pa
+
+    t = IceTable(spark, os.path.join(warehouse, "dec"))
+    price = [decimal.Decimal(i * 125) / 100 for i in range(40)]
+    t.create(pa.table({"k": pa.array(range(40), pa.int64()),
+                       "price": pa.array(price, pa.decimal128(10, 2))}))
+    files = sorted(t.current_snapshot().manifest)
+    assert len(files) > 1
+    assert sorted(t.plan_files([pred])) == files
+    assert t.plan_files([("price", ">", "30")]) != files  # decodable prunes
+    rep = t.explain_scan([pred])
+    assert rep["read_files"] == rep["total_files"] == len(files)
+    assert sum(rep["skipped"].values()) == 0
+    assert t.scan(where=[pred]).columns == ["k", "price"]
+    with pytest.raises(ValueError, match="not a decimal value"):
+        _decode_bound(t.schema()["price"].dataType, pred[2])
+    with pytest.raises(ValueError, match="not a decimal value"):
+        _decode_bound(t.schema()["price"].dataType, "NaN")

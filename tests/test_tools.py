@@ -14,6 +14,7 @@ import json
 import os
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_FIXTURES = os.path.join(_HERE, "tests", "fixtures")
 
 
 def _load_module(relpath: str, name: str):
@@ -121,37 +122,32 @@ class TestBenchCompareLoaders:
         assert spread == 0.4
 
     def test_real_driver_artifacts_load_and_compare(self):
-        """The natural round-over-round invocation — the committed
-        BENCH_r0N.json files — must load (this exact call crashed in r8)."""
+        """The natural round-over-round invocation on two real driver
+        artifacts (copies of BENCH_r07/r08.json, front-truncated tails
+        included) must load (this exact call crashed in r8)."""
         bc = _load_module("tools/bench_compare.py", "bench_compare")
-        old = os.path.join(_HERE, "BENCH_r07.json")
-        new = os.path.join(_HERE, "BENCH_r08.json")
-        if not (os.path.exists(old) and os.path.exists(new)):
-            import pytest
-
-            pytest.skip("driver artifacts not present")
-        old_meds, old_spread, _ = bc._load(old)
-        new_meds, new_spread, _ = bc._load(new)
+        old_meds, old_spread, _ = bc._load(os.path.join(_FIXTURES, "bench_driver_r07.json"))
+        new_meds, new_spread, _ = bc._load(os.path.join(_FIXTURES, "bench_driver_r08.json"))
         shared = set(old_meds) & set(new_meds)
         assert len(shared) >= 40
         assert all(v > 0 for v in new_meds.values())
-        assert new_spread > 0
+        assert new_spread > 0 and old_spread > 0
 
     def test_real_artifacts_cross_load(self):
-        """The committed r7/r8 artifacts must stay loadable — the
-        cross-artifact consistency check runs on exactly these files."""
+        """A scale-probe artifact and a bench_full.json artifact load
+        side by side and share queries — the cross-artifact consistency
+        check runs on exactly this pair of shapes (fixtures trimmed from
+        SCALE_PROBE.json and the r12 bench's per-query medians)."""
         bc = _load_module("tools/bench_compare.py", "bench_compare")
-        probe = os.path.join(_HERE, "SCALE_PROBE.json")
-        bench = os.path.join(_HERE, "bench_full.json")
-        if not (os.path.exists(probe) and os.path.exists(bench)):
-            import pytest
-
-            pytest.skip("artifacts not present")
-        probe_meds, _, probe_spreads = bc._load(probe)
-        bench_meds, bench_spread, _ = bc._load(bench)
+        probe_meds, _, probe_spreads = bc._load(os.path.join(_FIXTURES, "scale_probe.json"))
+        bench_meds, bench_spread, _ = bc._load(os.path.join(_FIXTURES, "bench_full.json"))
         shared = set(probe_meds) & set(bench_meds)
-        assert shared, "probe and bench share no queries"
+        assert shared == {"incremental_bm25_index", "corpus_clean_pipeline",
+                          "dedup_minhash_lsh", "kmeans_cluster_profile"}
+        assert "incomplete" not in probe_meds  # no sf0.1 median: skipped
         assert all(v > 0 for v in probe_meds.values())
+        assert set(probe_spreads) >= shared
+        assert bench_spread == 1.0002
 
 
 class TestWindowPolicy:
